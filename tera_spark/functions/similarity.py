@@ -11,8 +11,14 @@ adds partial-ratio heuristics with length-based weights; the alignment
 threshold tolerance absorbs the difference — SURVEY.md §7.3).
 
 Execution: scoring only ever runs on *blocked candidate pairs* (see
-operators/align.py), via an Arrow-vectorized pandas UDF — never on the
-cross product.
+operators/align.py and pipeline/link.py), via ONE Arrow-vectorized pandas
+UDF, ``wratio_at_least(a, b, floor)`` — never on the cross product. Both
+callers drop scores below a floor right after scoring (linking at its
+merge floor, J6 at its threshold), so the kernel is floor-aware: it
+returns exactly ``wratio(a, b)`` whenever that is ≥ floor and some value
+below floor otherwise, skipping each difflib ``ratio()`` whose cheap upper
+bounds (``real_quick_ratio``/``quick_ratio``) prove it cannot reach the
+floor. The pure-Python ``wratio`` is the reference it is tested against.
 """
 
 from __future__ import annotations
@@ -65,11 +71,69 @@ def wratio(a: str, b: str) -> int:
     return max(ratio(a, b), token_sort_ratio(a, b), token_set_ratio(a, b))
 
 
+def _floor_ratio(x: str, y: str, bar: float) -> int:
+    """``int(round(100 * SequenceMatcher(None, x, y).ratio()))`` when that
+    can reach ``bar``, else -1. ratio() ≤ quick_ratio() ≤ real_quick_ratio()
+    and round(v) ≤ v + 0.5, so a bound below ``bar - 0.5`` proves the
+    rounded ratio is below ``bar`` without computing it."""
+    lo = bar - 0.5
+    # real_quick_ratio() from the lengths alone (difflib's own formula),
+    # before paying for the matcher's index of y
+    if 100 * (2.0 * min(len(x), len(y)) / (len(x) + len(y))) < lo:
+        return -1
+    sm = SequenceMatcher(None, x, y)
+    if 100 * sm.quick_ratio() < lo:
+        return -1
+    return int(round(100 * sm.ratio()))
+
+
+def wratio_floor(a: str, b: str, floor: float, memo: dict) -> int:
+    """``wratio(a, b)`` exactly when it is ≥ ``floor``; some value below
+    ``floor`` otherwise. Each component ratio is skipped when its difflib
+    upper bound shows it cannot reach max(floor, best so far): it can then
+    change neither a maximum that is ≥ floor nor the verdict "below floor".
+    ``memo`` caches the per-string preprocessing (``_process``, token
+    split, sorted join) across calls — one dict per Arrow batch."""
+
+    def prep(s: str) -> tuple[str, str, frozenset]:
+        got = memo.get(s)
+        if got is None:
+            p = _process(s)
+            toks = p.split()
+            got = memo[s] = (p, " ".join(sorted(toks)), frozenset(toks))
+        return got
+
+    pa, sa, ta = prep(a)
+    pb, sb, tb = prep(b)
+    pairs = []
+    if pa and pb:
+        pairs.append((pa, pb))
+    if sa and sb:
+        pairs.append((sa, sb))
+    if ta and tb:
+        inter = " ".join(sorted(ta & tb))
+        s1 = (inter + " " + " ".join(sorted(ta - tb))).strip()
+        s2 = (inter + " " + " ".join(sorted(tb - ta))).strip()
+        pairs += [(x, y) for x, y in ((inter, s1), (inter, s2), (s1, s2)) if x or y]
+    best = 0
+    # each distinct string pair once: for one-word or already-sorted
+    # inputs the plain, token-sort and token-set components coincide
+    for x, y in dict.fromkeys(pairs):
+        best = max(best, _floor_ratio(x, y, max(floor, best)))
+    return best
+
+
 @F.pandas_udf(T.IntegerType())
-def _wratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized pair scorer for blocked candidates (Arrow batches)."""
+def _wratio_floor_udf(a: pd.Series, b: pd.Series, floor: pd.Series) -> pd.Series:
+    """Vectorized floor-aware pair scorer for blocked candidates (Arrow
+    batches); ``floor`` is a literal column."""
+    f = float(floor.iloc[0]) if len(floor) else 0.0
+    memo: dict = {}
     return pd.Series(
-        [wratio(x, y) if x is not None and y is not None else 0 for x, y in zip(a, b)],
+        [
+            wratio_floor(x, y, f, memo) if x is not None and y is not None else 0
+            for x, y in zip(a, b)
+        ],
         dtype="int32",
     )
 
@@ -80,7 +144,16 @@ def _wratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 # every raw shingle-pair row, ~15× the candidate count — and (b) duplicating
 # the UDF into both a pushed filter and the projection (double evaluation).
 # Expensive-Python-UDF ordering must be pinned where the plan says it runs.
-wratio_udf = _wratio_udf.asNondeterministic()
+_wratio_floor_nd = _wratio_floor_udf.asNondeterministic()
+
+
+def wratio_at_least(a, b, floor: float):
+    """WRatio of two string Columns, exact wherever it is ≥ ``floor`` and
+    below ``floor`` elsewhere (``wratio_floor``). For callers that drop
+    scores below ``floor`` right after scoring: the skipped difflib work
+    is work whose result they would discard. Argument order matters —
+    difflib's ratio is not symmetric."""
+    return _wratio_floor_nd(a, b, F.lit(float(floor)))
 
 
 # --------------------------------------------------------------------------

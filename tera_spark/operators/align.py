@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tera_spark.functions.similarity import wratio_udf
+from tera_spark.functions.similarity import wratio_at_least
 
 NO_MAPPING = "no mapping"
 
@@ -180,7 +180,9 @@ def string_matching_mapping(
             "score", portable_ratio_col(F.col("label1"), F.col("label2"))
         )
     else:
-        scored = cands.withColumn("score", wratio_udf(F.col("label1"), F.col("label2")))
+        scored = cands.withColumn(
+            "score", wratio_at_least(F.col("label1"), F.col("label2"), threshold)
+        )
     best = (
         scored.groupBy("e1", "e2")
         .agg(F.max("score").cast("double").alias("score"))

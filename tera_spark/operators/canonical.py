@@ -38,9 +38,9 @@ def _canon(edges: DataFrame) -> DataFrame:
 
 def _sym(edges: DataFrame) -> DataFrame:
     """Both directions of every edge. Deliberately NOT deduplicated: every
-    consumer (the star steps' min-aggregates, the label min-agg, the root
-    anti-join) is duplicate-insensitive, and the dropDuplicates this used
-    to carry was a full extra shuffle per CC iteration."""
+    consumer (the star steps' min-aggregates, the label min-agg) is
+    duplicate-insensitive, and the dropDuplicates this used to carry was a
+    full extra shuffle per CC iteration."""
     return edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -104,43 +104,34 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Component labels for every node in ``edges`` (2 columns, string ids).
 
     Returns DataFrame(node string, component string) where ``component`` is
-    the lexicographically-smallest member. Convergence is detected with a
+    the lexicographically-smallest member. Self-loop-only nodes carry no
+    aliasing information and get no row. Convergence is detected with a
     one-pass (count, hash-sum) fingerprint — no expensive set-difference —
-    fused into each iteration's checkpoint action.
+    fused into each checkpoint action, the initial edge set's included: an
+    input that is already a converged star forest (every alias edge points
+    straight at its component min, the shape linking emits) stops after
+    one round. Raises ``RuntimeError`` when ``max_iter`` rounds end
+    unconverged — the labels would not be stars, i.e. wrong.
     """
-    e0 = _canon(edges).localCheckpoint()
-    e = e0
-    prev = None
+    e, prev = _checkpoint_fingerprint(_canon(edges))
     for _ in range(max_iter):
         e, fp = _checkpoint_fingerprint(_small_star(_large_star(e)))
         if fp == prev:
             break
         prev = fp
-    # Converged to stars: each non-root points at its component min.
-    nodes = _sym(e)
-    labels = nodes.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("component"))
-    # Roots appear only as targets; give them self-labels.
-    roots = (
-        nodes.select(F.col("v").alias("u"))
-        .join(nodes.select("u"), "u", "left_anti")
-        .distinct()
-        .withColumn("component", F.col("u"))
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iter={max_iter} rounds"
+        )
+    # Converged to stars: each non-root points at its component min, and
+    # every endpoint of _sym(e) appears as u, so one min-aggregate labels
+    # every node (the root included).
+    return (
+        _sym(e)
+        .groupBy("u")
+        .agg(F.least(F.min("v"), F.first("u")).alias("component"))
+        .select(F.col("u").alias("node"), "component")
     )
-    # Isolated nodes in the original input (self-loop-only rows) keep
-    # themselves. Derived from the CHECKPOINTED initial edge set — deriving
-    # from the raw ``edges`` lineage here re-ran the caller's whole pair
-    # generation a second time (for dedup_resolve_clusters that was the
-    # full minhash-LSH pass again).
-    orig_nodes = (
-        e0.select("u")
-        .unionAll(e0.select(F.col("v").alias("u")))
-        .distinct()
-    )
-    out = labels.unionByName(roots).dropDuplicates(["u"])
-    out = orig_nodes.join(out, "u", "left").select(
-        F.col("u").alias("node"), F.coalesce("component", F.col("u")).alias("component")
-    )
-    return out
 
 
 def canonical_mapping(alias_edges: DataFrame) -> DataFrame:

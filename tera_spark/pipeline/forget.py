@@ -282,7 +282,9 @@ def run_pipeline_forget(
     prepared = (
         lexicon if isinstance(lexicon, PreparedLexicon) else prepare_lexicon(lexicon)
     )
-    _, d_edges = link_mentions(d_mentions, prepared, fuzzy_threshold, scorer=scorer)
+    _, d_edges = link_mentions(
+        d_mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+    )
     d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
     surviving_u = rem_linked.filter(F.col("link_method") == "provisional").select(
         F.col("entity").alias("u")

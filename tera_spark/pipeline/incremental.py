@@ -565,7 +565,8 @@ def run_pipeline_incremental(
     )
     prepared = prepare_lexicon(lexicon)
     linked_raw, edges_delta = link_mentions(
-        m_delta.drop("_bucket"), prepared, fuzzy_threshold, scorer=scorer
+        m_delta.drop("_bucket"), prepared, fuzzy_threshold, scorer=scorer,
+        materialized=True,
     )
     linked_delta = part_read(
         "linked_adds", bucketize(linked_raw, N_BUCKETS, "conv_id")

@@ -13,7 +13,16 @@ Two paths, mirroring TERA's alignment pair (SURVEY.md §2.4):
   character-3-gram blocking (misspellings share most shingles even when
   they share no whole token) + vectorized WRatio scoring + argmax-per-
   mention (A5/W2). The candidate set is bounded by requiring ≥2 shared
-  shingles and by hot-shingle capping.
+  shingles and shingle-Jaccard ≥ 0.25, and by dropping hot shingles (in
+  more than ``max_shingle_freq`` lexicon rows) from the lexicon side.
+  Shared shingles are counted over integer ids — ``l_id`` per lexicon
+  row, ``m_id`` per distinct mention norm, both fixed by a
+  localCheckpoint — so the counting shuffle carries four numbers per row,
+  not three strings; the strings join back for the surviving pairs only.
+  Scoring uses the floor-aware WRatio kernel
+  (``functions/similarity.py:wratio_at_least``) with floor =
+  ``merge_floor``: scores at or above the floor are exact, and pairs below
+  it are dropped right after scoring, so nothing reads their value.
 
 Output adds ``entity`` / ``link_method`` / ``link_score``; unlinked term
 mentions get a provisional ``urn:mention:<norm>`` entity that the
@@ -28,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tera_spark.functions.similarity import wratio_udf
+from tera_spark.functions.similarity import wratio_at_least
 
 PROVISIONAL_PREFIX = "urn:mention:"
 
@@ -41,12 +50,20 @@ LEXICON_BROADCAST_MAX_ROWS = 2_000_000
 
 def _persistent_rdd_ids(sc) -> set[int]:
     """Ids of all RDDs currently pinned in the block manager (localCheckpoint
-    blocks included) — used to attribute checkpoint blocks to a
-    PreparedLexicon so release() can unpersist exactly those."""
+    blocks included)."""
     ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
     while it.hasNext():
         ids.add(int(it.next()))
     return ids
+
+
+def _checkpoint_rdd_id(df: DataFrame) -> int:
+    """Id of the RDD a ``localCheckpoint()``-ed DataFrame reads: its logical
+    plan is the bare ``LogicalRDD`` over the persisted blocks. Read from the
+    DataFrame itself rather than diffed from the block manager, so a
+    checkpoint another driver thread takes at the same time is never
+    attributed to this one."""
+    return int(df._jdf.queryExecution().logical().rdd().id())
 
 
 def _norm(col):
@@ -69,20 +86,20 @@ def _shingles(col, n: int = 3):
 @dataclass
 class PreparedLexicon:
     """Lexicon-side linking state, computed ONCE and reused across calls
-    (streaming micro-batches, repeated pipeline runs): normalized labels,
-    the shingle-blocked token table with hot shingles already removed, and
-    the hot-shingle set itself. All three are localCheckpointed — lexicon-
-    sized (≤ a few M rows), so the materialization is cheap and every
-    reuse skips the shingle/hot-token recompute."""
+    (streaming micro-batches, repeated pipeline runs): normalized labels
+    keyed by a fixed integer ``l_id``, and the id-keyed shingle table with
+    hot shingles already removed. Both are localCheckpointed — lexicon-
+    sized (≤ a few M rows), so the materialization is cheap, every reuse
+    skips the shingle/hot-token recompute, and ``l_id`` (a
+    monotonically_increasing_id) stays fixed across reuses."""
 
-    lex: DataFrame        # (entity, lex_kind, norm_label)
-    l_tok: DataFrame      # (entity, lex_kind, norm_label, l_n, sh) hot-filtered
-    hot: DataFrame        # (sh) shingles above max_shingle_freq
+    lex: DataFrame        # (entity, lex_kind, norm_label, l_id)
+    l_tok: DataFrame      # (l_id, l_n, sh) hot-filtered
     max_shingle_freq: int
-    n_rows: int | None = None  # |lex| — drives the exact-path broadcast gate
+    n_rows: int | None = None  # |lex| — drives the broadcast gates
 
     def release(self) -> None:
-        """Unpersist the three localCheckpoint block sets. Long-lived
+        """Unpersist the localCheckpoint block sets. Long-lived
         sessions (streaming drivers re-preparing lexicons) call this when a
         PreparedLexicon is superseded — otherwise each checkpoint's blocks
         live until the context cleaner happens to GC them (round-2 verdict
@@ -113,8 +130,6 @@ def prepare_lexicon(
                 " re-prepare from the raw lexicon DataFrame"
             )
         return lexicon
-    sc = lexicon.sparkSession.sparkContext
-    ids_before = _persistent_rdd_ids(sc)
     # |lex| rides the checkpoint action as an observed metric (same
     # CollectMetrics fuse as canonical._checkpoint_fingerprint) instead of
     # a separate count() job — one serial job less per prepare.
@@ -128,28 +143,28 @@ def prepare_lexicon(
             _norm(F.col("label")).alias("norm_label"),
         )
         .dropDuplicates(["entity", "norm_label"])
+        .withColumn("l_id", F.monotonically_increasing_id())
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    lex_sh = lex.withColumn("l_sh", _shingles(F.col("norm_label"))).withColumn(
-        "l_n", F.size("l_sh")
-    )
-    l_tok = lex_sh.select(
-        "entity", "lex_kind", "norm_label", "l_n", F.explode("l_sh").alias("sh")
-    )
-    hot = (
-        l_tok.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_shingle_freq)
-        .select("sh")
+    # The hot-shingle cap is a per-shingle count window inside l_tok's one
+    # checkpoint: a hot shingle's rows are dropped here, so the mention side
+    # needs no anti-join (the inner join on ``sh`` drops any shingle that
+    # is missing from l_tok). l_n counts ALL of a label's shingles, hot
+    # ones included — the Jaccard denominator.
+    l_tok = (
+        lex.select("l_id", _shingles(F.col("norm_label")).alias("l_sh"))
+        .select("l_id", F.size("l_sh").alias("l_n"), F.explode("l_sh").alias("sh"))
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("sh")))
+        .filter(F.col("_n") <= max_shingle_freq)
+        .drop("_n")
         .localCheckpoint()
     )
-    l_tok = l_tok.join(F.broadcast(hot), "sh", "left_anti").localCheckpoint()
     prepared = PreparedLexicon(
-        lex=lex, l_tok=l_tok, hot=hot, max_shingle_freq=max_shingle_freq,
+        lex=lex, l_tok=l_tok, max_shingle_freq=max_shingle_freq,
         n_rows=int(obs.get["n"]),
     )
-    prepared._rdd_ids = _persistent_rdd_ids(sc) - ids_before
+    prepared._rdd_ids = {_checkpoint_rdd_id(lex), _checkpoint_rdd_id(l_tok)}
     return prepared
 
 
@@ -160,6 +175,7 @@ def link_mentions(
     merge_floor: float = 80.0,
     max_shingle_freq: int = 2000,
     scorer: str = "wratio",
+    materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (linked mentions, alias_edges).
 
@@ -169,7 +185,9 @@ def link_mentions(
     ``"portable"`` (levenshtein + token-sort as a pure Column expression:
     JVM-side, whole-stage codegen, and replayable by the DuckDB oracle —
     functions/similarity.py). Same blocking, same bands, only the pair
-    score differs.
+    score differs. ``materialized``: ``mentions`` is already a stored table
+    (a parquet read-back or a checkpoint) — the caller says so, because
+    only the caller knows; otherwise it is localCheckpointed once here.
 
     Confidence bands: score ≥ ``fuzzy_threshold`` links directly (the
     mention row carries the lexicon entity); scores in
@@ -185,16 +203,12 @@ def link_mentions(
     # ``linked`` up to 3 times — so a lazily-derived mentions table (the
     # Arrow-UDF extraction) would be recomputed ~12x per materialization
     # (measured: the linked noop costs ~8s at 192k turns vs 0.75s for one
-    # extraction pass). localCheckpoint it ONCE here — but only when the
-    # input is not already materialized: a parquet-backed mentions stage
-    # (run.py / incremental.py / forget.py read their stage tables back
-    # from disk) re-scans cheaply and checkpointing it would only burn
-    # memory, and a streaming DataFrame cannot be checkpointed at all.
-    try:
-        _materialized = bool(mentions.inputFiles())
-    except Exception:
-        _materialized = True  # unknown plan shape: do not add a barrier
-    if not mentions.isStreaming and not _materialized:
+    # extraction pass). localCheckpoint it ONCE here — unless the caller
+    # says it is already materialized (run.py / incremental.py / forget.py
+    # read their stage tables back from disk: a re-scan is cheap and a
+    # checkpoint would only burn memory). A streaming DataFrame cannot be
+    # checkpointed at all.
+    if not mentions.isStreaming and not materialized:
         # The mentions checkpoint and the lexicon preparation are
         # independent job chains — overlap them (guide §2.6: concurrent
         # driver threads back-fill idle executors) instead of serializing
@@ -225,11 +239,13 @@ def link_mentions(
     if n_lex is None:  # hand-built PreparedLexicon (tests): count lazily
         n_lex = lex.count()
         prepared.n_rows = n_lex
-    lex_norm = lex.withColumnRenamed("norm_label", "norm")
-    if n_lex <= LEXICON_BROADCAST_MAX_ROWS:
-        exact_lex = F.broadcast(lex_norm)
-    else:
-        exact_lex = lex_norm.hint("shuffle_hash")
+
+    def lex_side(df: DataFrame) -> DataFrame:
+        if n_lex <= LEXICON_BROADCAST_MAX_ROWS:
+            return F.broadcast(df)
+        return df.hint("shuffle_hash")
+
+    exact_lex = lex_side(lex.select("entity", "lex_kind", F.col("norm_label").alias("norm")))
     exact = terms.join(exact_lex, "norm", "left")
 
     linked_exact = exact.filter(F.col("entity").isNotNull()).select(
@@ -265,26 +281,25 @@ def link_mentions(
         .filter(F.size(F.split(F.col("norm"), " ")) <= 2)
         .distinct()
         .repartition(par)
+        .withColumn("m_id", F.monotonically_increasing_id())
         .localCheckpoint()
-        .withColumn("m_sh", _shingles(F.col("norm")))
-        .withColumn("m_n", F.size("m_sh"))
     )
-    m_tok = vocab.select("norm", "m_n", F.explode("m_sh").alias("sh"))
-    m_tok = m_tok.join(F.broadcast(prepared.hot), "sh", "left_anti")
-    l_tok = prepared.l_tok
+    m_tok = vocab.select(
+        "m_id", _shingles(F.col("norm")).alias("m_sh")
+    ).select("m_id", F.size("m_sh").alias("m_n"), F.explode("m_sh").alias("sh"))
 
     # Candidate generation + cheap JVM-side shingle-Jaccard prefilter; the
-    # expensive Python WRatio scorer only sees plausible pairs.
+    # expensive Python WRatio scorer only sees plausible pairs. The count
+    # is keyed on integer ids only (the shuffle moves four longs per row);
+    # the strings join back for the surviving pairs.
     cand = (
-        m_tok.join(l_tok, "sh")
-        .groupBy("norm", "m_n", "entity", "lex_kind", "norm_label", "l_n")
+        m_tok.join(prepared.l_tok, "sh")
+        .groupBy("m_id", "m_n", "l_id", "l_n")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= 2)
-        .withColumn(
-            "sh_jaccard",
-            F.col("shared") / (F.col("m_n") + F.col("l_n") - F.col("shared")),
-        )
-        .filter(F.col("sh_jaccard") >= 0.25)
+        .filter(F.col("shared") / (F.col("m_n") + F.col("l_n") - F.col("shared")) >= 0.25)
+        .join(F.broadcast(vocab), "m_id")
+        .join(lex_side(lex), "l_id")
     )
     # AQE coalesces post-shuffle partitions by (compressed) BYTE size; the
     # candidate table is tiny in bytes but huge in Python-CPU per byte, so
@@ -299,7 +314,9 @@ def link_mentions(
 
         score_col = portable_ratio_col(F.col("norm"), F.col("norm_label"))
     elif scorer == "wratio":
-        score_col = wratio_udf(F.col("norm"), F.col("norm_label")).cast("double")
+        score_col = wratio_at_least(
+            F.col("norm"), F.col("norm_label"), merge_floor
+        ).cast("double")
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
     scored = (

@@ -192,21 +192,12 @@ def run_pipeline(
         shutil.rmtree(os.path.join(out_dir, "convs_applied"), ignore_errors=True)
         shutil.rmtree(os.path.join(out_dir, "_batches"), ignore_errors=True)
 
-    def _link():
-        linked, alias_edges = link_mentions(
-            mentions, prepare_lexicon(lexicon), fuzzy_threshold, scorer=scorer
-        )
-        write_table(alias_edges, os.path.join(out_dir, "alias_edges"), bucket_by=(8, "u"))
-        return linked
-
-    linked = stage("linked", "conv_id", _link)
-
     from concurrent.futures import ThreadPoolExecutor
 
     from tera_spark.pipeline.kg import emission_refcounts, shared_row_expr
 
     # ---- independent-branch scheduling -----------------------------------
-    # The DAG after `linked` has independent branches; running them as
+    # The DAG after `alias_edges` has independent branches; running them as
     # concurrent Spark jobs (plain driver threads — Spark schedules tasks
     # from all live jobs into free slots) overlaps each job's fixed
     # latency (planning, parquet footer reads, commit protocol, shuffle
@@ -216,6 +207,18 @@ def run_pipeline(
     # per-stage decomposition), so overlap directly buys efficiency.
     # Bookkeeping stays deterministic: lists are re-sorted to canonical
     # stage order below, and each stage writes its own driver-side files.
+    alias_path = os.path.join(out_dir, "alias_edges")
+
+    def _canonical_map():
+        # canonical map persisted as its own stage: downstream incremental
+        # applies read it instead of re-running connected components over
+        # the whole alias universe (pipeline/incremental.py runs CC only
+        # over the batch's CONTRACTED delta edges and composes). It reads
+        # only alias_edges, so it starts as soon as that is written and
+        # overlaps the `linked` write.
+        return stage(
+            "canonical_map", "old", lambda: canonical_mapping(read_table(spark, alias_path))
+        )
 
     def _refcounts():
         # raw-keyed emission refcounts (vocabulary-sized): the side table
@@ -227,20 +230,23 @@ def run_pipeline(
         # runs concurrent with canonical_map + triples.
         return stage("refcounts", "k1", lambda: emission_refcounts(linked))
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        ref_future = pool.submit(_refcounts)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        cmap_future = None
 
-        # canonical map persisted as its own stage: downstream incremental
-        # applies read it instead of re-running connected components over
-        # the whole alias universe (pipeline/incremental.py runs CC only
-        # over the batch's CONTRACTED delta edges and composes)
-        cmap = stage(
-            "canonical_map",
-            "old",
-            lambda: canonical_mapping(
-                read_table(spark, os.path.join(out_dir, "alias_edges"))
-            ),
-        )
+        def _link():
+            nonlocal cmap_future
+            linked, alias_edges = link_mentions(
+                mentions, prepare_lexicon(lexicon), fuzzy_threshold, scorer=scorer,
+                materialized=True,
+            )
+            write_table(alias_edges, alias_path, bucket_by=(8, "u"))
+            cmap_future = pool.submit(_canonical_map)
+            return linked
+
+        linked = stage("linked", "conv_id", _link)
+        if cmap_future is None:  # `linked` was resumed: alias_edges is on disk
+            cmap_future = pool.submit(_canonical_map)
+        ref_future = pool.submit(_refcounts)
 
         def _canon():
             # deduplicate=False: the post-rewrite set-semantics dedup is
@@ -253,6 +259,7 @@ def run_pipeline(
             # of key that goes hot, so plain shuffle-hash isn't enough).
             # The map's row count is already known from the stage metrics
             # (or a metadata-cheap parquet count on resume).
+            cmap = cmap_future.result()
             eff_salts = salts
             if eff_salts is None:
                 n_map = next(
@@ -272,6 +279,9 @@ def run_pipeline(
         triples = stage(
             "triples", "subject", _canon, dedup_cols=["subject", "predicate", "object"]
         )
+        # read both results: a failure must raise even when `triples`
+        # was resumed and never asked for the map
+        cmap_future.result()
         ref_future.result()
 
     def _ent_index():

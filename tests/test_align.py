@@ -88,3 +88,79 @@ def test_string_matching_blocks_cross_product(spark):
     pairs = out.collect()
     # 'species' token is hot (30 > 10) and dropped; 'commonN' still matches 1:1
     assert {(r.from_id, r.to_id) for r in pairs} == {(f"a{i}", f"b{i}") for i in range(30)}
+
+
+def _kernel_pairs():
+    """Seeded random pairs plus the edge cases the floor-aware kernel must
+    get right: punctuation and '-', repeated tokens, strings empty after
+    fuzzywuzzy preprocessing, and a shared whole word."""
+    import random
+
+    rng = random.Random(7)
+    words = ["daphnia", "magna", "cadmium", "chloride", "atrazine", "pulex",
+             "salmo", "trutta", "zinc", "oxide", "lc50", "ec10", "n-octanol"]
+    alphabet = "abcdefghilmnorstuz -,.()0123"
+
+    def mutate(s):
+        s = list(s)
+        for _ in range(rng.randint(0, 3)):
+            op, i = rng.random(), rng.randrange(len(s) + 1)
+            if op < 0.4:
+                s.insert(i, rng.choice(alphabet))
+            elif op < 0.7 and i < len(s):
+                del s[i]
+            elif i < len(s):
+                s[i] = rng.choice(alphabet)
+        return "".join(s)
+
+    pairs = [
+        ("magna", "daphnia magna"), ("daphnia magna", "magna"),
+        ("n-octanol", "n octanol"), ("cadmium, chloride", "cadmium-chloride!"),
+        ("zinc zinc oxide", "zinc oxide"), ("magna magna", "magna daphnia magna"),
+        ("--", "magna"), ("magna", "?!"), ("", ""), ("...", "---"),
+        ("Daphnia", "daphnia"), ("a", "a"),
+    ]
+    for _ in range(600):
+        a = " ".join(rng.choice(words) for _ in range(rng.randint(1, 3)))
+        if rng.random() < 0.5:
+            b = mutate(a)
+        elif rng.random() < 0.5:
+            b = " ".join(reversed(mutate(a).split()))
+        else:
+            b = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 14)))
+        pairs.append((a, b))
+    return pairs
+
+
+def test_wratio_floor_kernel_is_exact_at_and_above_floor():
+    from tera_spark.functions.similarity import wratio, wratio_floor
+
+    pairs = _kernel_pairs()
+    ref = [wratio(a, b) for a, b in pairs]
+    # the random pairs must cover every band the floors split
+    assert {100} <= set(ref)
+    assert any(88 <= w < 100 for w in ref) and any(80 <= w < 88 for w in ref)
+    assert any(0 < w < 80 for w in ref) and 0 in ref
+    for floor in (0, 80, 88, 100):
+        memo: dict = {}
+        for (a, b), w in zip(pairs, ref):
+            got = wratio_floor(a, b, floor, memo)
+            if w >= floor:
+                assert got == w, (a, b, floor, got, w)
+            else:
+                assert got < floor, (a, b, floor, got, w)
+
+
+def test_wratio_at_least_udf_matches_kernel(spark):
+    from tera_spark.functions.similarity import wratio, wratio_at_least
+
+    pairs = _kernel_pairs()[:200] + [(None, "magna"), ("magna", None)]
+    df = spark.createDataFrame(pairs, "a string, b string")
+    for floor in (0, 88):
+        got = df.select(
+            "a", "b", wratio_at_least(F.col("a"), F.col("b"), floor).alias("s")
+        ).collect()
+        assert len(got) == len(pairs)
+        for r in got:
+            w = 0 if r.a is None or r.b is None else wratio(r.a, r.b)
+            assert (r.s == w) if w >= floor else (r.s < floor), (r.a, r.b, floor)

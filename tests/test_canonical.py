@@ -1,3 +1,5 @@
+import pytest
+
 from tera_spark.operators.canonical import (
     canonical_mapping,
     canonicalize,
@@ -28,6 +30,42 @@ def test_cc_long_chain_converges(spark):
     labels = connected_components(edges).collect()
     assert len(labels) == n + 1
     assert {r.component for r in labels} == {"n000"}
+
+
+def test_cc_unconverged_raises(spark):
+    """Leaving the loop at max_iter unconverged must fail loudly — the
+    labels would not be stars (a chain's far end would keep a non-min
+    label)."""
+    n = 40
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)], E_SCHEMA
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
+
+def test_canonical_mapping_converged_star_job_budget(spark):
+    """Alias edges as linking emits them — every provisional id points
+    straight at a smaller lexicon id — are already a converged star
+    forest: the initial edge set's fingerprint equals round 1's, so CC is
+    the initial checkpoint plus ONE round, two jobs in all."""
+    edges = spark.createDataFrame(
+        [(f"urn:mention:m{i}", f"cas:{i % 3}") for i in range(12)], E_SCHEMA
+    )
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    # with AQE on every materialized shuffle stage surfaces as its own
+    # tracker job; off, the tracker counts actions (see the pagerank budget)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        before = len(tracker.getJobIdsForGroup(None))
+        m = canonical_mapping(edges)
+        after = len(tracker.getJobIdsForGroup(None))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert after - before == 2, f"canonical_mapping ran {after - before} jobs, want 2"
+    got = {r.old: r.new for r in m.collect()}
+    assert got == {f"urn:mention:m{i}": f"cas:{i % 3}" for i in range(12)}
 
 
 def test_canonical_mapping_transitive(spark):

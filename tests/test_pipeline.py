@@ -173,6 +173,22 @@ def test_prepared_lexicon_release_and_freq_guard(spark, lexicon):
         p.release()
         assert _persistent_rdd_ids(sc) == base
 
+    # a checkpoint another driver thread takes while the lexicon is being
+    # prepared (link_mentions overlaps its mentions checkpoint this way)
+    # is not the lexicon's: release() must leave it pinned
+    from concurrent.futures import ThreadPoolExecutor
+
+    other_df = spark.range(0, 20_000, 1, 4).selectExpr("id", "id * 2 AS x")
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(other_df.localCheckpoint)
+        p = prepare_lexicon(lexicon)
+        other = fut.result()
+    other_ids = _persistent_rdd_ids(sc) - base - set(p._rdd_ids)
+    assert len(other_ids) == 1
+    p.release()
+    assert _persistent_rdd_ids(sc) == base | other_ids
+    assert other.count() == 20_000
+
 
 def test_per_turn_text_equality_invariant(spark, transcripts):
     """input_hint invariant: per-turn text equality under stable
@@ -880,11 +896,12 @@ def test_conversation_entropy_signatures(spark):
 
 
 def test_link_mentions_checkpoint_gate(spark, transcripts, lexicon, tmp_path):
-    """Round 6: link_mentions localCheckpoints UDF-lineage mentions once
-    (the linked union re-derives its input per branch), but must NOT add a
-    barrier for parquet-backed mentions (run.py/incremental/forget re-read
-    their stage tables cheaply). The gate is `inputFiles()`; outputs are
-    identical either way."""
+    """link_mentions localCheckpoints its mentions input once (the linked
+    union re-derives its input per branch) unless the caller passes
+    materialized=True (run.py/incremental/forget re-read their stage
+    tables cheaply). Extraction over parquet-backed transcripts is NOT
+    materialized — a file scan in the lineage says nothing about the UDF
+    above it — and must get the checkpoint. Outputs are identical."""
     from tera_spark.pipeline.extract import extract_mentions
     from tera_spark.pipeline.link import link_mentions
 
@@ -910,11 +927,21 @@ def test_link_mentions_checkpoint_gate(spark, transcripts, lexicon, tmp_path):
     mentions.write.parquet(path)
     m_parq = spark.read.parquet(path)
     before = n_persistent()
-    linked_parq, _ = link_mentions(m_parq, lexicon)
+    linked_parq, _ = link_mentions(m_parq, lexicon, materialized=True)
     with_parquet = n_persistent() - before
 
-    # derived lineage gets exactly one extra checkpointed RDD vs parquet
+    t_path = str(tmp_path / "transcripts.parquet")
+    transcripts.write.parquet(t_path)
+    m_file = extract_mentions(spark.read.parquet(t_path))
+    before = n_persistent()
+    linked_file, _ = link_mentions(m_file, lexicon)
+    with_file_lineage = n_persistent() - before
+
+    # derived lineage gets exactly one extra checkpointed RDD vs parquet,
+    # whether its transcripts came from memory or from files
     assert with_derived == with_parquet + 1
+    assert with_file_lineage == with_parquet + 1
     a = {tuple(r) for r in linked_mem.collect()}
     b = {tuple(r) for r in linked_parq.collect()}
     assert a == b
+    assert {tuple(r) for r in linked_file.collect()} == a

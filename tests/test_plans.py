@@ -85,9 +85,7 @@ def test_replace_entities_size_gate_degrades_to_shuffle(spark, monkeypatch):
 
 def test_link_exact_path_lexicon_size_gate(spark, monkeypatch):
     """An over-threshold lexicon must NOT broadcast into the exact-match
-    join — the plan degrades to a shuffle-hash join on norm. (The fuzzy
-    path's hot-shingle anti-joins stay broadcast: hot sets are bounded
-    tiny by construction.)"""
+    join — the plan degrades to a shuffle-hash join on norm."""
     import tera_spark.pipeline.link as lk
     from tera_spark.fixtures.transcripts import lexicon_spark_df, transcripts_spark_df
     from tera_spark.pipeline.extract import extract_mentions
