@@ -14,6 +14,8 @@ Python in the hot path.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -72,13 +74,28 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return out
 
 
+def _dbl_array_sql(values: list[float]) -> str:
+    """SQL text of a literal array<double>. repr(float) round-trips finite
+    IEEE doubles exactly; NaN and ±Infinity have no numeric literal, so
+    they are spelled as casts (a bare ``nanD`` would not parse)."""
+
+    def lit(x: float) -> str:
+        x = float(x)
+        if math.isnan(x):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(x):
+            return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+        return repr(x) + "D"
+
+    return "array(" + ",".join(lit(x) for x in values) + ")"
+
+
 def _dbl_array_expr(values: list[float]) -> Column:
     """A literal array<double> built as ONE SQL expr string parsed
     JVM-side — per-element F.lit() trees cost ~0.5ms of py4j round-trip
     each, which at planes×dim (or k×dim) literals dominates expression
-    construction (measured round 6). repr(float) round-trips IEEE doubles
-    exactly."""
-    return F.expr("array(" + ",".join(repr(float(x)) + "D" for x in values) + ")")
+    construction (measured round 6)."""
+    return F.expr(_dbl_array_sql(values))
 
 
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
@@ -128,20 +145,13 @@ def centroid_dist_pairs(vec: Column, cent_rows: list) -> Column:
     # k×dim F.lit() calls: the element-wise Column tree (and F.lit(list),
     # which recurses into per-element lits) cost 0.5-0.7s of pure driver/
     # py4j time PER CALL at k=16, dim=64 (measured round 6) — more than
-    # the assignment job itself. repr(float) round-trips IEEE doubles
-    # exactly through the SQL parser. The 2-arg transform lambda receives
-    # (element, index); element_at is 1-based.
+    # the assignment job itself (_dbl_array_sql spells each row). The
+    # 2-arg transform lambda receives (element, index); element_at is
+    # 1-based.
     cids = F.expr(
         "array(" + ",".join(str(int(r["centroid_id"])) for r in cent_rows) + ")"
     ).cast("array<int>")
-    carr = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(repr(float(x)) + "D" for x in r["c"]) + ")"
-            for r in cent_rows
-        )
-        + ")"
-    )
+    carr = F.expr("array(" + ",".join(_dbl_array_sql(r["c"]) for r in cent_rows) + ")")
     return F.transform(
         cids,
         lambda cid, i: F.struct(

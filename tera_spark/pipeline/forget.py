@@ -32,9 +32,9 @@ row provenance:
    entity: members = canonical-map entries pointing at the touched
    representatives.
 2. **Re-canonicalize only those components.** Their live alias edges
-   minus the removed ones re-run connected components (driver-side
-   union-find when component-sized, the distributed large-star loop past
-   the same bound incremental apply uses). This yields the new
+   minus the removed ones go through ``canonical_mapping``
+   (operators/canonical.py, which picks driver-side union-find or the
+   distributed loop by edge count). This yields the new
    representative for every member — including un-merges, which no
    forward-only composition can express — plus the canonical_map upsert
    delta (changed entries) and tombstones (entries that became identity).
@@ -88,9 +88,7 @@ re-forgetting an unknown or already-forgotten conversation is a no-op).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,30 +98,24 @@ from tera_spark.constants import NS_KG, RDF_TYPE, RDFS_LABEL
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.triples import bnode, replace_entities
 from tera_spark.pipeline.incremental import (
-    _DRIVER_CC_MAX_EDGES,
-    _MANIFEST,
     _TRIPLE_COLS,
     _TRIPLE_KEY,
-    TABLES,
-    _batches_root,
-    _bucket_of,
-    _sweep_uncommitted,
-    _union_find,
+    _Batch,
     _write_part,
-    committed_batches,
     read_live,
     read_refcounts,
 )
 from tera_spark.pipeline.kg import (
     cooccurrence_triples,
     emission_refcounts,
+    kg_edges,
+    kg_nodes,
     mention_triples,
     quantity_triples,
     shared_row_expr,
 )
 from tera_spark.pipeline.link import link_mentions
-from tera_spark.pipeline.run import N_BUCKETS, PipelineResult, _done
-from tera_spark.sources.writers import bucketize
+from tera_spark.pipeline.run import PipelineResult, _bucket_of, _bucketize, _done, _write_bucketed
 
 
 def _conv_ids_df(spark: SparkSession, conv_ids) -> DataFrame:
@@ -187,39 +179,24 @@ def run_pipeline_forget(
     atomic delta batch. ``lexicon`` / ``fuzzy_threshold`` must match the
     original runs (linking is replayed as a pure function to reconstruct
     the deleted conversations' alias edges). See module docstring."""
-    from tera_spark.pipeline.link import PreparedLexicon, prepare_lexicon
-
-    res = PipelineResult(out_dir=out_dir)
-    paths = {t: os.path.join(out_dir, t) for t in TABLES}
-    missing = [t for t in TABLES if not _done(paths[t])]
-    if missing:
-        raise ValueError(
-            f"forget needs a completed pipeline at {out_dir}; missing: {missing}"
-        )
-    if os.path.exists(os.path.join(out_dir, _MANIFEST)):
-        raise RuntimeError(
-            f"interrupted compact() at {out_dir}: run compact() to finish the swap"
-        )
+    batch = _Batch(out_dir, "forget", _write_part)
     for side in ("canonical_map", "ent_index", "convs_applied"):
         if not _done(os.path.join(out_dir, side)):
             raise ValueError(
                 f"forget needs the {side} side table at {out_dir} — produced by "
                 "run_pipeline (round 4+) or bootstrapped by one incremental apply"
             )
-    _sweep_uncommitted(out_dir)
     if not _done(os.path.join(out_dir, "refcounts")):
         # legacy base (pre-refcount layout): bootstrap once from the live
         # linked table. That view includes every committed batch's rows,
         # and pre-bootstrap batches carry no refcounts_adds parts, so
         # nothing double-counts; applies committed AFTER this write
         # maintain the table incrementally (pipeline/incremental.py).
-        bucketize(
-            emission_refcounts(read_live(spark, out_dir, "linked")), N_BUCKETS, "k1"
-        ).write.mode("overwrite").partitionBy("_bucket").parquet(
-            os.path.join(out_dir, "refcounts")
+        _write_bucketed(
+            emission_refcounts(read_live(spark, out_dir, "linked")),
+            "refcounts",
+            os.path.join(out_dir, "refcounts"),
         )
-    batches = committed_batches(out_dir)
-    seq = len(batches) + 1
 
     # ---- the conversations that are actually applied (unknown ids no-op)
     d_convs = (
@@ -227,35 +204,13 @@ def run_pipeline_forget(
         .join(read_live(spark, out_dir, "convs_applied"), "conv_id", "left_semi")
         .localCheckpoint(eager=True)
     )
-    if d_convs.limit(1).count() == 0:
-        res.stages_skipped = [f"{t}@{batch_id or 'noop'}" for t in TABLES]
-        return res
-
-    if batch_id is None:
-        h = d_convs.agg(F.expr("bit_xor(xxhash64(conv_id))").alias("h")).collect()[0]["h"]
-        batch_id = f"forget-{(int(h) & 0xFFFFFFFFFFFFFFFF):016x}"
-    elif any(
-        b.split("_", 1)[1] == batch_id for b in (os.path.basename(x) for x in batches)
-    ):
-        raise ValueError(f"batch_id {batch_id!r} was already committed at {out_dir}")
-    batch_dir = os.path.join(_batches_root(out_dir), f"b{seq:06d}_{batch_id}")
-    shutil.rmtree(batch_dir, ignore_errors=True)
-    os.makedirs(batch_dir, exist_ok=True)
+    if not batch.open(d_convs, batch_id, prefix="forget-"):
+        return batch.res
+    _phase = batch.phase
 
     def part(name: str, df: DataFrame, *, partitioned: bool = True):
-        t0 = time.time()
-        table = name.rsplit("_", 1)[0]
-        _write_part(
-            out_dir, batch_dir, name, df,
-            batch_tag=f"{table}@{batch_id}", res=res, record=name.endswith("_dels"),
-            t0=t0, partitioned=partitioned,
-        )
-
-    def _phase(name: str, t0: float) -> None:
-        res.metrics.append(
-            {"stage": f"_{name}@{batch_id}", "rows_out": -1,
-             "seconds": round(time.time() - t0, 3)}
-        )
+        # a forget's lineage is its tombstones
+        batch.part(name, df, record=name.endswith("_dels"), partitioned=partitioned)
 
     dset = F.broadcast(d_convs)
 
@@ -279,11 +234,8 @@ def run_pipeline_forget(
     # urn:mention id (the provisional row is emitted whenever the fuzzy
     # path ran for that norm — same purity argument).
     t0 = time.time()
-    prepared = (
-        lexicon if isinstance(lexicon, PreparedLexicon) else prepare_lexicon(lexicon)
-    )
     _, d_edges = link_mentions(
-        d_mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+        d_mentions, lexicon, fuzzy_threshold, scorer=scorer, materialized=True
     )
     d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
     surviving_u = rem_linked.filter(F.col("link_method") == "provisional").select(
@@ -320,25 +272,12 @@ def run_pipeline_forget(
 
     # re-run CC on the affected components' remaining edges (u side of an
     # alias edge is always a member iff its component is affected)
-    comp_edges = (
+    new_cc = canonical_mapping(
         read_live(spark, out_dir, "alias_edges")
         .select("u", "v")
         .join(F.broadcast(members.withColumnRenamed("x", "u")), "u", "left_semi")
         .join(removed, ["u", "v"], "left_anti")
-        .localCheckpoint(eager=True)
     )
-    n_comp = comp_edges.count()
-    if n_comp <= _DRIVER_CC_MAX_EDGES:
-        uf = _union_find((row.u, row.v) for row in comp_edges.collect())
-        pairs = [(x, r) for x, r in uf.items() if x != r]
-        new_cc = (
-            spark.createDataFrame(pairs, "old string, new string")
-            if pairs
-            else spark.createDataFrame([], "old string, new string")
-        )
-    else:
-        new_cc = canonical_mapping(comp_edges)
-    new_cc = new_cc.localCheckpoint(eager=True)
 
     # canonical_map upsert delta: changed entries + identity tombstones
     old_entries = old_map.join(
@@ -521,32 +460,15 @@ def run_pipeline_forget(
 
     # ---- write the delta parts (all under the uncommitted batch dir)
     part("triples_dels", dels_full.select(*_TRIPLE_KEY), partitioned=False)
-    adds_t = new_slice.withColumn("_bucket", _bucket_of("subject", N_BUCKETS))
+    adds_t = new_slice.withColumn("_bucket", _bucket_of("triples"))
     part("triples_adds", adds_t)
 
     shared = shared_row_expr()
     part("ent_index_dels", dels_full.filter(shared).select(*_TRIPLE_KEY), partitioned=False)
     part("ent_index_adds", adds_t.filter(shared))
 
-    not_lit = ~F.col("obj_is_literal")
-    part(
-        "edges_dels",
-        dels_full.filter(not_lit).select(
-            F.col("subject").alias("src"),
-            F.col("predicate").alias("pred"),
-            F.col("object").alias("dst"),
-        ),
-        partitioned=False,
-    )
-    part(
-        "edges_adds",
-        adds_t.filter(not_lit).select(
-            F.col("subject").alias("src"),
-            F.col("predicate").alias("pred"),
-            F.col("object").alias("dst"),
-            "_bucket",
-        ),
-    )
+    part("edges_dels", kg_edges(dels_full), partitioned=False)
+    part("edges_adds", kg_edges(adds_t, "_bucket"))
 
     # nodes: recompute exactly the ids whose type/label row set changed —
     # split reps (old and new), unsplit reps that lost a candidate row
@@ -575,21 +497,10 @@ def run_pipeline_forget(
         .join(F.broadcast(dels_full.select(*_TRIPLE_KEY)), _TRIPLE_KEY, "left_anti")
         .select(*_TRIPLE_COLS)
     )
-    tl = kept_tl.unionByName(adds_t.filter(is_tl).select(*_TRIPLE_COLS)).dropDuplicates(
-        _TRIPLE_KEY
-    )
-    types = tl.filter(F.col("predicate") == RDF_TYPE).select(
-        F.col("subject").alias("id"), F.col("object").alias("kind")
-    )
-    labels = tl.filter(F.col("predicate") == RDFS_LABEL).select(
-        F.col("subject").alias("id"), F.col("object").alias("label")
-    )
     nodes_adds = (
-        types.join(labels, "id", "left")
+        kg_nodes(kept_tl.unionByName(adds_t.select(*_TRIPLE_COLS)))
         .join(F.broadcast(node_ids), "id", "left_semi")
-        .groupBy("id")
-        .agg(F.min("kind").alias("kind"), F.min("label").alias("label"))
-        .withColumn("_bucket", _bucket_of("id", N_BUCKETS))
+        .withColumn("_bucket", _bucket_of("nodes"))
         .localCheckpoint(eager=True)
     )
     nodes_dels = node_ids.join(nodes_adds.select("id"), "id", "left_anti")
@@ -602,13 +513,8 @@ def run_pipeline_forget(
     part("linked_dels", d_convs, partitioned=False)
     part("refcounts_dels", dec, partitioned=False)
     part("alias_edges_dels", removed.select("u", "v"), partitioned=False)
-    part("canonical_map_adds", bucketize(map_adds, N_BUCKETS, "old"))
+    part("canonical_map_adds", _bucketize(map_adds, "canonical_map"))
     part("canonical_map_dels", map_dels, partitioned=False)
     part("convs_applied_dels", d_convs, partitioned=False)
 
-    marker = {"seq": seq, "batch_id": batch_id, "op": "forget", "stages": res.stages_run}
-    tmp = os.path.join(batch_dir, "_COMMITTED.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(marker, fh)
-    os.rename(tmp, os.path.join(batch_dir, "_COMMITTED"))
-    return res
+    return batch.commit(op="forget")

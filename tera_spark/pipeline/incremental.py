@@ -22,7 +22,8 @@ tables derived from it. The update exploits two structural facts:
    tombstoned triple/edge row can never be re-added — the read-time merge
    is an order-insensitive anti-join, no sequencing needed.
 2. **Every table is hash-bucketed by its subject-side key** with the same
-   ``pmod(xxhash64(key), N)`` function, so add files written by a batch
+   ``pmod(xxhash64(key), N)`` function, both read from the one
+   ``TABLE_LAYOUT`` (pipeline/run.py), so add files written by a batch
    use the same clustering as the base and a later ``compact()`` folds
    them in without re-deriving anything.
 
@@ -59,8 +60,10 @@ Read-time merge (``read_live``), all map-side — ZERO shuffles of the base:
   pipeline/kg.py emission_refcounts defines the keys).
 
 Cost model (per batch): per-turn stages O(|delta|); connected components
-run only over the batch's CONTRACTED new alias edges (the persisted
-``canonical_map`` supplies the old components — never recomputed); on the
+run only over the batch's CONTRACTED new alias edges, through
+``canonical_mapping`` (operators/canonical.py — which picks the exact
+driver-side union-find at these delta sizes); the persisted
+``canonical_map`` supplies the old components, never recomputed. On the
 steady-state FAST path (no stored canonical id changed) the corpus-sized
 base triples are NEVER read — one scan of the vocabulary-sized
 ``ent_index`` (exactly ``live_triples.filter(shared_row_expr())``, the
@@ -103,16 +106,18 @@ from tera_spark.constants import NS_KG, RDF_TYPE, RDFS_LABEL
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
-from tera_spark.pipeline.kg import build_triples, shared_row_expr
-from tera_spark.pipeline.link import link_mentions, prepare_lexicon
+from tera_spark.pipeline.kg import build_triples, kg_edges, kg_nodes, shared_row_expr
+from tera_spark.pipeline.link import link_mentions
 from tera_spark.pipeline.run import (
     N_BUCKETS,
     PipelineResult,
+    _bucket_of,
+    _bucketize,
     _done,
     _lineage_exprs,
     _record,
+    _write_bucketed,
 )
-from tera_spark.sources.writers import bucketize
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
 _TRIPLE_COLS = ["subject", "predicate", "object", "obj_is_literal"]
@@ -131,11 +136,6 @@ _DEL_KEYS = {
 _UPSERT_KEYS = {"nodes": "id", "canonical_map": "old", "convs_applied": "conv_id"}
 BATCHES_DIR = "_batches"
 _MANIFEST = "_compact_manifest.json"
-# Contracted delta graphs at or below this edge count run connected
-# components driver-side (exact union-find, ~ms) instead of the iterative
-# distributed loop (~15 scheduled jobs minimum). Bounded by the BATCH size,
-# never the corpus; ~12 MB of URI strings at the bound.
-_DRIVER_CC_MAX_EDGES = 200_000
 
 # The shared-row classification (which triple rows can collide across
 # conversations) lives next to the emit sites it is pinned to:
@@ -144,34 +144,6 @@ _DRIVER_CC_MAX_EDGES = 200_000
 # the full triple table is corpus-sized, which is what makes apply cost
 # ∝ delta instead of ∝ base.
 _shared_expr = shared_row_expr
-
-
-def _bucket_of(col: str, n: int):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int")
-
-
-def _union_find(edge_pairs) -> dict:
-    """Exact driver-side union-find (union-by-min, path compression) over an
-    iterable of (u, v) string pairs. Returns {id: representative} for every
-    id seen, identity entries included. Same semantics as the distributed
-    canonical_mapping: representative = component min; ids are ASCII URIs,
-    so Python and Spark string orderings agree."""
-    parent: dict = {}
-
-    def _find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v in edge_pairs:
-        ru, rv = _find(u), _find(v)
-        if ru != rv:
-            lo, hi = (ru, rv) if ru < rv else (rv, ru)
-            parent[hi] = lo
-    return {x: _find(x) for x in list(parent)}
 
 
 # ---------------------------------------------------------------------------
@@ -417,6 +389,84 @@ def _write_part(
         shutil.rmtree(path, ignore_errors=True)
 
 
+class _Batch:
+    """The lifecycle of one delta batch, shared by apply and forget.
+
+    Construction checks for a completed pipeline and no interrupted
+    ``compact()``, sweeps uncommitted leftovers and fixes ``seq``;
+    ``open`` names and creates the batch dir; ``part`` writes one delta
+    file set into it; ``phase`` records a timing row; ``commit`` writes
+    the ``_COMMITTED`` marker last. ``write_part`` is the calling module's
+    ``_write_part``, resolved when the caller runs, so tests can patch
+    either module's."""
+
+    def __init__(self, out_dir: str, op: str, write_part) -> None:
+        missing = [t for t in TABLES if not _done(os.path.join(out_dir, t))]
+        if missing:
+            raise ValueError(
+                f"{op} needs a completed pipeline at {out_dir}; missing stages: {missing}"
+            )
+        if os.path.exists(os.path.join(out_dir, _MANIFEST)):
+            raise RuntimeError(
+                f"interrupted compact() at {out_dir}: run compact() to finish the swap"
+            )
+        _sweep_uncommitted(out_dir)
+        self.out_dir = out_dir
+        self.committed = committed_batches(out_dir)
+        self.seq = len(self.committed) + 1
+        self.res = PipelineResult(out_dir=out_dir)
+        self._write_part = write_part
+
+    def open(self, convs: DataFrame, batch_id: str | None, prefix: str = "") -> bool:
+        """Create the batch dir for the distinct ``conv_id`` rows ``convs``.
+        Returns False, every table recorded as skipped, when ``convs`` is
+        empty. The default ``batch_id`` is ``prefix`` + a content hash of
+        the conv_id set (bit_xor is order-independent and can't overflow
+        under ANSI mode, as sum(xxhash64) would), so retries reuse the id;
+        an explicit id that was already committed raises."""
+        row = convs.agg(
+            F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(conv_id))").alias("h")
+        ).collect()[0]
+        if row["n"] == 0:
+            self.res.stages_skipped = [f"{t}@{batch_id or 'noop'}" for t in TABLES]
+            return False
+        if batch_id is None:
+            batch_id = f"{prefix}{(int(row['h']) & 0xFFFFFFFFFFFFFFFF):016x}"
+        elif any(os.path.basename(b).split("_", 1)[1] == batch_id for b in self.committed):
+            raise ValueError(
+                f"batch_id {batch_id!r} was already committed at {self.out_dir}; "
+                "per-batch lineage would collide — pick a unique id"
+            )
+        self.batch_id = batch_id
+        self.dir = os.path.join(_batches_root(self.out_dir), f"b{self.seq:06d}_{batch_id}")
+        shutil.rmtree(self.dir, ignore_errors=True)
+        os.makedirs(self.dir, exist_ok=True)
+        return True
+
+    def part(self, name: str, df: DataFrame, *, record: bool = True, partitioned: bool = True):
+        table = name.rsplit("_", 1)[0]
+        self._write_part(
+            self.out_dir, self.dir, name, df, batch_tag=f"{table}@{self.batch_id}",
+            res=self.res, record=record, t0=time.time(), partitioned=partitioned,
+        )
+
+    def phase(self, name: str, t0: float) -> None:
+        self.res.metrics.append(
+            {"stage": f"_{name}@{self.batch_id}", "rows_out": -1,
+             "seconds": round(time.time() - t0, 3)}
+        )
+
+    def commit(self, **marker) -> PipelineResult:
+        """Publish the batch: the marker is renamed into place last."""
+        marker = {"seq": self.seq, "batch_id": self.batch_id, **marker,
+                  "stages": self.res.stages_run}
+        tmp = os.path.join(self.dir, "_COMMITTED.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(marker, fh)
+        os.rename(tmp, os.path.join(self.dir, "_COMMITTED"))
+        return self.res
+
+
 def run_pipeline_incremental(
     spark: SparkSession,
     new_transcripts: DataFrame,
@@ -437,21 +487,8 @@ def run_pipeline_incremental(
     (``<stage>@<batch_id>``); default is a content hash of the batch's
     conv_ids, so retries reuse the same id and distinct batches never
     collide."""
-    res = PipelineResult(out_dir=out_dir)
-    paths = {t: os.path.join(out_dir, t) for t in TABLES}
-    missing = [t for t in TABLES if not _done(paths[t])]
-    if missing:
-        raise ValueError(
-            f"incremental run needs a completed pipeline at {out_dir}; "
-            f"missing stages: {missing}"
-        )
-    if os.path.exists(os.path.join(out_dir, _MANIFEST)):
-        raise RuntimeError(
-            f"interrupted compact() at {out_dir}: run compact() to finish the swap"
-        )
-    _sweep_uncommitted(out_dir)
-    batches = committed_batches(out_dir)
-    seq = len(batches) + 1
+    batch = _Batch(out_dir, "incremental run", _write_part)
+    part, _phase = batch.part, batch.phase
 
     # Applied-conversation bookkeeping: a conversation with zero mentions
     # never reaches the mentions table, so the guard keys off a dedicated
@@ -463,7 +500,7 @@ def run_pipeline_incremental(
     if not _done(convs_path):
         prefix = NS_KG + "conv/"
         seen0 = (
-            spark.read.parquet(paths["triples"])
+            spark.read.parquet(os.path.join(out_dir, "triples"))
             .filter(
                 (F.col("predicate") == RDF_TYPE)
                 & (F.col("object") == NS_KG + "Conversation")
@@ -471,9 +508,7 @@ def run_pipeline_incremental(
             .select(F.col("subject").substr(len(prefix) + 1, 1 << 30).alias("conv_id"))
             .distinct()
         )
-        bucketize(seen0, 8, "conv_id").write.mode("overwrite").partitionBy(
-            "_bucket"
-        ).parquet(convs_path)
+        _write_bucketed(seen0, "convs_applied", convs_path)
 
     delta = new_transcripts
     if guard_seen_convs:
@@ -482,45 +517,8 @@ def run_pipeline_incremental(
     # checkpoint NOW: every downstream read of the live tables must see the
     # pre-batch state, and the guard's anti-join must run before any write
     delta = delta.localCheckpoint(eager=True)
-    if delta.limit(1).count() == 0:
-        res.stages_skipped = [f"{t}@{batch_id or 'noop'}" for t in TABLES]
-        return res
-
-    if batch_id is None:
-        # content hash of the conv_id set: bit_xor is order-independent and
-        # can't overflow under ANSI mode (sum(xxhash64) would)
-        h = delta.select("conv_id").distinct().agg(
-            F.expr("bit_xor(xxhash64(conv_id))").alias("h")
-        ).collect()[0]["h"]
-        batch_id = f"{(int(h) & 0xFFFFFFFFFFFFFFFF):016x}"
-    elif any(b.split("_", 1)[1] == batch_id for b in (os.path.basename(x) for x in batches)):
-        raise ValueError(
-            f"batch_id {batch_id!r} was already committed at {out_dir}; "
-            "per-batch lineage would collide — pick a unique id"
-        )
-    batch_dir = os.path.join(_batches_root(out_dir), f"b{seq:06d}_{batch_id}")
-    shutil.rmtree(batch_dir, ignore_errors=True)
-    os.makedirs(batch_dir, exist_ok=True)
-
-    def part(name: str, df: DataFrame, *, record: bool = True, partitioned: bool = True):
-        t0 = time.time()
-        table = name.rsplit("_", 1)[0]
-        _write_part(
-            out_dir,
-            batch_dir,
-            name,
-            df,
-            batch_tag=f"{table}@{batch_id}",
-            res=res,
-            record=record,
-            t0=t0,
-            partitioned=partitioned,
-        )
-
-    def _phase(name: str, t0: float) -> None:
-        res.metrics.append(
-            {"stage": f"_{name}@{batch_id}", "rows_out": -1, "seconds": round(time.time() - t0, 3)}
-        )
+    if not batch.open(delta.select("conv_id").distinct(), batch_id):
+        return batch.res
 
     # ---- old (pre-batch) live state. The canonical map is PERSISTED
     # pipeline state (run.py writes it as a stage; each batch appends its
@@ -533,20 +531,16 @@ def run_pipeline_incremental(
     cmap_path = os.path.join(out_dir, "canonical_map")
     if not _done(cmap_path):
         # legacy base dir (pre-round-4): bootstrap the map table once
-        bucketize(canonical_mapping(old_edges), N_BUCKETS, "old").write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(cmap_path)
+        _write_bucketed(canonical_mapping(old_edges), "canonical_map", cmap_path)
     old_mapping = read_live(spark, out_dir, "canonical_map").localCheckpoint(eager=True)
     idx_path = os.path.join(out_dir, "ent_index")
     if not _done(idx_path):
         # bootstrap the shared-row index once (the ONLY full base-triples
         # scan this module ever does; every later apply probes the
         # vocabulary-sized index instead of the corpus-sized base)
-        bucketize(
-            read_live(spark, out_dir, "triples").filter(_shared_expr()),
-            N_BUCKETS,
-            "subject",
-        ).write.mode("overwrite").partitionBy("_bucket").parquet(idx_path)
+        _write_bucketed(
+            read_live(spark, out_dir, "triples").filter(_shared_expr()), "ent_index", idx_path
+        )
     ent_idx = read_live(spark, out_dir, "ent_index")
     _phase("old_mapping", t0)
 
@@ -555,22 +549,17 @@ def run_pipeline_incremental(
         downstream input — the part write is the materialization barrier
         (one copy, not checkpoint + write = two)."""
         part(name, df)
-        p = os.path.join(batch_dir, name)
+        p = os.path.join(batch.dir, name)
         return spark.read.parquet(p) if os.path.exists(p) else df
 
     # ---- per-turn delta stages (pure functions of the batch + lexicon)
     t0 = time.time()
-    m_delta = part_read(
-        "mentions_adds", bucketize(extract_mentions(delta), N_BUCKETS, "conv_id")
-    )
-    prepared = prepare_lexicon(lexicon)
+    m_delta = part_read("mentions_adds", _bucketize(extract_mentions(delta), "mentions"))
     linked_raw, edges_delta = link_mentions(
-        m_delta.drop("_bucket"), prepared, fuzzy_threshold, scorer=scorer,
+        m_delta.drop("_bucket"), lexicon, fuzzy_threshold, scorer=scorer,
         materialized=True,
     )
-    linked_delta = part_read(
-        "linked_adds", bucketize(linked_raw, N_BUCKETS, "conv_id")
-    )
+    linked_delta = part_read("linked_adds", _bucketize(linked_raw, "linked"))
     edges_delta = edges_delta.localCheckpoint(eager=True)
     # emission-refcount maintenance: raw keys are canonical-merge-
     # invariant, so an apply only ever ADDS counts (delta-sized). Skipped
@@ -594,7 +583,7 @@ def run_pipeline_incremental(
     new_edges = edges_delta.select("u", "v").join(
         old_edges, ["u", "v"], "left_anti"
     ).dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
-    part("alias_edges_adds", bucketize(new_edges, 8, "u"))
+    part("alias_edges_adds", _bucketize(new_edges, "alias_edges"))
 
     # ---- global step: connected components over the CONTRACTED delta
     # graph only. Components only merge and the representative is the
@@ -602,6 +591,8 @@ def run_pipeline_incremental(
     # old map and running CC on that (delta-sized) edge set yields exactly
     # the representative moves; composing with the old map gives the full
     # new mapping without ever touching the old alias universe.
+    # canonical_mapping drops the edges that collapsed into one component
+    # and, at these delta sizes, runs the exact driver-side union-find.
     t0 = time.time()
     om_u = F.broadcast(
         old_mapping.select(F.col("old").alias("u"), F.col("new").alias("_nu"))
@@ -609,35 +600,11 @@ def run_pipeline_incremental(
     om_v = F.broadcast(
         old_mapping.select(F.col("old").alias("v"), F.col("new").alias("_nv"))
     )
-    contracted = (
+    cs = canonical_mapping(
         new_edges.join(om_u, "u", "left")
         .join(om_v, "v", "left")
-        .select(
-            F.coalesce("_nu", "u").alias("u"), F.coalesce("_nv", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
+        .select(F.coalesce("_nu", "u").alias("u"), F.coalesce("_nv", "v").alias("v"))
     )
-    n_contracted = contracted.count()
-    if n_contracted == 0:
-        # every new edge collapsed into an existing component under the old
-        # map — no CC iterations, no map change, guaranteed fast path below
-        cs = spark.createDataFrame([], "old string, new string")
-    elif n_contracted <= _DRIVER_CC_MAX_EDGES:
-        # driver-side union-find: the contracted graph is DELTA-sized by
-        # construction, and below this bound the distributed
-        # large-star/small-star loop costs more in per-job scheduling
-        # (~5 iterations × several jobs) than the entire problem. Exact
-        # same semantics as canonical_mapping: representative = component
-        # min id (union-by-min, ids are ASCII URIs so Python and Spark
-        # string orderings agree), identity rows dropped.
-        reps = _union_find((row.u, row.v) for row in contracted.collect())
-        pairs = [(x, r) for x, r in reps.items() if x != r]
-        cs = spark.createDataFrame(pairs, "old string, new string") if pairs else (
-            spark.createDataFrame([], "old string, new string")
-        )
-    else:
-        cs = canonical_mapping(contracted).localCheckpoint(eager=True)
 
     # stored-value rewrite map: cs entries whose key can exist in the old
     # tables. Everything stored live is its own old canonical (module
@@ -689,7 +656,7 @@ def run_pipeline_incremental(
         # extra materialization: both inputs are already checkpointed.
         new_mapping = old_mapping.unionByName(cs)
         map_delta = cs
-    part("canonical_map_adds", bucketize(map_delta, N_BUCKETS, "old"), record=False)
+    part("canonical_map_adds", _bucketize(map_delta, "canonical_map"), record=False)
     _phase("mapping", t0)
 
     # ---- delta triples, canonicalized with the new mapping (one dedup
@@ -754,7 +721,7 @@ def run_pipeline_incremental(
         adds_t = part_read(
             "triples_adds",
             cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti").withColumn(
-                "_bucket", _bucket_of("subject", N_BUCKETS)
+                "_bucket", _bucket_of("triples")
             ),
         )
         _phase("dup_probe", t0p)
@@ -782,12 +749,7 @@ def run_pipeline_incremental(
             .select(*_TRIPLE_COLS)
         )
         _phase("nodes_probe", t0p)
-        not_lit = ~F.col("obj_is_literal")
-        edge_dels = hit_rows.filter(not_lit).select(
-            F.col("subject").alias("src"),
-            F.col("predicate").alias("pred"),
-            F.col("object").alias("dst"),
-        )
+        edge_dels = kg_edges(hit_rows)
     else:
         # ---- FAST PATH (no stored id rewritten — the steady-state
         # add-only batch): no tombstones anywhere, the base triples are
@@ -815,7 +777,7 @@ def run_pipeline_incremental(
         adds_t = part_read(
             "triples_adds",
             cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti").withColumn(
-                "_bucket", _bucket_of("subject", N_BUCKETS)
+                "_bucket", _bucket_of("triples")
             ),
         )
         dels_t = None
@@ -837,21 +799,9 @@ def run_pipeline_incremental(
     # ---- nodes: fresh aggregate over the affected ids' live type/label
     # rows (pre-batch survivors + this batch's adds)
     t0 = time.time()
-    live_tl = kept_tl.unionByName(
-        adds_t.filter(is_tl).select(*_TRIPLE_COLS)
-    ).dropDuplicates(_TRIPLE_KEY)
-    types = live_tl.filter(F.col("predicate") == RDF_TYPE).select(
-        F.col("subject").alias("id"), F.col("object").alias("kind")
-    )
-    labels = live_tl.filter(F.col("predicate") == RDFS_LABEL).select(
-        F.col("subject").alias("id"), F.col("object").alias("label")
-    )
+    live_tl = kept_tl.unionByName(adds_t.select(*_TRIPLE_COLS))
     nodes_adds = part_read(
-        "nodes_adds",
-        types.join(labels, "id", "left")
-        .groupBy("id")
-        .agg(F.min("kind").alias("kind"), F.min("label").alias("label"))
-        .withColumn("_bucket", _bucket_of("id", N_BUCKETS)),
+        "nodes_adds", kg_nodes(live_tl).withColumn("_bucket", _bucket_of("nodes"))
     )
     # tombstones: ids merged away, plus affected ids whose recompute
     # produced no row (their last type triple was rewritten away — the
@@ -869,14 +819,7 @@ def run_pipeline_incremental(
     # exactly the triples delta projected — no extra probe. (A tombstone
     # key can never reappear in adds: old forms always contain a
     # merged-away id, new forms only current representatives.)
-    not_lit = ~F.col("obj_is_literal")
-    edge_adds = adds_t.filter(not_lit).select(
-        F.col("subject").alias("src"),
-        F.col("predicate").alias("pred"),
-        F.col("object").alias("dst"),
-        "_bucket",
-    )
-    part("edges_adds", edge_adds)
+    part("edges_adds", kg_edges(adds_t, "_bucket"))
     if edge_dels is not None:
         part("edges_dels", edge_dels, record=False, partitioned=False)
 
@@ -887,16 +830,7 @@ def run_pipeline_incremental(
         record=False,
         partitioned=False,
     )
-    marker = {
-        "seq": seq,
-        "batch_id": batch_id,
-        "stages": res.stages_run,
-    }
-    tmp = os.path.join(batch_dir, "_COMMITTED.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(marker, fh)
-    os.rename(tmp, os.path.join(batch_dir, "_COMMITTED"))
-    return res
+    return batch.commit()
 
 
 # ---------------------------------------------------------------------------
@@ -937,30 +871,12 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
                 os.path.join(out_dir, t)
             ):
                 continue  # legacy dir never bootstrapped this side table
-            live = read_live(spark, out_dir, t)
-            key = {
-                "mentions": "conv_id",
-                "linked": "conv_id",
-                "alias_edges": "u",
-                "triples": "subject",
-                "nodes": "id",
-                "edges": "src",
-                "canonical_map": "old",
-                "ent_index": "subject",
-            }[t]
-            n = 8 if t == "alias_edges" else N_BUCKETS
-            bucketize(live, n, key).write.mode("overwrite").partitionBy(
-                "_bucket"
-            ).parquet(_tmp(t))
+            _write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
         convs = read_live(spark, out_dir, "convs_applied").select("conv_id")
-        bucketize(convs.dropDuplicates(["conv_id"]), 8, "conv_id").write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(_tmp("convs_applied"))
+        _write_bucketed(convs.dropDuplicates(["conv_id"]), "convs_applied", _tmp("convs_applied"))
         if _done(os.path.join(out_dir, "refcounts")):
             # summed fold — the refcount merge is arithmetic, not upsert
-            bucketize(read_refcounts(spark, out_dir), N_BUCKETS, "k1").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(_tmp("refcounts"))
+            _write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"tables": tables, "batches": [os.path.basename(b) for b in batches]}, fh)

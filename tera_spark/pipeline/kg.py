@@ -206,6 +206,35 @@ def build_triples(
     return dedup(out) if deduplicate else out
 
 
+def kg_nodes(triples: DataFrame) -> DataFrame:
+    """The ``nodes`` rows (id, kind, label) of a triple set: one conditional
+    aggregation over its type/label slice — one scan, one shuffle (a
+    types ⟕ labels join reads the slice twice and shuffles three times).
+    ``min`` ignores duplicate rows; kind-not-null keeps nodes
+    type-anchored. Run, apply and forget all derive nodes here."""
+    tl = triples.filter(F.col("predicate").isin(RDF_TYPE, RDFS_LABEL))
+    return (
+        tl.groupBy(F.col("subject").alias("id"))
+        .agg(
+            F.min(F.when(F.col("predicate") == RDF_TYPE, F.col("object"))).alias("kind"),
+            F.min(F.when(F.col("predicate") == RDFS_LABEL, F.col("object"))).alias("label"),
+        )
+        .filter(F.col("kind").isNotNull())
+    )
+
+
+def kg_edges(triples: DataFrame, *extra: str) -> DataFrame:
+    """The ``edges`` rows (src, pred, dst) of a triple set: its non-literal
+    rows projected 1:1, so src IS subject. ``extra`` columns (e.g.
+    ``_bucket``) ride along."""
+    return triples.filter(~F.col("obj_is_literal")).select(
+        F.col("subject").alias("src"),
+        F.col("predicate").alias("pred"),
+        F.col("object").alias("dst"),
+        *extra,
+    )
+
+
 def emission_refcounts(linked: DataFrame) -> DataFrame:
     """Reference counts of the SHARED entity-derived emissions, keyed on
     the RAW (pre-canonicalization) emission key — the side table that

@@ -36,11 +36,26 @@ from pyspark.sql import functions as F
 from tera_spark.operators.canonical import canonical_mapping, replace_entities_salted
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
-from tera_spark.pipeline.kg import build_triples
-from tera_spark.pipeline.link import link_mentions, prepare_lexicon
-from tera_spark.sources.writers import bucketize, read_table, write_table
+from tera_spark.pipeline.kg import build_triples, kg_edges, kg_nodes
+from tera_spark.pipeline.link import link_mentions
+from tera_spark.sources.writers import bucket_expr, bucketize, read_table, write_table
 
 N_BUCKETS = 32
+# Every table's clustering, {table: (bucket key, bucket count)}: stage
+# writes here, the delta parts of incremental/forget batches and compact()
+# all read it, so a batch's add files always land in the base's buckets.
+TABLE_LAYOUT = {
+    "mentions": ("conv_id", N_BUCKETS),
+    "linked": ("conv_id", N_BUCKETS),
+    "refcounts": ("k1", N_BUCKETS),
+    "alias_edges": ("u", 8),
+    "canonical_map": ("old", N_BUCKETS),
+    "triples": ("subject", N_BUCKETS),
+    "ent_index": ("subject", N_BUCKETS),
+    "nodes": ("id", N_BUCKETS),
+    "edges": ("src", N_BUCKETS),
+    "convs_applied": ("conv_id", 8),
+}
 
 # Canonicalization-join broadcast gate: a canonical map above this many
 # rows is not broadcast — the rewrite switches to the salted shuffle join
@@ -81,6 +96,24 @@ def _append_driver_table(out_dir: str, table: str, stage: str, pa_table: pa.Tabl
     path = os.path.join(out_dir, table)
     os.makedirs(path, exist_ok=True)
     pq.write_table(pa_table, os.path.join(path, f"{stage}.parquet"))
+
+
+def _bucket_of(table: str):
+    """``table``'s bucket-id column expression (TABLE_LAYOUT)."""
+    key, n = TABLE_LAYOUT[table]
+    return bucket_expr(key, n)
+
+
+def _bucketize(df: DataFrame, table: str) -> DataFrame:
+    """``df`` bucket-clustered with ``table``'s layout (writers.bucketize)."""
+    key, n = TABLE_LAYOUT[table]
+    return bucketize(df, n, key)
+
+
+def _write_bucketed(df: DataFrame, table: str, path: str) -> None:
+    """Plain parquet write of ``df`` in ``table``'s bucket layout — side
+    tables and compaction snapshots that are not recorded stages."""
+    _bucketize(df, table).write.mode("overwrite").partitionBy("_bucket").parquet(path)
 
 
 def _lineage_exprs() -> list:
@@ -143,7 +176,6 @@ def run_pipeline(
 
     def stage(
         name: str,
-        key: str,
         produce,
         dedup_cols: list[str] | None = None,
         aligned: bool = False,
@@ -156,7 +188,7 @@ def run_pipeline(
         ``aligned``: the producing DataFrame derives by filter/project
         from a table ALREADY written bucketed on the same key values
         (e.g. edges from triples — src IS subject), so every input split
-        is single-bucket under the identical ``pmod(xxhash64(key), N)``;
+        is single-bucket under the identical bucket expression;
         materialize the bucket column map-side and skip the repartition —
         a zero-shuffle write with the same layout (file count stays
         ~1 per bucket per input split)."""
@@ -167,21 +199,20 @@ def run_pipeline(
         t0 = time.time()
         if aligned:
             assert not dedup_cols, "aligned writes carry no dedup shuffle"
-            df = produce().withColumn(
-                "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(N_BUCKETS)).cast("int")
-            )
+            df = produce().withColumn("_bucket", _bucket_of(name))
         else:
-            df = bucketize(produce(), N_BUCKETS, key)
+            df = _bucketize(produce(), name)
         if dedup_cols:
             df = df.dropDuplicates(["_bucket", *dedup_cols])
         obs = Observation()
         df = df.observe(obs, *_lineage_exprs())
-        write_table(df, path, bucket_by=(N_BUCKETS, key), pre_bucketed=True)
+        key, n = TABLE_LAYOUT[name]
+        write_table(df, path, bucket_by=(n, key), pre_bucketed=True)
         _record(out_dir, name, obs.get, time.time() - t0, res)
         res.stages_run.append(name)
         return read_table(spark, path)
 
-    mentions = stage("mentions", "conv_id", lambda: extract_mentions(transcripts))
+    mentions = stage("mentions", lambda: extract_mentions(transcripts))
     if "mentions" in res.stages_run:
         # a fresh (non-resumed) base run invalidates any incremental-batch
         # state left in this directory: delta batches belong to the OLD
@@ -216,9 +247,7 @@ def run_pipeline(
         # over the batch's CONTRACTED delta edges and composes). It reads
         # only alias_edges, so it starts as soon as that is written and
         # overlaps the `linked` write.
-        return stage(
-            "canonical_map", "old", lambda: canonical_mapping(read_table(spark, alias_path))
-        )
+        return stage("canonical_map", lambda: canonical_mapping(read_table(spark, alias_path)))
 
     def _refcounts():
         # raw-keyed emission refcounts (vocabulary-sized): the side table
@@ -228,7 +257,7 @@ def run_pipeline(
         # invariant, so incremental applies maintain this with pure adds
         # (pipeline/kg.py emission_refcounts). Depends only on `linked` —
         # runs concurrent with canonical_map + triples.
-        return stage("refcounts", "k1", lambda: emission_refcounts(linked))
+        return stage("refcounts", lambda: emission_refcounts(linked))
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         cmap_future = None
@@ -236,14 +265,14 @@ def run_pipeline(
         def _link():
             nonlocal cmap_future
             linked, alias_edges = link_mentions(
-                mentions, prepare_lexicon(lexicon), fuzzy_threshold, scorer=scorer,
-                materialized=True,
+                mentions, lexicon, fuzzy_threshold, scorer=scorer, materialized=True
             )
-            write_table(alias_edges, alias_path, bucket_by=(8, "u"))
+            key, n = TABLE_LAYOUT["alias_edges"]
+            write_table(alias_edges, alias_path, bucket_by=(n, key))
             cmap_future = pool.submit(_canonical_map)
             return linked
 
-        linked = stage("linked", "conv_id", _link)
+        linked = stage("linked", _link)
         if cmap_future is None:  # `linked` was resumed: alias_edges is on disk
             cmap_future = pool.submit(_canonical_map)
         ref_future = pool.submit(_refcounts)
@@ -276,9 +305,7 @@ def run_pipeline(
                 )
             return replace_entities_salted(triples, cmap, eff_salts, deduplicate=False)
 
-        triples = stage(
-            "triples", "subject", _canon, dedup_cols=["subject", "predicate", "object"]
-        )
+        triples = stage("triples", _canon, dedup_cols=["subject", "predicate", "object"])
         # read both results: a failure must raise even when `triples`
         # was resumed and never asked for the map
         cmap_future.result()
@@ -290,50 +317,15 @@ def run_pipeline(
         # an apply never scans the corpus-sized triple table
         # (pipeline/incremental.py). Filter of triples keyed on the same
         # column triples is bucketed by → aligned, zero-shuffle.
-        return stage(
-            "ent_index",
-            "subject",
-            lambda: triples.filter(shared_row_expr()),
-            aligned=True,
-        )
+        return stage("ent_index", lambda: triples.filter(shared_row_expr()), aligned=True)
 
     def _nodes_stage():
-        from tera_spark.constants import RDF_TYPE, RDFS_LABEL
-
-        def _nodes():
-            # single pass: conditional aggregation over the type/label
-            # slice (one scan of triples; the join formulation reads it
-            # twice and shuffles three times). kind-not-null keeps the
-            # type-anchored semantics of the former types⟕labels join.
-            tl = triples.filter(F.col("predicate").isin(RDF_TYPE, RDFS_LABEL))
-            return (
-                tl.groupBy(F.col("subject").alias("id"))
-                .agg(
-                    F.min(
-                        F.when(F.col("predicate") == RDF_TYPE, F.col("object"))
-                    ).alias("kind"),
-                    F.min(
-                        F.when(F.col("predicate") == RDFS_LABEL, F.col("object"))
-                    ).alias("label"),
-                )
-                .filter(F.col("kind").isNotNull())
-            )
-
-        return stage("nodes", "id", _nodes)
+        return stage("nodes", lambda: kg_nodes(triples))
 
     def _edges_stage():
         # filter/project of triples with src = subject → aligned write,
         # zero shuffle for the corpus-sized edge table.
-        return stage(
-            "edges",
-            "src",
-            lambda: triples.filter(~F.col("obj_is_literal")).select(
-                F.col("subject").alias("src"),
-                F.col("predicate").alias("pred"),
-                F.col("object").alias("dst"),
-            ),
-            aligned=True,
-        )
+        return stage("edges", lambda: kg_edges(triples), aligned=True)
 
     def _convs_applied():
         # applied-conversation guard state for incremental maintenance
@@ -342,9 +334,7 @@ def run_pipeline(
         # recorded stage — maintenance state, not pipeline output.
         convs_path = os.path.join(out_dir, "convs_applied")
         if not _done(convs_path):
-            bucketize(
-                transcripts.select("conv_id").distinct(), 8, "conv_id"
-            ).write.mode("overwrite").partitionBy("_bucket").parquet(convs_path)
+            _write_bucketed(transcripts.select("conv_id").distinct(), "convs_applied", convs_path)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         futures = [

@@ -8,7 +8,7 @@ same partitioning spec, so pipeline code is identical in both worlds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -19,6 +19,11 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def bucket_expr(col: str, n: int) -> Column:
+    """The hash-bucket id of ``col``: ``pmod(xxhash64(col), n)``."""
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int")
+
+
 def bucketize(df: DataFrame, n: int, col: str) -> DataFrame:
     """Materialize the hash-bucket column and cluster rows by it (ONE
     shuffle). partitionBy alone would write (tasks × buckets) files — at
@@ -27,7 +32,7 @@ def bucketize(df: DataFrame, n: int, col: str) -> DataFrame:
     ``["_bucket", …]`` ride this same exchange (Catalyst recognizes the
     partitioning, verified in test_plans), so dedup + bucket-clustering +
     write is a single shuffle."""
-    df = df.withColumn("_bucket", F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int"))
+    df = df.withColumn("_bucket", bucket_expr(col, n))
     return df.repartition(n, F.col("_bucket"))
 
 

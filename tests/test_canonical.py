@@ -1,5 +1,6 @@
 import pytest
 
+from tera_spark.operators import canonical
 from tera_spark.operators.canonical import (
     canonical_mapping,
     canonicalize,
@@ -44,28 +45,78 @@ def test_cc_unconverged_raises(spark):
         connected_components(edges, max_iter=1)
 
 
-def test_canonical_mapping_converged_star_job_budget(spark):
-    """Alias edges as linking emits them — every provisional id points
-    straight at a smaller lexicon id — are already a converged star
-    forest: the initial edge set's fingerprint equals round 1's, so CC is
-    the initial checkpoint plus ONE round, two jobs in all."""
-    edges = spark.createDataFrame(
+def _star_forest(spark):
+    """Alias edges as linking emits them: every provisional id points
+    straight at a smaller lexicon id — already a converged star forest."""
+    return spark.createDataFrame(
         [(f"urn:mention:m{i}", f"cas:{i % 3}") for i in range(12)], E_SCHEMA
     )
+
+
+def _jobs_run(spark, fn):
+    """(result, number of Spark jobs ``fn`` ran). With AQE on every
+    materialized shuffle stage surfaces as its own tracker job; off, the
+    tracker counts actions (see the pagerank budget)."""
     tracker = spark.sparkContext._jsc.sc().statusTracker()
-    # with AQE on every materialized shuffle stage surfaces as its own
-    # tracker job; off, the tracker counts actions (see the pagerank budget)
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         before = len(tracker.getJobIdsForGroup(None))
-        m = canonical_mapping(edges)
+        out = fn()
         after = len(tracker.getJobIdsForGroup(None))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    assert after - before == 2, f"canonical_mapping ran {after - before} jobs, want 2"
-    got = {r.old: r.new for r in m.collect()}
-    assert got == {f"urn:mention:m{i}": f"cas:{i % 3}" for i in range(12)}
+    return out, after - before
+
+
+_STAR_MAP = {f"urn:mention:m{i}": f"cas:{i % 3}" for i in range(12)}
+
+
+def test_canonical_mapping_converged_star_job_budget(spark):
+    """At linking's sizes canonical_mapping takes the driver path: one job
+    checkpoints the canonical edge set (its count rides that job) and one
+    collects it for the union-find — at most two jobs in all."""
+    m, jobs = _jobs_run(spark, lambda: canonical_mapping(_star_forest(spark)))
+    assert jobs <= 2, f"canonical_mapping ran {jobs} jobs, want <= 2"
+    assert {r.old: r.new for r in m.collect()} == _STAR_MAP
+
+
+def test_canonical_mapping_loop_path_job_budget(spark, monkeypatch):
+    """Above the driver bound canonical_mapping runs the distributed loop.
+    A converged star forest's initial fingerprint equals round 1's, so
+    the loop is the initial checkpoint plus ONE round, two jobs in all."""
+    monkeypatch.setattr(canonical, "_DRIVER_CC_MAX_EDGES", 0)
+    m, jobs = _jobs_run(spark, lambda: canonical_mapping(_star_forest(spark)))
+    assert jobs == 2, f"canonical_mapping ran {jobs} jobs, want 2"
+    assert {r.old: r.new for r in m.collect()} == _STAR_MAP
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # chain + island + self-loop-only node
+        [("b", "a"), ("c", "b"), ("d", "c"), ("x", "y"), ("z", "z")],
+        # duplicate and both-direction edges, NULL endpoints
+        [("b", "a"), ("a", "b"), ("b", "a"), ("c", "b"), ("c", "b"), (None, "a"), ("q", None)],
+        # non-ASCII ids: "z" (U+007A) < "é" (U+00E9); U+FF5E < U+1F600,
+        # although UTF-16 (Java String) order puts the emoji's surrogate
+        # pair first — Spark compares UTF-8 bytes, i.e. code points
+        [("é", "z"), ("é", "ü"), ("\U0001F600", "\uff5e"), ("\U0001F600", "ω")],
+        [],
+    ],
+    ids=["chain_islands", "dup_bidir_null", "non_ascii", "empty"],
+)
+def test_canonical_mapping_driver_path_matches_cc(spark, rows):
+    """The driver-side union-find gives exactly the map the distributed
+    connected_components gives, identity rows dropped."""
+    edges = spark.createDataFrame(rows, E_SCHEMA)
+    got = {(r.old, r.new) for r in canonical_mapping(edges).collect()}
+    want = {
+        (r.node, r.component)
+        for r in connected_components(edges).collect()
+        if r.node != r.component
+    }
+    assert got == want
 
 
 def test_canonical_mapping_transitive(spark):

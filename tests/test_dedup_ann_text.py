@@ -192,6 +192,16 @@ def test_kmeans_bounded_plan_and_ivf_recall(spark):
     assert exact == approx
 
 
+def test_dbl_array_literal_non_finite(spark):
+    """NaN and ±Infinity have no numeric SQL literal: the array builder
+    spells them as casts instead of emitting an unparseable ``nanD``."""
+    from tera_spark.operators.ann import _dbl_array_expr
+
+    got = spark.range(1).select(_dbl_array_expr([1.5, math.nan, math.inf, -math.inf])).first()[0]
+    assert got[0] == 1.5 and math.isnan(got[1])
+    assert got[2] == math.inf and got[3] == -math.inf
+
+
 # --- round-3 curation ops ---------------------------------------------------
 
 REP_DOCS = [
