@@ -18,7 +18,8 @@ duplicates dropped) and reads its row count off that same job:
   bound). Every measured workload is far below it — ~100 alias edges per
   benchmark build, a 12,850-row canonical map in the 1.09B-triple run —
   and there the distributed loop costs more in per-job scheduling than
-  the whole problem;
+  the whole problem. The map comes back as a ``LocalRelation`` built from
+  Arrow (sources/readers.py ``arrow_frame``), so no Python worker starts;
 - above it, the distributed large-star/small-star loop
   (``connected_components`` — Kiveris et al., "Connected Components in
   MapReduce and Beyond") continues from the same checkpoint. It converges
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tera_spark.operators.triples import dedup as _dedup_triples
+from tera_spark.sources.readers import arrow_frame
 
 # Canonical edge sets at or below this size run CC as a driver-side
 # union-find (see module docstring); bounded memory, ~12 MB at the bound.
@@ -191,8 +193,11 @@ def canonical_mapping(alias_edges: DataFrame) -> DataFrame:
     e, fp = _checkpoint_fingerprint(_canon(alias_edges))
     if fp[0] <= _DRIVER_CC_MAX_EDGES:
         reps = _union_find(e.collect()) if fp[0] else {}
-        return alias_edges.sparkSession.createDataFrame(
-            [(x, r) for x, r in reps.items() if x != r], "old string, new string"
+        moved = [(x, r) for x, r in reps.items() if x != r]
+        return arrow_frame(
+            alias_edges.sparkSession,
+            {"old": [x for x, _ in moved], "new": [r for _, r in moved]},
+            "old string, new string",
         )
     labels = _star_labels(e, fp, max_iter=20)
     return (

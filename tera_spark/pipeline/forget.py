@@ -116,12 +116,13 @@ from tera_spark.pipeline.kg import (
 )
 from tera_spark.pipeline.link import link_mentions
 from tera_spark.pipeline.run import PipelineResult, _bucket_of, _bucketize, _done, _write_bucketed
+from tera_spark.sources.readers import arrow_frame
 
 
 def _conv_ids_df(spark: SparkSession, conv_ids) -> DataFrame:
     if isinstance(conv_ids, DataFrame):
         return conv_ids.select("conv_id").distinct()
-    return spark.createDataFrame([(c,) for c in conv_ids], "conv_id string").distinct()
+    return arrow_frame(spark, {"conv_id": list(conv_ids)}, "conv_id string").distinct()
 
 
 def _conv_of_subject():

@@ -13,19 +13,40 @@ bit-identical to an uninterrupted one — asserted in tests.
 Lineage: one row per (stage, conv bucket) with row counts; metrics: one
 row per stage with rows_out/wall seconds. Both are parquet append tables.
 
-Serial-job budget (the measured local-mode scaling bottleneck,
+Job budget (per-job latency is the measured local-mode bottleneck,
 BENCH/BASELINE.md): lineage counts ride the stage write itself via
 ``df.observe`` (CollectMetrics — zero extra Spark jobs, zero extra passes
-over the data), and the tiny lineage/metrics tables are written driver-side
+over the data); the tiny lineage/metrics tables are written driver-side
 with pyarrow (32 rows — a Spark job per write would be pure scheduling
-overhead; the files are plain parquet, readable by any engine). On a real
-cluster the same structure holds: one job per stage, period.
+overhead; the files are plain parquet, readable by any engine); and a
+freshly written stage is read back with the schema it was written with,
+so no parquet schema-inference job follows the write.
+
+Scheduling: ``run_pipeline`` is a dependency schedule, one driver thread
+per step, and each step starts as soon as the tables it reads exist:
+
+    lexicon ─────> prepare_lexicon ─┐
+    transcripts ─> mentions ────────┴─> linked ─┬─> refcounts
+                                          │     └──────────────────┬─> triples
+                                          └─> alias_edges ─> canonical_map ─┘
+    transcripts ─> convs_applied           triples ─> ent_index, nodes, edges
+
+The ``linked`` step writes alias_edges (the same link_mentions call makes
+both) before its own table, so a finished ``linked`` always has its
+alias_edges beside it. Lexicon preparation overlaps mention extraction,
+canonical_map runs while the linked write finishes, refcounts beside
+canonical_map and triples, and the three tables derived from triples are
+written at once. Spark interleaves the tasks of all live jobs, so one
+step's fixed job latency overlaps another's compute. Every job carries the
+description ``run_pipeline:<step>`` and the caller's job group.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -36,11 +57,22 @@ from pyspark.sql import functions as F
 from tera_spark.operators.canonical import canonical_mapping, replace_entities_salted
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
-from tera_spark.pipeline.kg import build_triples, kg_edges, kg_nodes
-from tera_spark.pipeline.link import link_mentions
+from tera_spark.pipeline.kg import (
+    build_triples,
+    emission_refcounts,
+    kg_edges,
+    kg_nodes,
+    shared_row_expr,
+)
+from tera_spark.pipeline.link import link_mentions, prepare_lexicon
 from tera_spark.sources.writers import bucket_expr, bucketize, read_table, write_table
 
 N_BUCKETS = 32
+# The recorded stages, in the order PipelineResult lists them.
+STAGES = (
+    "mentions", "linked", "refcounts", "canonical_map", "triples",
+    "ent_index", "nodes", "edges",
+)
 # Every table's clustering, {table: (bucket key, bucket count)}: stage
 # writes here, the delta parts of incremental/forget batches and compact()
 # all read it, so a batch's add files always land in the base's buckets.
@@ -156,6 +188,22 @@ def _record(
     return n
 
 
+def _run_node(sc, props, name: str, fn, inputs: list):
+    """One node of run_pipeline's schedule, run in its own pool thread:
+    ``fn`` over the results of the ``inputs`` futures. Local properties
+    are thread-local, so the thread takes a copy of the caller's ``props``
+    (its job group and scheduler pool, as pyspark.InheritableThread does)
+    and describes every Spark job it starts ``run_pipeline:<name>``."""
+    jsc = sc._jsc.sc()
+    own = jsc.getLocalProperties()
+    jsc.setLocalProperties(props.clone())
+    sc.setJobDescription(f"run_pipeline:{name}")
+    try:
+        return fn(*(f.result() for f in inputs))
+    finally:
+        jsc.setLocalProperties(own)
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -183,7 +231,8 @@ def run_pipeline(
         """One Spark job per stage: bucket-cluster (one shuffle), optional
         set-semantics dedup RIDING that same shuffle (keys prefixed with
         the bucket column, so Catalyst needs no second exchange), lineage
-        counts observed on the write itself, partitioned write.
+        counts observed on the write itself, partitioned write, read back
+        with the schema just written (no inference job).
 
         ``aligned``: the producing DataFrame derives by filter/project
         from a table ALREADY written bucketed on the same key values
@@ -210,74 +259,79 @@ def run_pipeline(
         write_table(df, path, bucket_by=(n, key), pre_bucketed=True)
         _record(out_dir, name, obs.get, time.time() - t0, res)
         res.stages_run.append(name)
-        return read_table(spark, path)
+        return read_table(spark, path, schema=df.schema)
 
-    mentions = stage("mentions", lambda: extract_mentions(transcripts))
-    if "mentions" in res.stages_run:
+    def out_path(name: str) -> str:
+        return os.path.join(out_dir, name)
+
+    if force or not _done(out_path("mentions")):
         # a fresh (non-resumed) base run invalidates any incremental-batch
         # state left in this directory: delta batches belong to the OLD
         # base, and the seen-conv table re-bootstraps from the new
-        # Conversation triples on next use (pipeline/incremental.py)
-        import shutil
+        # Conversation triples on next use (pipeline/incremental.py).
+        # Decided before anything is scheduled: convs_applied is written
+        # from t=0 and must not be deleted after.
+        shutil.rmtree(out_path("convs_applied"), ignore_errors=True)
+        shutil.rmtree(out_path("_batches"), ignore_errors=True)
+    if not _done(out_path("alias_edges")):
+        # `linked` resumes only beside a complete alias_edges: one
+        # link_mentions call makes both and alias_edges is written first,
+        # so a `linked` without it (a crashed forced rerun, say) is stale
+        shutil.rmtree(out_path("linked"), ignore_errors=True)
+    relink = force or not _done(out_path("linked"))
+    # resolved with alias_edges' written schema once it is on disk (None:
+    # resumed, read with inference); set inside the `linked` node, which
+    # writes alias_edges before its own table, so canonical_map overlaps
+    # the `linked` write
+    alias_written: Future = Future()
 
-        shutil.rmtree(os.path.join(out_dir, "convs_applied"), ignore_errors=True)
-        shutil.rmtree(os.path.join(out_dir, "_batches"), ignore_errors=True)
+    def _linked(mentions, prepared):
+        def produce():
+            linked, alias_edges = link_mentions(
+                mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+            )
+            df = _bucketize(alias_edges, "alias_edges")
+            key, n = TABLE_LAYOUT["alias_edges"]
+            write_table(df, out_path("alias_edges"), bucket_by=(n, key), pre_bucketed=True)
+            alias_written.set_result(df.schema)
+            return linked
 
-    from concurrent.futures import ThreadPoolExecutor
+        try:
+            return stage("linked", produce)
+        finally:
+            # every later consumer reads linked/alias_edges from files
+            prepared.release()
 
-    from tera_spark.pipeline.kg import emission_refcounts, shared_row_expr
+    def _alias_failed(linked_future):
+        # a `linked` node that failed before writing alias_edges (its
+        # inputs included) fails canonical_map too, instead of leaving it
+        # waiting
+        if not alias_written.done():
+            alias_written.set_exception(
+                linked_future.exception() or RuntimeError("alias_edges was not written")
+            )
 
-    # ---- independent-branch scheduling -----------------------------------
-    # The DAG after `alias_edges` has independent branches; running them as
-    # concurrent Spark jobs (plain driver threads — Spark schedules tasks
-    # from all live jobs into free slots) overlaps each job's fixed
-    # latency (planning, parquet footer reads, commit protocol, shuffle
-    # barriers) with another job's compute. That fixed latency is the
-    # Amdahl floor of the measured N→4N scaling criterion — serial small
-    # stages cost the 4N leg proportionally more (BENCH/BASELINE.md
-    # per-stage decomposition), so overlap directly buys efficiency.
-    # Bookkeeping stays deterministic: lists are re-sorted to canonical
-    # stage order below, and each stage writes its own driver-side files.
-    alias_path = os.path.join(out_dir, "alias_edges")
-
-    def _canonical_map():
+    def _canonical_map(alias_schema):
         # canonical map persisted as its own stage: downstream incremental
-        # applies read it instead of re-running connected components over
-        # the whole alias universe (pipeline/incremental.py runs CC only
-        # over the batch's CONTRACTED delta edges and composes). It reads
-        # only alias_edges, so it starts as soon as that is written and
-        # overlaps the `linked` write.
-        return stage("canonical_map", lambda: canonical_mapping(read_table(spark, alias_path)))
+        # applies and forgets read it instead of re-running connected
+        # components over the whole alias universe
+        alias = out_path("alias_edges")
+        return stage(
+            "canonical_map",
+            lambda: canonical_mapping(read_table(spark, alias, schema=alias_schema)),
+        )
 
-    def _refcounts():
+    def _refcounts(linked):
         # raw-keyed emission refcounts (vocabulary-sized): the side table
         # that lets a later forget decide row survival with counter
         # arithmetic instead of re-emitting evidence from the remaining
         # corpus (pipeline/forget.py). Raw keys are canonical-merge-
         # invariant, so incremental applies maintain this with pure adds
-        # (pipeline/kg.py emission_refcounts). Depends only on `linked` —
-        # runs concurrent with canonical_map + triples.
+        # (pipeline/kg.py emission_refcounts).
         return stage("refcounts", lambda: emission_refcounts(linked))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cmap_future = None
-
-        def _link():
-            nonlocal cmap_future
-            linked, alias_edges = link_mentions(
-                mentions, lexicon, fuzzy_threshold, scorer=scorer, materialized=True
-            )
-            key, n = TABLE_LAYOUT["alias_edges"]
-            write_table(alias_edges, alias_path, bucket_by=(n, key))
-            cmap_future = pool.submit(_canonical_map)
-            return linked
-
-        linked = stage("linked", _link)
-        if cmap_future is None:  # `linked` was resumed: alias_edges is on disk
-            cmap_future = pool.submit(_canonical_map)
-        ref_future = pool.submit(_refcounts)
-
-        def _canon():
+    def _triples(linked, cmap):
+        def produce():
             # deduplicate=False: the post-rewrite set-semantics dedup is
             # fused into the stage write's bucket shuffle (dedup_cols
             # below) — one shuffle instead of two over the full table
@@ -288,7 +342,6 @@ def run_pipeline(
             # of key that goes hot, so plain shuffle-hash isn't enough).
             # The map's row count is already known from the stage metrics
             # (or a metadata-cheap parquet count on resume).
-            cmap = cmap_future.result()
             eff_salts = salts
             if eff_salts is None:
                 n_map = next(
@@ -305,53 +358,72 @@ def run_pipeline(
                 )
             return replace_entities_salted(triples, cmap, eff_salts, deduplicate=False)
 
-        triples = stage("triples", _canon, dedup_cols=["subject", "predicate", "object"])
-        # read both results: a failure must raise even when `triples`
-        # was resumed and never asked for the map
-        cmap_future.result()
-        ref_future.result()
-
-    def _ent_index():
-        # shared-row index (vocabulary-sized): the rows incremental
-        # applies must consult history for — materialized at base time so
-        # an apply never scans the corpus-sized triple table
-        # (pipeline/incremental.py). Filter of triples keyed on the same
-        # column triples is bucketed by → aligned, zero-shuffle.
-        return stage("ent_index", lambda: triples.filter(shared_row_expr()), aligned=True)
-
-    def _nodes_stage():
-        return stage("nodes", lambda: kg_nodes(triples))
-
-    def _edges_stage():
-        # filter/project of triples with src = subject → aligned write,
-        # zero shuffle for the corpus-sized edge table.
-        return stage("edges", lambda: kg_edges(triples), aligned=True)
+        return stage("triples", produce, dedup_cols=["subject", "predicate", "object"])
 
     def _convs_applied():
         # applied-conversation guard state for incremental maintenance
         # (pipeline/incremental.py): materialized here so the FIRST
         # --append never pays a bootstrap scan of the triple table. Not a
         # recorded stage — maintenance state, not pipeline output.
-        convs_path = os.path.join(out_dir, "convs_applied")
+        convs_path = out_path("convs_applied")
         if not _done(convs_path):
             _write_bucketed(transcripts.select("conv_id").distinct(), "convs_applied", convs_path)
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [
-            pool.submit(f)
-            for f in (_ent_index, _nodes_stage, _edges_stage, _convs_applied)
+    # ---- dependency schedule (module docstring) ---------------------------
+    # (node, fn, *the nodes whose results fn reads). One future per node; a
+    # node's thread blocks only on the futures it reads, and the pool holds
+    # a thread for every node: a bounded pool whose threads block on queued
+    # futures can deadlock. Bookkeeping stays deterministic: lists are
+    # re-sorted to canonical stage order below, and each stage writes its
+    # own driver-side files.
+    plan = [
+        ("mentions", lambda: stage("mentions", lambda: extract_mentions(transcripts))),
+        ("convs_applied", _convs_applied),
+    ]
+    if relink:
+        # the lexicon is prepared only when `linked` still has to run
+        plan += [
+            ("prepare_lexicon", lambda: prepare_lexicon(lexicon)),
+            ("linked", _linked, "mentions", "prepare_lexicon"),
         ]
-        for f in futures:
-            f.result()
+    else:
+        alias_written.set_result(None)
+        plan.append(("linked", lambda: stage("linked", None)))
+    plan += [
+        ("canonical_map", _canonical_map, "alias_edges"),
+        ("refcounts", _refcounts, "linked"),
+        ("triples", _triples, "linked", "canonical_map"),
+        # shared-row index (vocabulary-sized): the rows incremental
+        # applies must consult history for — materialized at base time so
+        # an apply never scans the corpus-sized triple table
+        # (pipeline/incremental.py). Filter of triples keyed on the same
+        # column triples is bucketed by → aligned, zero-shuffle.
+        (
+            "ent_index",
+            lambda t: stage("ent_index", lambda: t.filter(shared_row_expr()), aligned=True),
+            "triples",
+        ),
+        ("nodes", lambda t: stage("nodes", lambda: kg_nodes(t)), "triples"),
+        # filter/project of triples with src = subject → aligned write,
+        # zero shuffle for the corpus-sized edge table.
+        ("edges", lambda t: stage("edges", lambda: kg_edges(t), aligned=True), "triples"),
+    ]
+    futs: dict = {"alias_edges": alias_written}
+    props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
+    with ThreadPoolExecutor(max_workers=len(plan)) as pool:
+        for name, fn, *deps in plan:
+            futs[name] = pool.submit(
+                _run_node, spark.sparkContext, props, name, fn, [futs[d] for d in deps]
+            )
+        futs["linked"].add_done_callback(_alias_failed)
+    # read every result: a failure in any branch raises, also one that no
+    # other node read (e.g. refcounts, or canonical_map when `triples` was
+    # resumed)
+    for f in futs.values():
+        f.result()
 
-    _ORDER = {
-        n: i
-        for i, n in enumerate(
-            ["mentions", "linked", "refcounts", "canonical_map", "triples",
-             "ent_index", "nodes", "edges"]
-        )
-    }
-    res.stages_run.sort(key=lambda n: _ORDER.get(n, len(_ORDER)))
-    res.stages_skipped.sort(key=lambda n: _ORDER.get(n, len(_ORDER)))
-    res.metrics.sort(key=lambda m: _ORDER.get(m["stage"], len(_ORDER)))
+    order = {n: i for i, n in enumerate(STAGES)}
+    res.stages_run.sort(key=order.__getitem__)
+    res.stages_skipped.sort(key=order.__getitem__)
+    res.metrics.sort(key=lambda m: order[m["stage"]])
     return res

@@ -18,11 +18,21 @@ the same readers apply unchanged; only the paths move to object storage.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tera_spark.constants import MISSING, NAN_VALUES
+
+
+def arrow_frame(spark: SparkSession, columns: dict[str, list], schema: str) -> DataFrame:
+    """A small driver-side table as a DataFrame, built from a pyarrow Table
+    so the plan is a ``LocalRelation``. ``createDataFrame`` over a Python
+    list plans a ``LogicalRDD`` over a PythonRDD instead: every scan of it
+    starts Python worker tasks (a cold one costs seconds), for data the
+    driver already holds."""
+    return spark.createDataFrame(pa.table(columns), schema)
 
 
 # --------------------------------------------------------------------------

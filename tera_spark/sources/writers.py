@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -109,8 +110,15 @@ def read_graph(spark: SparkSession, path: str) -> DataFrame:
     return df.select("subject", "predicate", "object", "obj_is_literal")
 
 
-def read_table(spark: SparkSession, path_or_table: str) -> DataFrame:
+def read_table(
+    spark: SparkSession, path_or_table: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read a stage table back, ``_bucket`` dropped. ``schema``: the schema
+    the caller just wrote (``_bucket`` included) — given it, the parquet
+    read skips footer schema inference, which is a Spark job of its own.
+    Iceberg tables carry their schema and ignore it."""
     if _iceberg_available(spark):
         return spark.read.table(f"tera.{path_or_table}")
-    df = spark.read.parquet(path_or_table)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path_or_table)
     return df.drop("_bucket") if "_bucket" in df.columns else df

@@ -108,9 +108,14 @@ def test_canonical_mapping_loop_path_job_budget(spark, monkeypatch):
 )
 def test_canonical_mapping_driver_path_matches_cc(spark, rows):
     """The driver-side union-find gives exactly the map the distributed
-    connected_components gives, identity rows dropped."""
+    connected_components gives, identity rows dropped. The map is a
+    LocalRelation (built from Arrow), not a LogicalRDD over a PythonRDD:
+    reading it starts no Python worker."""
     edges = spark.createDataFrame(rows, E_SCHEMA)
-    got = {(r.old, r.new) for r in canonical_mapping(edges).collect()}
+    mapping = canonical_mapping(edges)
+    assert mapping._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    assert mapping.schema.simpleString() == "struct<old:string,new:string>"
+    got = {(r.old, r.new) for r in mapping.collect()}
     want = {
         (r.node, r.component)
         for r in connected_components(edges).collect()

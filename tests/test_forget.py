@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tera_spark.fixtures.transcripts import lexicon_spark_df, transcripts_spark_df
-from tera_spark.pipeline.forget import run_pipeline_forget
+from tera_spark.pipeline.forget import _conv_ids_df, run_pipeline_forget
 from tera_spark.pipeline.incremental import (
     compact,
     read_live,
@@ -185,3 +185,16 @@ def test_forget_crash_retry(spark, lexicon_fixture, tmp_path, monkeypatch):
     res = fg.run_pipeline_forget(spark, drop, lexicon, work, batch_id="crash")
     assert res.stages_run
     _assert_equal(spark, ref_a, work, live=True)
+
+
+@pytest.mark.parametrize("ids", [["c2", "c1", "c2"], []], ids=["ids", "empty"])
+def test_conv_ids_df_is_local_relation(spark, ids):
+    """A list of conversation ids becomes a LocalRelation built from Arrow
+    (no PythonRDD, so no Python worker starts), with the duplicates dropped."""
+    df = _conv_ids_df(spark, ids)
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    assert [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())] == [
+        "LocalRelation"
+    ]
+    assert df.schema.simpleString() == "struct<conv_id:string>"
+    assert sorted(r.conv_id for r in df.collect()) == sorted(set(ids))

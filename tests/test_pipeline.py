@@ -190,6 +190,151 @@ def test_prepared_lexicon_release_and_freq_guard(spark, lexicon):
     assert other.count() == 20_000
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of every job outside a job group in the status store, once it
+    has seen every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _stored_tables(spark, out_dir) -> dict:
+    tables = ("mentions", "linked", "alias_edges", "refcounts", "canonical_map",
+              "triples", "ent_index", "nodes", "edges", "convs_applied")
+    out = {}
+    for t in tables:
+        df = spark.read.parquet(f"{out_dir}/{t}").drop("_bucket")
+        out[t] = {tuple(r) for r in df.select(sorted(df.columns)).collect()}
+    return out
+
+
+def test_run_pipeline_labels_jobs_and_releases_lexicon(
+    spark, transcripts, lexicon, tmp_path, monkeypatch
+):
+    """Every job a run_pipeline call starts is described
+    `run_pipeline:<node>` (set in the scheduling thread that starts it) and
+    belongs to the caller's job group, and the PreparedLexicon run_pipeline
+    builds is released before it returns — no checkpoint block of it stays
+    persistent — without changing any stored table."""
+    import tera_spark.pipeline.run as runmod
+    from tera_spark.pipeline.link import PreparedLexicon, _persistent_rdd_ids
+
+    transcripts.count()  # materialize the cached fixtures outside the window
+    lexicon.count()
+    prepared = []
+    real_prepare = runmod.prepare_lexicon
+    monkeypatch.setattr(
+        runmod, "prepare_lexicon", lambda lex: prepared.append(real_prepare(lex)) or prepared[-1]
+    )
+    out = str(tmp_path / "released")
+    sc = spark.sparkContext
+    before = _job_ids(spark)
+    sc.setJobGroup("caller-group", "the caller's own group")
+    try:
+        run_pipeline(spark, transcripts, lexicon, out)
+    finally:
+        sc._jsc.clearJobGroup()
+    # every job the call started is in the caller's group: none ungrouped
+    assert _job_ids(spark) == before
+    new = sorted(sc.statusTracker().getJobIdsForGroup("caller-group"))
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descriptions = {}
+    for j in new:
+        d = store.job(j).description()
+        descriptions[j] = d.get() if d.isDefined() else None
+    unlabeled = {j: d for j, d in descriptions.items() if not (d or "").startswith("run_pipeline:")}
+    assert new and not unlabeled, f"jobs without a run_pipeline label: {unlabeled}"
+    assert "run_pipeline:mentions" in descriptions.values()
+
+    assert len(prepared) == 1
+    assert not set(prepared[0]._rdd_ids) & _persistent_rdd_ids(spark.sparkContext)
+
+    # the same tables as a run that never releases its lexicon
+    monkeypatch.setattr(PreparedLexicon, "release", lambda self: None)
+    ref = str(tmp_path / "kept")
+    run_pipeline(spark, transcripts, lexicon, ref)
+    assert _stored_tables(spark, out) == _stored_tables(spark, ref)
+
+
+def test_resume_with_linked_done_prepares_no_lexicon(
+    spark, transcripts, lexicon, tmp_path, monkeypatch
+):
+    """A run resumed after `linked` is written does no lexicon work: it
+    calls prepare_lexicon zero times and rebuilds the same tables."""
+    import shutil
+
+    import tera_spark.pipeline.run as runmod
+
+    out = str(tmp_path / "resume")
+    run_pipeline(spark, transcripts, lexicon, out)
+    before = _stored_tables(spark, out)
+    for t in ("refcounts", "canonical_map", "triples", "ent_index", "nodes", "edges"):
+        shutil.rmtree(f"{out}/{t}")
+
+    calls = []
+    real_prepare = runmod.prepare_lexicon
+    monkeypatch.setattr(
+        runmod, "prepare_lexicon", lambda lex: calls.append(1) or real_prepare(lex)
+    )
+    res = run_pipeline(spark, transcripts, lexicon, out)
+    assert res.stages_skipped == ["mentions", "linked"]
+    assert calls == []
+    assert _stored_tables(spark, out) == before
+
+
+def test_resume_relinks_without_complete_alias_edges(spark, transcripts, lexicon, tmp_path):
+    """A `linked` table whose alias_edges lost its commit marker (only
+    task-committed files left) is not resumed: linking re-runs, rewrites
+    both, and every stored table comes out the same."""
+    import glob
+    import os
+    import shutil
+
+    out = str(tmp_path / "partial_alias")
+    run_pipeline(spark, transcripts, lexicon, out)
+    before = _stored_tables(spark, out)
+    os.remove(f"{out}/alias_edges/_SUCCESS")
+    os.remove(sorted(glob.glob(f"{out}/alias_edges/_bucket=*/*.parquet"))[0])
+    for t in ("canonical_map", "triples", "ent_index", "nodes", "edges"):
+        shutil.rmtree(f"{out}/{t}")
+
+    res = run_pipeline(spark, transcripts, lexicon, out)
+    assert res.stages_skipped == ["mentions", "refcounts"]
+    assert "linked" in res.stages_run
+    assert os.path.exists(f"{out}/alias_edges/_SUCCESS")
+    assert _stored_tables(spark, out) == before
+
+
+def test_read_table_with_written_schema(spark, tmp_path):
+    """read_table(schema=<the schema written>) gives the columns, types and
+    rows of the inferred read, `_bucket` dropped, and the read-back starts
+    no Spark job (the inferred one runs a footer-schema job)."""
+    from tera_spark.sources.writers import bucketize, read_table, write_table
+
+    df = bucketize(
+        spark.range(0, 200, 1, 4).selectExpr(
+            "CAST(id AS STRING) AS conv_id",
+            "CAST(id AS INT) AS turn_idx",
+            "id / 3.0D AS score",
+            "id % 2 = 0 AS flag",
+            "array(CAST(id AS STRING), 'x') AS tags",
+        ),
+        8,
+        "conv_id",
+    )
+    path = str(tmp_path / "t")
+    write_table(df, path, bucket_by=(8, "conv_id"), pre_bucketed=True)
+
+    before = _job_ids(spark)
+    given = read_table(spark, path, schema=df.schema)
+    assert _job_ids(spark) == before
+    inferred = read_table(spark, path)
+    assert given.columns == inferred.columns == ["conv_id", "turn_idx", "score", "flag", "tags"]
+    assert given.schema == inferred.schema
+    assert sorted(given.collect()) == sorted(inferred.collect())
+    assert given.count() == 200
+
+
 def test_per_turn_text_equality_invariant(spark, transcripts):
     """input_hint invariant: per-turn text equality under stable
     (conv_id, turn_idx) ordering — the pipeline never mutates transcripts,
