@@ -110,6 +110,7 @@ from tera_spark.pipeline.kg import build_triples, kg_edges, kg_nodes, shared_row
 from tera_spark.pipeline.link import link_mentions
 from tera_spark.pipeline.run import (
     N_BUCKETS,
+    TABLE_LAYOUT,
     PipelineResult,
     _bucket_of,
     _bucketize,
@@ -118,6 +119,7 @@ from tera_spark.pipeline.run import (
     _record,
     _write_bucketed,
 )
+from tera_spark.sources.writers import cluster_buckets
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
 _TRIPLE_COLS = ["subject", "predicate", "object", "obj_is_literal"]
@@ -364,14 +366,16 @@ def _write_part(
     t0: float,
     partitioned: bool = True,
 ) -> None:
-    """Write one delta file set under the (uncommitted) batch dir. Adds are
-    bucket-partitioned with the table's own clustering so compact() can
-    fold them straight in; tombstone/key files are small single-dir
-    parquet. Lineage counts ride the write via observe()."""
+    """Write one delta file set under the (uncommitted) batch dir. Adds
+    carry ``_bucket`` and are clustered like every stage write
+    (writers.cluster_buckets, the table's TABLE_LAYOUT bucket count), so
+    each bucket dir gets one file and compact() can fold them straight in;
+    tombstone/key files are small single-dir parquet. Lineage counts ride
+    the write via observe()."""
     path = os.path.join(batch_dir, name)
     obs = Observation()
     if partitioned:
-        df = df.repartition(F.col("_bucket"))
+        df = cluster_buckets(df, TABLE_LAYOUT[name.rsplit("_", 1)[0]][1])
         df = df.observe(obs, *_lineage_exprs())
         df.write.mode("overwrite").partitionBy("_bucket").parquet(path)
         vals = obs.get

@@ -13,14 +13,19 @@ bit-identical to an uninterrupted one — asserted in tests.
 Lineage: one row per (stage, conv bucket) with row counts; metrics: one
 row per stage with rows_out/wall seconds. Both are parquet append tables.
 
-Job budget (per-job latency is the measured local-mode bottleneck,
-BENCH/BASELINE.md): lineage counts ride the stage write itself via
-``df.observe`` (CollectMetrics — zero extra Spark jobs, zero extra passes
-over the data); the tiny lineage/metrics tables are written driver-side
-with pyarrow (32 rows — a Spark job per write would be pure scheduling
-overhead; the files are plain parquet, readable by any engine); and a
-freshly written stage is read back with the schema it was written with,
-so no parquet schema-inference job follows the write.
+Job budget: at stage sizes most of a stage's wall is fixed cost — jobs,
+tasks and driver-side plan building — not data (BENCH/BASELINE.md), so
+each stage pays as little of it as it can. The stage write is one shuffle
+into one task per core (writers.cluster_buckets), not one task per
+bucket, and still one file per bucket dir. Lineage counts ride the write
+itself via ``df.observe`` (CollectMetrics — zero extra Spark jobs, zero
+extra passes over the data), and their 33 counters are SQL text, one
+py4j call each instead of several per ``functions`` call. The tiny
+lineage/metrics tables are written driver-side with pyarrow (32 rows — a
+Spark job per write would be pure scheduling overhead; the files are
+plain parquet, readable by any engine). A freshly written stage is read
+back with the schema it was written with, so no parquet schema-inference
+job follows the write.
 
 Scheduling: ``run_pipeline`` is a dependency schedule, one driver thread
 per step, and each step starts as soon as the tables it reads exist:
@@ -150,9 +155,11 @@ def _write_bucketed(df: DataFrame, table: str, path: str) -> None:
 
 def _lineage_exprs() -> list:
     """Observe expressions: total row count + per-bucket counts over the
-    materialized ``_bucket`` column (the physical write partitions)."""
-    return [F.count(F.lit(1)).alias("rows")] + [
-        F.count(F.when(F.col("_bucket") == i, True)).alias(f"b{i}")
+    materialized ``_bucket`` column (the physical write partitions).
+    Written as SQL text: each ``pyspark.sql.functions`` call costs several
+    py4j round trips while the plan is built, one ``F.expr`` costs one."""
+    return [F.expr("count(1) AS rows")] + [
+        F.expr(f"count(CASE WHEN _bucket = {i} THEN 1 END) AS b{i}")
         for i in range(N_BUCKETS)
     ]
 

@@ -99,6 +99,27 @@ def test_pipeline_end_to_end_and_resume(spark, transcripts, lexicon, tmp_path):
     metrics = spark.read.parquet(out1 + "/metrics")
     assert {r.stage for r in metrics.collect()} >= {"mentions", "linked", "triples"}
 
+    # every stored table keeps its layout: one parquet file per bucket
+    # dir, every row in the bucket TABLE_LAYOUT assigns it, and a recorded
+    # stage's lineage counts are the rows actually in each dir
+    import glob
+    import os
+
+    from tera_spark.pipeline.run import STAGES, TABLE_LAYOUT
+    from tera_spark.sources.writers import bucket_expr
+
+    recorded = {(r.stage, r.bucket): r.rows for r in lineage.collect()}
+    for table, (key, n) in TABLE_LAYOUT.items():
+        dirs = glob.glob(f"{out1}/{table}/_bucket=*")
+        assert dirs, table
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+        df = spark.read.parquet(f"{out1}/{table}")
+        assert df.filter(F.col("_bucket") != bucket_expr(key, n)).count() == 0, table
+        if table in STAGES:
+            on_disk = {r["_bucket"]: r["count"] for r in df.groupBy("_bucket").count().collect()}
+            assert on_disk == {b: rows for (st, b), rows in recorded.items() if st == table}, table
+
 
 def test_partial_write_is_rerun_not_resumed(spark, transcripts, lexicon, tmp_path):
     """A stage dir holding parquet files but NO _SUCCESS (writer died between
@@ -254,6 +275,35 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     ref = str(tmp_path / "kept")
     run_pipeline(spark, transcripts, lexicon, ref)
     assert _stored_tables(spark, out) == _stored_tables(spark, ref)
+
+
+def test_stage_writes_one_task_per_core(spark, transcripts, lexicon, tmp_path):
+    """Every bucket-shuffled stage write runs min(bucket count,
+    defaultParallelism) tasks: the result stage of the last job each
+    shuffled node starts (its stage write; `linked` also writes
+    alias_edges before it) has that width."""
+    from tera_spark.pipeline.run import TABLE_LAYOUT
+
+    transcripts.count()
+    lexicon.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("width-group", "stage write width")
+    try:
+        run_pipeline(spark, transcripts, lexicon, str(tmp_path / "width"))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    last_job = {}
+    for j in sorted(tracker.getJobIdsForGroup("width-group")):
+        d = store.job(j).description()
+        last_job[d.get() if d.isDefined() else None] = j
+    widths = {}
+    for node in ("mentions", "linked", "refcounts", "canonical_map", "triples", "nodes"):
+        job = tracker.getJobInfo(last_job[f"run_pipeline:{node}"])
+        widths[node] = tracker.getStageInfo(max(job.stageIds)).numTasks
+    assert widths == {n: min(TABLE_LAYOUT[n][1], sc.defaultParallelism) for n in widths}
 
 
 def test_resume_with_linked_done_prepares_no_lexicon(

@@ -3,6 +3,8 @@ characteristics the 100-TB design depends on — if a refactor breaks
 pushdown, broadcast selection, or adds a shuffle to the shuffle-free
 extraction stage, these fail."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,6 +139,14 @@ def test_stage_dedup_rides_bucket_shuffle(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+    # one write task per core, not one per bucket (writers.cluster_buckets)
+    width = min(32, spark.sparkContext.defaultParallelism)
+    assert re.search(
+        rf"Exchange shufflepartitionidpassthrough\(direct_shuffle_partition_id\(_bucket#\d+\), {width}\)",
+        plan,
+    ), plan
+    # bucket b is written by task b mod width: every task gets as many buckets
+    assert out.filter(F.spark_partition_id() != F.col("_bucket") % width).count() == 0
     assert out.drop("_bucket").distinct().count() == out.count()
 
 
