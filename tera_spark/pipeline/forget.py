@@ -88,7 +88,6 @@ re-forgetting an unknown or already-forgotten conversation is a no-op).
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,8 +113,8 @@ from tera_spark.pipeline.kg import (
     quantity_triples,
     shared_row_expr,
 )
-from tera_spark.pipeline.link import link_mentions
-from tera_spark.pipeline.run import PipelineResult, _bucket_of, _bucketize, _done, _write_bucketed
+from tera_spark.pipeline.link import link_mentions, prepare_lexicon
+from tera_spark.pipeline.run import PipelineResult, _bucket_of, _bucketize
 from tera_spark.sources.readers import arrow_frame
 
 
@@ -179,25 +178,10 @@ def run_pipeline_forget(
     ``conv_id`` column) from the pipeline output at ``out_dir``, as one
     atomic delta batch. ``lexicon`` / ``fuzzy_threshold`` must match the
     original runs (linking is replayed as a pure function to reconstruct
-    the deleted conversations' alias edges). See module docstring."""
+    the deleted conversations' alias edges); a ``PreparedLexicon`` stays
+    the caller's, a raw lexicon is prepared and released here. See module
+    docstring."""
     batch = _Batch(out_dir, "forget", _write_part)
-    for side in ("canonical_map", "ent_index", "convs_applied"):
-        if not _done(os.path.join(out_dir, side)):
-            raise ValueError(
-                f"forget needs the {side} side table at {out_dir} — produced by "
-                "run_pipeline (round 4+) or bootstrapped by one incremental apply"
-            )
-    if not _done(os.path.join(out_dir, "refcounts")):
-        # legacy base (pre-refcount layout): bootstrap once from the live
-        # linked table. That view includes every committed batch's rows,
-        # and pre-bootstrap batches carry no refcounts_adds parts, so
-        # nothing double-counts; applies committed AFTER this write
-        # maintain the table incrementally (pipeline/incremental.py).
-        _write_bucketed(
-            emission_refcounts(read_live(spark, out_dir, "linked")),
-            "refcounts",
-            os.path.join(out_dir, "refcounts"),
-        )
 
     # ---- the conversations that are actually applied (unknown ids no-op)
     d_convs = (
@@ -235,10 +219,15 @@ def run_pipeline_forget(
     # urn:mention id (the provisional row is emitted whenever the fuzzy
     # path ran for that norm — same purity argument).
     t0 = time.time()
-    _, d_edges = link_mentions(
-        d_mentions, lexicon, fuzzy_threshold, scorer=scorer, materialized=True
-    )
-    d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
+    prepared = prepare_lexicon(lexicon)
+    try:
+        _, d_edges = link_mentions(
+            d_mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+        )
+        d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
+    finally:
+        if prepared is not lexicon:
+            prepared.release()
     surviving_u = rem_linked.filter(F.col("link_method") == "provisional").select(
         F.col("entity").alias("u")
     )

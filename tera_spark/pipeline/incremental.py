@@ -102,12 +102,18 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from tera_spark.constants import NS_KG, RDF_TYPE, RDFS_LABEL
+from tera_spark.constants import RDF_TYPE, RDFS_LABEL
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
-from tera_spark.pipeline.kg import build_triples, kg_edges, kg_nodes, shared_row_expr
-from tera_spark.pipeline.link import link_mentions
+from tera_spark.pipeline.kg import (
+    build_triples,
+    emission_refcounts,
+    kg_edges,
+    kg_nodes,
+    shared_row_expr,
+)
+from tera_spark.pipeline.link import PreparedLexicon, link_mentions, prepare_lexicon
 from tera_spark.pipeline.run import (
     N_BUCKETS,
     TABLE_LAYOUT,
@@ -122,6 +128,9 @@ from tera_spark.pipeline.run import (
 from tera_spark.sources.writers import cluster_buckets
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
+# maintenance side tables: run_pipeline writes all four, every batch and
+# compact() keep them current
+SIDE_TABLES = ("canonical_map", "ent_index", "convs_applied", "refcounts")
 _TRIPLE_COLS = ["subject", "predicate", "object", "obj_is_literal"]
 _TRIPLE_KEY = ["subject", "predicate", "object"]
 _EDGE_KEY = ["src", "pred", "dst"]
@@ -396,8 +405,8 @@ def _write_part(
 class _Batch:
     """The lifecycle of one delta batch, shared by apply and forget.
 
-    Construction checks for a completed pipeline and no interrupted
-    ``compact()``, sweeps uncommitted leftovers and fixes ``seq``;
+    Construction checks for every table ``run_pipeline`` writes and no
+    interrupted ``compact()``, sweeps uncommitted leftovers and fixes ``seq``;
     ``open`` names and creates the batch dir; ``part`` writes one delta
     file set into it; ``phase`` records a timing row; ``commit`` writes
     the ``_COMMITTED`` marker last. ``write_part`` is the calling module's
@@ -405,10 +414,11 @@ class _Batch:
     either module's."""
 
     def __init__(self, out_dir: str, op: str, write_part) -> None:
-        missing = [t for t in TABLES if not _done(os.path.join(out_dir, t))]
+        missing = [t for t in (*TABLES, *SIDE_TABLES) if not _done(os.path.join(out_dir, t))]
         if missing:
             raise ValueError(
-                f"{op} needs a completed pipeline at {out_dir}; missing stages: {missing}"
+                f"{op} needs a completed run_pipeline output at {out_dir}; "
+                f"missing tables: {missing}"
             )
         if os.path.exists(os.path.join(out_dir, _MANIFEST)):
             raise RuntimeError(
@@ -474,55 +484,55 @@ class _Batch:
 def run_pipeline_incremental(
     spark: SparkSession,
     new_transcripts: DataFrame,
-    lexicon: DataFrame,
+    lexicon: DataFrame | PreparedLexicon,
     out_dir: str,
     fuzzy_threshold: float = 88.0,
     batch_id: str | None = None,
-    guard_seen_convs: bool = True,
     scorer: str = "wratio",
 ) -> PipelineResult:
     """Apply ``new_transcripts`` to the completed pipeline output at
     ``out_dir`` as one atomic delta batch. ``read_live`` tables are equal
     (set-wise) to a from-scratch ``run_pipeline`` over old ∪ new.
 
-    ``guard_seen_convs``: drop conversations already applied (base
-    bootstrap table ∪ committed batches) — re-submitting an applied batch
-    is a no-op. ``batch_id`` scopes the lineage/metrics rows
+    Conversations already applied (``convs_applied``: the base run ∪
+    committed batches) are dropped, so re-submitting an applied batch is a
+    no-op. ``batch_id`` scopes the lineage/metrics rows
     (``<stage>@<batch_id>``); default is a content hash of the batch's
     conv_ids, so retries reuse the same id and distinct batches never
-    collide."""
+    collide. ``lexicon`` may be a ``PreparedLexicon``, which the caller
+    keeps and releases; a raw lexicon is prepared for this batch and
+    released when it ends."""
     batch = _Batch(out_dir, "incremental run", _write_part)
-    part, _phase = batch.part, batch.phase
-
-    # Applied-conversation bookkeeping: a conversation with zero mentions
-    # never reaches the mentions table, so the guard keys off a dedicated
-    # small table of applied conv_ids, bootstrapped once from the base
-    # run's Conversation-type triples (every conversation emits one).
-    # Batch conv_ids live INSIDE the committed batch dir, so guard state
-    # commits atomically with the data.
-    convs_path = os.path.join(out_dir, "convs_applied")
-    if not _done(convs_path):
-        prefix = NS_KG + "conv/"
-        seen0 = (
-            spark.read.parquet(os.path.join(out_dir, "triples"))
-            .filter(
-                (F.col("predicate") == RDF_TYPE)
-                & (F.col("object") == NS_KG + "Conversation")
-            )
-            .select(F.col("subject").substr(len(prefix) + 1, 1 << 30).alias("conv_id"))
-            .distinct()
-        )
-        _write_bucketed(seen0, "convs_applied", convs_path)
-
-    delta = new_transcripts
-    if guard_seen_convs:
-        seen = read_live(spark, out_dir, "convs_applied").select("conv_id")
-        delta = delta.join(seen, "conv_id", "left_anti")
+    # Applied-conversation guard: a conversation with zero mentions never
+    # reaches the mentions table, so the guard keys off the small
+    # convs_applied table. Batch conv_ids live INSIDE the committed batch
+    # dir, so guard state commits atomically with the data.
+    seen = read_live(spark, out_dir, "convs_applied").select("conv_id")
     # checkpoint NOW: every downstream read of the live tables must see the
     # pre-batch state, and the guard's anti-join must run before any write
-    delta = delta.localCheckpoint(eager=True)
+    delta = new_transcripts.join(seen, "conv_id", "left_anti").localCheckpoint(eager=True)
     if not batch.open(delta.select("conv_id").distinct(), batch_id):
         return batch.res
+    prepared = prepare_lexicon(lexicon)
+    try:
+        return _apply(spark, batch, delta, prepared, fuzzy_threshold, scorer)
+    finally:
+        if prepared is not lexicon:
+            prepared.release()
+
+
+def _apply(
+    spark: SparkSession,
+    batch: _Batch,
+    delta: DataFrame,
+    lexicon: PreparedLexicon,
+    fuzzy_threshold: float,
+    scorer: str,
+) -> PipelineResult:
+    """The body of ``run_pipeline_incremental`` once the batch dir is open:
+    ``delta`` holds only conversations not applied yet."""
+    out_dir = batch.out_dir
+    part, _phase = batch.part, batch.phase
 
     # ---- old (pre-batch) live state. The canonical map is PERSISTED
     # pipeline state (run.py writes it as a stage; each batch appends its
@@ -532,19 +542,7 @@ def run_pipeline_incremental(
     old_edges = read_live(spark, out_dir, "alias_edges").select("u", "v").localCheckpoint(
         eager=True
     )
-    cmap_path = os.path.join(out_dir, "canonical_map")
-    if not _done(cmap_path):
-        # legacy base dir (pre-round-4): bootstrap the map table once
-        _write_bucketed(canonical_mapping(old_edges), "canonical_map", cmap_path)
     old_mapping = read_live(spark, out_dir, "canonical_map").localCheckpoint(eager=True)
-    idx_path = os.path.join(out_dir, "ent_index")
-    if not _done(idx_path):
-        # bootstrap the shared-row index once (the ONLY full base-triples
-        # scan this module ever does; every later apply probes the
-        # vocabulary-sized index instead of the corpus-sized base)
-        _write_bucketed(
-            read_live(spark, out_dir, "triples").filter(_shared_expr()), "ent_index", idx_path
-        )
     ent_idx = read_live(spark, out_dir, "ent_index")
     _phase("old_mapping", t0)
 
@@ -566,19 +564,13 @@ def run_pipeline_incremental(
     linked_delta = part_read("linked_adds", _bucketize(linked_raw, "linked"))
     edges_delta = edges_delta.localCheckpoint(eager=True)
     # emission-refcount maintenance: raw keys are canonical-merge-
-    # invariant, so an apply only ever ADDS counts (delta-sized). Skipped
-    # when the base table was never materialized (legacy dir) — the first
-    # forget bootstraps it from the live linked table, which includes this
-    # batch's rows, so skipping here cannot double-count.
-    if _done(os.path.join(out_dir, "refcounts")):
-        from tera_spark.pipeline.kg import emission_refcounts
-
-        part(
-            "refcounts_adds",
-            emission_refcounts(linked_delta.drop("_bucket")),
-            record=False,
-            partitioned=False,
-        )
+    # invariant, so an apply only ever ADDS counts (delta-sized)
+    part(
+        "refcounts_adds",
+        emission_refcounts(linked_delta.drop("_bucket")),
+        record=False,
+        partitioned=False,
+    )
     _phase("per_turn_compute", t0)
 
     # alias-edge adds: new (u,v) pairs only (set semantics at write time —
@@ -857,7 +849,7 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
     this layout mirrors does the same fold as one atomic snapshot commit.
     Returns the list of compacted table names."""
     manifest_path = os.path.join(out_dir, _MANIFEST)
-    tables = [*TABLES, "canonical_map", "ent_index", "convs_applied", "refcounts"]
+    tables = [*TABLES, *SIDE_TABLES]
 
     def _tmp(t: str) -> str:
         return os.path.join(out_dir, f"{t}__compact")
@@ -871,16 +863,11 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
         # (no checkpoint needed — tmp is a different path, the base is only
         # read, never overwritten while being read)
         for t in [*TABLES, "canonical_map", "ent_index"]:
-            if t in ("canonical_map", "ent_index") and not _done(
-                os.path.join(out_dir, t)
-            ):
-                continue  # legacy dir never bootstrapped this side table
             _write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
         convs = read_live(spark, out_dir, "convs_applied").select("conv_id")
         _write_bucketed(convs.dropDuplicates(["conv_id"]), "convs_applied", _tmp("convs_applied"))
-        if _done(os.path.join(out_dir, "refcounts")):
-            # summed fold — the refcount merge is arithmetic, not upsert
-            _write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
+        # summed fold — the refcount merge is arithmetic, not upsert
+        _write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"tables": tables, "batches": [os.path.basename(b) for b in batches]}, fh)

@@ -14,20 +14,23 @@ Two paths, mirroring TERA's alignment pair (SURVEY.md §2.4):
   they share no whole token) + vectorized WRatio scoring + argmax-per-
   mention (A5/W2). The candidate set is bounded by requiring ≥2 shared
   shingles and shingle-Jaccard ≥ 0.25, and by dropping hot shingles (in
-  more than ``max_shingle_freq`` lexicon rows) from the lexicon side.
+  more than ``MAX_SHINGLE_FREQ`` lexicon rows) from the lexicon side.
   Shared shingles are counted over integer ids — ``l_id`` per lexicon
   row, ``m_id`` per distinct mention norm, both fixed by a
   localCheckpoint — so the counting shuffle carries four numbers per row,
   not three strings; the strings join back for the surviving pairs only.
   Scoring uses the floor-aware WRatio kernel
   (``functions/similarity.py:wratio_at_least``) with floor =
-  ``merge_floor``: scores at or above the floor are exact, and pairs below
+  ``MERGE_FLOOR``: scores at or above the floor are exact, and pairs below
   it are dropped right after scoring, so nothing reads their value.
 
 Output adds ``entity`` / ``link_method`` / ``link_score``; unlinked term
 mentions get a provisional ``urn:mention:<norm>`` entity that the
 canonicalization stage may merge into a lexicon entity (alias edges are
-also produced here, from the fuzzy scores).
+also produced here, from the fuzzy scores). Each term mention is one row
+of one projection over ``terms ⟕ lexicon ⟕ best fuzzy candidate``: the
+fuzzy candidates are built only from norms with no exact match, and at
+most one per norm, so neither join changes the row count.
 """
 
 from __future__ import annotations
@@ -47,23 +50,20 @@ PROVISIONAL_PREFIX = "urn:mention:"
 # two-string rows ≈ 100-150 MB serialized — the edge of sane broadcast.
 LEXICON_BROADCAST_MAX_ROWS = 2_000_000
 
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of all RDDs currently pinned in the block manager (localCheckpoint
-    blocks included)."""
-    ids, it = set(), sc._jsc.getPersistentRDDs().keySet().iterator()
-    while it.hasNext():
-        ids.add(int(it.next()))
-    return ids
+# Fuzzy scores below this floor are dropped right after scoring; scores in
+# [MERGE_FLOOR, fuzzy_threshold) become alias edges, not links.
+MERGE_FLOOR = 80.0
+# Hot-shingle cap: a shingle found in more than this many lexicon rows is
+# dropped from candidate blocking.
+MAX_SHINGLE_FREQ = 2000
 
 
-def _checkpoint_rdd_id(df: DataFrame) -> int:
-    """Id of the RDD a ``localCheckpoint()``-ed DataFrame reads: its logical
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD a ``localCheckpoint()``-ed DataFrame reads: its logical
     plan is the bare ``LogicalRDD`` over the persisted blocks. Read from the
-    DataFrame itself rather than diffed from the block manager, so a
-    checkpoint another driver thread takes at the same time is never
-    attributed to this one."""
-    return int(df._jdf.queryExecution().logical().rdd().id())
+    DataFrame itself, so a checkpoint another driver thread takes at the
+    same time is never mistaken for this one."""
+    return df._jdf.queryExecution().logical().rdd()
 
 
 def _norm(col):
@@ -95,40 +95,23 @@ class PreparedLexicon:
 
     lex: DataFrame        # (entity, lex_kind, norm_label, l_id)
     l_tok: DataFrame      # (l_id, l_n, sh) hot-filtered
-    max_shingle_freq: int
-    n_rows: int | None = None  # |lex| — drives the broadcast gates
+    n_rows: int           # |lex| — drives the broadcast gates
 
     def release(self) -> None:
-        """Unpersist the localCheckpoint block sets. Long-lived
+        """Unpersist the blocks of its two localCheckpoints. Long-lived
         sessions (streaming drivers re-preparing lexicons) call this when a
         PreparedLexicon is superseded — otherwise each checkpoint's blocks
         live until the context cleaner happens to GC them (round-2 verdict
         next-round #8). Safe to call more than once; the object must not be
         used afterwards."""
-        sc = self.lex.sparkSession.sparkContext
-        jmap = sc._jsc.getPersistentRDDs()
-        it = jmap.entrySet().iterator()
-        mine = set(getattr(self, "_rdd_ids", ()))
-        while it.hasNext():
-            e = it.next()
-            if int(e.getKey()) in mine:
-                e.getValue().unpersist(False)
+        for df in (self.lex, self.l_tok):
+            _checkpoint_rdd(df).unpersist(False)
 
 
-def prepare_lexicon(
-    lexicon: DataFrame | PreparedLexicon, max_shingle_freq: int = 2000
-) -> PreparedLexicon:
-    """Precompute the lexicon side of ``link_mentions``. Safe to call with
-    an already-prepared lexicon (returned unchanged — but only if it was
-    built with the same ``max_shingle_freq``; a silent mismatch would apply
-    the wrong hot-shingle cap)."""
+def prepare_lexicon(lexicon: DataFrame | PreparedLexicon) -> PreparedLexicon:
+    """Precompute the lexicon side of ``link_mentions``. An already-prepared
+    lexicon is returned unchanged."""
     if isinstance(lexicon, PreparedLexicon):
-        if lexicon.max_shingle_freq != max_shingle_freq:
-            raise ValueError(
-                f"PreparedLexicon was built with max_shingle_freq="
-                f"{lexicon.max_shingle_freq}, caller asked for {max_shingle_freq};"
-                " re-prepare from the raw lexicon DataFrame"
-            )
         return lexicon
     # |lex| rides the checkpoint action as an observed metric (same
     # CollectMetrics fuse as canonical._checkpoint_fingerprint) instead of
@@ -156,24 +139,17 @@ def prepare_lexicon(
         lex.select("l_id", _shingles(F.col("norm_label")).alias("l_sh"))
         .select("l_id", F.size("l_sh").alias("l_n"), F.explode("l_sh").alias("sh"))
         .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("sh")))
-        .filter(F.col("_n") <= max_shingle_freq)
+        .filter(F.col("_n") <= MAX_SHINGLE_FREQ)
         .drop("_n")
         .localCheckpoint()
     )
-    prepared = PreparedLexicon(
-        lex=lex, l_tok=l_tok, max_shingle_freq=max_shingle_freq,
-        n_rows=int(obs.get["n"]),
-    )
-    prepared._rdd_ids = {_checkpoint_rdd_id(lex), _checkpoint_rdd_id(l_tok)}
-    return prepared
+    return PreparedLexicon(lex=lex, l_tok=l_tok, n_rows=int(obs.get["n"]))
 
 
 def link_mentions(
     mentions: DataFrame,
     lexicon: DataFrame | PreparedLexicon,
     fuzzy_threshold: float = 88.0,
-    merge_floor: float = 80.0,
-    max_shingle_freq: int = 2000,
     scorer: str = "wratio",
     materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -191,19 +167,20 @@ def link_mentions(
 
     Confidence bands: score ≥ ``fuzzy_threshold`` links directly (the
     mention row carries the lexicon entity); scores in
-    [``merge_floor``, ``fuzzy_threshold``) are NOT linked here — the
+    [``MERGE_FLOOR``, ``fuzzy_threshold``) are NOT linked here — the
     mention stays provisional and an alias edge (urn:mention:<norm>,
     entity) is emitted instead, so the *canonicalization* stage (CC over
     alias edges + rewrite) performs the low-confidence merge. This keeps
     stage responsibilities honest: linking is per-mention local, merging
     is global/transitive.
     """
-    # The returned ``linked`` is a 4-way union whose every branch re-derives
-    # from ``mentions``, and downstream consumers (build_triples) scan
-    # ``linked`` up to 3 times — so a lazily-derived mentions table (the
-    # Arrow-UDF extraction) would be recomputed ~12x per materialization
-    # (measured: the linked noop costs ~8s at 192k turns vs 0.75s for one
-    # extraction pass). localCheckpoint it ONCE here — unless the caller
+    # The returned ``linked`` reads ``mentions`` three times (the fuzzy
+    # vocabulary, the term projection and the rule passthrough), and
+    # downstream consumers (build_triples) scan ``linked`` up to 3 times —
+    # so a lazily-derived mentions table (the Arrow-UDF extraction) would
+    # be recomputed ~9x per materialization (measured with the earlier
+    # four-branch union: the linked noop cost ~8s at 192k turns vs 0.75s
+    # for one extraction pass). localCheckpoint it ONCE here — unless the caller
     # says it is already materialized (run.py / incremental.py / forget.py
     # read their stage tables back from disk: a re-scan is cheap and a
     # checkpoint would only burn memory). A streaming DataFrame cannot be
@@ -217,10 +194,10 @@ def link_mentions(
 
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _fut = _pool.submit(mentions.localCheckpoint)
-            prepared = prepare_lexicon(lexicon, max_shingle_freq)
+            prepared = prepare_lexicon(lexicon)
             mentions = _fut.result()
     else:
-        prepared = prepare_lexicon(lexicon, max_shingle_freq)
+        prepared = prepare_lexicon(lexicon)
     lex = prepared.lex
 
     terms = mentions.filter(F.col("kind") == "term").withColumn(
@@ -235,34 +212,26 @@ def link_mentions(
     # the first 100×-scale OOM cliff. Above the gate the join degrades to
     # shuffle-hash — one extra shuffle of the terms, zero memory cliff.
     # norm is a near-unique key on the lexicon side, so no salting needed.
-    n_lex = prepared.n_rows
-    if n_lex is None:  # hand-built PreparedLexicon (tests): count lazily
-        n_lex = lex.count()
-        prepared.n_rows = n_lex
-
     def lex_side(df: DataFrame) -> DataFrame:
-        if n_lex <= LEXICON_BROADCAST_MAX_ROWS:
+        if prepared.n_rows <= LEXICON_BROADCAST_MAX_ROWS:
             return F.broadcast(df)
         return df.hint("shuffle_hash")
 
-    exact_lex = lex_side(lex.select("entity", "lex_kind", F.col("norm_label").alias("norm")))
-    exact = terms.join(exact_lex, "norm", "left")
-
-    linked_exact = exact.filter(F.col("entity").isNotNull()).select(
-        *mentions.columns,
-        F.col("entity"),
-        F.col("lex_kind").alias("entity_kind"),
-        F.lit("exact").alias("link_method"),
-        F.lit(100.0).alias("link_score"),
+    exact = terms.join(
+        lex_side(lex.select(
+            F.col("entity").alias("_x_entity"),
+            F.col("lex_kind").alias("_x_kind"),
+            F.col("norm_label").alias("norm"),
+        )),
+        "norm",
+        "left",
     )
 
     # --- fuzzy path over the distinct unlinked vocabulary ------------------
     # Dictionary-encode: score each distinct normalized mention once, not
     # once per occurrence (same trick as the unit parser, F1). Only 1-2
     # word mentions enter the fuzzy path (3-grams are phrase noise).
-    unlinked = exact.filter(F.col("entity").isNull()).drop(
-        "entity", "lex_kind"
-    )
+    unlinked = exact.filter(F.col("_x_entity").isNull())
     # localCheckpoint is a deliberate optimization barrier: without it,
     # Catalyst pushes the (expensive) shingle-array predicates that the
     # downstream explode generates BELOW this distinct, evaluating the
@@ -315,13 +284,13 @@ def link_mentions(
         score_col = portable_ratio_col(F.col("norm"), F.col("norm_label"))
     elif scorer == "wratio":
         score_col = wratio_at_least(
-            F.col("norm"), F.col("norm_label"), merge_floor
+            F.col("norm"), F.col("norm_label"), MERGE_FLOOR
         ).cast("double")
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
     scored = (
         cand.withColumn("link_score", score_col)
-        .filter(F.col("link_score") >= merge_floor)
+        .filter(F.col("link_score") >= MERGE_FLOOR)
         .select("norm", "entity", "lex_kind", "link_score")
     )
     # best candidate per distinct mention (A5/W2), across both bands.
@@ -343,22 +312,41 @@ def link_mentions(
         .select("norm", "entity", "lex_kind", "link_score")
         .localCheckpoint()
     )
-    best = best_all.filter(F.col("link_score") >= fuzzy_threshold)
-
-    fuzzy_joined = unlinked.join(F.broadcast(best), "norm", "left")
-    linked_fuzzy = fuzzy_joined.filter(F.col("entity").isNotNull()).select(
-        *mentions.columns,
-        F.col("entity"),
-        F.col("lex_kind").alias("entity_kind"),
-        F.lit("fuzzy").alias("link_method"),
-        F.col("link_score"),
+    best = best_all.filter(F.col("link_score") >= fuzzy_threshold).select(
+        "norm",
+        F.col("entity").alias("_f_entity"),
+        F.col("lex_kind").alias("_f_kind"),
+        F.col("link_score").alias("_f_score"),
     )
-    provisional = fuzzy_joined.filter(F.col("entity").isNull()).select(
+
+    # --- one projection over every term mention ----------------------------
+    # exact, else fuzzy, else provisional. ``best`` holds at most one row
+    # per norm, so the left join keeps every term row exactly once.
+    method = (
+        F.when(F.col("_x_entity").isNotNull(), F.lit("exact"))
+        .when(F.col("_f_entity").isNotNull(), F.lit("fuzzy"))
+        .otherwise(F.lit("provisional"))
+    )
+
+    def by_method(exact_v, fuzzy_v, provisional_v):
+        return (
+            F.when(F.col("link_method") == "exact", exact_v)
+            .when(F.col("link_method") == "fuzzy", fuzzy_v)
+            .otherwise(provisional_v)
+        )
+
+    linked_terms = exact.join(F.broadcast(best), "norm", "left").withColumn(
+        "link_method", method
+    ).select(
         *mentions.columns,
-        F.concat(F.lit(PROVISIONAL_PREFIX), F.col("norm")).alias("entity"),
-        F.lit("unknown").alias("entity_kind"),
-        F.lit("provisional").alias("link_method"),
-        F.lit(0.0).alias("link_score"),
+        by_method(
+            F.col("_x_entity"),
+            F.col("_f_entity"),
+            F.concat(F.lit(PROVISIONAL_PREFIX), F.col("norm")),
+        ).alias("entity"),
+        by_method(F.col("_x_kind"), F.col("_f_kind"), F.lit("unknown")).alias("entity_kind"),
+        F.col("link_method"),
+        by_method(F.lit(100.0), F.col("_f_score"), F.lit(0.0)).alias("link_score"),
     )
 
     passthrough = non_terms.select(
@@ -371,7 +359,7 @@ def link_mentions(
         F.lit(100.0).alias("link_score"),
     )
 
-    linked = linked_exact.unionByName(linked_fuzzy).unionByName(provisional).unionByName(passthrough)
+    linked = linked_terms.unionByName(passthrough)
 
     # Alias edges for the canonicalization stage: the best candidate per
     # provisional mention in the merge band (pick-one, never all

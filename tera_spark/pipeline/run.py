@@ -273,9 +273,8 @@ def run_pipeline(
 
     if force or not _done(out_path("mentions")):
         # a fresh (non-resumed) base run invalidates any incremental-batch
-        # state left in this directory: delta batches belong to the OLD
-        # base, and the seen-conv table re-bootstraps from the new
-        # Conversation triples on next use (pipeline/incremental.py).
+        # state left in this directory: delta batches and the seen-conv
+        # table belong to the OLD base, and this run rewrites convs_applied.
         # Decided before anything is scheduled: convs_applied is written
         # from t=0 and must not be deleted after.
         shutil.rmtree(out_path("convs_applied"), ignore_errors=True)
@@ -369,9 +368,8 @@ def run_pipeline(
 
     def _convs_applied():
         # applied-conversation guard state for incremental maintenance
-        # (pipeline/incremental.py): materialized here so the FIRST
-        # --append never pays a bootstrap scan of the triple table. Not a
-        # recorded stage — maintenance state, not pipeline output.
+        # (pipeline/incremental.py), which every apply and forget reads.
+        # Not a recorded stage — maintenance state, not pipeline output.
         convs_path = out_path("convs_applied")
         if not _done(convs_path):
             _write_bucketed(transcripts.select("conv_id").distinct(), "convs_applied", convs_path)

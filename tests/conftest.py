@@ -11,5 +11,19 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def persistent_rdd_ids(spark):
+    """A function returning the ids of all RDDs pinned in the block manager
+    at the time it is called (localCheckpoint blocks included)."""
+
+    def ids() -> set[int]:
+        out, it = set(), spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+        while it.hasNext():
+            out.add(int(it.next()))
+        return out
+
+    return ids
+
+
 def df_from_rows(spark, rows, schema):
     return spark.createDataFrame(rows, schema)

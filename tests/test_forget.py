@@ -16,6 +16,7 @@ from tera_spark.pipeline.incremental import (
     run_pipeline_incremental,
 )
 from tera_spark.pipeline.run import run_pipeline
+from tests.util import lexicon_rdd_ids
 
 TABLES = ("triples", "nodes", "edges", "mentions", "linked", "alias_edges")
 
@@ -110,14 +111,23 @@ def test_forget_equals_never_ingested(spark, lexicon_fixture, tmp_path):
     assert _rc_rows(spark, work) == _rc_rows(spark, ref_all)
 
 
-def test_forget_then_reingest_after_compact(spark, lexicon_fixture, tmp_path):
+def test_forget_then_reingest_after_compact(
+    spark, lexicon_fixture, tmp_path, monkeypatch, persistent_rdd_ids
+):
     """Same re-ingest guarantee when the forget was compacted first (the
     tombstones are gone from the log; the guard state must still allow the
-    conversation back). Also exercises the refcounts bootstrap: the side
-    table is deleted before the forget, which must rebuild it from the
-    live linked table (the legacy-layout path)."""
-    import shutil
+    conversation back). The forget and the apply each prepare the raw
+    lexicon once and release it before they return."""
+    import tera_spark.pipeline.forget as fg
+    import tera_spark.pipeline.incremental as inc
 
+    prepared = []
+    for mod in (fg, inc):
+        monkeypatch.setattr(
+            mod,
+            "prepare_lexicon",
+            lambda lex, real=mod.prepare_lexicon: prepared.append(real(lex)) or prepared[-1],
+        )
     lexicon = lexicon_fixture
     t_all = transcripts_spark_df(spark, n_convs=14).cache()
     convs = sorted(r[0] for r in t_all.select("conv_id").distinct().collect())
@@ -128,7 +138,6 @@ def test_forget_then_reingest_after_compact(spark, lexicon_fixture, tmp_path):
     run_pipeline(spark, t_all, lexicon, work)
     run_pipeline(spark, t_all, lexicon, ref_all)
 
-    shutil.rmtree(f"{work}/refcounts")
     run_pipeline_forget(spark, drop, lexicon, work)
     compact(spark, work)
     res = run_pipeline_incremental(
@@ -139,10 +148,45 @@ def test_forget_then_reingest_after_compact(spark, lexicon_fixture, tmp_path):
     # the re-ingested batch's refcounts_adds restore the full-corpus counts
     assert _rc_rows(spark, work) == _rc_rows(spark, ref_all)
 
+    assert len(prepared) == 2
+    pinned = persistent_rdd_ids()
+    for p in prepared:
+        assert not lexicon_rdd_ids(p) & pinned
+
 
 @pytest.fixture(scope="module")
 def lexicon_fixture(spark):
     return lexicon_spark_df(spark).cache()
+
+
+@pytest.fixture(scope="module")
+def built_dir(spark, lexicon_fixture, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("built") / "kg")
+    run_pipeline(spark, transcripts_spark_df(spark, n_convs=6), lexicon_fixture, out)
+    return out
+
+
+@pytest.mark.parametrize("side", ["canonical_map", "ent_index", "convs_applied", "refcounts"])
+def test_apply_and_forget_need_every_side_table(
+    spark, lexicon_fixture, built_dir, side, tmp_path
+):
+    """A run_pipeline output missing one of its side tables is refused by
+    both apply and forget with a ValueError that names the table, before
+    any batch dir is made."""
+    import os
+    import shutil
+
+    work = str(tmp_path / "kg")
+    shutil.copytree(built_dir, work)
+    shutil.rmtree(f"{work}/{side}")
+    missing = rf"missing tables: \['{side}'\]"
+    with pytest.raises(ValueError, match=missing):
+        run_pipeline_incremental(
+            spark, transcripts_spark_df(spark, n_convs=8), lexicon_fixture, work
+        )
+    with pytest.raises(ValueError, match=missing):
+        run_pipeline_forget(spark, ["no-such-conv"], lexicon_fixture, work)
+    assert not os.path.exists(f"{work}/_batches")
 
 
 def test_forget_crash_retry(spark, lexicon_fixture, tmp_path, monkeypatch):

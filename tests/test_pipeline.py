@@ -14,6 +14,7 @@ from tera_spark.fixtures.transcripts import (
 from tera_spark.pipeline.extract import extract_mentions
 from tera_spark.pipeline.link import link_mentions
 from tera_spark.pipeline.run import run_pipeline
+from tests.util import lexicon_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -43,8 +44,13 @@ def test_extract_finds_planted_mentions(spark, transcripts):
 
 
 def test_linking_exact_and_fuzzy(spark, transcripts, lexicon):
+    from collections import Counter
+
+    from tera_spark.pipeline.link import PROVISIONAL_PREFIX, _norm
+
+    fuzzy_threshold = 88.0
     mentions = extract_mentions(transcripts)
-    linked, alias_edges = link_mentions(mentions, lexicon)
+    linked, alias_edges = link_mentions(mentions, lexicon, fuzzy_threshold)
     methods = {r.link_method for r in linked.select("link_method").distinct().collect()}
     assert "exact" in methods
     # exact links resolve to real lexicon entities
@@ -52,6 +58,26 @@ def test_linking_exact_and_fuzzy(spark, transcripts, lexicon):
     assert ex.join(lexicon.select("entity").distinct(), "entity", "left_anti").count() == 0
     # fuzzy path recovers at least some misspelled mentions
     assert linked.filter(F.col("link_method") == "fuzzy").count() > 0
+
+    # every mention row appears in linked exactly once
+    cols = mentions.columns
+    assert Counter(tuple(r) for r in linked.select(cols).collect()) == Counter(
+        tuple(r) for r in mentions.collect()
+    )
+    # each band's entity and score
+    lex_entities = {r.entity for r in lexicon.select("entity").collect()}
+    rows = linked.withColumn("_norm", _norm(F.col("mention"))).collect()
+    by_method = Counter(r.link_method for r in rows)
+    assert set(by_method) == {"exact", "fuzzy", "provisional", "rule"}
+    for r in rows:
+        if r.link_method == "exact":
+            assert r.link_score == 100.0 and r.entity in lex_entities, r
+        elif r.link_method == "fuzzy":
+            assert r.link_score >= fuzzy_threshold and r.entity in lex_entities, r
+        elif r.link_method == "provisional":
+            assert r.entity == PROVISIONAL_PREFIX + r._norm and r.link_score == 0.0, r
+        # rule rows are exactly the non-term kinds
+        assert (r.link_method == "rule") == (r.kind != "term"), r
 
 
 def test_pipeline_end_to_end_and_resume(spark, transcripts, lexicon, tmp_path):
@@ -175,24 +201,19 @@ def test_auto_salt_above_broadcast_gate_same_output(
     assert ta == tb
 
 
-def test_prepared_lexicon_release_and_freq_guard(spark, lexicon):
+def test_prepared_lexicon_release(spark, lexicon, persistent_rdd_ids):
     """release() must drop exactly the checkpoint blocks a PreparedLexicon
-    pinned (no RDD growth across repeated prepare/release cycles), and
-    re-preparing an already-prepared lexicon with a different
-    max_shingle_freq must fail loudly instead of silently ignoring it."""
-    from tera_spark.pipeline.link import _persistent_rdd_ids, prepare_lexicon
+    pinned (no RDD growth across repeated prepare/release cycles), and an
+    already-prepared lexicon passes through prepare_lexicon unchanged."""
+    from tera_spark.pipeline.link import prepare_lexicon
 
-    sc = spark.sparkContext
-    base = _persistent_rdd_ids(sc)
+    base = persistent_rdd_ids()
     for _ in range(3):
         p = prepare_lexicon(lexicon)
-        assert len(_persistent_rdd_ids(sc)) > len(base)
-        # idempotent pass-through with the same freq; reject a different one
+        assert lexicon_rdd_ids(p) <= persistent_rdd_ids() - base
         assert prepare_lexicon(p) is p
-        with pytest.raises(ValueError, match="max_shingle_freq"):
-            prepare_lexicon(p, max_shingle_freq=7)
         p.release()
-        assert _persistent_rdd_ids(sc) == base
+        assert persistent_rdd_ids() == base
 
     # a checkpoint another driver thread takes while the lexicon is being
     # prepared (link_mentions overlaps its mentions checkpoint this way)
@@ -204,10 +225,10 @@ def test_prepared_lexicon_release_and_freq_guard(spark, lexicon):
         fut = pool.submit(other_df.localCheckpoint)
         p = prepare_lexicon(lexicon)
         other = fut.result()
-    other_ids = _persistent_rdd_ids(sc) - base - set(p._rdd_ids)
+    other_ids = persistent_rdd_ids() - base - lexicon_rdd_ids(p)
     assert len(other_ids) == 1
     p.release()
-    assert _persistent_rdd_ids(sc) == base | other_ids
+    assert persistent_rdd_ids() == base | other_ids
     assert other.count() == 20_000
 
 
@@ -231,7 +252,7 @@ def _stored_tables(spark, out_dir) -> dict:
 
 
 def test_run_pipeline_labels_jobs_and_releases_lexicon(
-    spark, transcripts, lexicon, tmp_path, monkeypatch
+    spark, transcripts, lexicon, tmp_path, monkeypatch, persistent_rdd_ids
 ):
     """Every job a run_pipeline call starts is described
     `run_pipeline:<node>` (set in the scheduling thread that starts it) and
@@ -239,7 +260,7 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     builds is released before it returns — no checkpoint block of it stays
     persistent — without changing any stored table."""
     import tera_spark.pipeline.run as runmod
-    from tera_spark.pipeline.link import PreparedLexicon, _persistent_rdd_ids
+    from tera_spark.pipeline.link import PreparedLexicon
 
     transcripts.count()  # materialize the cached fixtures outside the window
     lexicon.count()
@@ -270,7 +291,7 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     assert "run_pipeline:mentions" in descriptions.values()
 
     assert len(prepared) == 1
-    assert not set(prepared[0]._rdd_ids) & _persistent_rdd_ids(spark.sparkContext)
+    assert not lexicon_rdd_ids(prepared[0]) & persistent_rdd_ids()
 
     # the same tables as a run that never releases its lexicon
     monkeypatch.setattr(PreparedLexicon, "release", lambda self: None)
@@ -500,6 +521,11 @@ def test_incremental_matches_full(spark, lexicon, tmp_path):
     run_pipeline(spark, t1, lexicon, inc_dir)
     res = run_pipeline_incremental(spark, t2, lexicon, inc_dir, batch_id="b2")
     assert len(res.stages_run) == 6 and not res.stages_skipped
+    # an explicitly reused batch_id refuses (lineage would collide); t3 is
+    # not applied yet, so its delta is non-empty and the id check must fire
+    # BEFORE anything is written
+    with pytest.raises(ValueError, match="already committed"):
+        run_pipeline_incremental(spark, t3, lexicon, inc_dir, batch_id="b2")
     # second batch: exercises merge-on-read state as the apply input
     res3 = run_pipeline_incremental(spark, t3, lexicon, inc_dir, batch_id="b3")
     assert len(res3.stages_run) == 6
@@ -532,16 +558,6 @@ def test_incremental_matches_full(spark, lexicon, tmp_path):
     metrics = spark.read.parquet(f"{inc_dir}/metrics")
     stages = {r.stage for r in metrics.collect()}
     assert "triples@b2" in stages and "triples@b3" in stages and "mentions" in stages
-
-    # an explicitly reused batch_id refuses (lineage would collide)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="already committed"):
-        # guard off so the delta is non-empty: the id check must fire
-        # BEFORE anything is written
-        run_pipeline_incremental(
-            spark, t2, lexicon, inc_dir, batch_id="b2", guard_seen_convs=False
-        )
 
     # compaction folds the deltas into the base and preserves equality
     compact(spark, inc_dir)
@@ -1092,7 +1108,9 @@ def test_conversation_entropy_signatures(spark):
     assert s.role_entropy == 0.0 and s.transition_entropy is None
 
 
-def test_link_mentions_checkpoint_gate(spark, transcripts, lexicon, tmp_path):
+def test_link_mentions_checkpoint_gate(
+    spark, transcripts, lexicon, tmp_path, persistent_rdd_ids
+):
     """link_mentions localCheckpoints its mentions input once (the linked
     union re-derives its input per branch) unless the caller passes
     materialized=True (run.py/incremental/forget re-read their stage
@@ -1100,7 +1118,7 @@ def test_link_mentions_checkpoint_gate(spark, transcripts, lexicon, tmp_path):
     materialized — a file scan in the lineage says nothing about the UDF
     above it — and must get the checkpoint. Outputs are identical."""
     from tera_spark.pipeline.extract import extract_mentions
-    from tera_spark.pipeline.link import _persistent_rdd_ids, link_mentions
+    from tera_spark.pipeline.link import link_mentions
 
     # materialize BOTH cached fixtures outside the measured windows (cold,
     # they register extra persistent RDDs during the first link call and
@@ -1108,29 +1126,28 @@ def test_link_mentions_checkpoint_gate(spark, transcripts, lexicon, tmp_path):
     transcripts.count()
     lexicon.count()
     mentions = extract_mentions(transcripts)
-    sc = spark.sparkContext
 
     def n_new(before: set[int]) -> int:
         # RDDs persisted since `before`: ids only grow, so Spark's
         # ContextCleaner unpersisting earlier tests' unreachable
         # checkpoints inside the window does not change this count
-        return len(_persistent_rdd_ids(sc) - before)
+        return len(persistent_rdd_ids() - before)
 
-    before = _persistent_rdd_ids(sc)
+    before = persistent_rdd_ids()
     linked_mem, _ = link_mentions(mentions, lexicon)
     with_derived = n_new(before)
 
     path = str(tmp_path / "mentions.parquet")
     mentions.write.parquet(path)
     m_parq = spark.read.parquet(path)
-    before = _persistent_rdd_ids(sc)
+    before = persistent_rdd_ids()
     linked_parq, _ = link_mentions(m_parq, lexicon, materialized=True)
     with_parquet = n_new(before)
 
     t_path = str(tmp_path / "transcripts.parquet")
     transcripts.write.parquet(t_path)
     m_file = extract_mentions(spark.read.parquet(t_path))
-    before = _persistent_rdd_ids(sc)
+    before = persistent_rdd_ids()
     linked_file, _ = link_mentions(m_file, lexicon)
     with_file_lineage = n_new(before)
 

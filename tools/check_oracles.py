@@ -43,7 +43,7 @@ def main():
     import __spark_entry__ as e
     from tera_spark.session import get_spark
 
-    spark = get_spark("oracle_check", cores=8, shuffle_partitions=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
