@@ -210,8 +210,7 @@ def to_ntriples(graph: DataFrame) -> DataFrame:
 def save_graph(graph: DataFrame, path: str, fmt: str | None = None) -> None:
     """Graph sink: format from extension like the reference
     (DataAggregation.py:54-62). ``.nt`` → N-Triples text; anything else →
-    parquet (the Iceberg writer lives in sources/writers.py and is used
-    when the runtime has the Iceberg catalog configured)."""
+    parquet."""
     fmt = fmt or path.rsplit(".", 1)[-1]
     if fmt == "nt":
         to_ntriples(graph).write.mode("overwrite").text(path)

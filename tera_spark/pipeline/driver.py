@@ -3,11 +3,11 @@
 Usage::
 
     spark-submit --py-files tera_spark.zip -m tera_spark.pipeline.driver \\
-        --transcripts <path-or-synth:N> --out /data/kg_run1 [--salts 8]
+        --transcripts <path-or-synth:N> --out /data/kg_run1 [--cores 8]
 
 ``--transcripts synth:N`` generates the deterministic synthetic corpus with
-N conversations (no external data); otherwise the argument is a parquet /
-Iceberg path of (conv_id, turn_idx, role, text, tool, ts).
+N conversations (no external data); otherwise the argument is a parquet
+path of (conv_id, turn_idx, role, text, tool, ts).
 """
 
 from __future__ import annotations
@@ -23,8 +23,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--transcripts", default=None)
     ap.add_argument("--out", required=True)
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--salts", type=int, default=None)
-    ap.add_argument("--fuzzy-threshold", type=float, default=88.0)
     ap.add_argument("--force", action="store_true")
     ap.add_argument(
         "--append", action="store_true",
@@ -75,10 +73,7 @@ def main(argv: list[str] | None = None) -> None:
         spark = _gs("tera_spark_forget", cores=args.cores)
         ids = [c.strip() for c in args.forget.split(",") if c.strip()]
         t0 = time.time()
-        res = run_pipeline_forget(
-            spark, ids, _lex(spark), args.out,
-            fuzzy_threshold=args.fuzzy_threshold, batch_id=args.batch_id,
-        )
+        res = run_pipeline_forget(spark, ids, _lex(spark), args.out, batch_id=args.batch_id)
         print(
             json.dumps(
                 {
@@ -140,12 +135,7 @@ def main(argv: list[str] | None = None) -> None:
 
         t0 = time.time()
         res = run_pipeline_incremental(
-            spark,
-            transcripts,
-            lexicon,
-            args.out,
-            fuzzy_threshold=args.fuzzy_threshold,
-            batch_id=args.batch_id,
+            spark, transcripts, lexicon, args.out, batch_id=args.batch_id
         )
         wall = time.time() - t0
         print(
@@ -170,15 +160,7 @@ def main(argv: list[str] | None = None) -> None:
             # "measure" a no-op
             shutil.rmtree(args.out, ignore_errors=True)
         t0 = time.time()
-        res = run_pipeline(
-            spark,
-            transcripts,
-            lexicon,
-            args.out,
-            fuzzy_threshold=args.fuzzy_threshold,
-            salts=args.salts,
-            force=args.force,
-        )
+        res = run_pipeline(spark, transcripts, lexicon, args.out, force=args.force)
         wall = time.time() - t0
         if best is None or wall < best[0]:
             best = (wall, res)

@@ -100,7 +100,6 @@ from tera_spark.pipeline.incremental import (
     _TRIPLE_COLS,
     _TRIPLE_KEY,
     _Batch,
-    _write_part,
     read_live,
     read_refcounts,
 )
@@ -114,7 +113,7 @@ from tera_spark.pipeline.kg import (
     shared_row_expr,
 )
 from tera_spark.pipeline.link import link_mentions, prepare_lexicon
-from tera_spark.pipeline.run import PipelineResult, _bucket_of, _bucketize
+from tera_spark.pipeline.run import PipelineResult
 from tera_spark.sources.readers import arrow_frame
 
 
@@ -170,18 +169,17 @@ def run_pipeline_forget(
     conv_ids,
     lexicon,
     out_dir: str,
-    fuzzy_threshold: float = 88.0,
     batch_id: str | None = None,
     scorer: str = "wratio",
 ) -> PipelineResult:
     """Forget ``conv_ids`` (iterable of strings, or a DataFrame with a
     ``conv_id`` column) from the pipeline output at ``out_dir``, as one
-    atomic delta batch. ``lexicon`` / ``fuzzy_threshold`` must match the
-    original runs (linking is replayed as a pure function to reconstruct
-    the deleted conversations' alias edges); a ``PreparedLexicon`` stays
+    atomic delta batch. ``lexicon`` must match the original runs (linking
+    is replayed as a pure function to reconstruct the deleted
+    conversations' alias edges); a ``PreparedLexicon`` stays
     the caller's, a raw lexicon is prepared and released here. See module
     docstring."""
-    batch = _Batch(out_dir, "forget", _write_part)
+    batch = _Batch(out_dir, "forget")
 
     # ---- the conversations that are actually applied (unknown ids no-op)
     d_convs = (
@@ -193,9 +191,9 @@ def run_pipeline_forget(
         return batch.res
     _phase = batch.phase
 
-    def part(name: str, df: DataFrame, *, partitioned: bool = True):
+    def part(name: str, df: DataFrame):
         # a forget's lineage is its tombstones
-        batch.part(name, df, record=name.endswith("_dels"), partitioned=partitioned)
+        batch.part(name, df, record=name.endswith("_dels"))
 
     dset = F.broadcast(d_convs)
 
@@ -222,7 +220,7 @@ def run_pipeline_forget(
     prepared = prepare_lexicon(lexicon)
     try:
         _, d_edges = link_mentions(
-            d_mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+            d_mentions, prepared, scorer=scorer, materialized=True
         )
         d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
     finally:
@@ -449,16 +447,15 @@ def run_pipeline_forget(
     _phase("conv_scoped", t0)
 
     # ---- write the delta parts (all under the uncommitted batch dir)
-    part("triples_dels", dels_full.select(*_TRIPLE_KEY), partitioned=False)
-    adds_t = new_slice.withColumn("_bucket", _bucket_of("triples"))
-    part("triples_adds", adds_t)
+    part("triples_dels", dels_full.select(*_TRIPLE_KEY))
+    part("triples_adds", new_slice)
 
     shared = shared_row_expr()
-    part("ent_index_dels", dels_full.filter(shared).select(*_TRIPLE_KEY), partitioned=False)
-    part("ent_index_adds", adds_t.filter(shared))
+    part("ent_index_dels", dels_full.filter(shared).select(*_TRIPLE_KEY))
+    part("ent_index_adds", new_slice.filter(shared))
 
-    part("edges_dels", kg_edges(dels_full), partitioned=False)
-    part("edges_adds", kg_edges(adds_t, "_bucket"))
+    part("edges_dels", kg_edges(dels_full))
+    part("edges_adds", kg_edges(new_slice))
 
     # nodes: recompute exactly the ids whose type/label row set changed —
     # split reps (old and new), unsplit reps that lost a candidate row
@@ -488,23 +485,22 @@ def run_pipeline_forget(
         .select(*_TRIPLE_COLS)
     )
     nodes_adds = (
-        kg_nodes(kept_tl.unionByName(adds_t.select(*_TRIPLE_COLS)))
+        kg_nodes(kept_tl.unionByName(new_slice.select(*_TRIPLE_COLS)))
         .join(F.broadcast(node_ids), "id", "left_semi")
-        .withColumn("_bucket", _bucket_of("nodes"))
         .localCheckpoint(eager=True)
     )
     nodes_dels = node_ids.join(nodes_adds.select("id"), "id", "left_anti")
     part("nodes_adds", nodes_adds)
-    part("nodes_dels", nodes_dels, partitioned=False)
+    part("nodes_dels", nodes_dels)
     _phase("nodes", t0)
 
     # per-turn tables, alias edges, canonical map, refcounts, guard state
-    part("mentions_dels", d_convs, partitioned=False)
-    part("linked_dels", d_convs, partitioned=False)
-    part("refcounts_dels", dec, partitioned=False)
-    part("alias_edges_dels", removed.select("u", "v"), partitioned=False)
-    part("canonical_map_adds", _bucketize(map_adds, "canonical_map"))
-    part("canonical_map_dels", map_dels, partitioned=False)
-    part("convs_applied_dels", d_convs, partitioned=False)
+    part("mentions_dels", d_convs)
+    part("linked_dels", d_convs)
+    part("refcounts_dels", dec)
+    part("alias_edges_dels", removed.select("u", "v"))
+    part("canonical_map_adds", map_adds)
+    part("canonical_map_dels", map_dels)
+    part("convs_applied_dels", d_convs)
 
     return batch.commit(op="forget")

@@ -22,21 +22,21 @@ tables derived from it. The update exploits two structural facts:
    tombstoned triple/edge row can never be re-added — the read-time merge
    is an order-insensitive anti-join, no sequencing needed.
 2. **Every table is hash-bucketed by its subject-side key** with the same
-   ``pmod(xxhash64(key), N)`` function, both read from the one
-   ``TABLE_LAYOUT`` (pipeline/run.py), so add files written by a batch
-   use the same clustering as the base and a later ``compact()`` folds
-   them in without re-deriving anything.
+   ``pmod(xxhash64(key), N)`` function: base stages, every delta part
+   (adds and tombstones) and ``compact()`` are all written by the one
+   ``write_bucketed`` (pipeline/run.py, reading ``TABLE_LAYOUT``), so
+   files written by a batch use the same clustering as the base and a
+   later ``compact()`` folds them in without re-deriving anything.
 
-Storage layout (parquet fallback of the Iceberg design — adds ≈ data
-files of a new snapshot, dels ≈ equality-delete files, ``compact()`` ≈
-rewrite_data_files; Iceberg MERGE INTO gives all of this atomically and
-is what sources/writers.py targets in production)::
+Storage layout (a delta log in plain parquet, shaped like a table
+format's — adds ≈ data files of a new snapshot, dels ≈ equality-delete
+files, ``compact()`` ≈ rewrite_data_files)::
 
     <out>/<table>/_bucket=b/...                      # base — NEVER mutated
     <out>/_batches/b<seq>_<batch_id>/
         <table>_adds/_bucket=b/...                   # delta-sized
-        <table>_dels/...                             # key rows (tombstones)
-        convs/                                       # this batch's conv_ids
+        <table>_dels/_bucket=b/...                   # key rows (tombstones)
+        convs_applied_adds/_bucket=b/...             # this batch's conv_ids
         _COMMITTED                                   # json marker, written LAST
 
 Read-time merge (``read_live``), all map-side — ZERO shuffles of the base:
@@ -85,9 +85,8 @@ of the committed batch dir, so the guard commits atomically WITH the
 data). ``batch_id`` defaults to a content hash of the batch's conv_ids, so
 lineage/metrics rows (``<stage>@<batch_id>``) never collide across
 batches; an explicit batch_id that was already committed raises.
-``compact()`` is a stop-the-world maintenance op in this parquet fallback
-(manifest-protected two-phase swap, self-recovering on retry); under
-Iceberg it is an atomic snapshot commit. Equivalence with a from-scratch
+``compact()`` is a stop-the-world maintenance op (manifest-protected
+two-phase swap, self-recovering on retry). Equivalence with a from-scratch
 run over (old ∪ delta) — before AND after compaction — is asserted in
 tests/test_pipeline.py.
 """
@@ -99,7 +98,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tera_spark.constants import RDF_TYPE, RDFS_LABEL
@@ -114,18 +113,8 @@ from tera_spark.pipeline.kg import (
     shared_row_expr,
 )
 from tera_spark.pipeline.link import PreparedLexicon, link_mentions, prepare_lexicon
-from tera_spark.pipeline.run import (
-    N_BUCKETS,
-    TABLE_LAYOUT,
-    PipelineResult,
-    _bucket_of,
-    _bucketize,
-    _done,
-    _lineage_exprs,
-    _record,
-    _write_bucketed,
-)
-from tera_spark.sources.writers import cluster_buckets
+from tera_spark.pipeline.run import PipelineResult, _done, _record, write_bucketed
+from tera_spark.sources.writers import read_table
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
 # maintenance side tables: run_pipeline writes all four, every batch and
@@ -147,14 +136,6 @@ _DEL_KEYS = {
 _UPSERT_KEYS = {"nodes": "id", "canonical_map": "old", "convs_applied": "conv_id"}
 BATCHES_DIR = "_batches"
 _MANIFEST = "_compact_manifest.json"
-
-# The shared-row classification (which triple rows can collide across
-# conversations) lives next to the emit sites it is pinned to:
-# pipeline/kg.py shared_row_expr. The ``ent_index`` side table holds
-# exactly live_triples.filter(shared_row_expr()) — vocabulary-sized while
-# the full triple table is corpus-sized, which is what makes apply cost
-# ∝ delta instead of ∝ base.
-_shared_expr = shared_row_expr
 
 
 # ---------------------------------------------------------------------------
@@ -191,7 +172,7 @@ def _sweep_uncommitted(out_dir: str) -> None:
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    return spark.read.parquet(path) if os.path.exists(path) else None
+    return read_table(spark, path) if os.path.exists(path) else None
 
 
 def _union_batch_parts(
@@ -245,9 +226,7 @@ def read_live(
     batches can delete a key a LATER batch legitimately re-adds — e.g. a
     conversation deleted and re-ingested, or an entity re-merged after a
     split — and the global anti-join would erase the re-add."""
-    base = spark.read.parquet(os.path.join(out_dir, table))
-    if "_bucket" in base.columns:
-        base = base.drop("_bucket")
+    base = read_table(spark, os.path.join(out_dir, table))
     batches = committed_batches(out_dir)
     if as_of_seq is not None:
         if as_of_seq < 0:
@@ -267,8 +246,6 @@ def read_live(
     all_rows = base.withColumn("_seq", F.lit(0))
     adds = _union_batch_parts(spark, batches, f"{table}_adds", with_seq=True)
     if adds is not None:
-        if "_bucket" in adds.columns:
-            adds = adds.drop("_bucket")
         all_rows = all_rows.unionByName(adds.select(*cols, "_seq"))
     dels = _union_batch_parts(spark, batches, f"{table}_dels", with_seq=True)
     if dels is None:
@@ -296,9 +273,7 @@ def read_refcounts(
     aggregation as a broadcast semi-join, so a component-restricted read
     (the forget survival probe) aggregates only the matching keys instead
     of the whole vocabulary."""
-    base = spark.read.parquet(os.path.join(out_dir, "refcounts"))
-    if "_bucket" in base.columns:
-        base = base.drop("_bucket")
+    base = read_table(spark, os.path.join(out_dir, "refcounts"))
     rows = base
     batches = committed_batches(out_dir)
     adds = _union_batch_parts(spark, batches, "refcounts_adds")
@@ -333,7 +308,7 @@ def _merge_upsert(
     cols = base.columns
     log = None
     if adds is not None:
-        log = adds.drop("_bucket").withColumn("_op", F.lit("add"))
+        log = adds.withColumn("_op", F.lit("add"))
     if dels is not None:
         d = dels.withColumn("_op", F.lit("del"))
         for c in cols:
@@ -373,33 +348,35 @@ def _write_part(
     res: PipelineResult,
     record: bool,
     t0: float,
-    partitioned: bool = True,
-) -> None:
-    """Write one delta file set under the (uncommitted) batch dir. Adds
-    carry ``_bucket`` and are clustered like every stage write
-    (writers.cluster_buckets, the table's TABLE_LAYOUT bucket count), so
-    each bucket dir gets one file and compact() can fold them straight in;
-    tombstone/key files are small single-dir parquet. Lineage counts ride
-    the write via observe()."""
+):
+    """Write one delta part (``<table>_adds`` or ``<table>_dels``) under the
+    (uncommitted) batch dir with ``write_bucketed`` in its table's layout,
+    so each bucket dir gets one file and compact() can fold it straight
+    in. Tombstones are bucketed like adds: every tombstone frame carries
+    its table's bucket key, and its lineage counts are the rows in each
+    bucket dir. Returns the written schema, or None for an empty part.
+
+    Bucketed tombstones cost more than the unbucketed ``coalesce(4)``
+    files they replaced, which recorded no per-bucket lineage at all:
+    each part now pays the clustering shuffle (one more job) and writes
+    up to one file per bucket (32, not ≤4). Interleaved on the
+    30-conversation test fixture (4 vCPUs, forgetting 3 conversations,
+    5 pairs), a tombstone part took ~0.2–0.45 s against ~0.1–0.17 s, the
+    forget 19.7 s against 16.5 s in the median, and
+    ``read_live("triples")`` after it 0.84 s against 0.77 s; apply, which
+    writes tombstones only on its slow path, did not change."""
     path = os.path.join(batch_dir, name)
-    obs = Observation()
-    if partitioned:
-        df = cluster_buckets(df, TABLE_LAYOUT[name.rsplit("_", 1)[0]][1])
-        df = df.observe(obs, *_lineage_exprs())
-        df.write.mode("overwrite").partitionBy("_bucket").parquet(path)
-        vals = obs.get
-    else:
-        df = df.coalesce(4).observe(obs, F.count(F.lit(1)).alias("rows"))
-        df.write.mode("overwrite").parquet(path)
-        vals = {"rows": obs.get["rows"], **{f"b{i}": 0 for i in range(N_BUCKETS)}}
+    counts, schema = write_bucketed(df, name.rsplit("_", 1)[0], path)
     if record:
-        _record(out_dir, batch_tag, vals, time.time() - t0, res)
+        _record(out_dir, batch_tag, counts, time.time() - t0, res)
         res.stages_run.append(batch_tag)
-    if int(vals["rows"]) == 0:
+    if int(counts["rows"]) == 0:
         # an empty delta part is correct but unreadable (parquet schema
         # inference fails on a fileless dir) — drop it; its absence means
         # the same thing to the read-time merge
         shutil.rmtree(path, ignore_errors=True)
+        return None
+    return schema
 
 
 class _Batch:
@@ -408,12 +385,10 @@ class _Batch:
     Construction checks for every table ``run_pipeline`` writes and no
     interrupted ``compact()``, sweeps uncommitted leftovers and fixes ``seq``;
     ``open`` names and creates the batch dir; ``part`` writes one delta
-    file set into it; ``phase`` records a timing row; ``commit`` writes
-    the ``_COMMITTED`` marker last. ``write_part`` is the calling module's
-    ``_write_part``, resolved when the caller runs, so tests can patch
-    either module's."""
+    file set into it (``_write_part``); ``phase`` records a timing row;
+    ``commit`` writes the ``_COMMITTED`` marker last."""
 
-    def __init__(self, out_dir: str, op: str, write_part) -> None:
+    def __init__(self, out_dir: str, op: str) -> None:
         missing = [t for t in (*TABLES, *SIDE_TABLES) if not _done(os.path.join(out_dir, t))]
         if missing:
             raise ValueError(
@@ -429,7 +404,6 @@ class _Batch:
         self.committed = committed_batches(out_dir)
         self.seq = len(self.committed) + 1
         self.res = PipelineResult(out_dir=out_dir)
-        self._write_part = write_part
 
     def open(self, convs: DataFrame, batch_id: str | None, prefix: str = "") -> bool:
         """Create the batch dir for the distinct ``conv_id`` rows ``convs``.
@@ -457,11 +431,12 @@ class _Batch:
         os.makedirs(self.dir, exist_ok=True)
         return True
 
-    def part(self, name: str, df: DataFrame, *, record: bool = True, partitioned: bool = True):
+    def part(self, name: str, df: DataFrame, *, record: bool = True):
+        """Write the delta part ``name``; returns its schema (None: empty)."""
         table = name.rsplit("_", 1)[0]
-        self._write_part(
+        return _write_part(
             self.out_dir, self.dir, name, df, batch_tag=f"{table}@{self.batch_id}",
-            res=self.res, record=record, t0=time.time(), partitioned=partitioned,
+            res=self.res, record=record, t0=time.time(),
         )
 
     def phase(self, name: str, t0: float) -> None:
@@ -486,7 +461,6 @@ def run_pipeline_incremental(
     new_transcripts: DataFrame,
     lexicon: DataFrame | PreparedLexicon,
     out_dir: str,
-    fuzzy_threshold: float = 88.0,
     batch_id: str | None = None,
     scorer: str = "wratio",
 ) -> PipelineResult:
@@ -502,7 +476,7 @@ def run_pipeline_incremental(
     collide. ``lexicon`` may be a ``PreparedLexicon``, which the caller
     keeps and releases; a raw lexicon is prepared for this batch and
     released when it ends."""
-    batch = _Batch(out_dir, "incremental run", _write_part)
+    batch = _Batch(out_dir, "incremental run")
     # Applied-conversation guard: a conversation with zero mentions never
     # reaches the mentions table, so the guard keys off the small
     # convs_applied table. Batch conv_ids live INSIDE the committed batch
@@ -515,7 +489,7 @@ def run_pipeline_incremental(
         return batch.res
     prepared = prepare_lexicon(lexicon)
     try:
-        return _apply(spark, batch, delta, prepared, fuzzy_threshold, scorer)
+        return _apply(spark, batch, delta, prepared, scorer)
     finally:
         if prepared is not lexicon:
             prepared.release()
@@ -526,7 +500,6 @@ def _apply(
     batch: _Batch,
     delta: DataFrame,
     lexicon: PreparedLexicon,
-    fuzzy_threshold: float,
     scorer: str,
 ) -> PipelineResult:
     """The body of ``run_pipeline_incremental`` once the batch dir is open:
@@ -550,27 +523,22 @@ def _apply(
         """Write the delta part, then hand back the WRITTEN files as the
         downstream input — the part write is the materialization barrier
         (one copy, not checkpoint + write = two)."""
-        part(name, df)
-        p = os.path.join(batch.dir, name)
-        return spark.read.parquet(p) if os.path.exists(p) else df
+        schema = part(name, df)
+        if schema is None:
+            return df
+        return read_table(spark, os.path.join(batch.dir, name), schema=schema)
 
     # ---- per-turn delta stages (pure functions of the batch + lexicon)
     t0 = time.time()
-    m_delta = part_read("mentions_adds", _bucketize(extract_mentions(delta), "mentions"))
+    m_delta = part_read("mentions_adds", extract_mentions(delta))
     linked_raw, edges_delta = link_mentions(
-        m_delta.drop("_bucket"), lexicon, fuzzy_threshold, scorer=scorer,
-        materialized=True,
+        m_delta, lexicon, scorer=scorer, materialized=True
     )
-    linked_delta = part_read("linked_adds", _bucketize(linked_raw, "linked"))
+    linked_delta = part_read("linked_adds", linked_raw)
     edges_delta = edges_delta.localCheckpoint(eager=True)
     # emission-refcount maintenance: raw keys are canonical-merge-
     # invariant, so an apply only ever ADDS counts (delta-sized)
-    part(
-        "refcounts_adds",
-        emission_refcounts(linked_delta.drop("_bucket")),
-        record=False,
-        partitioned=False,
-    )
+    part("refcounts_adds", emission_refcounts(linked_delta), record=False)
     _phase("per_turn_compute", t0)
 
     # alias-edge adds: new (u,v) pairs only (set semantics at write time —
@@ -579,7 +547,7 @@ def _apply(
     new_edges = edges_delta.select("u", "v").join(
         old_edges, ["u", "v"], "left_anti"
     ).dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
-    part("alias_edges_adds", _bucketize(new_edges, "alias_edges"))
+    part("alias_edges_adds", new_edges)
 
     # ---- global step: connected components over the CONTRACTED delta
     # graph only. Components only merge and the representative is the
@@ -652,7 +620,7 @@ def _apply(
         # extra materialization: both inputs are already checkpointed.
         new_mapping = old_mapping.unionByName(cs)
         map_delta = cs
-    part("canonical_map_adds", _bucketize(map_delta, "canonical_map"), record=False)
+    part("canonical_map_adds", map_delta, record=False)
     _phase("mapping", t0)
 
     # ---- delta triples, canonicalized with the new mapping (one dedup
@@ -660,13 +628,13 @@ def _apply(
     # full shuffle of the delta)
     t0 = time.time()
     t_delta = replace_entities(
-        build_triples(delta, linked_delta.drop("_bucket"), deduplicate=False),
+        build_triples(delta, linked_delta, deduplicate=False),
         new_mapping,
         deduplicate=False,
     ).dropDuplicates(_TRIPLE_KEY)
 
     is_tl = F.col("predicate").isin(RDF_TYPE, RDFS_LABEL)
-    shared = _shared_expr()
+    shared = shared_row_expr()
 
     if has_rewrites:
         # ---- SLOW PATH (some stored canonical id changed — the rare
@@ -716,9 +684,7 @@ def _apply(
         )
         adds_t = part_read(
             "triples_adds",
-            cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti").withColumn(
-                "_bucket", _bucket_of("triples")
-            ),
+            cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti"),
         )
         _phase("dup_probe", t0p)
 
@@ -772,9 +738,7 @@ def _apply(
         dup_keys = scan.filter(F.col("_dup").isNotNull()).select(*_TRIPLE_KEY)
         adds_t = part_read(
             "triples_adds",
-            cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti").withColumn(
-                "_bucket", _bucket_of("triples")
-            ),
+            cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti"),
         )
         dels_t = None
         index_dels = None
@@ -784,21 +748,19 @@ def _apply(
         edge_dels = None
 
     if dels_t is not None:
-        part("triples_dels", dels_t, record=False, partitioned=False)
+        part("triples_dels", dels_t, record=False)
     # ---- ent_index maintenance: the index stays exactly
-    # live_triples.filter(_shared_expr()) — adds ride the same _bucket
-    # (both tables cluster by subject), dels only exist on the slow path
+    # live_triples.filter(shared_row_expr()), dels only exist on the slow
+    # path
     part("ent_index_adds", adds_t.filter(shared), record=False)
     if index_dels is not None:
-        part("ent_index_dels", index_dels, record=False, partitioned=False)
+        part("ent_index_dels", index_dels, record=False)
 
     # ---- nodes: fresh aggregate over the affected ids' live type/label
     # rows (pre-batch survivors + this batch's adds)
     t0 = time.time()
     live_tl = kept_tl.unionByName(adds_t.select(*_TRIPLE_COLS))
-    nodes_adds = part_read(
-        "nodes_adds", kg_nodes(live_tl).withColumn("_bucket", _bucket_of("nodes"))
-    )
+    nodes_adds = part_read("nodes_adds", kg_nodes(live_tl))
     # tombstones: ids merged away, plus affected ids whose recompute
     # produced no row (their last type triple was rewritten away — the
     # upsert log must erase the stale base row, not leave it)
@@ -809,23 +771,18 @@ def _apply(
         nodes_dels = merged_away.unionByName(nodes_dels)
     nodes_dels = nodes_dels.select(F.col("subject").alias("id")).distinct()
     _phase("nodes_compute", t0)
-    part("nodes_dels", nodes_dels, record=False, partitioned=False)
+    part("nodes_dels", nodes_dels, record=False)
 
     # ---- edges: 1:1 projection of non-literal triples, so its delta is
     # exactly the triples delta projected — no extra probe. (A tombstone
     # key can never reappear in adds: old forms always contain a
     # merged-away id, new forms only current representatives.)
-    part("edges_adds", kg_edges(adds_t, "_bucket"))
+    part("edges_adds", kg_edges(adds_t))
     if edge_dels is not None:
-        part("edges_dels", edge_dels, record=False, partitioned=False)
+        part("edges_dels", edge_dels, record=False)
 
     # ---- this batch's conversations (guard state), then the atomic commit
-    part(
-        "convs_applied_adds",
-        delta.select("conv_id").distinct(),
-        record=False,
-        partitioned=False,
-    )
+    part("convs_applied_adds", delta.select("conv_id").distinct(), record=False)
     return batch.commit()
 
 
@@ -844,10 +801,9 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
        next compact() call (the manifest says phase 1 completed; swapped
        tables have no tmp left, unswapped ones do).
 
-    Stop-the-world in this parquet fallback (concurrent readers mid-swap
-    can see one table pre- and another post-compact); the Iceberg writer
-    this layout mirrors does the same fold as one atomic snapshot commit.
-    Returns the list of compacted table names."""
+    Stop-the-world (concurrent readers mid-swap can see one table pre-
+    and another post-compact). Returns the list of compacted table
+    names."""
     manifest_path = os.path.join(out_dir, _MANIFEST)
     tables = [*TABLES, *SIDE_TABLES]
 
@@ -863,11 +819,15 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
         # (no checkpoint needed — tmp is a different path, the base is only
         # read, never overwritten while being read)
         for t in [*TABLES, "canonical_map", "ent_index"]:
-            _write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
-        convs = read_live(spark, out_dir, "convs_applied").select("conv_id")
-        _write_bucketed(convs.dropDuplicates(["conv_id"]), "convs_applied", _tmp("convs_applied"))
+            write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
+        write_bucketed(
+            read_live(spark, out_dir, "convs_applied").select("conv_id"),
+            "convs_applied",
+            _tmp("convs_applied"),
+            dedup_cols=["conv_id"],
+        )
         # summed fold — the refcount merge is arithmetic, not upsert
-        _write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
+        write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"tables": tables, "batches": [os.path.basename(b) for b in batches]}, fh)

@@ -223,15 +223,13 @@ def kg_nodes(triples: DataFrame) -> DataFrame:
     )
 
 
-def kg_edges(triples: DataFrame, *extra: str) -> DataFrame:
+def kg_edges(triples: DataFrame) -> DataFrame:
     """The ``edges`` rows (src, pred, dst) of a triple set: its non-literal
-    rows projected 1:1, so src IS subject. ``extra`` columns (e.g.
-    ``_bucket``) ride along."""
+    rows projected 1:1, so src IS subject."""
     return triples.filter(~F.col("obj_is_literal")).select(
         F.col("subject").alias("src"),
         F.col("predicate").alias("pred"),
         F.col("object").alias("dst"),
-        *extra,
     )
 
 

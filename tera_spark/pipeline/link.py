@@ -50,8 +50,10 @@ PROVISIONAL_PREFIX = "urn:mention:"
 # two-string rows ≈ 100-150 MB serialized — the edge of sane broadcast.
 LEXICON_BROADCAST_MAX_ROWS = 2_000_000
 
+# A fuzzy score at or above this links the mention directly.
+FUZZY_THRESHOLD = 88.0
 # Fuzzy scores below this floor are dropped right after scoring; scores in
-# [MERGE_FLOOR, fuzzy_threshold) become alias edges, not links.
+# [MERGE_FLOOR, FUZZY_THRESHOLD) become alias edges, not links.
 MERGE_FLOOR = 80.0
 # Hot-shingle cap: a shingle found in more than this many lexicon rows is
 # dropped from candidate blocking.
@@ -149,7 +151,6 @@ def prepare_lexicon(lexicon: DataFrame | PreparedLexicon) -> PreparedLexicon:
 def link_mentions(
     mentions: DataFrame,
     lexicon: DataFrame | PreparedLexicon,
-    fuzzy_threshold: float = 88.0,
     scorer: str = "wratio",
     materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -165,9 +166,9 @@ def link_mentions(
     (a parquet read-back or a checkpoint) — the caller says so, because
     only the caller knows; otherwise it is localCheckpointed once here.
 
-    Confidence bands: score ≥ ``fuzzy_threshold`` links directly (the
+    Confidence bands: score ≥ ``FUZZY_THRESHOLD`` links directly (the
     mention row carries the lexicon entity); scores in
-    [``MERGE_FLOOR``, ``fuzzy_threshold``) are NOT linked here — the
+    [``MERGE_FLOOR``, ``FUZZY_THRESHOLD``) are NOT linked here — the
     mention stays provisional and an alias edge (urn:mention:<norm>,
     entity) is emitted instead, so the *canonicalization* stage (CC over
     alias edges + rewrite) performs the low-confidence merge. This keeps
@@ -312,7 +313,7 @@ def link_mentions(
         .select("norm", "entity", "lex_kind", "link_score")
         .localCheckpoint()
     )
-    best = best_all.filter(F.col("link_score") >= fuzzy_threshold).select(
+    best = best_all.filter(F.col("link_score") >= FUZZY_THRESHOLD).select(
         "norm",
         F.col("entity").alias("_f_entity"),
         F.col("lex_kind").alias("_f_kind"),
@@ -365,7 +366,7 @@ def link_mentions(
     # provisional mention in the merge band (pick-one, never all
     # candidates — merging every candidate would chain unrelated entities
     # through shared mentions into one component).
-    alias_edges = best_all.filter(F.col("link_score") < fuzzy_threshold).select(
+    alias_edges = best_all.filter(F.col("link_score") < FUZZY_THRESHOLD).select(
         F.concat(F.lit(PROVISIONAL_PREFIX), F.col("norm")).alias("u"),
         F.col("entity").alias("v"),
     )

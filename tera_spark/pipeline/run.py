@@ -3,24 +3,27 @@ materialization, with stage-boundary checkpoints, per-partition lineage and
 metrics (north_rule: "resumable from checkpoint with per-partition lineage
 + metrics").
 
-Checkpoint model: every stage writes its output table under
-``<out_dir>/<stage>/`` (Iceberg table or parquet dir, sources/writers.py);
-a stage is skipped when its output already exists (parquet ``_SUCCESS`` /
-table snapshot). Because every operator is a pure function of its input
-(content-hash bnodes, deterministic pick-one rules), a resumed run is
-bit-identical to an uninterrupted one — asserted in tests.
+Checkpoint model: every stage writes its output table as a bucketed
+parquet dir under ``<out_dir>/<stage>/`` (``write_bucketed``); a stage is
+skipped when its output already exists (parquet ``_SUCCESS``). Because
+every operator is a pure function of its input (content-hash bnodes,
+deterministic pick-one rules), a resumed run is bit-identical to an
+uninterrupted one — asserted in tests.
 
 Lineage: one row per (stage, conv bucket) with row counts; metrics: one
 row per stage with rows_out/wall seconds. Both are parquet append tables.
 
 Job budget: at stage sizes most of a stage's wall is fixed cost — jobs,
 tasks and driver-side plan building — not data (BENCH/BASELINE.md), so
-each stage pays as little of it as it can. The stage write is one shuffle
-into one task per core (writers.cluster_buckets), not one task per
-bucket, and still one file per bucket dir. Lineage counts ride the write
-itself via ``df.observe`` (CollectMetrics — zero extra Spark jobs, zero
-extra passes over the data), and their 33 counters are SQL text, one
-py4j call each instead of several per ``functions`` call. The tiny
+each stage pays as little of it as it can. ``write_bucketed`` is the one
+writer of the bucket layout — stage writes, alias_edges, convs_applied,
+every delta part of an incremental or forget batch (adds and tombstones
+alike) and compact() call it. Its write is one shuffle into one task per
+core (writers.cluster_buckets), not one task per bucket, and still one
+file per bucket dir. Lineage counts ride the write itself via
+``df.observe`` (CollectMetrics — zero extra Spark jobs, zero extra passes
+over the data), and their 33 counters are SQL text, one py4j call each
+instead of several per ``functions`` call. The tiny
 lineage/metrics tables are written driver-side with pyarrow (32 rows — a
 Spark job per write would be pure scheduling overhead; the files are
 plain parquet, readable by any engine). A freshly written stage is read
@@ -58,6 +61,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tera_spark.operators.canonical import canonical_mapping, replace_entities_salted
 from tera_spark.operators.triples import replace_entities
@@ -70,7 +74,7 @@ from tera_spark.pipeline.kg import (
     shared_row_expr,
 )
 from tera_spark.pipeline.link import link_mentions, prepare_lexicon
-from tera_spark.sources.writers import bucket_expr, bucketize, read_table, write_table
+from tera_spark.sources.writers import bucket_expr, cluster_buckets, read_table
 
 N_BUCKETS = 32
 # The recorded stages, in the order PipelineResult lists them.
@@ -78,9 +82,10 @@ STAGES = (
     "mentions", "linked", "refcounts", "canonical_map", "triples",
     "ent_index", "nodes", "edges",
 )
-# Every table's clustering, {table: (bucket key, bucket count)}: stage
-# writes here, the delta parts of incremental/forget batches and compact()
-# all read it, so a batch's add files always land in the base's buckets.
+# Every table's clustering, {table: (bucket key, bucket count)}, read only
+# by write_bucketed: stage writes, the delta parts of incremental/forget
+# batches and compact() all go through it, so a batch's files always land
+# in the base's buckets.
 TABLE_LAYOUT = {
     "mentions": ("conv_id", N_BUCKETS),
     "linked": ("conv_id", N_BUCKETS),
@@ -135,24 +140,6 @@ def _append_driver_table(out_dir: str, table: str, stage: str, pa_table: pa.Tabl
     pq.write_table(pa_table, os.path.join(path, f"{stage}.parquet"))
 
 
-def _bucket_of(table: str):
-    """``table``'s bucket-id column expression (TABLE_LAYOUT)."""
-    key, n = TABLE_LAYOUT[table]
-    return bucket_expr(key, n)
-
-
-def _bucketize(df: DataFrame, table: str) -> DataFrame:
-    """``df`` bucket-clustered with ``table``'s layout (writers.bucketize)."""
-    key, n = TABLE_LAYOUT[table]
-    return bucketize(df, n, key)
-
-
-def _write_bucketed(df: DataFrame, table: str, path: str) -> None:
-    """Plain parquet write of ``df`` in ``table``'s bucket layout — side
-    tables and compaction snapshots that are not recorded stages."""
-    _bucketize(df, table).write.mode("overwrite").partitionBy("_bucket").parquet(path)
-
-
 def _lineage_exprs() -> list:
     """Observe expressions: total row count + per-bucket counts over the
     materialized ``_bucket`` column (the physical write partitions).
@@ -162,6 +149,44 @@ def _lineage_exprs() -> list:
         F.expr(f"count(CASE WHEN _bucket = {i} THEN 1 END) AS b{i}")
         for i in range(N_BUCKETS)
     ]
+
+
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    path: str,
+    *,
+    aligned: bool = False,
+    dedup_cols: list[str] | None = None,
+) -> tuple[dict, StructType]:
+    """Write ``df`` as parquet at ``path`` in ``table``'s bucket layout
+    (TABLE_LAYOUT): ``_bucket`` set from the table's key (any ``_bucket``
+    the frame carries is overwritten), rows clustered by it in one shuffle
+    (writers.cluster_buckets), so each ``_bucket=i`` dir gets one file.
+    ``dedup_cols``: a set-semantics dedup keyed on ``["_bucket",
+    *dedup_cols]``, which rides that same shuffle (Catalyst needs no second
+    exchange). ``aligned``: ``df`` derives by filter/project from a table
+    already written bucketed on the same key values (e.g. edges from
+    triples — src IS subject), so every input split is single-bucket under
+    the identical bucket expression; the shuffle is skipped — a
+    zero-shuffle write with the same layout (file count stays ~1 per
+    bucket per input split).
+
+    Lineage counts ride the write via ``df.observe`` (no extra job).
+    Returns ``(counts, schema)``: the observed ``rows``/``b<i>`` counters
+    (``_record``'s input) and the written schema, ``_bucket`` included —
+    hand it to ``read_table`` so the read-back infers nothing."""
+    assert not (aligned and dedup_cols), "aligned writes carry no dedup shuffle"
+    key, n = TABLE_LAYOUT[table]
+    df = df.withColumn("_bucket", bucket_expr(key, n))
+    if not aligned:
+        df = cluster_buckets(df, n)
+    if dedup_cols:
+        df = df.dropDuplicates(["_bucket", *dedup_cols])
+    obs = Observation()
+    df = df.observe(obs, *_lineage_exprs())
+    df.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+    return obs.get, df.schema
 
 
 def _record(
@@ -216,15 +241,12 @@ def run_pipeline(
     transcripts: DataFrame,
     lexicon: DataFrame,
     out_dir: str,
-    fuzzy_threshold: float = 88.0,
-    salts: int | None = None,
     force: bool = False,
     scorer: str = "wratio",
 ) -> PipelineResult:
     """Run (or resume) the 4-stage KG construction over a transcripts
-    DataFrame. ``salts``: force the salted rewrite for the
-    canonicalization join; ``None`` auto-selects — broadcast while the
-    canonical map is at most CANONICAL_BROADCAST_MAX_ROWS rows, the
+    DataFrame. The canonicalization join broadcasts the canonical map
+    while it is at most CANONICAL_BROADCAST_MAX_ROWS rows and takes the
     AUTO_SALTS-way salted shuffle join beyond that."""
     res = PipelineResult(out_dir=out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -235,38 +257,21 @@ def run_pipeline(
         dedup_cols: list[str] | None = None,
         aligned: bool = False,
     ):
-        """One Spark job per stage: bucket-cluster (one shuffle), optional
-        set-semantics dedup RIDING that same shuffle (keys prefixed with
-        the bucket column, so Catalyst needs no second exchange), lineage
-        counts observed on the write itself, partitioned write, read back
-        with the schema just written (no inference job).
-
-        ``aligned``: the producing DataFrame derives by filter/project
-        from a table ALREADY written bucketed on the same key values
-        (e.g. edges from triples — src IS subject), so every input split
-        is single-bucket under the identical bucket expression;
-        materialize the bucket column map-side and skip the repartition —
-        a zero-shuffle write with the same layout (file count stays
-        ~1 per bucket per input split)."""
+        """One stage: ``write_bucketed`` (one shuffle, or none when
+        ``aligned``; the optional dedup rides it), lineage and metrics
+        recorded from the write's observed counts, read back with the
+        schema just written (no inference job)."""
         path = os.path.join(out_dir, name)
         if not force and _done(path):
             res.stages_skipped.append(name)
             return read_table(spark, path)
         t0 = time.time()
-        if aligned:
-            assert not dedup_cols, "aligned writes carry no dedup shuffle"
-            df = produce().withColumn("_bucket", _bucket_of(name))
-        else:
-            df = _bucketize(produce(), name)
-        if dedup_cols:
-            df = df.dropDuplicates(["_bucket", *dedup_cols])
-        obs = Observation()
-        df = df.observe(obs, *_lineage_exprs())
-        key, n = TABLE_LAYOUT[name]
-        write_table(df, path, bucket_by=(n, key), pre_bucketed=True)
-        _record(out_dir, name, obs.get, time.time() - t0, res)
+        counts, schema = write_bucketed(
+            produce(), name, path, aligned=aligned, dedup_cols=dedup_cols
+        )
+        _record(out_dir, name, counts, time.time() - t0, res)
         res.stages_run.append(name)
-        return read_table(spark, path, schema=df.schema)
+        return read_table(spark, path, schema=schema)
 
     def out_path(name: str) -> str:
         return os.path.join(out_dir, name)
@@ -294,12 +299,10 @@ def run_pipeline(
     def _linked(mentions, prepared):
         def produce():
             linked, alias_edges = link_mentions(
-                mentions, prepared, fuzzy_threshold, scorer=scorer, materialized=True
+                mentions, prepared, scorer=scorer, materialized=True
             )
-            df = _bucketize(alias_edges, "alias_edges")
-            key, n = TABLE_LAYOUT["alias_edges"]
-            write_table(df, out_path("alias_edges"), bucket_by=(n, key), pre_bucketed=True)
-            alias_written.set_result(df.schema)
+            _, schema = write_bucketed(alias_edges, "alias_edges", out_path("alias_edges"))
+            alias_written.set_result(schema)
             return linked
 
         try:
@@ -342,27 +345,20 @@ def run_pipeline(
             # fused into the stage write's bucket shuffle (dedup_cols
             # below) — one shuffle instead of two over the full table
             triples = build_triples(transcripts, linked, deduplicate=False)
-            # Size-gated broadcast: salts=None means AUTO, not "always
-            # broadcast" — a canonical map above the row gate switches to
-            # the salted shuffle join (canonical ids are exactly the kind
-            # of key that goes hot, so plain shuffle-hash isn't enough).
-            # The map's row count is already known from the stage metrics
-            # (or a metadata-cheap parquet count on resume).
-            eff_salts = salts
-            if eff_salts is None:
-                n_map = next(
-                    (m["rows_out"] for m in res.metrics if m["stage"] == "canonical_map"),
-                    None,
-                )
-                if n_map is None:
-                    n_map = cmap.count()
-                if n_map > CANONICAL_BROADCAST_MAX_ROWS:
-                    eff_salts = AUTO_SALTS
-            if eff_salts is None:
-                return replace_entities(
-                    triples, cmap, broadcast_mapping=True, deduplicate=False
-                )
-            return replace_entities_salted(triples, cmap, eff_salts, deduplicate=False)
+            # Size-gated broadcast: a canonical map above the row gate
+            # switches to the salted shuffle join (canonical ids are
+            # exactly the kind of key that goes hot, so plain shuffle-hash
+            # isn't enough). The map's row count is already known from the
+            # stage metrics (or a metadata-cheap parquet count on resume).
+            n_map = next(
+                (m["rows_out"] for m in res.metrics if m["stage"] == "canonical_map"),
+                None,
+            )
+            if n_map is None:
+                n_map = cmap.count()
+            if n_map > CANONICAL_BROADCAST_MAX_ROWS:
+                return replace_entities_salted(triples, cmap, AUTO_SALTS, deduplicate=False)
+            return replace_entities(triples, cmap, broadcast_mapping=True, deduplicate=False)
 
         return stage("triples", produce, dedup_cols=["subject", "predicate", "object"])
 
@@ -372,7 +368,9 @@ def run_pipeline(
         # Not a recorded stage — maintenance state, not pipeline output.
         convs_path = out_path("convs_applied")
         if not _done(convs_path):
-            _write_bucketed(transcripts.select("conv_id").distinct(), "convs_applied", convs_path)
+            write_bucketed(
+                transcripts.select("conv_id").distinct(), "convs_applied", convs_path
+            )
 
     # ---- dependency schedule (module docstring) ---------------------------
     # (node, fn, *the nodes whose results fn reads). One future per node; a

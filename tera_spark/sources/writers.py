@@ -1,9 +1,10 @@
 """Graph sinks — K1/K2 (SURVEY.md §2.1).
 
-Production target is partitioned Iceberg tables (north_star); this sandbox
-has no Iceberg jars, so the writer dispatches: Iceberg ``writeTo`` when the
-session has a catalog configured, parquet layout otherwise — same paths,
-same partitioning spec, so pipeline code is identical in both worlds.
+Plain parquet layout: every pipeline table is a directory with one
+``_bucket=i`` level (``bucket_expr``), clustered by ``cluster_buckets``.
+The one writer of that layout is ``pipeline/run.py write_bucketed``;
+this module holds its two building blocks, the predicate-partitioned
+graph sink and the read-back.
 """
 
 from __future__ import annotations
@@ -11,13 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        return bool(spark.conf.get("spark.sql.catalog.tera", None))
-    except Exception:
-        return False
 
 
 def bucket_expr(col: str, n: int) -> Column:
@@ -44,50 +38,6 @@ def cluster_buckets(df: DataFrame, n: int) -> DataFrame:
     per core."""
     width = min(n, df.sparkSession.sparkContext.defaultParallelism)
     return df.repartitionById(width, F.col("_bucket"))
-
-
-def bucketize(df: DataFrame, n: int, col: str) -> DataFrame:
-    """Materialize the hash-bucket column ``bucket_expr(col, n)`` and
-    cluster rows by it (``cluster_buckets``)."""
-    return cluster_buckets(df.withColumn("_bucket", bucket_expr(col, n)), n)
-
-
-def write_table(
-    df: DataFrame,
-    path_or_table: str,
-    partition_by: list[str] | None = None,
-    bucket_by: tuple[int, str] | None = None,
-    mode: str = "overwrite",
-    pre_bucketed: bool = False,
-) -> None:
-    """Write a stage table. With Iceberg: ``writeTo(...).partitionedBy(
-    bucket(N, col))``. Parquet fallback: hash-bucket column materialized
-    explicitly (``pmod(xxhash64(col), N)``) and used as the partition dir —
-    the same co-location property (all rows of one conv_id land in one
-    bucket) with plain files. ``pre_bucketed``: ``df`` already went through
-    ``bucketize`` (carries ``_bucket``, clustered) — write directly."""
-    spark = df.sparkSession
-    if _iceberg_available(spark):
-        if pre_bucketed:
-            df = df.drop("_bucket")
-        writer = df.writeTo(f"tera.{path_or_table}")
-        if bucket_by:
-            n, col = bucket_by
-            writer = writer.partitionedBy(F.bucket(n, col))
-        elif partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
-        return
-    if pre_bucketed:
-        df.write.mode(mode).partitionBy("_bucket").parquet(path_or_table)
-    elif bucket_by:
-        n, col = bucket_by
-        df = bucketize(df, n, col)
-        df.write.mode(mode).partitionBy("_bucket").parquet(path_or_table)
-    elif partition_by:
-        df.write.mode(mode).partitionBy(*partition_by).parquet(path_or_table)
-    else:
-        df.write.mode(mode).parquet(path_or_table)
 
 
 def materialize_graph(graph: DataFrame, path: str, fused_dedup: bool = False) -> None:
@@ -126,14 +76,12 @@ def read_graph(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table(
-    spark: SparkSession, path_or_table: str, schema: StructType | None = None
+    spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
-    """Read a stage table back, ``_bucket`` dropped. ``schema``: the schema
-    the caller just wrote (``_bucket`` included) — given it, the parquet
-    read skips footer schema inference, which is a Spark job of its own.
-    Iceberg tables carry their schema and ignore it."""
-    if _iceberg_available(spark):
-        return spark.read.table(f"tera.{path_or_table}")
+    """Read a bucketed table back, ``_bucket`` dropped. ``schema``: the
+    schema the caller just wrote (``_bucket`` included) — given it, the
+    parquet read skips footer schema inference, which is a Spark job of
+    its own."""
     reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path_or_table)
+    df = reader.parquet(path)
     return df.drop("_bucket") if "_bucket" in df.columns else df

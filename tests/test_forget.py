@@ -196,6 +196,7 @@ def test_forget_crash_retry(spark, lexicon_fixture, tmp_path, monkeypatch):
     import pytest as _pytest
 
     import tera_spark.pipeline.forget as fg
+    import tera_spark.pipeline.incremental as inc
 
     lexicon = lexicon_fixture
     t_all = transcripts_spark_df(spark, n_convs=14).cache()
@@ -211,24 +212,60 @@ def test_forget_crash_retry(spark, lexicon_fixture, tmp_path, monkeypatch):
 
     pre = {t: _rows(spark, work, t, live=True) for t in ("triples", "nodes")}
 
-    real = fg._write_part
+    real = inc._write_part
 
     def boom(out_dir, batch_dir, name, df, **kw):
         if name == "nodes_adds":
             raise RuntimeError("injected crash before nodes write")
         return real(out_dir, batch_dir, name, df, **kw)
 
-    monkeypatch.setattr(fg, "_write_part", boom)
+    monkeypatch.setattr(inc, "_write_part", boom)
     with _pytest.raises(RuntimeError, match="injected crash"):
         fg.run_pipeline_forget(spark, drop, lexicon, work, batch_id="crash")
 
     for t, rows in pre.items():
         assert _rows(spark, work, t, live=True) == rows, t
 
-    monkeypatch.setattr(fg, "_write_part", real)
+    monkeypatch.setattr(inc, "_write_part", real)
     res = fg.run_pipeline_forget(spark, drop, lexicon, work, batch_id="crash")
     assert res.stages_run
     _assert_equal(spark, ref_a, work, live=True)
+
+
+def test_forget_lineage_counts_its_tombstones(spark, lexicon_fixture, built_dir, tmp_path):
+    """A forget batch records its tombstone parts: for each, the lineage
+    rows sum to the part's metrics rows_out, and each lineage row equals
+    the rows in that part's ``_bucket=i`` dir."""
+    import shutil
+
+    from tera_spark.pipeline.incremental import committed_batches
+
+    work = str(tmp_path / "kg")
+    shutil.copytree(built_dir, work)
+    convs = sorted(r.conv_id for r in read_live(spark, work, "convs_applied").collect())
+    res = run_pipeline_forget(spark, convs[:2], lexicon_fixture, work, batch_id="lin")
+    (batch,) = committed_batches(work)
+    lineage = spark.read.parquet(f"{work}/lineage")
+    metrics = {r.stage: r.rows_out for r in spark.read.parquet(f"{work}/metrics").collect()}
+    assert res.stages_run and all(t.endswith("@lin") for t in res.stages_run)
+    total = 0
+    for tag in res.stages_run:
+        recorded = {
+            r.bucket: r.rows for r in lineage.filter(F.col("stage") == tag).collect()
+        }
+        assert sum(recorded.values()) == metrics[tag], tag
+        part = f"{batch}/{tag.split('@')[0]}_dels"
+        on_disk = (
+            {
+                r["_bucket"]: r["count"]
+                for r in spark.read.parquet(part).groupBy("_bucket").count().collect()
+            }
+            if metrics[tag]
+            else {}
+        )
+        assert recorded == on_disk, tag
+        total += metrics[tag]
+    assert total > 0
 
 
 @pytest.mark.parametrize("ids", [["c2", "c1", "c2"], []], ids=["ids", "empty"])

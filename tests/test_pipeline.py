@@ -12,7 +12,7 @@ from tera_spark.fixtures.transcripts import (
     transcripts_spark_df,
 )
 from tera_spark.pipeline.extract import extract_mentions
-from tera_spark.pipeline.link import link_mentions
+from tera_spark.pipeline.link import FUZZY_THRESHOLD, link_mentions
 from tera_spark.pipeline.run import run_pipeline
 from tests.util import lexicon_rdd_ids
 
@@ -48,9 +48,8 @@ def test_linking_exact_and_fuzzy(spark, transcripts, lexicon):
 
     from tera_spark.pipeline.link import PROVISIONAL_PREFIX, _norm
 
-    fuzzy_threshold = 88.0
     mentions = extract_mentions(transcripts)
-    linked, alias_edges = link_mentions(mentions, lexicon, fuzzy_threshold)
+    linked, alias_edges = link_mentions(mentions, lexicon)
     methods = {r.link_method for r in linked.select("link_method").distinct().collect()}
     assert "exact" in methods
     # exact links resolve to real lexicon entities
@@ -73,7 +72,7 @@ def test_linking_exact_and_fuzzy(spark, transcripts, lexicon):
         if r.link_method == "exact":
             assert r.link_score == 100.0 and r.entity in lex_entities, r
         elif r.link_method == "fuzzy":
-            assert r.link_score >= fuzzy_threshold and r.entity in lex_entities, r
+            assert r.link_score >= FUZZY_THRESHOLD and r.entity in lex_entities, r
         elif r.link_method == "provisional":
             assert r.entity == PROVISIONAL_PREFIX + r._norm and r.link_score == 0.0, r
         # rule rows are exactly the non-term kinds
@@ -146,6 +145,31 @@ def test_pipeline_end_to_end_and_resume(spark, transcripts, lexicon, tmp_path):
             on_disk = {r["_bucket"]: r["count"] for r in df.groupBy("_bucket").count().collect()}
             assert on_disk == {b: rows for (st, b), rows in recorded.items() if st == table}, table
 
+    # the delta parts of an apply batch and a forget batch, tombstones
+    # included, keep the same layout
+    from tera_spark.pipeline.forget import run_pipeline_forget
+    from tera_spark.pipeline.incremental import committed_batches, run_pipeline_incremental
+
+    more = transcripts_spark_df(spark, n_convs=34, hot_convs=1, hot_factor=10)
+    run_pipeline_incremental(spark, more, lexicon, out1, batch_id="grow")
+    convs = sorted(r.conv_id for r in transcripts.select("conv_id").distinct().collect())
+    run_pipeline_forget(spark, convs[:3], lexicon, out1, batch_id="shrink")
+    parts = {}
+    for batch in committed_batches(out1):
+        for name in os.listdir(batch):
+            if name.endswith(("_adds", "_dels")):
+                parts[f"{os.path.basename(batch)}/{name}"] = os.path.join(batch, name)
+    kinds = {p.split("/")[1].rsplit("_", 1)[1] for p in parts}
+    assert kinds == {"adds", "dels"} and any("shrink/triples_dels" in p for p in parts)
+    for part, path in parts.items():
+        key, n = TABLE_LAYOUT[part.split("/")[1].rsplit("_", 1)[0]]
+        dirs = glob.glob(f"{path}/_bucket=*")
+        assert dirs, part
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+        df = spark.read.parquet(path)
+        assert df.filter(F.col("_bucket") != bucket_expr(key, n)).count() == 0, part
+
 
 def test_partial_write_is_rerun_not_resumed(spark, transcripts, lexicon, tmp_path):
     """A stage dir holding parquet files but NO _SUCCESS (writer died between
@@ -172,22 +196,12 @@ def test_partial_write_is_rerun_not_resumed(spark, transcripts, lexicon, tmp_pat
     assert spark.read.parquet(out + "/edges").count() == n_before
 
 
-def test_salted_canonicalization_same_output(spark, transcripts, lexicon, tmp_path):
-    out_a = str(tmp_path / "a")
-    out_b = str(tmp_path / "b")
-    run_pipeline(spark, transcripts, lexicon, out_a)
-    run_pipeline(spark, transcripts, lexicon, out_b, salts=4)
-    ta = {tuple(r) for r in spark.read.parquet(out_a + "/triples").collect()}
-    tb = {tuple(r) for r in spark.read.parquet(out_b + "/triples").collect()}
-    assert ta == tb
-
-
 def test_auto_salt_above_broadcast_gate_same_output(
     spark, transcripts, lexicon, tmp_path, monkeypatch
 ):
-    """salts=None is AUTO: with the canonical-map broadcast gate forced to
-    0 rows, the pipeline must take the salted shuffle rewrite (not the
-    broadcast) and still produce byte-identical triples."""
+    """With the canonical-map broadcast gate forced to 0 rows, the
+    pipeline must take the salted shuffle rewrite (not the broadcast) and
+    still produce byte-identical triples."""
     import tera_spark.pipeline.run as runmod
 
     out_a = str(tmp_path / "auto_a")
@@ -382,24 +396,21 @@ def test_read_table_with_written_schema(spark, tmp_path):
     """read_table(schema=<the schema written>) gives the columns, types and
     rows of the inferred read, `_bucket` dropped, and the read-back starts
     no Spark job (the inferred one runs a footer-schema job)."""
-    from tera_spark.sources.writers import bucketize, read_table, write_table
+    from tera_spark.pipeline.run import write_bucketed
+    from tera_spark.sources.writers import read_table
 
-    df = bucketize(
-        spark.range(0, 200, 1, 4).selectExpr(
-            "CAST(id AS STRING) AS conv_id",
-            "CAST(id AS INT) AS turn_idx",
-            "id / 3.0D AS score",
-            "id % 2 = 0 AS flag",
-            "array(CAST(id AS STRING), 'x') AS tags",
-        ),
-        8,
-        "conv_id",
+    df = spark.range(0, 200, 1, 4).selectExpr(
+        "CAST(id AS STRING) AS conv_id",
+        "CAST(id AS INT) AS turn_idx",
+        "id / 3.0D AS score",
+        "id % 2 = 0 AS flag",
+        "array(CAST(id AS STRING), 'x') AS tags",
     )
     path = str(tmp_path / "t")
-    write_table(df, path, bucket_by=(8, "conv_id"), pre_bucketed=True)
+    _, schema = write_bucketed(df, "convs_applied", path)
 
     before = _job_ids(spark)
-    given = read_table(spark, path, schema=df.schema)
+    given = read_table(spark, path, schema=schema)
     assert _job_ids(spark) == before
     inferred = read_table(spark, path)
     assert given.columns == inferred.columns == ["conv_id", "turn_idx", "score", "flag", "tags"]

@@ -120,13 +120,18 @@ def test_flagship_star_join_no_rowwise_python(spark):
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_stage_dedup_rides_bucket_shuffle(spark):
-    """Set-semantics dedup keyed on ["_bucket", s, p, o] after an explicit
-    repartition on _bucket must NOT add a second exchange — the pipeline's
-    triples stage depends on this fusion (run.py stage())."""
+def test_stage_dedup_rides_bucket_shuffle(spark, tmp_path):
+    """write_bucketed's set-semantics dedup keyed on ["_bucket", s, p, o]
+    must NOT add a second exchange to the write — the pipeline's triples
+    stage depends on this fusion (run.py write_bucketed). Read from the
+    plan the write actually ran (the SQL status store's plan graph)."""
+    import glob
+    import os
+
     from pyspark.sql import functions as F
 
-    from tera_spark.sources.writers import bucketize
+    from tera_spark.pipeline.run import write_bucketed
+    from tera_spark.sources.writers import read_table
 
     df = spark.range(100).select(
         F.concat(F.lit("s"), (F.col("id") % 20).cast("string")).alias("subject"),
@@ -134,20 +139,37 @@ def test_stage_dedup_rides_bucket_shuffle(spark):
         F.concat(F.lit("o"), (F.col("id") % 10).cast("string")).alias("object"),
         F.lit(False).alias("obj_is_literal"),
     )
-    out = bucketize(df, 32, "subject").dropDuplicates(
-        ["_bucket", "subject", "predicate", "object"]
+    path = str(tmp_path / "triples")
+    counts, schema = write_bucketed(
+        df, "triples", path, dedup_cols=["subject", "predicate", "object"]
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    exec_id = max(
+        execs.apply(i).executionId()
+        for i in range(execs.size())
+        if path in execs.apply(i).physicalPlanDescription()
+    )
+    nodes = store.planGraph(exec_id).allNodes()
+    exchanges = [
+        nodes.apply(i).desc() for i in range(nodes.size()) if nodes.apply(i).name() == "Exchange"
+    ]
+    assert len(exchanges) == 1, exchanges
     # one write task per core, not one per bucket (writers.cluster_buckets)
     width = min(32, spark.sparkContext.defaultParallelism)
-    assert re.search(
+    assert re.match(
         rf"Exchange shufflepartitionidpassthrough\(direct_shuffle_partition_id\(_bucket#\d+\), {width}\)",
-        plan,
-    ), plan
-    # bucket b is written by task b mod width: every task gets as many buckets
-    assert out.filter(F.spark_partition_id() != F.col("_bucket") % width).count() == 0
-    assert out.drop("_bucket").distinct().count() == out.count()
+        exchanges[0],
+    ), exchanges
+    # bucket b is written by task b mod width (the part-<task> file name):
+    # every task gets as many buckets
+    for d in glob.glob(f"{path}/_bucket=*"):
+        b = int(d.rsplit("=", 1)[1])
+        (f,) = glob.glob(os.path.join(d, "*.parquet"))
+        assert int(os.path.basename(f).split("-")[1]) == b % width, f
+    back = read_table(spark, path, schema=schema)
+    # (id % 20, id % 10) takes 20 distinct values over 100 rows
+    assert back.count() == counts["rows"] == back.distinct().count() == 20
 
 
 def test_sessionize_is_one_sort_stage(spark):

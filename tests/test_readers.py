@@ -151,11 +151,12 @@ def test_read_logmap_txt_both_schemas(spark, tmp_path):
 
 
 def test_write_read_table_bucketed(spark, tmp_path):
-    from tera_spark.sources.writers import read_table, write_table
+    from tera_spark.pipeline.run import write_bucketed
+    from tera_spark.sources.writers import read_table
 
     df = spark.createDataFrame([(f"c{i}", i) for i in range(20)], "conv_id string, x int")
     path = str(tmp_path / "t")
-    write_table(df, path, bucket_by=(4, "conv_id"))
+    write_bucketed(df, "convs_applied", path)
     back = read_table(spark, path)
     assert back.count() == 20
     assert set(back.columns) == {"conv_id", "x"}
