@@ -364,7 +364,16 @@ def _write_part(
     5 pairs), a tombstone part took ~0.2–0.45 s against ~0.1–0.17 s, the
     forget 19.7 s against 16.5 s in the median, and
     ``read_live("triples")`` after it 0.84 s against 0.77 s; apply, which
-    writes tombstones only on its slow path, did not change."""
+    writes tombstones only on its slow path, did not change.
+
+    The per-file part of that cost is now small: since ``file://`` stopped
+    forking ``chmod`` for each file, ``.crc`` sidecar and directory
+    (``session.get_spark``), an extra bucket file costs ~15 ms of executor
+    time, not ~42 ms (``writers.cluster_buckets``). On the same fixture
+    (``tools/bench_ab.py maintain``, 6 interleaved pairs) that took a
+    forget's 734 forks to 0 but its median only from 19.3 s to 19.1 s,
+    and an apply's from 12.3 s to 11.5 s: most of a forget's time is not
+    in creating its files."""
     path = os.path.join(batch_dir, name)
     counts, schema = write_bucketed(df, name.rsplit("_", 1)[0], path)
     if record:

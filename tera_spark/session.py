@@ -3,6 +3,12 @@
 Local mode here; the same config block is what we'd pass to spark-submit on
 a real cluster (AQE on, Arrow on, skew-join on, UTC, explicit shuffle
 parallelism). See SURVEY.md §4.3.
+
+When ``get_spark`` launches the JVM itself it also serves ``file://`` with
+``tera_spark.fs.NioLocalFileSystem`` (see ``_localfs_conf``): this install
+has no native Hadoop library, so the stock local FileSystem forks ``chmod``
+for every file, ``.crc`` sidecar and directory it creates — 910 forks per
+kgbench ``build`` — and the class sets the same mode bits in-process.
 """
 
 from __future__ import annotations
@@ -43,6 +49,44 @@ def _pin_opts(heap: str, pretouch: bool = True) -> str:
         return ""
     pt = " -XX:+AlwaysPreTouch" if pretouch else ""
     return f"-Xms{heap}{pt} -XX:-ShrinkHeapInSteps"
+
+
+# file:// FileSystem registered for sessions whose JVM get_spark launches;
+# the jar is built from tera_spark/jvm/src by tools/build_jvm.py.
+LOCALFS_CLASS = "tera_spark.fs.NioLocalFileSystem"
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "tera_spark-fs.jar")
+
+
+def _localfs_conf(master: str | None) -> dict[str, str]:
+    """Spark conf that serves ``file://`` with LOCALFS_CLASS.
+
+    Without Hadoop's native library (``NativeCodeLoader`` finds none in this
+    install), ``RawLocalFileSystem.setPermission`` runs ``chmod`` through
+    ``Shell.execCommand`` for every file, ``.crc`` sidecar and directory it
+    creates. Measured with the stock class on 4 vCPUs: one cold kgbench
+    ``build`` forks 910 times (270 part files, 280 ``.crc`` files, 10
+    ``_SUCCESS`` files, 350 directories). On the 30-conversation test
+    fixture a base run forks 749 times, an apply of 4 conversations 485
+    times and a forget of 3 conversations 734 times. Each 32-bucket
+    ``write_bucketed`` adds 21-27 clock ticks of reaped-child CPU to the
+    JVM. LOCALFS_CLASS writes the same bytes, ``.crc`` sidecars and mode
+    bits with no fork (tera_spark/jvm/src).
+
+    Empty under spark-submit (``PYSPARK_GATEWAY_PORT`` set), even when a
+    master is passed: that JVM is already running with a class path this
+    function cannot extend, and naming a class it cannot load would break
+    every file access. ``local-cluster`` executors are JVMs of their own,
+    so they get the jar too; ``local[n]`` executors run in the driver.
+    """
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}
+    conf = {
+        "spark.driver.extraClassPath": LOCALFS_JAR,
+        "spark.hadoop.fs.file.impl": LOCALFS_CLASS,
+    }
+    if master and master.startswith("local-cluster["):
+        conf["spark.executor.extraClassPath"] = LOCALFS_JAR
+    return conf
 
 
 def get_spark(
@@ -128,6 +172,11 @@ def get_spark(
     )
     if driver_jvm:
         builder = builder.config("spark.driver.extraJavaOptions", driver_jvm)
+    for k, v in _localfs_conf(master).items():
+        # a caller's class path is extended, not replaced
+        if k.endswith(".extraClassPath") and conf.get(k):
+            v = conf.pop(k) + os.pathsep + v
+        builder = builder.config(k, v)
     if master and master.startswith("local-cluster["):
         # Worker JVMs locate spark scripts/jars via SPARK_HOME (pip installs
         # don't set it; the pyspark package dir is the correct value).

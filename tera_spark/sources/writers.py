@@ -35,7 +35,17 @@ def cluster_buckets(df: DataFrame, n: int) -> DataFrame:
     dedup + clustering + write is a single shuffle. The width is numbered
     on purpose: an unnumbered ``repartition("_bucket")`` is coalesced by
     AQE to one task at small sizes, which measured slower than one task
-    per core."""
+    per core.
+
+    Each bucket file still has a cost of its own: its directory, its
+    ``.crc`` sidecar and their metadata calls. Warm on 4 vCPUs (kgbench
+    seed 1's 18,534-row ``triples``, 12 writes of each shape), a 32-bucket
+    write's write stage took 0.53 s of executor time (0.48 s wall), and
+    the same rows as 4 unpartitioned files 0.11 s (0.23 s wall): about
+    15 ms of executor time per extra file. That is with the fork-free
+    ``file://`` FileSystem ``session.get_spark`` registers; the stock one
+    forked ``chmod`` for each file, sidecar and directory, and the same
+    writes took 1.37 s against 0.19 s, about 42 ms per extra file."""
     width = min(n, df.sparkSession.sparkContext.defaultParallelism)
     return df.repartitionById(width, F.col("_bucket"))
 

@@ -1,5 +1,5 @@
 """Interleaved A/B of two source trees — the BENCH/BASELINE.md same-window
-discipline. Three modes:
+discipline. Four modes:
 
   leaves  single registry queries (entry_queries.QUERIES) over
           $SPARK_GRAFT_SF_DIR (default sf0.1), noop sink.
@@ -8,17 +8,23 @@ discipline. Three modes:
   staged  run_pipeline (pipeline/run.py), every stage written to parquet
           and the transcripts read from parquet — the production shape
           and the scaling-criterion one.
+  maintain  a base run_pipeline over n_base fixture conversations (built
+          untimed), then a timed apply of k new conversations
+          (pipeline/incremental.py) and a timed forget of m base ones
+          (pipeline/forget.py) on it.
 
 Each (tree, rep) is one subprocess: a fresh JVM on
 local[$SPARK_GRAFT_CPUS], one full-width warm-up job, then a cold and a
 warm run; the WARM number is reported, matching bench.py's headline.
-Trees alternate A B A B ... inside one host window so host drift hits
-both equally.
+maintain reports the apply and the forget, each run once per subprocess.
+Trees alternate inside one host window so host drift hits both equally,
+and which tree runs first alternates too (A B, B A, A B, ...).
 
 Usage:
   python tools/bench_ab.py leaves TREE_A TREE_B reps q1 [q2 ...]
   python tools/bench_ab.py kg     TREE_A TREE_B reps [n_convs, default 20000]
   python tools/bench_ab.py staged TREE_A TREE_B reps [n_convs, default 200000]
+  python tools/bench_ab.py maintain TREE_A TREE_B reps [n_base k m, default 30 4 3]
 """
 
 from __future__ import annotations
@@ -105,16 +111,41 @@ print("ABRESULT " + json.dumps(
                 "warm_tps": round(n / warm, 1)}}))
 """
 
-# mode: (child body, default child args, subprocess timeout in seconds)
+MAINTAIN = r"""
+from tera_spark.fixtures.transcripts import lexicon_spark_df, transcripts_spark_df
+from tera_spark.pipeline.forget import run_pipeline_forget
+from tera_spark.pipeline.incremental import run_pipeline_incremental
+from tera_spark.pipeline.run import run_pipeline
+
+n_base, k, m = (int(x) for x in sys.argv[2:5])
+# the test fixture's shape (tests/test_pipeline.py), grown by the k applied
+t_all = transcripts_spark_df(spark, n_convs=n_base + k, hot_convs=1, hot_factor=10).cache()
+convs = sorted(r[0] for r in t_all.select("conv_id").distinct().collect())
+lexicon = lexicon_spark_df(spark)
+out = tempfile.mkdtemp(prefix="ab_maintain_", dir="/dev/shm")
+run_pipeline(spark, t_all.filter(F.col("conv_id").isin(convs[:n_base])), lexicon, out)
+t0 = time.time()
+run_pipeline_incremental(spark, t_all.filter(F.col("conv_id").isin(convs[n_base:])), lexicon, out)
+apply_s = round(time.time() - t0, 3)
+t0 = time.time()
+run_pipeline_forget(spark, convs[:m], lexicon, out)
+forget_s = round(time.time() - t0, 3)
+shutil.rmtree(out, ignore_errors=True)
+print("ABRESULT " + json.dumps({"maintain": {"apply": apply_s, "forget": forget_s}}))
+"""
+
+# mode: (child body, default child args, subprocess timeout in seconds,
+#        the timed keys of its result that the summary compares)
 MODES = {
-    "leaves": (LEAVES, [], 900),
-    "kg": (KG, ["20000"], 1800),
-    "staged": (STAGED, ["200000"], 3600),
+    "leaves": (LEAVES, [], 900, []),
+    "kg": (KG, ["20000"], 1800, ["warm"]),
+    "staged": (STAGED, ["200000"], 3600, ["warm"]),
+    "maintain": (MAINTAIN, ["30", "4", "3"], 1800, ["apply", "forget"]),
 }
 
 
 def run_tree(mode: str, tree: str, args: list[str]) -> dict:
-    body, _, timeout = MODES[mode]
+    body, _, timeout, _ = MODES[mode]
     p = subprocess.run(
         [sys.executable, "-c", PRELUDE + body, tree, *args],
         capture_output=True, text=True, timeout=timeout,
@@ -137,7 +168,8 @@ def main():
     args = args or MODES[mode][1]
     rows = []
     for i in range(int(reps)):
-        for label, tree in (("A", tree_a), ("B", tree_b)):
+        pair = (("A", tree_a), ("B", tree_b))
+        for label, tree in pair if i % 2 == 0 else pair[::-1]:
             r = run_tree(mode, tree, args)
             rows.append((label, r))
             if mode == "leaves":
@@ -152,12 +184,13 @@ def main():
             print(f"{q}: A(median {med(a)}, {a}) vs B(median {med(b)}, {b}) "
                   f"ratio B/A={med(b)/med(a):.3f}")
         return
-    a = sorted(r[mode]["warm"] for lbl, r in rows if lbl == "A")
-    b = sorted(r[mode]["warm"] for lbl, r in rows if lbl == "B")
-    print(json.dumps({
-        "A_warm": a, "B_warm": b, "A_median": med(a), "B_median": med(b),
-        "ratio_B_over_A": round(med(b) / med(a), 3) if med(a) else None,
-    }))
+    for key in MODES[mode][3]:
+        a = sorted(r[mode][key] for lbl, r in rows if lbl == "A")
+        b = sorted(r[mode][key] for lbl, r in rows if lbl == "B")
+        print(json.dumps({
+            f"A_{key}": a, f"B_{key}": b, "A_median": med(a), "B_median": med(b),
+            "ratio_B_over_A": round(med(b) / med(a), 3) if med(a) else None,
+        }))
 
 
 if __name__ == "__main__":
