@@ -97,6 +97,7 @@ import json
 import os
 import shutil
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,7 +114,7 @@ from tera_spark.pipeline.kg import (
     shared_row_expr,
 )
 from tera_spark.pipeline.link import PreparedLexicon, link_mentions, prepare_lexicon
-from tera_spark.pipeline.run import PipelineResult, _done, _record, write_bucketed
+from tera_spark.pipeline.run import PipelineResult, _done, _record, run_plan, write_bucketed
 from tera_spark.sources.writers import read_table
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
@@ -338,66 +339,50 @@ def _merge_upsert(
 # apply
 
 
-def _write_part(
-    out_dir: str,
-    batch_dir: str,
-    name: str,
-    df: DataFrame,
-    *,
-    batch_tag: str,
-    res: PipelineResult,
-    record: bool,
-    t0: float,
-):
+def _write_part(out_dir: str, batch_dir: str, name: str, df: DataFrame, *, tag: str, record: bool):
     """Write one delta part (``<table>_adds`` or ``<table>_dels``) under the
     (uncommitted) batch dir with ``write_bucketed`` in its table's layout,
     so each bucket dir gets one file and compact() can fold it straight
     in. Tombstones are bucketed like adds: every tombstone frame carries
     its table's bucket key, and its lineage counts are the rows in each
-    bucket dir. Returns the written schema, or None for an empty part.
+    bucket dir; with ``record``, recorded under ``tag``. Returns ``(schema,
+    metrics row)``, None for an empty part's schema or an unrecorded row.
 
     Bucketed tombstones cost more than the unbucketed ``coalesce(4)``
     files they replaced, which recorded no per-bucket lineage at all:
-    each part now pays the clustering shuffle (one more job) and writes
-    up to one file per bucket (32, not ≤4). Interleaved on the
-    30-conversation test fixture (4 vCPUs, forgetting 3 conversations,
-    5 pairs), a tombstone part took ~0.2–0.45 s against ~0.1–0.17 s, the
-    forget 19.7 s against 16.5 s in the median, and
-    ``read_live("triples")`` after it 0.84 s against 0.77 s; apply, which
-    writes tombstones only on its slow path, did not change.
-
-    The per-file part of that cost is now small: since ``file://`` stopped
-    forking ``chmod`` for each file, ``.crc`` sidecar and directory
-    (``session.get_spark``), an extra bucket file costs ~15 ms of executor
-    time, not ~42 ms (``writers.cluster_buckets``). On the same fixture
-    (``tools/bench_ab.py maintain``, 6 interleaved pairs) that took a
-    forget's 734 forks to 0 but its median only from 19.3 s to 19.1 s,
-    and an apply's from 12.3 s to 11.5 s: most of a forget's time is not
-    in creating its files."""
+    each part pays the clustering shuffle (one more job) and writes up to
+    one file per bucket (32, not ≤4); a bucket file costs ~15 ms of
+    executor time. A batch's queued parts are written at once
+    (``_Batch.commit``), so a part's recorded seconds overlap its
+    siblings'. On the 30-conversation test fixture (4 vCPUs, forgetting 3
+    conversations) a forget's 15 parts took ~1.9–2.2 s of wall written at
+    once against ~2.6 s one after another, while one part's own seconds
+    rose from ~0.15–0.3 s to ~1–2.2 s, 15 parts sharing 4 cores."""
+    t0 = time.time()
     path = os.path.join(batch_dir, name)
     counts, schema = write_bucketed(df, name.rsplit("_", 1)[0], path)
-    if record:
-        _record(out_dir, batch_tag, counts, time.time() - t0, res)
-        res.stages_run.append(batch_tag)
+    row = _record(out_dir, tag, counts, time.time() - t0) if record else None
     if int(counts["rows"]) == 0:
         # an empty delta part is correct but unreadable (parquet schema
         # inference fails on a fileless dir) — drop it; its absence means
         # the same thing to the read-time merge
         shutil.rmtree(path, ignore_errors=True)
-        return None
-    return schema
+        schema = None
+    return schema, row
 
 
 class _Batch:
-    """The lifecycle of one delta batch, shared by apply and forget.
+    """The lifecycle of one delta batch, shared by apply and forget; a
+    context manager that restores the caller's Spark local properties.
 
     Construction checks for every table ``run_pipeline`` writes and no
-    interrupted ``compact()``, sweeps uncommitted leftovers and fixes ``seq``;
-    ``open`` names and creates the batch dir; ``part`` writes one delta
-    file set into it (``_write_part``); ``phase`` records a timing row;
-    ``commit`` writes the ``_COMMITTED`` marker last."""
+    interrupted ``compact()``, sweeps uncommitted leftovers, fixes ``seq``
+    and starts the timed section ``open``; ``open`` creates the batch dir;
+    ``phase`` starts the next section; ``part`` queues a delta part,
+    ``read_back`` writes one now; ``commit`` writes the queued parts as
+    one plan, then the ``_COMMITTED`` marker. Rows keep declaration order."""
 
-    def __init__(self, out_dir: str, op: str) -> None:
+    def __init__(self, spark: SparkSession, out_dir: str, op: str) -> None:
         missing = [t for t in (*TABLES, *SIDE_TABLES) if not _done(os.path.join(out_dir, t))]
         if missing:
             raise ValueError(
@@ -409,10 +394,21 @@ class _Batch:
                 f"interrupted compact() at {out_dir}: run compact() to finish the swap"
             )
         _sweep_uncommitted(out_dir)
-        self.out_dir = out_dir
+        self.spark, self.out_dir, self.op = spark, out_dir, op
         self.committed = committed_batches(out_dir)
         self.seq = len(self.committed) + 1
         self.res = PipelineResult(out_dir=out_dir)
+        self._props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
+        self._queue = []  # (name, df, record, row) of the parts commit writes
+        self._rows = []   # metrics rows in declaration order, {} until written
+        self._section = None
+        self.phase("open")
+
+    def __enter__(self) -> _Batch:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.spark.sparkContext._jsc.sc().setLocalProperties(self._props)
 
     def open(self, convs: DataFrame, batch_id: str | None, prefix: str = "") -> bool:
         """Create the batch dir for the distinct ``conv_id`` rows ``convs``.
@@ -440,22 +436,53 @@ class _Batch:
         os.makedirs(self.dir, exist_ok=True)
         return True
 
-    def part(self, name: str, df: DataFrame, *, record: bool = True):
-        """Write the delta part ``name``; returns its schema (None: empty)."""
-        table = name.rsplit("_", 1)[0]
-        return _write_part(
-            self.out_dir, self.dir, name, df, batch_tag=f"{table}@{self.batch_id}",
-            res=self.res, record=record, t0=time.time(),
-        )
+    def phase(self, name: str) -> None:
+        """Start the section ``name``: the open section's timing row is
+        closed, and the jobs that follow are described ``<op>:<name>``."""
+        self._close_section()
+        self._section = (name, time.time())
+        self.spark.sparkContext.setJobDescription(f"{self.op}:{name}")
 
-    def phase(self, name: str, t0: float) -> None:
-        self.res.metrics.append(
-            {"stage": f"_{name}@{self.batch_id}", "rows_out": -1,
-             "seconds": round(time.time() - t0, 3)}
-        )
+    def _close_section(self) -> None:
+        if self._section is not None:
+            name, t0 = self._section
+            self._rows.append({"stage": f"_{name}@{self.batch_id}", "rows_out": -1,
+                               "seconds": round(time.time() - t0, 3)})
+
+    def part(self, name: str, df: DataFrame, *, record: bool = True) -> None:
+        """Queue the delta part ``name``; ``commit`` writes it."""
+        self._rows.append({})
+        self._queue.append((name, df, record, self._rows[-1]))
+
+    def read_back(self, name: str, df: DataFrame) -> DataFrame:
+        """Write the delta part ``name`` now, then hand back the WRITTEN
+        files (``df`` when empty) as the downstream input — the part write
+        is the materialization barrier (one copy, not checkpoint + write)."""
+        self._rows.append({})
+        schema = self._write([(name, df, True, self._rows[-1])])[name]
+        if schema is None:
+            return df
+        return read_table(self.spark, os.path.join(self.dir, name), schema=schema)
+
+    def _write(self, parts: list) -> dict:
+        """Write ``parts`` as one plan, filling in their metrics rows;
+        returns {name: schema}."""
+        done = run_plan(self.spark, self.op, [
+            (name, partial(_write_part, self.out_dir, self.dir, name, df,
+                           tag=f"{name.rsplit('_', 1)[0]}@{self.batch_id}", record=record))
+            for name, df, record, _ in parts
+        ])
+        for name, _, _, row in parts:
+            row.update(done[name][1] or {})
+        return {name: schema for name, (schema, _) in done.items()}
 
     def commit(self, **marker) -> PipelineResult:
-        """Publish the batch: the marker is renamed into place last."""
+        """Write the queued parts, then publish the batch: the marker is
+        renamed into place last."""
+        self._close_section()
+        self._write(self._queue)
+        self.res.metrics = [r for r in self._rows if r]
+        self.res.stages_run = [r["stage"] for r in self.res.metrics if r["rows_out"] >= 0]
         marker = {"seq": self.seq, "batch_id": self.batch_id, **marker,
                   "stages": self.res.stages_run}
         tmp = os.path.join(self.dir, "_COMMITTED.tmp")
@@ -485,23 +512,24 @@ def run_pipeline_incremental(
     collide. ``lexicon`` may be a ``PreparedLexicon``, which the caller
     keeps and releases; a raw lexicon is prepared for this batch and
     released when it ends."""
-    batch = _Batch(out_dir, "incremental run")
-    # Applied-conversation guard: a conversation with zero mentions never
-    # reaches the mentions table, so the guard keys off the small
-    # convs_applied table. Batch conv_ids live INSIDE the committed batch
-    # dir, so guard state commits atomically with the data.
-    seen = read_live(spark, out_dir, "convs_applied").select("conv_id")
-    # checkpoint NOW: every downstream read of the live tables must see the
-    # pre-batch state, and the guard's anti-join must run before any write
-    delta = new_transcripts.join(seen, "conv_id", "left_anti").localCheckpoint(eager=True)
-    if not batch.open(delta.select("conv_id").distinct(), batch_id):
-        return batch.res
-    prepared = prepare_lexicon(lexicon)
-    try:
-        return _apply(spark, batch, delta, prepared, scorer)
-    finally:
-        if prepared is not lexicon:
-            prepared.release()
+    with _Batch(spark, out_dir, "apply") as batch:
+        # Applied-conversation guard: a conversation with zero mentions
+        # never reaches the mentions table, so the guard keys off the small
+        # convs_applied table. Batch conv_ids live INSIDE the committed
+        # batch dir, so guard state commits atomically with the data.
+        seen = read_live(spark, out_dir, "convs_applied").select("conv_id")
+        # checkpoint NOW: every downstream read of the live tables must see
+        # the pre-batch state, and the guard's anti-join must run before
+        # any write
+        delta = new_transcripts.join(seen, "conv_id", "left_anti").localCheckpoint(eager=True)
+        if not batch.open(delta.select("conv_id").distinct(), batch_id):
+            return batch.res
+        prepared = prepare_lexicon(lexicon)
+        try:
+            return _apply(spark, batch, delta, prepared, scorer)
+        finally:
+            if prepared is not lexicon:
+                prepared.release()
 
 
 def _apply(
@@ -514,31 +542,21 @@ def _apply(
     """The body of ``run_pipeline_incremental`` once the batch dir is open:
     ``delta`` holds only conversations not applied yet."""
     out_dir = batch.out_dir
-    part, _phase = batch.part, batch.phase
+    part, part_read, _phase = batch.part, batch.read_back, batch.phase
 
     # ---- old (pre-batch) live state. The canonical map is PERSISTED
     # pipeline state (run.py writes it as a stage; each batch appends its
     # upsert delta below), so apply never re-runs connected components over
     # the whole alias universe — only over the batch's contracted edges.
-    t0 = time.time()
+    _phase("old_mapping")
     old_edges = read_live(spark, out_dir, "alias_edges").select("u", "v").localCheckpoint(
         eager=True
     )
     old_mapping = read_live(spark, out_dir, "canonical_map").localCheckpoint(eager=True)
     ent_idx = read_live(spark, out_dir, "ent_index")
-    _phase("old_mapping", t0)
-
-    def part_read(name: str, df: DataFrame) -> DataFrame:
-        """Write the delta part, then hand back the WRITTEN files as the
-        downstream input — the part write is the materialization barrier
-        (one copy, not checkpoint + write = two)."""
-        schema = part(name, df)
-        if schema is None:
-            return df
-        return read_table(spark, os.path.join(batch.dir, name), schema=schema)
 
     # ---- per-turn delta stages (pure functions of the batch + lexicon)
-    t0 = time.time()
+    _phase("per_turn_compute")
     m_delta = part_read("mentions_adds", extract_mentions(delta))
     linked_raw, edges_delta = link_mentions(
         m_delta, lexicon, scorer=scorer, materialized=True
@@ -548,7 +566,6 @@ def _apply(
     # emission-refcount maintenance: raw keys are canonical-merge-
     # invariant, so an apply only ever ADDS counts (delta-sized)
     part("refcounts_adds", emission_refcounts(linked_delta), record=False)
-    _phase("per_turn_compute", t0)
 
     # alias-edge adds: new (u,v) pairs only (set semantics at write time —
     # the live view is a plain union). The old edge table is
@@ -566,7 +583,7 @@ def _apply(
     # new mapping without ever touching the old alias universe.
     # canonical_mapping drops the edges that collapsed into one component
     # and, at these delta sizes, runs the exact driver-side union-find.
-    t0 = time.time()
+    _phase("mapping")
     om_u = F.broadcast(
         old_mapping.select(F.col("old").alias("u"), F.col("new").alias("_nu"))
     )
@@ -630,12 +647,10 @@ def _apply(
         new_mapping = old_mapping.unionByName(cs)
         map_delta = cs
     part("canonical_map_adds", map_delta, record=False)
-    _phase("mapping", t0)
 
     # ---- delta triples, canonicalized with the new mapping (one dedup
     # AFTER the map-side rewrite — the pre-rewrite dedup would be a second
     # full shuffle of the delta)
-    t0 = time.time()
     t_delta = replace_entities(
         build_triples(delta, linked_delta, deduplicate=False),
         new_mapping,
@@ -649,6 +664,7 @@ def _apply(
         # ---- SLOW PATH (some stored canonical id changed — the rare
         # component-merge case): probe 1 scans the live triples for rows
         # whose canonical id changed (old form → tombstone, new form → add)
+        _phase("rewrite_probe")
         old_t = read_live(spark, out_dir, "triples")
         sr_s = F.broadcast(
             stored_rewrite.select(F.col("old").alias("_s_old"), F.col("new").alias("_s_new"))
@@ -663,9 +679,7 @@ def _apply(
             )
 
         hit = F.col("_s_new").isNotNull() | F.col("_o_new").isNotNull()
-        t0p = time.time()
         hit_rows = _probe(old_t).filter(hit).localCheckpoint(eager=True)
-        _phase("rewrite_probe", t0p)
         dels_t = hit_rows.select(*_TRIPLE_KEY)
         index_dels = hit_rows.filter(shared).select(*_TRIPLE_KEY)
         rewritten = hit_rows.select(
@@ -674,10 +688,11 @@ def _apply(
             F.coalesce("_o_new", "object").alias("object"),
             F.col("obj_is_literal"),
         )
+        _phase("delta_triples")
         cand = rewritten.unionByName(t_delta.select(*_TRIPLE_COLS)).dropDuplicates(
             _TRIPLE_KEY
         ).localCheckpoint(eager=True)
-        _phase("delta_triples", t0)
+        _phase("dup_probe")
         # dup-check keys: rows that could equal a live row — the delta's
         # shared-class rows plus every rewritten row (a rewritten form like
         # (turn mentions newEntity) can equal an existing base row when the
@@ -685,7 +700,6 @@ def _apply(
         dup_cand = cand.filter(shared).select(*_TRIPLE_KEY).unionByName(
             rewritten.select(*_TRIPLE_KEY)
         ).distinct()
-        t0p = time.time()
         dup_keys = (
             old_t.join(F.broadcast(dup_cand), _TRIPLE_KEY, "left_semi")
             .select(*_TRIPLE_KEY)
@@ -695,12 +709,11 @@ def _apply(
             "triples_adds",
             cand.join(F.broadcast(dup_keys), _TRIPLE_KEY, "left_anti"),
         )
-        _phase("dup_probe", t0p)
 
         # nodes: recompute ONLY affected ids — subjects that gained
         # type/label rows (adds) or lost one to an object-side rewrite;
         # subject-merged ids get tombstones
-        t0p = time.time()
+        _phase("nodes_probe")
         merged_away = stored_rewrite.select(F.col("old").alias("subject")).distinct()
         affected = (
             adds_t.filter(is_tl)
@@ -719,7 +732,6 @@ def _apply(
             .join(F.broadcast(affected), "subject", "left_semi")
             .select(*_TRIPLE_COLS)
         )
-        _phase("nodes_probe", t0p)
         edge_dels = kg_edges(hit_rows)
     else:
         # ---- FAST PATH (no stored id rewritten — the steady-state
@@ -728,22 +740,21 @@ def _apply(
         # both remaining questions: which candidate adds already exist
         # (set semantics) and which surviving type/label rows feed the
         # node recompute.
+        _phase("delta_triples")
         cand = t_delta.localCheckpoint(eager=True)
-        _phase("delta_triples", t0)
+        _phase("index_probe")
         dup_cand = cand.filter(shared).select(*_TRIPLE_KEY).withColumn(
             "_dup", F.lit(True)
         )
         affected = cand.filter(is_tl).select("subject").distinct().withColumn(
             "_aff", F.lit(True)
         ).localCheckpoint(eager=True)
-        t0p = time.time()
         scan = (
             ent_idx.join(F.broadcast(dup_cand), _TRIPLE_KEY, "left")
             .join(F.broadcast(affected), "subject", "left")
             .filter(F.col("_dup").isNotNull() | (is_tl & F.col("_aff").isNotNull()))
             .localCheckpoint(eager=True)
         )
-        _phase("index_probe", t0p)
         dup_keys = scan.filter(F.col("_dup").isNotNull()).select(*_TRIPLE_KEY)
         adds_t = part_read(
             "triples_adds",
@@ -767,7 +778,7 @@ def _apply(
 
     # ---- nodes: fresh aggregate over the affected ids' live type/label
     # rows (pre-batch survivors + this batch's adds)
-    t0 = time.time()
+    _phase("nodes_compute")
     live_tl = kept_tl.unionByName(adds_t.select(*_TRIPLE_COLS))
     nodes_adds = part_read("nodes_adds", kg_nodes(live_tl))
     # tombstones: ids merged away, plus affected ids whose recompute
@@ -779,7 +790,6 @@ def _apply(
     if merged_away is not None:
         nodes_dels = merged_away.unionByName(nodes_dels)
     nodes_dels = nodes_dels.select(F.col("subject").alias("id")).distinct()
-    _phase("nodes_compute", t0)
     part("nodes_dels", nodes_dels, record=False)
 
     # ---- edges: 1:1 projection of non-literal triples, so its delta is
@@ -824,19 +834,19 @@ def compact(spark: SparkSession, out_dir: str) -> list[str]:
         batches = committed_batches(out_dir)
         if not batches:
             return []
-        # phase 1: full live snapshots to tmp dirs, clustered like the base
-        # (no checkpoint needed — tmp is a different path, the base is only
-        # read, never overwritten while being read)
-        for t in [*TABLES, "canonical_map", "ent_index"]:
-            write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
-        write_bucketed(
-            read_live(spark, out_dir, "convs_applied").select("conv_id"),
-            "convs_applied",
-            _tmp("convs_applied"),
-            dedup_cols=["conv_id"],
-        )
-        # summed fold — the refcount merge is arithmetic, not upsert
-        write_bucketed(read_refcounts(spark, out_dir), "refcounts", _tmp("refcounts"))
+        # phase 1: full live snapshots to tmp dirs, clustered like the base,
+        # written at once (no checkpoint needed — tmp is a different path,
+        # the base is only read, never overwritten while being read)
+        def snapshot(t: str):
+            if t == "convs_applied":
+                live = read_live(spark, out_dir, t).select("conv_id")
+                return write_bucketed(live, t, _tmp(t), dedup_cols=["conv_id"])
+            if t == "refcounts":
+                # summed fold — the refcount merge is arithmetic, not upsert
+                return write_bucketed(read_refcounts(spark, out_dir), t, _tmp(t))
+            return write_bucketed(read_live(spark, out_dir, t), t, _tmp(t))
+
+        run_plan(spark, "compact", [(t, lambda t=t: snapshot(t)) for t in tables])
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump({"tables": tables, "batches": [os.path.basename(b) for b in batches]}, fh)

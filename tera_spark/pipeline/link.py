@@ -191,12 +191,13 @@ def link_mentions(
         # independent job chains — overlap them (guide §2.6: concurrent
         # driver threads back-fill idle executors) instead of serializing
         # ~0.5s of checkpoint behind ~0.8s of lexicon prep.
-        from concurrent.futures import ThreadPoolExecutor
+        from tera_spark.pipeline.run import run_plan
 
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _fut = _pool.submit(mentions.localCheckpoint)
-            prepared = prepare_lexicon(lexicon)
-            mentions = _fut.result()
+        done = run_plan(mentions.sparkSession, "link_mentions", [
+            ("mentions", mentions.localCheckpoint),
+            ("prepare_lexicon", lambda: prepare_lexicon(lexicon)),
+        ])
+        mentions, prepared = done["mentions"], done["prepare_lexicon"]
     else:
         prepared = prepare_lexicon(lexicon)
     lex = prepared.lex

@@ -30,23 +30,25 @@ plain parquet, readable by any engine). A freshly written stage is read
 back with the schema it was written with, so no parquet schema-inference
 job follows the write.
 
-Scheduling: ``run_pipeline`` is a dependency schedule, one driver thread
-per step, and each step starts as soon as the tables it reads exist:
+Scheduling: ``run_plan`` runs every driver-side plan of writes (this
+module's, link_mentions', a delta batch's parts, ``compact()``'s): one
+thread per node, started once the nodes it reads have returned, its jobs
+in the caller's job group and described ``<label>:<node>``. Here:
 
     lexicon ─────> prepare_lexicon ─┐
-    transcripts ─> mentions ────────┴─> linked ─┬─> refcounts
-                                          │     └──────────────────┬─> triples
-                                          └─> alias_edges ─> canonical_map ─┘
-    transcripts ─> convs_applied           triples ─> ent_index, nodes, edges
+    transcripts ─> mentions ────────┴─> link ─┬─> linked ─┬─> refcounts
+                                              │           └──────────┬─> triples
+                                              └─> canonical_map ─────┘
+    transcripts ─> convs_applied      triples ─> ent_index, nodes, edges
 
-The ``linked`` step writes alias_edges (the same link_mentions call makes
-both) before its own table, so a finished ``linked`` always has its
-alias_edges beside it. Lexicon preparation overlaps mention extraction,
-canonical_map runs while the linked write finishes, refcounts beside
-canonical_map and triples, and the three tables derived from triples are
-written at once. Spark interleaves the tasks of all live jobs, so one
-step's fixed job latency overlaps another's compute. Every job carries the
-description ``run_pipeline:<step>`` and the caller's job group.
+``link`` calls link_mentions and writes alias_edges, which that call also
+makes, so a finished ``linked`` always has its alias_edges beside it;
+``linked``'s seconds span link_mentions through its write. Lexicon
+preparation overlaps mention extraction, canonical_map runs while
+``linked`` is written, refcounts beside canonical_map and triples, and
+the three tables derived from triples are written at once. Spark
+interleaves the tasks of all live jobs, so one node's fixed job latency
+overlaps another's compute.
 """
 
 from __future__ import annotations
@@ -54,7 +56,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -189,9 +191,9 @@ def write_bucketed(
     return obs.get, df.schema
 
 
-def _record(
-    out_dir: str, stage: str, vals: dict, seconds: float, result: PipelineResult
-) -> int:
+def _record(out_dir: str, stage: str, vals: dict, seconds: float) -> dict:
+    """Write ``stage``'s lineage and metrics files from its write's observed
+    counts; returns its ``PipelineResult.metrics`` row."""
     buckets = [(i, int(vals[f"b{i}"])) for i in range(N_BUCKETS) if int(vals[f"b{i}"]) > 0]
     _append_driver_table(
         out_dir,
@@ -216,24 +218,31 @@ def _record(
             schema=_METRICS_SCHEMA,
         ),
     )
-    result.metrics.append({"stage": stage, "rows_out": n, "seconds": round(seconds, 3)})
-    return n
+    return {"stage": stage, "rows_out": n, "seconds": round(seconds, 3)}
 
 
-def _run_node(sc, props, name: str, fn, inputs: list):
-    """One node of run_pipeline's schedule, run in its own pool thread:
-    ``fn`` over the results of the ``inputs`` futures. Local properties
-    are thread-local, so the thread takes a copy of the caller's ``props``
-    (its job group and scheduler pool, as pyspark.InheritableThread does)
-    and describes every Spark job it starts ``run_pipeline:<name>``."""
-    jsc = sc._jsc.sc()
-    own = jsc.getLocalProperties()
-    jsc.setLocalProperties(props.clone())
-    sc.setJobDescription(f"run_pipeline:{name}")
-    try:
+def run_plan(spark: SparkSession, label: str, plan: list) -> dict:
+    """Run ``plan``, a list of ``(name, fn, *deps)``; returns ``{name:
+    fn's result}``. ``fn`` gets the results of ``deps`` (earlier nodes)
+    once they have returned. Each node has its own thread (a bounded pool
+    whose threads block on queued futures can deadlock) holding a copy of
+    the caller's thread-local Spark properties (job group, scheduler
+    pool, as pyspark.InheritableThread does), and describes its jobs
+    ``<label>:<name>``. A node whose input failed never calls ``fn``; the
+    first failure in plan order is raised once every node has ended."""
+    sc = spark.sparkContext
+    props = sc._jsc.sc().getLocalProperties().clone()
+
+    def node(name: str, fn, inputs: list):
+        sc._jsc.sc().setLocalProperties(props.clone())
+        sc.setJobDescription(f"{label}:{name}")
         return fn(*(f.result() for f in inputs))
-    finally:
-        jsc.setLocalProperties(own)
+
+    futs: dict = {}
+    with ThreadPoolExecutor(max_workers=len(plan)) as pool:
+        for name, fn, *deps in plan:
+            futs[name] = pool.submit(node, name, fn, [futs[d] for d in deps])
+    return {name: f.result() for name, f in futs.items()}
 
 
 def run_pipeline(
@@ -256,20 +265,22 @@ def run_pipeline(
         produce,
         dedup_cols: list[str] | None = None,
         aligned: bool = False,
+        t0: float | None = None,
     ):
         """One stage: ``write_bucketed`` (one shuffle, or none when
         ``aligned``; the optional dedup rides it), lineage and metrics
         recorded from the write's observed counts, read back with the
-        schema just written (no inference job)."""
+        schema just written (no inference job). ``t0``: when the stage's
+        work began, if before this call."""
         path = os.path.join(out_dir, name)
         if not force and _done(path):
             res.stages_skipped.append(name)
             return read_table(spark, path)
-        t0 = time.time()
+        t0 = t0 or time.time()
         counts, schema = write_bucketed(
             produce(), name, path, aligned=aligned, dedup_cols=dedup_cols
         )
-        _record(out_dir, name, counts, time.time() - t0, res)
+        res.metrics.append(_record(out_dir, name, counts, time.time() - t0))
         res.stages_run.append(name)
         return read_table(spark, path, schema=schema)
 
@@ -290,44 +301,39 @@ def run_pipeline(
         # so a `linked` without it (a crashed forced rerun, say) is stale
         shutil.rmtree(out_path("linked"), ignore_errors=True)
     relink = force or not _done(out_path("linked"))
-    # resolved with alias_edges' written schema once it is on disk (None:
-    # resumed, read with inference); set inside the `linked` node, which
-    # writes alias_edges before its own table, so canonical_map overlaps
-    # the `linked` write
-    alias_written: Future = Future()
+    # the lexicon this run prepares: released once `linked` is written, or
+    # when the plan fails (release() may run twice)
+    prepared = []
 
-    def _linked(mentions, prepared):
-        def produce():
-            linked, alias_edges = link_mentions(
-                mentions, prepared, scorer=scorer, materialized=True
-            )
-            _, schema = write_bucketed(alias_edges, "alias_edges", out_path("alias_edges"))
-            alias_written.set_result(schema)
-            return linked
+    def _prepare():
+        prepared.append(prepare_lexicon(lexicon))
+        return prepared[-1]
 
+    def _link(mentions, lex):
+        """link_mentions, then alias_edges written. Returns when linking
+        began, the lazy linked frame, and alias_edges' written schema."""
+        t0 = time.time()
+        linked, alias_edges = link_mentions(mentions, lex, scorer=scorer, materialized=True)
+        _, schema = write_bucketed(alias_edges, "alias_edges", out_path("alias_edges"))
+        return t0, linked, schema
+
+    def _linked(link):
+        t0, linked, _ = link
         try:
-            return stage("linked", produce)
+            return stage("linked", lambda: linked, t0=t0)
         finally:
             # every later consumer reads linked/alias_edges from files
-            prepared.release()
+            prepared[0].release()
 
-    def _alias_failed(linked_future):
-        # a `linked` node that failed before writing alias_edges (its
-        # inputs included) fails canonical_map too, instead of leaving it
-        # waiting
-        if not alias_written.done():
-            alias_written.set_exception(
-                linked_future.exception() or RuntimeError("alias_edges was not written")
-            )
-
-    def _canonical_map(alias_schema):
+    def _canonical_map(link):
         # canonical map persisted as its own stage: downstream incremental
         # applies and forgets read it instead of re-running connected
-        # components over the whole alias universe
+        # components over the whole alias universe. alias_edges is read
+        # with the schema `link` wrote (None: resumed, inferred).
         alias = out_path("alias_edges")
         return stage(
             "canonical_map",
-            lambda: canonical_mapping(read_table(spark, alias, schema=alias_schema)),
+            lambda: canonical_mapping(read_table(spark, alias, schema=link and link[2])),
         )
 
     def _refcounts(linked):
@@ -373,12 +379,9 @@ def run_pipeline(
             )
 
     # ---- dependency schedule (module docstring) ---------------------------
-    # (node, fn, *the nodes whose results fn reads). One future per node; a
-    # node's thread blocks only on the futures it reads, and the pool holds
-    # a thread for every node: a bounded pool whose threads block on queued
-    # futures can deadlock. Bookkeeping stays deterministic: lists are
-    # re-sorted to canonical stage order below, and each stage writes its
-    # own driver-side files.
+    # (node, fn, *the nodes whose results fn reads), run by run_plan.
+    # Bookkeeping stays deterministic: lists are re-sorted to canonical
+    # stage order below, and each stage writes its own driver-side files.
     plan = [
         ("mentions", lambda: stage("mentions", lambda: extract_mentions(transcripts))),
         ("convs_applied", _convs_applied),
@@ -386,14 +389,14 @@ def run_pipeline(
     if relink:
         # the lexicon is prepared only when `linked` still has to run
         plan += [
-            ("prepare_lexicon", lambda: prepare_lexicon(lexicon)),
-            ("linked", _linked, "mentions", "prepare_lexicon"),
+            ("prepare_lexicon", _prepare),
+            ("link", _link, "mentions", "prepare_lexicon"),
+            ("linked", _linked, "link"),
         ]
     else:
-        alias_written.set_result(None)
-        plan.append(("linked", lambda: stage("linked", None)))
+        plan += [("link", lambda: None), ("linked", lambda: stage("linked", None))]
     plan += [
-        ("canonical_map", _canonical_map, "alias_edges"),
+        ("canonical_map", _canonical_map, "link"),
         ("refcounts", _refcounts, "linked"),
         ("triples", _triples, "linked", "canonical_map"),
         # shared-row index (vocabulary-sized): the rows incremental
@@ -411,19 +414,11 @@ def run_pipeline(
         # zero shuffle for the corpus-sized edge table.
         ("edges", lambda t: stage("edges", lambda: kg_edges(t), aligned=True), "triples"),
     ]
-    futs: dict = {"alias_edges": alias_written}
-    props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
-    with ThreadPoolExecutor(max_workers=len(plan)) as pool:
-        for name, fn, *deps in plan:
-            futs[name] = pool.submit(
-                _run_node, spark.sparkContext, props, name, fn, [futs[d] for d in deps]
-            )
-        futs["linked"].add_done_callback(_alias_failed)
-    # read every result: a failure in any branch raises, also one that no
-    # other node read (e.g. refcounts, or canonical_map when `triples` was
-    # resumed)
-    for f in futs.values():
-        f.result()
+    try:
+        run_plan(spark, "run_pipeline", plan)
+    finally:
+        for p in prepared:
+            p.release()
 
     order = {n: i for i, n in enumerate(STAGES)}
     res.stages_run.sort(key=order.__getitem__)

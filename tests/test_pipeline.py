@@ -710,6 +710,138 @@ def test_incremental_crash_retry(spark, lexicon, tmp_path, monkeypatch):
     _assert_tables_equal(spark, full_dir, inc_dir, inc.read_live, via_live=True)
 
 
+def test_run_plan_waits_for_every_node_and_skips_dependents(spark):
+    """run_plan returns each node's result. A node that raises while a
+    sibling still sleeps is raised only after the sibling has ended (no
+    thread is left writing into a dir a retry sweeps), and a node that
+    reads the failed one never runs its fn."""
+    import threading
+    import time
+
+    from tera_spark.pipeline.run import run_plan
+
+    assert run_plan(spark, "t", [("a", lambda: 1), ("b", lambda a: a + 1, "a")]) == {
+        "a": 1,
+        "b": 2,
+    }
+
+    ended, ran = threading.Event(), []
+
+    def sibling():
+        time.sleep(1.0)
+        ended.set()
+
+    def boom():
+        raise RuntimeError("node failed")
+
+    with pytest.raises(RuntimeError, match="node failed"):
+        run_plan(spark, "t", [
+            ("sibling", sibling),
+            ("boom", boom),
+            ("after", lambda _: ran.append(1), "boom"),
+        ])
+    assert ended.is_set()
+    assert ran == []
+
+
+def _group_descriptions(spark, group: str) -> list:
+    """The descriptions of every job in ``group``, None for an undescribed
+    one."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(j).description()
+        out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+def _local_props(sc) -> dict:
+    p = sc._jsc.sc().getLocalProperties()
+    return {k: p.getProperty(k) for k in p.stringPropertyNames()}
+
+
+def test_maintenance_jobs_are_labeled_and_recorded_in_order(
+    spark, transcripts, lexicon, tmp_path, monkeypatch
+):
+    """Every job of an apply, a forget and a compact() is in the caller's
+    job group and described ``apply:``/``forget:``/``compact:``, and the
+    caller's local properties come back unchanged, also from an apply
+    whose part raised. With one queued part delayed so it finishes last,
+    ``stages_run``, the part rows of ``metrics`` and the commit marker's
+    ``stages`` still come out in declaration order."""
+    import json
+    import time
+
+    import tera_spark.pipeline.incremental as inc
+    from tera_spark.pipeline.forget import run_pipeline_forget
+
+    transcripts.count()
+    lexicon.count()
+    convs = sorted(r[0] for r in transcripts.select("conv_id").distinct().collect())
+    out = str(tmp_path / "maint")
+    run_pipeline(spark, transcripts.filter(~F.col("conv_id").isin(convs[26:])), lexicon, out)
+    new = transcripts.filter(F.col("conv_id").isin(convs[26:]))
+    sc = spark.sparkContext
+    real = inc._write_part
+
+    def call(op, fn, slow=None, fail=None):
+        def write(out_dir, batch_dir, name, df, **kw):
+            if name == fail:
+                raise RuntimeError("injected part failure")
+            if name == slow:
+                time.sleep(1.0)
+            return real(out_dir, batch_dir, name, df, **kw)
+
+        monkeypatch.setattr(inc, "_write_part", write)
+        group = f"maint-{op}-{fail}"
+        before = _job_ids(spark)
+        sc.setJobGroup(group, op)
+        props = _local_props(sc)
+        try:
+            try:
+                return fn()
+            finally:
+                assert _local_props(sc) == props
+        finally:
+            sc._jsc.clearJobGroup()
+            assert not _job_ids(spark) - before
+            descriptions = _group_descriptions(spark, group)
+            assert descriptions and all(
+                (d or "").startswith(f"{op}:") for d in descriptions
+            ), descriptions
+
+    def check_order(res, parts):
+        bid = res.stages_run[0].split("@")[1]
+        assert res.stages_run == [f"{t}@{bid}" for t in parts]
+        assert [m["stage"] for m in res.metrics if m["rows_out"] >= 0] == res.stages_run
+        with open(f"{inc.committed_batches(out)[-1]}/_COMMITTED") as fh:
+            assert json.load(fh)["stages"] == res.stages_run
+        return bid
+
+    with pytest.raises(RuntimeError, match="injected part failure"):
+        call("apply", lambda: inc.run_pipeline_incremental(spark, new, lexicon, out),
+             fail="mentions_adds")
+    res = call("apply", lambda: inc.run_pipeline_incremental(spark, new, lexicon, out),
+               slow="alias_edges_adds")
+    check_order(res, ("mentions", "linked", "alias_edges", "triples", "nodes", "edges"))
+
+    res = call("forget", lambda: run_pipeline_forget(spark, convs[:3], lexicon, out),
+               slow="triples_dels")
+    bid = check_order(res, ("triples", "ent_index", "edges", "nodes", "mentions", "linked",
+                            "refcounts", "alias_edges", "canonical_map", "convs_applied"))
+    assert [m["stage"].split("@")[0] for m in res.metrics] == [
+        "_open", "_collect_deleted", "_edges_removed", "_recanonicalize",
+        "_slice_replace", "_survival_probe", "triples", "ent_index", "edges",
+        "_conv_scoped", "nodes", "mentions", "linked", "refcounts", "alias_edges",
+        "canonical_map", "convs_applied", "_nodes",
+    ]
+    assert all(m["stage"].endswith(f"@{bid}") for m in res.metrics)
+
+    assert call("compact", lambda: inc.compact(spark, out))
+
+
 def test_conversation_stats_profile(spark):
     from datetime import datetime
 
@@ -1170,3 +1302,23 @@ def test_link_mentions_checkpoint_gate(
     b = {tuple(r) for r in linked_parq.collect()}
     assert a == b
     assert {tuple(r) for r in linked_file.collect()} == a
+
+
+def test_link_mentions_jobs_stay_in_callers_group(spark, lexicon):
+    """Every job a non-materialized link_mentions starts, the mentions
+    checkpoint it overlaps with lexicon preparation included, is in the
+    caller's job group, so cancelJobGroup reaches all of them."""
+    from tera_spark.pipeline.extract import extract_mentions
+    from tera_spark.pipeline.link import link_mentions
+
+    lexicon.count()
+    mentions = extract_mentions(transcripts_spark_df(spark, n_convs=10))
+    sc = spark.sparkContext
+    before = _job_ids(spark)
+    sc.setJobGroup("link-group", "link_mentions")
+    try:
+        link_mentions(mentions, lexicon)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not _job_ids(spark) - before
+    assert _group_descriptions(spark, "link-group")

@@ -82,6 +82,8 @@ def main() -> None:
         for m in res.metrics
         if m["rows_out"] == -1
     }
+    # summed per-part seconds: a batch writes its queued parts at once, so
+    # this can exceed the wall those writes took
     writes = round(
         sum(m["seconds"] for m in res.metrics if m["rows_out"] >= 0), 2
     )
