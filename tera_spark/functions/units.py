@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tera_spark.checkpoints import checkpoint
+
 # utils.py:15-38
 UNIT_LOOKUP = {
     "mg": "Milligram",
@@ -217,7 +219,7 @@ def with_parsed_units(df: DataFrame, col_map: dict[str, str]) -> DataFrame:
         .withColumn("_p", unit_parser_udf(F.col("_u")))
     )
     if len(unit_cols) > 1:
-        vocab = vocab.localCheckpoint()
+        vocab = checkpoint(vocab)
     for c, out in col_map.items():
         v = vocab.select(F.col("_u").alias("_u_" + c), F.col("_p").alias(out))
         df = (

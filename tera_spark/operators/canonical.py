@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint
 from tera_spark.operators.triples import dedup as _dedup_triples
 from tera_spark.sources.readers import arrow_frame
 
@@ -110,11 +111,13 @@ def _checkpoint_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int
     serial job count of the CC loop (the measured local-mode bottleneck,
     BENCH/BASELINE.md)."""
     obs = Observation()
-    out = edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).localCheckpoint()
+    out = checkpoint(
+        edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
+        )
+    )
     vals = obs.get
     return out, (int(vals["n"]), int(vals["h"]))
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint
+
 
 def pagerank(
     edges: DataFrame,
@@ -49,7 +51,7 @@ def pagerank(
     multiplicity). ``iterations`` power-iteration rounds with uniform
     dangling-mass redistribution — deterministic, no RNG, no threshold.
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
@@ -57,14 +59,13 @@ def pagerank(
         # partitioning, so each iteration's edge⋈rank join re-shuffles only
         # the (node-sized) rank table, never the edge table
         .repartition("u")
-        .localCheckpoint()
     )
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     # node count AND initial dangling count ride the checkpoint action as
     # observe() metrics — setup is ONE job, same discipline as the
     # per-iteration dangling-mass fuse below (round-3 verdict item 8)
     obs0 = Observation()
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
@@ -75,7 +76,6 @@ def pagerank(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("dangling"), True)).alias("nd"),
         )
-        .localCheckpoint()
     )
     vals = obs0.get
     n = int(vals["n"])
@@ -101,14 +101,13 @@ def pagerank(
             + F.lit(damping) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_mass / n))
         )
         obs = Observation()
-        ranks = (
+        ranks = checkpoint(
             nodes.join(contribs, nodes["node"] == contribs["v"], "left")
             .select("node", "dangling", "d", new_rank.alias("rank"))
             .observe(
                 obs,
                 F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
             )
-            .localCheckpoint()
         )
         dangling_mass = float(obs.get["dm"] or 0.0)
     return ranks.select("node", "rank")
@@ -141,20 +140,19 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     rounded to 6 places.
     """
     u0, v0 = edges.columns[0], edges.columns[1]
-    und = (
+    # checkpoint: ``und`` fans out into deg (2x) and oriented, and through
+    # them wedges/closing/tris/per_node — without the barrier the caller's
+    # whole edge-generation lineage replicates ~50x through the join DAG
+    # (the graph_triangles entry planned 932 operators / 94 parquet scans
+    # of lineitem; ~1 scan after), and Catalyst planning time alone scales
+    # with that tree.
+    und = checkpoint(
         edges.select(
             F.least(F.col(u0), F.col(v0)).alias("a"),
             F.greatest(F.col(u0), F.col(v0)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
-        # localCheckpoint: ``und`` fans out into deg (2x) and oriented, and
-        # through them wedges/closing/tris/per_node — without the barrier
-        # the caller's whole edge-generation lineage replicates ~50x
-        # through the join DAG (the graph_triangles entry planned 932
-        # operators / 94 parquet scans of lineitem; ~1 scan after), and
-        # Catalyst planning time alone scales with that tree.
-        .localCheckpoint()
     )
     deg = (
         und.select(F.col("a").alias("node"))
@@ -165,7 +163,10 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # Orient a→b when (deg, id) of a < (deg, id) of b.
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("dega"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("degb"))
-    oriented = (
+    # second barrier: oriented feeds the wedge self-join (2x), closing and
+    # — via tris — per_node (3x); checkpointing stops the und⋈deg⋈deg
+    # orientation join re-running once per consumer.
+    oriented = checkpoint(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -178,10 +179,6 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.src", "e.dst")
-        # second barrier: oriented feeds the wedge self-join (2x), closing
-        # and — via tris — per_node (3x); checkpointing stops the und⋈deg⋈deg
-        # orientation join re-running once per consumer.
-        .localCheckpoint()
     )
     w1 = oriented.select(F.col("src").alias("pivot"), F.col("dst").alias("x"))
     w2 = oriented.select(F.col("src").alias("pivot"), F.col("dst").alias("y"))
@@ -336,24 +333,24 @@ def bfs_distances(
     )
     if not directed:
         e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.dropDuplicates(["src", "dst"]).repartition("src").localCheckpoint()
+    e = checkpoint(e.dropDuplicates(["src", "dst"]).repartition("src"))
     s0 = seeds.columns[0]
-    visited = seeds.select(F.col(s0).alias("node")).distinct().withColumn(
-        "dist", F.lit(0)
-    ).localCheckpoint()
+    visited = checkpoint(
+        seeds.select(F.col(s0).alias("node")).distinct().withColumn("dist", F.lit(0))
+    )
     frontier = visited
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=False)
+            .withColumn("dist", F.lit(hop)),
+            eager=False,
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+        visited = checkpoint(visited.unionByName(nxt), eager=False)
         frontier = nxt
     return visited
 
@@ -392,16 +389,15 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
     )
-    nb = (
+    nb = checkpoint(
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .repartition("nbr")
-        .localCheckpoint()
     )
     labels = nb.select("node").distinct().withColumn("label", F.col("node"))
     pick = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("label"))
     for _ in range(rounds):
-        labels = (
+        labels = checkpoint(
             nb.join(
                 labels.select(F.col("node").alias("nbr"), "label"), "nbr"
             )
@@ -409,8 +405,8 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
             .agg(F.count("*").alias("c"))
             .withColumn("rn", F.row_number().over(pick))
             .filter(F.col("rn") == 1)
-            .select("node", "label")
-            .localCheckpoint(eager=False)
+            .select("node", "label"),
+            eager=False,
         )
     return labels
 
@@ -439,14 +435,13 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     Returns (node, core_degree).
     """
     u0, v0 = edges.columns[0], edges.columns[1]
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(F.col(u0), F.col(v0)).alias("a"),
             F.greatest(F.col(u0), F.col(v0)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
-        .localCheckpoint()
     )
     prev = -1
     for _ in range(max_iter):
@@ -457,10 +452,10 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
         keep = deg.filter(F.col("c") >= k).select("node")
-        e = (
+        e = checkpoint(
             e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi"),
+            eager=False,
         )
         n = e.count()  # the count IS the checkpoint materialization — one job/round
         if n == prev:
@@ -539,17 +534,16 @@ def personalized_pagerank(
     rides the checkpoint action as an observe() metric — one job per
     iteration. Seeds are a driver-side list (a query, not data).
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
         .repartition("u")
-        .localCheckpoint()
     )
     deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     obs0 = Observation()
     is_seed = F.col("node").isin(list(seeds))
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
@@ -567,7 +561,6 @@ def personalized_pagerank(
                 "nds"
             ),
         )
-        .localCheckpoint()
     )
     vals = obs0.get
     ns = int(vals["ns"])
@@ -594,7 +587,7 @@ def personalized_pagerank(
             + F.lit(dangling_mass) * seed_share
         )
         obs = Observation()
-        ranks = (
+        ranks = checkpoint(
             nodes.join(contribs, nodes["node"] == contribs["v"], "left")
             .select("node", "dangling", "d", "seed", new_rank.alias("rank"))
             .observe(
@@ -603,7 +596,6 @@ def personalized_pagerank(
                     F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
                 ).alias("dm"),
             )
-            .localCheckpoint()
         )
         dangling_mass = float(obs.get["dm"] or 0.0)
     return ranks.select("node", "rank")
@@ -747,14 +739,13 @@ def pagerank_weighted(
         .agg(F.sum("w").alias("w"))
     )
     wsum = e0.groupBy("u").agg(F.sum("w").alias("_ws"))
-    e = (
+    e = checkpoint(
         e0.join(wsum, "u")
         .select("u", "v", (F.col("w") / F.col("_ws")).alias("share_frac"))
         .repartition("u")
-        .localCheckpoint()
     )
     obs0 = Observation()
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
@@ -765,7 +756,6 @@ def pagerank_weighted(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("dangling"), True)).alias("nd"),
         )
-        .localCheckpoint()
     )
     vals = obs0.get
     n = int(vals["n"])
@@ -789,7 +779,7 @@ def pagerank_weighted(
             + F.lit(dangling_mass / n)
         )
         obs = Observation()
-        ranks = (
+        ranks = checkpoint(
             nodes.join(contribs, nodes["node"] == contribs["v"], "left")
             .select("node", "dangling", new_rank.alias("rank"))
             .observe(
@@ -798,7 +788,6 @@ def pagerank_weighted(
                     F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
                 ).alias("dm"),
             )
-            .localCheckpoint()
         )
         dangling_mass = float(obs.get["dm"] or 0.0)
     return ranks.select("node", "rank")
@@ -837,18 +826,16 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"hits: iterations must be ≥ 1, got {iterations}")
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
         .repartition("u")
-        .localCheckpoint()
     )
-    nodes = (
+    nodes = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     # init: every node hub=1, authority derived first — matches the oracle
     hubs = nodes.select("node", F.lit(1.0).alias("hub"))
@@ -856,12 +843,11 @@ def hits(
     for _ in range(iterations):
         # authority(v) = Σ hub(u) over in-edges, then L2-normalize
         obs_a = Observation()
-        a_un = (
+        a_un = checkpoint(
             e.join(hubs.select(F.col("node").alias("u"), "hub"), "u")
             .groupBy("v")
             .agg(F.sum("hub").alias("s"))
             .observe(obs_a, F.sum(F.col("s") * F.col("s")).alias("n2"))
-            .localCheckpoint()
         )
         norm_a = float(obs_a.get["n2"] or 0.0) ** 0.5 or 1.0
         auths = a_un.select(
@@ -869,12 +855,11 @@ def hits(
         )
         # hub(u) = Σ authority(v) over out-edges, then L2-normalize
         obs_h = Observation()
-        h_un = (
+        h_un = checkpoint(
             e.join(auths.select(F.col("node").alias("v"), "authority"), "v")
             .groupBy("u")
             .agg(F.sum("authority").alias("s"))
             .observe(obs_h, F.sum(F.col("s") * F.col("s")).alias("n2"))
-            .localCheckpoint()
         )
         norm_h = float(obs_h.get["n2"] or 0.0) ** 0.5 or 1.0
         hubs = h_un.select(
@@ -925,7 +910,7 @@ def shortest_paths(
       round, and a chained-CTE oracle replays it exactly.
     - ``localCheckpoint`` per round keeps the plan constant-size.
     """
-    e = (
+    e = checkpoint(
         edges.select(
             F.col(src_col).alias("src"),
             F.col(dst_col).alias("dst"),
@@ -935,25 +920,22 @@ def shortest_paths(
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
         .repartition("src")
-        .localCheckpoint()
     )
     s0 = seeds.columns[0]
-    dist = (
+    dist = checkpoint(
         seeds.select(F.col(s0).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0.0))
-        .localCheckpoint()
     )
     for _ in range(rounds):
         relaxed = (
             dist.join(e, dist["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
+        dist = checkpoint(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
     return dist
 
@@ -991,19 +973,18 @@ def random_walks(
       per-walk Python loop, never neighbor lists collected to the driver.
     - Fixed ``length`` → constant plan size via per-step checkpoint.
     """
-    e = (
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .repartition("src")
-        .localCheckpoint()
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    walks = (
+    walks = checkpoint(
         nodes.select(
             "node", F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("_g")
         )
@@ -1014,7 +995,6 @@ def random_walks(
             F.col("node").alias("path"),
             F.lit(0).alias("steps"),
         )
-        .localCheckpoint()
     )
     for s in range(1, length + 1):
         pick = (
@@ -1031,7 +1011,7 @@ def random_walks(
                 )["dst"].alias("_next")
             )
         )
-        walks = (
+        walks = checkpoint(
             walks.join(pick, "walk_id", "left")
             .select(
                 "walk_id",
@@ -1047,7 +1027,6 @@ def random_walks(
                 .otherwise(F.col("steps"))
                 .alias("steps"),
             )
-            .localCheckpoint()
         )
     return walks.select("walk_id", "start", "path", "steps")
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint
 from tera_spark.constants import (
     NS_UNIT,
     OWL_SUBPROPERTYOF,
@@ -103,14 +104,14 @@ def subclass_closure(
     """Transitive ``rdfs:subClassOf`` closure (depth=-1 of Q5). Iterative
     frontier expansion with ``localCheckpoint`` per round to truncate plan
     lineage (SURVEY.md §4.2); converges in O(hierarchy depth) rounds."""
-    visited = seeds.select("s").distinct().localCheckpoint()
+    visited = checkpoint(seeds.select("s").distinct())
     frontier = visited
     for _ in range(max_iter):
         nxt = subclass_step(g, frontier, up=up)
-        frontier = nxt.join(visited, "s", "left_anti").localCheckpoint()
+        frontier = checkpoint(nxt.join(visited, "s", "left_anti"))
         if frontier.isEmpty():
             break
-        visited = visited.unionByName(frontier).distinct().localCheckpoint()
+        visited = checkpoint(visited.unionByName(frontier).distinct())
     return visited
 
 
@@ -138,22 +139,21 @@ def construct_subgraph(g: DataFrame, seeds: DataFrame, max_iter: int = 25) -> Da
     """Q7/J10 (DataAccess.py:232-260): BFS over outgoing edges from seed
     entities; returns the visited triples. Frontier/visited pattern with
     checkpointed iterations; literals are terminal nodes."""
-    visited_nodes = seeds.select("s").distinct().localCheckpoint()
+    visited_nodes = checkpoint(seeds.select("s").distinct())
     frontier = visited_nodes
     out = None
     for _ in range(max_iter):
         step = g.join(frontier, g["subject"] == frontier["s"], "left_semi")
         out = step if out is None else out.unionByName(step)
-        nxt = (
+        nxt = checkpoint(
             step.filter(~F.col("obj_is_literal"))
             .select(F.col("object").alias("s"))
             .distinct()
             .join(visited_nodes, "s", "left_anti")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
             break
-        visited_nodes = visited_nodes.unionByName(nxt).distinct().localCheckpoint()
+        visited_nodes = checkpoint(visited_nodes.unionByName(nxt).distinct())
         frontier = nxt
     if out is None:
         return g.limit(0)
@@ -301,13 +301,12 @@ def lowest_common_ancestor(
     ``min(struct(dist, lca))`` groupBy. A node's chain stops at its
     root; multi-parent DAGs keep the MIN depth per (node, ancestor).
     """
-    parents = (
+    parents = checkpoint(
         _s(g, RDFS_SUBCLASSOF)
         .select(F.col("subject").alias("child"), F.col("object").alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .dropDuplicates(["child", "parent"])
         .repartition("child")
-        .localCheckpoint()
     )
     nodes = (
         pairs.select(F.col("a").alias("node"))
@@ -318,10 +317,10 @@ def lowest_common_ancestor(
     anc = nodes.select("node", F.col("node").alias("anc"), F.lit(0).alias("depth"))
     frontier = anc
     for d in range(1, max_depth + 1):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(parents, frontier["anc"] == parents["child"])
-            .select("node", F.col("parent").alias("anc"), F.lit(d).alias("depth"))
-            .localCheckpoint(eager=False)
+            .select("node", F.col("parent").alias("anc"), F.lit(d).alias("depth")),
+            eager=False,
         )
         if frontier.isEmpty():
             break
@@ -379,13 +378,12 @@ def taxonomy_similarity(
     similar by definition).
     """
     lca = lowest_common_ancestor(g, pairs, max_depth=max_depth)
-    parents = (
+    parents = checkpoint(
         _s(g, RDFS_SUBCLASSOF)
         .select(F.col("subject").alias("child"), F.col("object").alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .dropDuplicates(["child", "parent"])
         .repartition("child")
-        .localCheckpoint()
     )
     nodes = (
         pairs.select(F.col("a").alias("node"))
@@ -397,10 +395,10 @@ def taxonomy_similarity(
     chain = nodes.select("node", F.col("node").alias("anc"), F.lit(0).alias("depth"))
     frontier = chain
     for d in range(1, max_depth + 1):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(parents, frontier["anc"] == parents["child"])
-            .select("node", F.col("parent").alias("anc"), F.lit(d).alias("depth"))
-            .localCheckpoint(eager=False)
+            .select("node", F.col("parent").alias("anc"), F.lit(d).alias("depth")),
+            eager=False,
         )
         if frontier.isEmpty():
             break

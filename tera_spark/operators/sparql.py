@@ -120,6 +120,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint
+
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
@@ -1372,7 +1374,7 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     prev = conf.get(key)
     conf.set(key, "false")
     try:
-        return df.localCheckpoint()
+        return checkpoint(df)
     finally:
         conf.set(key, prev)
 

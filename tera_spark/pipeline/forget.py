@@ -95,6 +95,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint
 from tera_spark.constants import NS_KG, RDF_TYPE, RDFS_LABEL
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.triples import bnode, replace_entities
@@ -178,15 +179,14 @@ def run_pipeline_forget(
     ``conv_id`` column) from the pipeline output at ``out_dir``, as one
     atomic delta batch. ``lexicon`` must match the original runs (linking
     is replayed as a pure function to reconstruct the deleted
-    conversations' alias edges); a ``PreparedLexicon`` stays
-    the caller's, a raw lexicon is prepared and released here. See module
-    docstring."""
+    conversations' alias edges); a ``PreparedLexicon`` stays the
+    caller's, a raw lexicon is prepared for this batch and released with
+    it. See module docstring."""
     with _Batch(spark, out_dir, "forget") as batch:
         # the conversations that are actually applied (unknown ids no-op)
-        d_convs = (
+        d_convs = checkpoint(
             _conv_ids_df(spark, conv_ids)
             .join(read_live(spark, out_dir, "convs_applied"), "conv_id", "left_semi")
-            .localCheckpoint(eager=True)
         )
         if not batch.open(d_convs, batch_id, prefix="forget-"):
             return batch.res
@@ -210,11 +210,10 @@ def _forget(
     # ---- deleted conversations' per-turn rows (stored, conv-attributed)
     _phase("collect_deleted")
     live_linked = read_live(spark, out_dir, "linked")
-    d_linked = live_linked.join(dset, "conv_id", "left_semi").localCheckpoint(eager=True)
-    d_mentions = (
+    d_linked = checkpoint(live_linked.join(dset, "conv_id", "left_semi"))
+    d_mentions = checkpoint(
         read_live(spark, out_dir, "mentions")
         .join(dset, "conv_id", "left_semi")
-        .localCheckpoint(eager=True)
     )
     rem_linked = live_linked.join(dset, "conv_id", "left_anti")
 
@@ -225,24 +224,21 @@ def _forget(
     # i.e. iff a remaining PROVISIONAL link row stores the edge's
     # urn:mention id (the provisional row is emitted whenever the fuzzy
     # path ran for that norm — same purity argument).
+    # d_edges is a projection of link_mentions' checkpointed best
+    # candidates, one row per norm (so unique on u), read once, by the
+    # checkpointed ``removed``.
     _phase("edges_removed")
-    prepared = prepare_lexicon(lexicon)
-    try:
-        _, d_edges = link_mentions(
-            d_mentions, prepared, scorer=scorer, materialized=True
-        )
-        d_edges = d_edges.dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
-    finally:
-        if prepared is not lexicon:
-            prepared.release()
+    _, d_edges = link_mentions(
+        d_mentions, prepare_lexicon(lexicon), scorer=scorer, materialized=True
+    )
     surviving_u = rem_linked.filter(F.col("link_method") == "provisional").select(
         F.col("entity").alias("u")
     )
-    removed = d_edges.join(surviving_u, "u", "left_anti").localCheckpoint(eager=True)
+    removed = checkpoint(d_edges.join(surviving_u, "u", "left_anti"))
 
     # ---- affected universe: full canonical components of every touched id
     _phase("recanonicalize")
-    old_map = read_live(spark, out_dir, "canonical_map").localCheckpoint(eager=True)
+    old_map = checkpoint(read_live(spark, out_dir, "canonical_map"))
     seeds = (
         d_linked.filter(F.col("entity").isNotNull() & (F.col("kind") != "quantity"))
         .select(F.col("entity").alias("x"))
@@ -250,20 +246,18 @@ def _forget(
         .unionByName(removed.select(F.col("v").alias("x")))
         .distinct()
     )
-    old_reps = (
+    old_reps = checkpoint(
         seeds.join(old_map, seeds["x"] == old_map["old"], "left")
         .select(F.coalesce("new", "x").alias("r"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    members = (
+    members = checkpoint(
         old_map.join(
             F.broadcast(old_reps.withColumnRenamed("r", "new")), "new", "left_semi"
         )
         .select(F.col("old").alias("x"))
         .unionByName(old_reps.select(F.col("r").alias("x")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     # re-run CC on the affected components' remaining edges (u side of an
@@ -276,9 +270,9 @@ def _forget(
     )
 
     # canonical_map upsert delta: changed entries + identity tombstones
-    old_entries = old_map.join(
-        F.broadcast(members.withColumnRenamed("x", "old")), "old", "left_semi"
-    ).localCheckpoint(eager=True)
+    old_entries = checkpoint(
+        old_map.join(F.broadcast(members.withColumnRenamed("x", "old")), "old", "left_semi")
+    )
     map_adds = (
         new_cc.join(old_entries.withColumnRenamed("new", "_old_new"), "old", "left")
         .filter(F.col("_old_new").isNull() | (F.col("_old_new") != F.col("new")))
@@ -309,27 +303,25 @@ def _forget(
     #    add-wins merge rule resolves that to the correct state.
     _phase("slice_replace")
     changed = map_adds.select("old").unionByName(map_dels.select("old")).distinct()
-    split_old = (
+    split_old = checkpoint(
         changed.join(old_entries.withColumnRenamed("new", "_r"), "old", "left")
         .select(F.coalesce("_r", F.col("old")).alias("r"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     has_splits = not split_old.isEmpty()
-    nonsplit_reps = old_reps.join(
-        F.broadcast(split_old), old_reps["r"] == split_old["r"], "left_anti"
-    ).localCheckpoint(eager=True)
+    nonsplit_reps = checkpoint(
+        old_reps.join(F.broadcast(split_old), old_reps["r"] == split_old["r"], "left_anti")
+    )
     mem_rep = members.join(
         old_entries.withColumnRenamed("old", "x").withColumnRenamed("new", "_r"),
         "x",
         "left",
     ).select("x", F.coalesce("_r", F.col("x")).alias("r"))
     m_split = mem_rep.join(F.broadcast(split_old), "r", "left_semi").select("x")
-    split_new = (
+    split_new = checkpoint(
         m_split.join(new_cc, m_split["x"] == new_cc["old"], "left")
         .select(F.coalesce("new", "x").alias("r"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     _empty_t = "subject string, predicate string, object string, obj_is_literal boolean"
@@ -341,12 +333,10 @@ def _forget(
             .select("conv_id", "turn_idx")
             .distinct()
         )
-        rem_src = rem_linked.join(
-            aff_keys, ["conv_id", "turn_idx"], "left_semi"
-        ).localCheckpoint(eager=True)
+        rem_src = checkpoint(rem_linked.join(aff_keys, ["conv_id", "turn_idx"], "left_semi"))
         old_src = rem_src.unionByName(d_linked.select(rem_src.columns))
-        split_dels = _emit_slice(old_src, old_map, split_old).localCheckpoint(eager=True)
-        new_slice = _emit_slice(rem_src, new_map, split_new).localCheckpoint(eager=True)
+        split_dels = checkpoint(_emit_slice(old_src, old_map, split_old))
+        new_slice = checkpoint(_emit_slice(rem_src, new_map, split_new))
     else:
         split_dels = spark.createDataFrame([], _empty_t)
         new_slice = spark.createDataFrame([], _empty_t)
@@ -363,8 +353,8 @@ def _forget(
     # the count read is component-restricted and ``old_entries`` covers
     # every rewrite the byte reconstruction needs.
     _phase("survival_probe")
-    cand = _emit_slice(d_linked, old_map, nonsplit_reps).localCheckpoint(eager=True)
-    dec = emission_refcounts(d_linked).localCheckpoint(eager=True)
+    cand = checkpoint(_emit_slice(d_linked, old_map, nonsplit_reps))
+    dec = checkpoint(emission_refcounts(d_linked))
     rc = read_refcounts(
         spark, out_dir, k1_filter=members.withColumnRenamed("x", "k1")
     )
@@ -425,29 +415,25 @@ def _forget(
             )
         )
     )
-    b_dels = cand.join(
-        tl_keys.unionByName(cooc_keys), _TRIPLE_KEY, "left_anti"
-    ).localCheckpoint(eager=True)
+    b_dels = checkpoint(cand.join(tl_keys.unionByName(cooc_keys), _TRIPLE_KEY, "left_anti"))
     old_slice = split_dels.unionByName(b_dels.select(*_TRIPLE_COLS))
 
     # ---- conversation-scoped rows of the deleted convs: one map-side scan
     # (conv/turn-subject rows) + the quantity bnode rows recomputed from
     # the stored linked rows (bnode ids embed conv/turn/pos — unique)
     _phase("conv_scoped")
-    conv_scoped = (
+    conv_scoped = checkpoint(
         read_live(spark, out_dir, "triples")
         .withColumn("_cid", _conv_of_subject())
         .join(F.broadcast(d_convs.withColumnRenamed("conv_id", "_cid")), "_cid", "left_semi")
         .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=True)
     )
     q_rows = quantity_triples(d_linked).select(*_TRIPLE_COLS)
-    dels_full = (
+    dels_full = checkpoint(
         old_slice.select(*_TRIPLE_COLS)
         .unionByName(conv_scoped)
         .unionByName(q_rows)
         .dropDuplicates(_TRIPLE_KEY)
-        .localCheckpoint(eager=True)
     )
 
     # ---- the delta parts, queued: commit writes them all at once under
@@ -474,13 +460,12 @@ def _forget(
     conv_node_ids = conv_scoped.filter(F.col("predicate") == RDF_TYPE).select(
         F.col("subject").alias("id")
     )
-    node_ids = (
+    node_ids = checkpoint(
         split_old.select(F.col("r").alias("id"))
         .unionByName(split_new.select(F.col("r").alias("id")))
         .unionByName(b_dels.filter(is_tl).select(F.col("subject").alias("id")))
         .unionByName(conv_node_ids)
         .distinct()
-        .localCheckpoint(eager=True)
     )
     ent_idx = read_live(spark, out_dir, "ent_index")
     kept_tl = (
@@ -489,10 +474,9 @@ def _forget(
         .join(F.broadcast(dels_full.select(*_TRIPLE_KEY)), _TRIPLE_KEY, "left_anti")
         .select(*_TRIPLE_COLS)
     )
-    nodes_adds = (
+    nodes_adds = checkpoint(
         kg_nodes(kept_tl.unionByName(new_slice.select(*_TRIPLE_COLS)))
         .join(F.broadcast(node_ids), "id", "left_semi")
-        .localCheckpoint(eager=True)
     )
     nodes_dels = node_ids.join(nodes_adds.select("id"), "id", "left_anti")
     part("nodes_adds", nodes_adds)

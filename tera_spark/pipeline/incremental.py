@@ -102,6 +102,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint, checkpoint_scope
 from tera_spark.constants import RDF_TYPE, RDFS_LABEL
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.triples import replace_entities
@@ -373,7 +374,11 @@ def _write_part(out_dir: str, batch_dir: str, name: str, df: DataFrame, *, tag: 
 
 class _Batch:
     """The lifecycle of one delta batch, shared by apply and forget; a
-    context manager that restores the caller's Spark local properties.
+    context manager that restores the caller's Spark local properties and
+    holds the batch's ``checkpoint_scope``: every checkpoint the batch
+    takes — a lexicon it prepares, link_mentions' tables, the pre-batch
+    snapshots and probes — is released when the ``with`` block exits,
+    committed or not. A batch returns only its ``PipelineResult``.
 
     Construction checks for every table ``run_pipeline`` writes and no
     interrupted ``compact()``, sweeps uncommitted leftovers, fixes ``seq``
@@ -405,10 +410,13 @@ class _Batch:
         self.phase("open")
 
     def __enter__(self) -> _Batch:
+        self._scope = checkpoint_scope()
+        self._scope.__enter__()
         return self
 
     def __exit__(self, *exc) -> None:
         self.spark.sparkContext._jsc.sc().setLocalProperties(self._props)
+        self._scope.__exit__(None, None, None)
 
     def open(self, convs: DataFrame, batch_id: str | None, prefix: str = "") -> bool:
         """Create the batch dir for the distinct ``conv_id`` rows ``convs``.
@@ -511,7 +519,7 @@ def run_pipeline_incremental(
     conv_ids, so retries reuse the same id and distinct batches never
     collide. ``lexicon`` may be a ``PreparedLexicon``, which the caller
     keeps and releases; a raw lexicon is prepared for this batch and
-    released when it ends."""
+    released with it."""
     with _Batch(spark, out_dir, "apply") as batch:
         # Applied-conversation guard: a conversation with zero mentions
         # never reaches the mentions table, so the guard keys off the small
@@ -521,15 +529,10 @@ def run_pipeline_incremental(
         # checkpoint NOW: every downstream read of the live tables must see
         # the pre-batch state, and the guard's anti-join must run before
         # any write
-        delta = new_transcripts.join(seen, "conv_id", "left_anti").localCheckpoint(eager=True)
+        delta = checkpoint(new_transcripts.join(seen, "conv_id", "left_anti"))
         if not batch.open(delta.select("conv_id").distinct(), batch_id):
             return batch.res
-        prepared = prepare_lexicon(lexicon)
-        try:
-            return _apply(spark, batch, delta, prepared, scorer)
-        finally:
-            if prepared is not lexicon:
-                prepared.release()
+        return _apply(spark, batch, delta, prepare_lexicon(lexicon), scorer)
 
 
 def _apply(
@@ -549,10 +552,8 @@ def _apply(
     # upsert delta below), so apply never re-runs connected components over
     # the whole alias universe — only over the batch's contracted edges.
     _phase("old_mapping")
-    old_edges = read_live(spark, out_dir, "alias_edges").select("u", "v").localCheckpoint(
-        eager=True
-    )
-    old_mapping = read_live(spark, out_dir, "canonical_map").localCheckpoint(eager=True)
+    old_edges = checkpoint(read_live(spark, out_dir, "alias_edges").select("u", "v"))
+    old_mapping = checkpoint(read_live(spark, out_dir, "canonical_map"))
     ent_idx = read_live(spark, out_dir, "ent_index")
 
     # ---- per-turn delta stages (pure functions of the batch + lexicon)
@@ -562,7 +563,6 @@ def _apply(
         m_delta, lexicon, scorer=scorer, materialized=True
     )
     linked_delta = part_read("linked_adds", linked_raw)
-    edges_delta = edges_delta.localCheckpoint(eager=True)
     # emission-refcount maintenance: raw keys are canonical-merge-
     # invariant, so an apply only ever ADDS counts (delta-sized)
     part("refcounts_adds", emission_refcounts(linked_delta), record=False)
@@ -570,9 +570,12 @@ def _apply(
     # alias-edge adds: new (u,v) pairs only (set semantics at write time —
     # the live view is a plain union). The old edge table is
     # vocabulary-sized, so this anti-join is small on both sides.
-    new_edges = edges_delta.select("u", "v").join(
-        old_edges, ["u", "v"], "left_anti"
-    ).dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
+    # edges_delta is a projection of link_mentions' checkpointed best
+    # candidates, one row per norm, so it is unique on u and needs
+    # neither a checkpoint nor a dedup of its own.
+    new_edges = checkpoint(
+        edges_delta.select("u", "v").join(old_edges, ["u", "v"], "left_anti")
+    )
     part("alias_edges_adds", new_edges)
 
     # ---- global step: connected components over the CONTRACTED delta
@@ -619,9 +622,7 @@ def _apply(
         .distinct()
     )
     brand_new = new_u.join(F.broadcast(old_hit), "old", "left_anti")
-    stored_rewrite = cs.join(
-        F.broadcast(brand_new), "old", "left_anti"
-    ).localCheckpoint(eager=True)
+    stored_rewrite = checkpoint(cs.join(F.broadcast(brand_new), "old", "left_anti"))
     has_rewrites = not stored_rewrite.isEmpty()
 
     if has_rewrites:
@@ -632,7 +633,7 @@ def _apply(
         ).select(old_mapping["old"], F.coalesce("_v", old_mapping["new"]).alias("new"))
         # cs keys (old reps / new nodes) are disjoint from old-map keys
         # (non-reps), so this union is a keyed upsert with no conflicts
-        new_mapping = composed.unionByName(cs).localCheckpoint(eager=True)
+        new_mapping = checkpoint(composed.unionByName(cs))
         # canonical-map upsert delta for FUTURE applies: old entries whose
         # rep moved, plus every cs entry (new nodes and moved reps)
         map_changed = old_mapping.join(
@@ -679,7 +680,7 @@ def _apply(
             )
 
         hit = F.col("_s_new").isNotNull() | F.col("_o_new").isNotNull()
-        hit_rows = _probe(old_t).filter(hit).localCheckpoint(eager=True)
+        hit_rows = checkpoint(_probe(old_t).filter(hit))
         dels_t = hit_rows.select(*_TRIPLE_KEY)
         index_dels = hit_rows.filter(shared).select(*_TRIPLE_KEY)
         rewritten = hit_rows.select(
@@ -689,9 +690,9 @@ def _apply(
             F.col("obj_is_literal"),
         )
         _phase("delta_triples")
-        cand = rewritten.unionByName(t_delta.select(*_TRIPLE_COLS)).dropDuplicates(
-            _TRIPLE_KEY
-        ).localCheckpoint(eager=True)
+        cand = checkpoint(
+            rewritten.unionByName(t_delta.select(*_TRIPLE_COLS)).dropDuplicates(_TRIPLE_KEY)
+        )
         _phase("dup_probe")
         # dup-check keys: rows that could equal a live row — the delta's
         # shared-class rows plus every rewritten row (a rewritten form like
@@ -700,10 +701,9 @@ def _apply(
         dup_cand = cand.filter(shared).select(*_TRIPLE_KEY).unionByName(
             rewritten.select(*_TRIPLE_KEY)
         ).distinct()
-        dup_keys = (
+        dup_keys = checkpoint(
             old_t.join(F.broadcast(dup_cand), _TRIPLE_KEY, "left_semi")
             .select(*_TRIPLE_KEY)
-            .localCheckpoint(eager=True)
         )
         adds_t = part_read(
             "triples_adds",
@@ -715,7 +715,7 @@ def _apply(
         # subject-merged ids get tombstones
         _phase("nodes_probe")
         merged_away = stored_rewrite.select(F.col("old").alias("subject")).distinct()
-        affected = (
+        affected = checkpoint(
             adds_t.filter(is_tl)
             .select("subject")
             .unionByName(
@@ -724,7 +724,6 @@ def _apply(
                 .join(merged_away, "subject", "left_anti")
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
         kept_tl = (
             _probe(old_t.filter(is_tl))
@@ -741,19 +740,18 @@ def _apply(
         # (set semantics) and which surviving type/label rows feed the
         # node recompute.
         _phase("delta_triples")
-        cand = t_delta.localCheckpoint(eager=True)
+        cand = checkpoint(t_delta)
         _phase("index_probe")
         dup_cand = cand.filter(shared).select(*_TRIPLE_KEY).withColumn(
             "_dup", F.lit(True)
         )
-        affected = cand.filter(is_tl).select("subject").distinct().withColumn(
-            "_aff", F.lit(True)
-        ).localCheckpoint(eager=True)
-        scan = (
+        affected = checkpoint(
+            cand.filter(is_tl).select("subject").distinct().withColumn("_aff", F.lit(True))
+        )
+        scan = checkpoint(
             ent_idx.join(F.broadcast(dup_cand), _TRIPLE_KEY, "left")
             .join(F.broadcast(affected), "subject", "left")
             .filter(F.col("_dup").isNotNull() | (is_tl & F.col("_aff").isNotNull()))
-            .localCheckpoint(eager=True)
         )
         dup_keys = scan.filter(F.col("_dup").isNotNull()).select(*_TRIPLE_KEY)
         adds_t = part_read(

@@ -15,8 +15,11 @@ from pyspark.sql import functions as F
 
 from tera_spark.constants import NS_KG, NS_UNIT, RDF_TYPE, RDF_VALUE, RDFS_LABEL
 from tera_spark.functions.units import with_parsed_unit
+from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.extract._emit import emit, t
-from tera_spark.operators.triples import bnode, dedup
+from tera_spark.operators.triples import bnode, dedup, replace_entities
+from tera_spark.pipeline.extract import extract_mentions
+from tera_spark.pipeline.link import link_mentions
 
 
 def _turn_uri():
@@ -204,6 +207,20 @@ def build_triples(
         .unionByName(cooccurrence_triples(linked))
     )
     return dedup(out) if deduplicate else out
+
+
+def kg_pipeline_triples(
+    transcripts: DataFrame, lexicon: DataFrame, scorer: str = "wratio"
+) -> DataFrame:
+    """The whole pipeline as one in-memory plan, nothing written: extract →
+    link → triples → canonical rewrite (its dedup included). The
+    ``kg_pipeline_triples(_portable)`` queries and bench.py's kg leaf run
+    it; ``run_pipeline`` is the staged, resumable form of the same
+    composition."""
+    linked, alias_edges = link_mentions(extract_mentions(transcripts), lexicon, scorer=scorer)
+    return replace_entities(
+        build_triples(transcripts, linked, deduplicate=False), canonical_mapping(alias_edges)
+    )
 
 
 def kg_nodes(triples: DataFrame) -> DataFrame:

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tera_spark.checkpoints import checkpoint, release
 from tera_spark.functions.similarity import wratio_at_least
 
 PROVISIONAL_PREFIX = "urn:mention:"
@@ -58,14 +59,6 @@ MERGE_FLOOR = 80.0
 # Hot-shingle cap: a shingle found in more than this many lexicon rows is
 # dropped from candidate blocking.
 MAX_SHINGLE_FREQ = 2000
-
-
-def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD a ``localCheckpoint()``-ed DataFrame reads: its logical
-    plan is the bare ``LogicalRDD`` over the persisted blocks. Read from the
-    DataFrame itself, so a checkpoint another driver thread takes at the
-    same time is never mistaken for this one."""
-    return df._jdf.queryExecution().logical().rdd()
 
 
 def _norm(col):
@@ -90,24 +83,26 @@ class PreparedLexicon:
     """Lexicon-side linking state, computed ONCE and reused across calls
     (streaming micro-batches, repeated pipeline runs): normalized labels
     keyed by a fixed integer ``l_id``, and the id-keyed shingle table with
-    hot shingles already removed. Both are localCheckpointed — lexicon-
-    sized (≤ a few M rows), so the materialization is cheap, every reuse
-    skips the shingle/hot-token recompute, and ``l_id`` (a
-    monotonically_increasing_id) stays fixed across reuses."""
+    hot shingles already removed. Both are checkpointed — lexicon-sized
+    (≤ a few M rows), so the materialization is cheap, every reuse skips
+    the shingle/hot-token recompute, and ``l_id`` (a
+    monotonically_increasing_id) stays fixed across reuses.
+
+    Prepared inside a ``checkpoint_scope`` (as ``run_pipeline`` and every
+    apply or forget batch do with a raw lexicon), it is released with the
+    scope. Prepared outside every scope, to reuse it across calls, it is
+    the caller's to ``release()``: passing it in takes no new checkpoint."""
 
     lex: DataFrame        # (entity, lex_kind, norm_label, l_id)
     l_tok: DataFrame      # (l_id, l_n, sh) hot-filtered
     n_rows: int           # |lex| — drives the broadcast gates
 
     def release(self) -> None:
-        """Unpersist the blocks of its two localCheckpoints. Long-lived
-        sessions (streaming drivers re-preparing lexicons) call this when a
-        PreparedLexicon is superseded — otherwise each checkpoint's blocks
-        live until the context cleaner happens to GC them (round-2 verdict
-        next-round #8). Safe to call more than once; the object must not be
-        used afterwards."""
-        for df in (self.lex, self.l_tok):
-            _checkpoint_rdd(df).unpersist(False)
+        """Unpersist the blocks of its two checkpoints, for a lexicon the
+        caller prepared outside every ``checkpoint_scope`` — otherwise
+        they live until the context cleaner happens to GC them. Safe to
+        call more than once; the object must not be used afterwards."""
+        release(self.lex, self.l_tok)
 
 
 def prepare_lexicon(lexicon: DataFrame | PreparedLexicon) -> PreparedLexicon:
@@ -121,7 +116,7 @@ def prepare_lexicon(lexicon: DataFrame | PreparedLexicon) -> PreparedLexicon:
     from pyspark.sql import Observation
 
     obs = Observation()
-    lex = (
+    lex = checkpoint(
         lexicon.select(
             F.col("entity"),
             F.col("kind").alias("lex_kind"),
@@ -130,20 +125,18 @@ def prepare_lexicon(lexicon: DataFrame | PreparedLexicon) -> PreparedLexicon:
         .dropDuplicates(["entity", "norm_label"])
         .withColumn("l_id", F.monotonically_increasing_id())
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     # The hot-shingle cap is a per-shingle count window inside l_tok's one
     # checkpoint: a hot shingle's rows are dropped here, so the mention side
     # needs no anti-join (the inner join on ``sh`` drops any shingle that
     # is missing from l_tok). l_n counts ALL of a label's shingles, hot
     # ones included — the Jaccard denominator.
-    l_tok = (
+    l_tok = checkpoint(
         lex.select("l_id", _shingles(F.col("norm_label")).alias("l_sh"))
         .select("l_id", F.size("l_sh").alias("l_n"), F.explode("l_sh").alias("sh"))
         .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("sh")))
         .filter(F.col("_n") <= MAX_SHINGLE_FREQ)
         .drop("_n")
-        .localCheckpoint()
     )
     return PreparedLexicon(lex=lex, l_tok=l_tok, n_rows=int(obs.get["n"]))
 
@@ -174,6 +167,10 @@ def link_mentions(
     alias edges + rewrite) performs the low-confidence merge. This keeps
     stage responsibilities honest: linking is per-mention local, merging
     is global/transitive.
+
+    The returned frames read the checkpoints taken here (``mentions``
+    unless materialized, the fuzzy vocabulary, the best candidates), so
+    only the caller's ``checkpoint_scope`` releases them.
     """
     # The returned ``linked`` reads ``mentions`` three times (the fuzzy
     # vocabulary, the term projection and the rule passthrough), and
@@ -194,7 +191,7 @@ def link_mentions(
         from tera_spark.pipeline.run import run_plan
 
         done = run_plan(mentions.sparkSession, "link_mentions", [
-            ("mentions", mentions.localCheckpoint),
+            ("mentions", lambda: checkpoint(mentions)),
             ("prepare_lexicon", lambda: prepare_lexicon(lexicon)),
         ])
         mentions, prepared = done["mentions"], done["prepare_lexicon"]
@@ -246,14 +243,13 @@ def link_mentions(
     # first shuffle is broadcast-join-only, that single partition would
     # otherwise serialize the whole candidate-generation chain.
     par = mentions.sparkSession.sparkContext.defaultParallelism
-    vocab = (
+    vocab = checkpoint(
         unlinked.select("norm")
         .filter(F.length("norm") >= 5)
         .filter(F.size(F.split(F.col("norm"), " ")) <= 2)
         .distinct()
         .repartition(par)
         .withColumn("m_id", F.monotonically_increasing_id())
-        .localCheckpoint()
     )
     m_tok = vocab.select(
         "m_id", _shingles(F.col("norm")).alias("m_sh")
@@ -298,10 +294,10 @@ def link_mentions(
     # best candidate per distinct mention (A5/W2), across both bands.
     # localCheckpoint (not cache): it is consumed by BOTH the linked-mention
     # output and the alias-edge output — the checkpoint materializes the
-    # expensive WRatio scoring exactly once, is bounded by the distinct
-    # vocabulary size, and unlike cache() leaves nothing pinned to unpersist
-    # after the session moves on (round-1 leak, VERDICT.md "what's wrong" #4).
-    best_all = (
+    # expensive WRatio scoring exactly once and is bounded by the distinct
+    # vocabulary size. Its blocks stay pinned until the caller's
+    # checkpoint_scope ends (tera_spark/checkpoints.py).
+    best_all = checkpoint(
         scored.withColumn(
             "_rn",
             F.row_number().over(
@@ -312,7 +308,6 @@ def link_mentions(
         )
         .filter(F.col("_rn") == 1)
         .select("norm", "entity", "lex_kind", "link_score")
-        .localCheckpoint()
     )
     best = best_all.filter(F.col("link_score") >= FUZZY_THRESHOLD).select(
         "norm",

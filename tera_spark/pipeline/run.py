@@ -48,11 +48,16 @@ preparation overlaps mention extraction, canonical_map runs while
 ``linked`` is written, refcounts beside canonical_map and triples, and
 the three tables derived from triples are written at once. Spark
 interleaves the tasks of all live jobs, so one node's fixed job latency
-overlaps another's compute.
+overlaps another's compute. The plan runs inside one
+``checkpoint_scope``: the checkpoints its nodes take (the lexicon
+prepared here, link_mentions' vocabulary and best-candidate tables) are
+released when it ends, failed or not. Every stage reads its inputs back
+from files, so nothing reads them after.
 """
 
 from __future__ import annotations
 
+import contextvars
 import os
 import shutil
 import time
@@ -65,6 +70,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tera_spark.checkpoints import checkpoint_scope
 from tera_spark.operators.canonical import canonical_mapping, replace_entities_salted
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
@@ -227,9 +233,11 @@ def run_plan(spark: SparkSession, label: str, plan: list) -> dict:
     once they have returned. Each node has its own thread (a bounded pool
     whose threads block on queued futures can deadlock) holding a copy of
     the caller's thread-local Spark properties (job group, scheduler
-    pool, as pyspark.InheritableThread does), and describes its jobs
-    ``<label>:<name>``. A node whose input failed never calls ``fn``; the
-    first failure in plan order is raised once every node has ended."""
+    pool, as pyspark.InheritableThread does) and of its context variables
+    (so a node's checkpoints join the caller's ``checkpoint_scope``), and
+    describes its jobs ``<label>:<name>``. A node whose input failed never
+    calls ``fn``; the first failure in plan order is raised once every
+    node has ended."""
     sc = spark.sparkContext
     props = sc._jsc.sc().getLocalProperties().clone()
 
@@ -241,7 +249,9 @@ def run_plan(spark: SparkSession, label: str, plan: list) -> dict:
     futs: dict = {}
     with ThreadPoolExecutor(max_workers=len(plan)) as pool:
         for name, fn, *deps in plan:
-            futs[name] = pool.submit(node, name, fn, [futs[d] for d in deps])
+            futs[name] = pool.submit(
+                contextvars.copy_context().run, node, name, fn, [futs[d] for d in deps]
+            )
     return {name: f.result() for name, f in futs.items()}
 
 
@@ -301,13 +311,6 @@ def run_pipeline(
         # so a `linked` without it (a crashed forced rerun, say) is stale
         shutil.rmtree(out_path("linked"), ignore_errors=True)
     relink = force or not _done(out_path("linked"))
-    # the lexicon this run prepares: released once `linked` is written, or
-    # when the plan fails (release() may run twice)
-    prepared = []
-
-    def _prepare():
-        prepared.append(prepare_lexicon(lexicon))
-        return prepared[-1]
 
     def _link(mentions, lex):
         """link_mentions, then alias_edges written. Returns when linking
@@ -319,11 +322,7 @@ def run_pipeline(
 
     def _linked(link):
         t0, linked, _ = link
-        try:
-            return stage("linked", lambda: linked, t0=t0)
-        finally:
-            # every later consumer reads linked/alias_edges from files
-            prepared[0].release()
+        return stage("linked", lambda: linked, t0=t0)
 
     def _canonical_map(link):
         # canonical map persisted as its own stage: downstream incremental
@@ -389,7 +388,7 @@ def run_pipeline(
     if relink:
         # the lexicon is prepared only when `linked` still has to run
         plan += [
-            ("prepare_lexicon", _prepare),
+            ("prepare_lexicon", lambda: prepare_lexicon(lexicon)),
             ("link", _link, "mentions", "prepare_lexicon"),
             ("linked", _linked, "link"),
         ]
@@ -414,11 +413,10 @@ def run_pipeline(
         # zero shuffle for the corpus-sized edge table.
         ("edges", lambda t: stage("edges", lambda: kg_edges(t), aligned=True), "triples"),
     ]
-    try:
+    # every stage reads its inputs back from files, so no checkpoint the
+    # plan takes (the lexicon's, link_mentions') outlives it
+    with checkpoint_scope():
         run_plan(spark, "run_pipeline", plan)
-    finally:
-        for p in prepared:
-            p.release()
 
     order = {n: i for i, n in enumerate(STAGES)}
     res.stages_run.sort(key=order.__getitem__)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tera_spark.checkpoints import checkpoint_scope
 from tera_spark.pipeline.extract import extract_mentions
 from tera_spark.pipeline.link import link_mentions, prepare_lexicon
 
@@ -38,7 +39,10 @@ def stream_mentions(
     lexicon: DataFrame,
 ):
     """File-source stream → extraction+linking per micro-batch → parquet
-    append. Returns the StreamingQuery (caller stops it)."""
+    append. Returns the StreamingQuery (caller stops it). Each micro-batch
+    releases its own checkpoints. The lexicon is prepared once for the
+    whole stream and outlives it: pass a ``PreparedLexicon`` to
+    ``release()`` it when the stream is done."""
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -51,9 +55,12 @@ def stream_mentions(
     prepared = prepare_lexicon(lexicon)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        mentions = extract_mentions(batch_df)
-        linked, _ = link_mentions(mentions, prepared)
-        linked.write.mode("append").parquet(output_dir)
+        # link_mentions' checkpoints are this micro-batch's alone: released
+        # once its rows are written
+        with checkpoint_scope():
+            mentions = extract_mentions(batch_df)
+            linked, _ = link_mentions(mentions, prepared)
+            linked.write.mode("append").parquet(output_dir)
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -177,24 +177,32 @@ def test_frame_sample_plan(spark):
     assert len(rows) == expected
 
 
-def test_streaming_extraction_parity(spark, tmp_path):
+def test_streaming_extraction_parity(spark, tmp_path, persistent_rdd_ids):
     """foreachBatch reuses the batch operators — stream output over a
-    static directory equals the batch run on the same data."""
+    static directory equals the batch run on the same data. Each
+    micro-batch releases its own checkpoints: after a run of several
+    micro-batches the only RDDs left pinned are the caller's lexicon's."""
     from tera_spark.fixtures.transcripts import lexicon_spark_df, transcripts_spark_df
     from tera_spark.pipeline.extract import extract_mentions
-    from tera_spark.pipeline.link import link_mentions
+    from tera_spark.pipeline.link import link_mentions, prepare_lexicon
     from tera_spark.streaming.extract_stream import stream_mentions
 
     transcripts = transcripts_spark_df(spark, n_convs=8)
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ck_dir = str(tmp_path / "ck")
-    transcripts.write.parquet(in_dir)
+    # 6 files at 4 files per trigger: two micro-batches
+    transcripts.repartition(6).write.parquet(in_dir)
     lexicon = lexicon_spark_df(spark)
+    prepared = prepare_lexicon(lexicon)
 
-    q = stream_mentions(spark, in_dir, out_dir, ck_dir, lexicon)
+    pinned = persistent_rdd_ids()
+    q = stream_mentions(spark, in_dir, out_dir, ck_dir, prepared)
     q.awaitTermination(120)
     q.stop()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
+    assert not persistent_rdd_ids() - pinned
+    prepared.release()
 
     got = spark.read.parquet(out_dir)
     batch_linked, _ = link_mentions(extract_mentions(spark.read.parquet(in_dir)), lexicon)

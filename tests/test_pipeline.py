@@ -221,6 +221,7 @@ def test_prepared_lexicon_release(spark, lexicon, persistent_rdd_ids):
     already-prepared lexicon passes through prepare_lexicon unchanged."""
     from tera_spark.pipeline.link import prepare_lexicon
 
+    lexicon.count()  # materialize the cached fixture outside the window
     base = persistent_rdd_ids()
     for _ in range(3):
         p = prepare_lexicon(lexicon)
@@ -270,11 +271,11 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
 ):
     """Every job a run_pipeline call starts is described
     `run_pipeline:<node>` (set in the scheduling thread that starts it) and
-    belongs to the caller's job group, and the PreparedLexicon run_pipeline
-    builds is released before it returns — no checkpoint block of it stays
-    persistent — without changing any stored table."""
+    belongs to the caller's job group, and every checkpoint the call takes,
+    the PreparedLexicon it builds included, is released before it returns
+    — the persistent-RDD set is back to its pre-call value — without
+    changing any stored table."""
     import tera_spark.pipeline.run as runmod
-    from tera_spark.pipeline.link import PreparedLexicon
 
     transcripts.count()  # materialize the cached fixtures outside the window
     lexicon.count()
@@ -286,11 +287,15 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     out = str(tmp_path / "released")
     sc = spark.sparkContext
     before = _job_ids(spark)
+    pinned = persistent_rdd_ids()
     sc.setJobGroup("caller-group", "the caller's own group")
     try:
         run_pipeline(spark, transcripts, lexicon, out)
     finally:
         sc._jsc.clearJobGroup()
+    # RDD ids only grow: a new id still pinned is a checkpoint the call
+    # kept (the context cleaner may drop older ones meanwhile)
+    assert not persistent_rdd_ids() - pinned
     # every job the call started is in the caller's group: none ungrouped
     assert not _job_ids(spark) - before
     new = sorted(sc.statusTracker().getJobIdsForGroup("caller-group"))
@@ -307,8 +312,10 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     assert len(prepared) == 1
     assert not lexicon_rdd_ids(prepared[0]) & persistent_rdd_ids()
 
-    # the same tables as a run that never releases its lexicon
-    monkeypatch.setattr(PreparedLexicon, "release", lambda self: None)
+    # the same tables as a run that releases none of its checkpoints
+    import tera_spark.checkpoints as checkpoints
+
+    monkeypatch.setattr(checkpoints, "release", lambda *dfs: None)
     ref = str(tmp_path / "kept")
     run_pipeline(spark, transcripts, lexicon, ref)
     assert _stored_tables(spark, out) == _stored_tables(spark, ref)
@@ -507,17 +514,19 @@ def _assert_tables_equal(spark, full_dir, inc_dir, read_live, via_live=True):
         assert a == b, f"{table}: full {len(a)} rows vs incremental {len(b)}"
 
 
-def test_incremental_matches_full(spark, lexicon, tmp_path):
+def test_incremental_matches_full(spark, lexicon, tmp_path, persistent_rdd_ids):
     """Incremental maintenance equivalence: applying batches to a completed
     run yields live tables set-equal to a from-scratch run over the union —
     through the merge-on-read view AND, after compact(), through the plain
     base files; re-applying an applied batch is a no-op (seen-conversation
-    guard)."""
+    guard). A PreparedLexicon the caller passes in stays the caller's: the
+    batch's checkpoint scope leaves it pinned and usable."""
     from tera_spark.pipeline.incremental import (
         compact,
         read_live,
         run_pipeline_incremental,
     )
+    from tera_spark.pipeline.link import prepare_lexicon
 
     t_all = transcripts_spark_df(spark, n_convs=40).cache()
     convs = sorted(r[0] for r in t_all.select("conv_id").distinct().collect())
@@ -538,8 +547,13 @@ def test_incremental_matches_full(spark, lexicon, tmp_path):
     with pytest.raises(ValueError, match="already committed"):
         run_pipeline_incremental(spark, t3, lexicon, inc_dir, batch_id="b2")
     # second batch: exercises merge-on-read state as the apply input
-    res3 = run_pipeline_incremental(spark, t3, lexicon, inc_dir, batch_id="b3")
+    prepared = prepare_lexicon(lexicon)
+    n_lex = prepared.lex.count()
+    res3 = run_pipeline_incremental(spark, t3, prepared, inc_dir, batch_id="b3")
     assert len(res3.stages_run) == 6
+    assert lexicon_rdd_ids(prepared) <= persistent_rdd_ids()
+    assert prepared.lex.count() == n_lex and not prepared.l_tok.isEmpty()
+    prepared.release()
 
     # the base table files were NOT rewritten by apply (delta-sized cost):
     # live view differs from the raw base for at least one table
@@ -763,11 +777,12 @@ def _local_props(sc) -> dict:
 
 
 def test_maintenance_jobs_are_labeled_and_recorded_in_order(
-    spark, transcripts, lexicon, tmp_path, monkeypatch
+    spark, transcripts, lexicon, tmp_path, monkeypatch, persistent_rdd_ids
 ):
     """Every job of an apply, a forget and a compact() is in the caller's
     job group and described ``apply:``/``forget:``/``compact:``, and the
-    caller's local properties come back unchanged, also from an apply
+    caller's local properties and persistent-RDD set come back unchanged
+    (every checkpoint the batch took is released), also from an apply
     whose part raised. With one queued part delayed so it finishes last,
     ``stages_run``, the part rows of ``metrics`` and the commit marker's
     ``stages`` still come out in declaration order."""
@@ -797,6 +812,7 @@ def test_maintenance_jobs_are_labeled_and_recorded_in_order(
         monkeypatch.setattr(inc, "_write_part", write)
         group = f"maint-{op}-{fail}"
         before = _job_ids(spark)
+        pinned = persistent_rdd_ids()
         sc.setJobGroup(group, op)
         props = _local_props(sc)
         try:
@@ -804,6 +820,7 @@ def test_maintenance_jobs_are_labeled_and_recorded_in_order(
                 return fn()
             finally:
                 assert _local_props(sc) == props
+                assert not persistent_rdd_ids() - pinned
         finally:
             sc._jsc.clearJobGroup()
             assert not _job_ids(spark) - before

@@ -2,10 +2,10 @@ from __future__ import annotations
 
 
 def lexicon_rdd_ids(prepared) -> set[int]:
-    """Ids of the RDDs behind a PreparedLexicon's two localCheckpoints."""
-    from tera_spark.pipeline.link import _checkpoint_rdd
+    """Ids of the RDDs behind a PreparedLexicon's two checkpoints."""
+    from tera_spark.checkpoints import checkpoint_rdd
 
-    return {int(_checkpoint_rdd(df).id()) for df in (prepared.lex, prepared.l_tok)}
+    return {int(checkpoint_rdd(df).id()) for df in (prepared.lex, prepared.l_tok)}
 
 
 def triple_set(df) -> set:
