@@ -24,16 +24,26 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _timed(make_df) -> float:
-    """Seconds to build and fully materialize ``make_df()``. The
-    checkpoints it takes are released after the clock stops, so no leaf
-    runs beside another's pinned blocks and their release is not timed."""
+def _timed(spark, name: str, make_df) -> tuple[float, dict | None]:
+    """Seconds to build and fully materialize ``make_df()``, and the Spark
+    breakdown of the jobs it started, by description (``obs.breakdown``;
+    its own jobs are described ``bench:<name>``, a library plan's nodes
+    ``<label>:<node>``). The store is read and the checkpoints it takes
+    are released after the clock stops, so no leaf runs beside another's
+    pinned blocks and neither is timed."""
     from tera_spark.checkpoints import checkpoint_scope
+    from tera_spark.obs import breakdown
 
-    with checkpoint_scope():
-        t0 = time.time()
-        _noop(make_df())
-        return round(time.time() - t0, 3)
+    since_ms = int(time.time() * 1000)
+    spark.sparkContext.setJobDescription(f"bench:{name}")
+    try:
+        with checkpoint_scope():
+            t0 = time.time()
+            _noop(make_df())
+            secs = round(time.time() - t0, 3)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    return secs, breakdown(spark, since_ms)
 
 
 def _cpu_stat() -> list[int]:
@@ -112,13 +122,20 @@ def main() -> None:
     second_pass = os.environ.get("TERA_BENCH_SECOND_PASS", "1") == "1"
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for name in headline:
-        leaf = partial(QUERIES[name], spark, sf_dir)
-        cold[name] = _timed(leaf)
+    # per leaf, the Spark breakdown of the run its headline number is from
+    breakdowns: dict[str, dict | None] = {}
+
+    def run(name: str, leaf) -> None:
+        cold[name], breakdowns[name] = _timed(spark, name, leaf)
         # the warm (second) run IS the headline, even if the cold run
         # happened to be faster — keeps the metric definition identical
         # to its documentation and to BASELINE.md's "fastest WARM run"
-        timings[name] = _timed(leaf) if second_pass else cold[name]
+        timings[name] = cold[name]
+        if second_pass:
+            timings[name], breakdowns[name] = _timed(spark, name, leaf)
+
+    for name in headline:
+        run(name, partial(QUERIES[name], spark, sf_dir))
 
     # KG pipeline throughput (turns/sec) over synthetic transcripts —
     # distributed generator (per-conv seeded, parallelism-invariant) at a
@@ -130,10 +147,8 @@ def main() -> None:
     transcripts = transcripts_spark_df_dist(spark, n_convs=n_convs).cache()
     n_turns = transcripts.count()
     lexicon = lexicon_spark_df(spark)
-    kg_leaf = partial(kg_pipeline_triples, transcripts, lexicon)
-    cold["kg_pipeline"] = _timed(kg_leaf)
-    kg_secs = _timed(kg_leaf) if second_pass else cold["kg_pipeline"]
-    timings["kg_pipeline"] = kg_secs
+    run("kg_pipeline", partial(kg_pipeline_triples, transcripts, lexicon))
+    kg_secs = timings["kg_pipeline"]
 
     total = round(sum(timings.values()), 3)
     print(
@@ -150,6 +165,9 @@ def main() -> None:
                 "graph_materialize_sec": mat_secs,
                 "queries_cold": cold,
                 "cold_total_sec": round(sum(cold.values()), 3),
+                # {leaf: {job description: obs.FIELDS}} of the timed runs
+                # (null where the status store had already evicted jobs)
+                "queries_breakdown": breakdowns,
                 # /proc/stat window over the whole bench: this shared microVM
                 # swings identical runs 2x between host windows (see
                 # BENCH/BASELINE.md) — idle%/steal% here says which kind of

@@ -42,9 +42,12 @@ def checkpoint_rdd(df: DataFrame):
 def release(*dfs: DataFrame) -> None:
     """Unpersist the blocks of checkpointed DataFrames, without waiting for
     their removal. Safe to call more than once; a released frame must not
-    be read again."""
+    be read again (a read raises). Calls the SparkContext's
+    ``unpersistRDD`` directly: ``RDD.unpersist`` makes the same call, after
+    logging a WARN for every locally checkpointed RDD."""
     for df in dfs:
-        checkpoint_rdd(df).unpersist(False)
+        rdd = checkpoint_rdd(df)
+        rdd.context().unpersistRDD(rdd.id(), False)
 
 
 @contextmanager

@@ -115,7 +115,14 @@ from tera_spark.pipeline.kg import (
     shared_row_expr,
 )
 from tera_spark.pipeline.link import PreparedLexicon, link_mentions, prepare_lexicon
-from tera_spark.pipeline.run import PipelineResult, _done, _record, run_plan, write_bucketed
+from tera_spark.pipeline.run import (
+    PipelineResult,
+    _done,
+    _record,
+    record_metrics,
+    run_plan,
+    write_bucketed,
+)
 from tera_spark.sources.writers import read_table
 
 TABLES = ("mentions", "linked", "alias_edges", "triples", "nodes", "edges")
@@ -346,8 +353,9 @@ def _write_part(out_dir: str, batch_dir: str, name: str, df: DataFrame, *, tag: 
     so each bucket dir gets one file and compact() can fold it straight
     in. Tombstones are bucketed like adds: every tombstone frame carries
     its table's bucket key, and its lineage counts are the rows in each
-    bucket dir; with ``record``, recorded under ``tag``. Returns ``(schema,
-    metrics row)``, None for an empty part's schema or an unrecorded row.
+    bucket dir; with ``record``, its lineage is written under ``tag``.
+    Returns ``(schema, metrics row)``, None for an empty part's schema or
+    an unrecorded row; ``_Batch.commit`` writes the rows.
 
     Bucketed tombstones cost more than the unbucketed ``coalesce(4)``
     files they replaced, which recorded no per-bucket lineage at all:
@@ -385,7 +393,9 @@ class _Batch:
     and starts the timed section ``open``; ``open`` creates the batch dir;
     ``phase`` starts the next section; ``part`` queues a delta part,
     ``read_back`` writes one now; ``commit`` writes the queued parts as
-    one plan, then the ``_COMMITTED`` marker. Rows keep declaration order."""
+    one plan, then the batch's metrics rows (each with the Spark breakdown
+    of its ``<op>:<section or part>`` jobs, from one status-store read) and
+    the ``_COMMITTED`` marker. Rows keep declaration order."""
 
     def __init__(self, spark: SparkSession, out_dir: str, op: str) -> None:
         missing = [t for t in (*TABLES, *SIDE_TABLES) if not _done(os.path.join(out_dir, t))]
@@ -403,9 +413,11 @@ class _Batch:
         self.committed = committed_batches(out_dir)
         self.seq = len(self.committed) + 1
         self.res = PipelineResult(out_dir=out_dir)
+        self._since_ms = int(time.time() * 1000)
         self._props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
         self._queue = []  # (name, df, record, row) of the parts commit writes
         self._rows = []   # metrics rows in declaration order, {} until written
+        self._groups = {}  # row stage → the job descriptions it covers
         self._section = None
         self.phase("open")
 
@@ -454,20 +466,31 @@ class _Batch:
     def _close_section(self) -> None:
         if self._section is not None:
             name, t0 = self._section
-            self._rows.append({"stage": f"_{name}@{self.batch_id}", "rows_out": -1,
-                               "seconds": round(time.time() - t0, 3)})
+            stage = f"_{name}@{self.batch_id}"
+            self._row(stage, name).update(
+                stage=stage, rows_out=-1, seconds=round(time.time() - t0, 3))
+
+    def _row(self, stage: str, node: str) -> dict:
+        """A new metrics row for ``stage``, whose jobs are described
+        ``<op>:<node>``; ``{}`` until filled in."""
+        self._groups.setdefault(stage, []).append(f"{self.op}:{node}")
+        self._rows.append({})
+        return self._rows[-1]
+
+    def _tag(self, name: str) -> str:
+        """The lineage/metrics stage of the delta part ``name``."""
+        return f"{name.rsplit('_', 1)[0]}@{self.batch_id}"
 
     def part(self, name: str, df: DataFrame, *, record: bool = True) -> None:
         """Queue the delta part ``name``; ``commit`` writes it."""
-        self._rows.append({})
-        self._queue.append((name, df, record, self._rows[-1]))
+        row = self._row(self._tag(name), name) if record else {}
+        self._queue.append((name, df, record, row))
 
     def read_back(self, name: str, df: DataFrame) -> DataFrame:
         """Write the delta part ``name`` now, then hand back the WRITTEN
         files (``df`` when empty) as the downstream input — the part write
         is the materialization barrier (one copy, not checkpoint + write)."""
-        self._rows.append({})
-        schema = self._write([(name, df, True, self._rows[-1])])[name]
+        schema = self._write([(name, df, True, self._row(self._tag(name), name))])[name]
         if schema is None:
             return df
         return read_table(self.spark, os.path.join(self.dir, name), schema=schema)
@@ -477,7 +500,7 @@ class _Batch:
         returns {name: schema}."""
         done = run_plan(self.spark, self.op, [
             (name, partial(_write_part, self.out_dir, self.dir, name, df,
-                           tag=f"{name.rsplit('_', 1)[0]}@{self.batch_id}", record=record))
+                           tag=self._tag(name), record=record))
             for name, df, record, _ in parts
         ])
         for name, _, _, row in parts:
@@ -490,6 +513,8 @@ class _Batch:
         self._close_section()
         self._write(self._queue)
         self.res.metrics = [r for r in self._rows if r]
+        record_metrics(self.spark, self.out_dir, self.res.metrics, self._since_ms,
+                       f"{self.op}:", self._groups)
         self.res.stages_run = [r["stage"] for r in self.res.metrics if r["rows_out"] >= 0]
         marker = {"seq": self.seq, "batch_id": self.batch_id, **marker,
                   "stages": self.res.stages_run}

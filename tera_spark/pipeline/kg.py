@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tera_spark.constants import NS_KG, NS_UNIT, RDF_TYPE, RDF_VALUE, RDFS_LABEL
-from tera_spark.functions.units import with_parsed_unit
 from tera_spark.operators.canonical import canonical_mapping
 from tera_spark.operators.extract._emit import emit, t
 from tera_spark.operators.triples import bnode, dedup, replace_entities
@@ -135,11 +134,10 @@ def mention_triples(linked: DataFrame) -> DataFrame:
 
 def quantity_triples(linked: DataFrame) -> DataFrame:
     """T10-shaped reified quantities from 'quantity' mentions: digit-
-    filtered value + parsed unit, hung off the turn."""
-    df = linked.filter(F.col("kind") == "quantity")
-    df = with_parsed_unit(df, "unit", "_pu")
-    df = df.withColumn("_digits", F.regexp_replace(F.col("value"), "[^0-9.]", ""))
-    return emit(df, *_quantity_elems())
+    filtered value + parsed unit, hung off the turn. Prepared by
+    ``_quantity_prep`` as in ``build_triples``, so the rows a forget
+    rebuilds to tombstone come from the same path as the base rows."""
+    return emit(_quantity_prep(linked.filter(F.col("kind") == "quantity")), *_quantity_elems())
 
 
 def _cooc_pairs(linked: DataFrame) -> DataFrame:

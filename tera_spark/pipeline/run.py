@@ -10,8 +10,13 @@ every operator is a pure function of its input (content-hash bnodes,
 deterministic pick-one rules), a resumed run is bit-identical to an
 uninterrupted one — asserted in tests.
 
-Lineage: one row per (stage, conv bucket) with row counts; metrics: one
-row per stage with rows_out/wall seconds. Both are parquet append tables.
+Lineage: one row per (stage, conv bucket) with row counts, written when
+the stage's write ends (resume reads it). Metrics: one row per stage with
+rows_out, wall seconds and the Spark breakdown of the stage's jobs
+(``obs.FIELDS``: jobs, tasks, executor seconds, shuffle read/write MB,
+spill MB, max/median task seconds), written once the call's plan has
+ended, from one read of Spark's status store (``record_metrics``). Both
+are parquet append tables.
 
 Job budget: at stage sizes most of a stage's wall is fixed cost — jobs,
 tasks and driver-side plan building — not data (BENCH/BASELINE.md), so
@@ -71,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from tera_spark.checkpoints import checkpoint_scope
+from tera_spark.obs import FIELDS, breakdown
 from tera_spark.operators.canonical import canonical_mapping, replace_entities_salted
 from tera_spark.operators.triples import replace_entities
 from tera_spark.pipeline.extract import extract_mentions
@@ -119,6 +125,7 @@ _LINEAGE_SCHEMA = pa.schema(
 )
 _METRICS_SCHEMA = pa.schema(
     [("stage", pa.string()), ("rows_out", pa.int64()), ("seconds", pa.float64())]
+    + [(f, pa.int64() if f in ("jobs", "tasks") else pa.float64()) for f in FIELDS]
 )
 
 
@@ -198,8 +205,9 @@ def write_bucketed(
 
 
 def _record(out_dir: str, stage: str, vals: dict, seconds: float) -> dict:
-    """Write ``stage``'s lineage and metrics files from its write's observed
-    counts; returns its ``PipelineResult.metrics`` row."""
+    """Write ``stage``'s lineage file from its write's observed counts;
+    returns its metrics row, which ``record_metrics`` completes and writes
+    once the call has ended."""
     buckets = [(i, int(vals[f"b{i}"])) for i in range(N_BUCKETS) if int(vals[f"b{i}"]) > 0]
     _append_driver_table(
         out_dir,
@@ -214,17 +222,27 @@ def _record(out_dir: str, stage: str, vals: dict, seconds: float) -> dict:
             schema=_LINEAGE_SCHEMA,
         ),
     )
-    n = int(vals["rows"])
-    _append_driver_table(
-        out_dir,
-        "metrics",
-        stage,
-        pa.table(
-            {"stage": [stage], "rows_out": [n], "seconds": [float(seconds)]},
-            schema=_METRICS_SCHEMA,
-        ),
-    )
-    return {"stage": stage, "rows_out": n, "seconds": round(seconds, 3)}
+    return {"stage": stage, "rows_out": int(vals["rows"]), "seconds": round(seconds, 3)}
+
+
+def record_metrics(
+    spark: SparkSession, out_dir: str, rows: list, since_ms: int, prefix: str, groups: dict
+) -> None:
+    """Give every metrics row of a call its Spark breakdown (``obs.FIELDS``,
+    from one status-store read of the jobs the call started since
+    ``since_ms`` and described ``prefix…``; ``groups`` maps each row's
+    ``stage`` to the job descriptions its seconds span), then write each
+    row with ``rows_out`` ≥ 0 as ``metrics/<stage>.parquet``. The fields
+    are null when the store no longer holds every job of the call."""
+    if not rows:
+        return
+    got = breakdown(spark, since_ms, prefix, groups)
+    for row in rows:
+        row.update(got[row["stage"]] if got else dict.fromkeys(FIELDS))
+        if row["rows_out"] >= 0:
+            _append_driver_table(
+                out_dir, "metrics", row["stage"], pa.Table.from_pylist([row], schema=_METRICS_SCHEMA)
+            )
 
 
 def run_plan(spark: SparkSession, label: str, plan: list) -> dict:
@@ -268,6 +286,7 @@ def run_pipeline(
     while it is at most CANONICAL_BROADCAST_MAX_ROWS rows and takes the
     AUTO_SALTS-way salted shuffle join beyond that."""
     res = PipelineResult(out_dir=out_dir)
+    since_ms = int(time.time() * 1000)
     os.makedirs(out_dir, exist_ok=True)
 
     def stage(
@@ -416,7 +435,13 @@ def run_pipeline(
     # every stage reads its inputs back from files, so no checkpoint the
     # plan takes (the lexicon's, link_mentions') outlives it
     with checkpoint_scope():
-        run_plan(spark, "run_pipeline", plan)
+        try:
+            run_plan(spark, "run_pipeline", plan)
+        finally:
+            # `linked`'s seconds span link_mentions (the `link` node) too
+            groups = {s: [f"run_pipeline:{s}"] for s in STAGES}
+            groups["linked"].insert(0, "run_pipeline:link")
+            record_metrics(spark, out_dir, res.metrics, since_ms, "run_pipeline:", groups)
 
     order = {n: i for i, n in enumerate(STAGES)}
     res.stages_run.sort(key=order.__getitem__)

@@ -11,9 +11,12 @@ mention-rate aggregate.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
 from tera_spark.checkpoints import checkpoint_scope
 from tera_spark.pipeline.extract import extract_mentions
@@ -40,9 +43,9 @@ def stream_mentions(
 ):
     """File-source stream → extraction+linking per micro-batch → parquet
     append. Returns the StreamingQuery (caller stops it). Each micro-batch
-    releases its own checkpoints. The lexicon is prepared once for the
-    whole stream and outlives it: pass a ``PreparedLexicon`` to
-    ``release()`` it when the stream is done."""
+    releases its own checkpoints. A raw lexicon is prepared once for the
+    whole stream and released when the query terminates; a
+    ``PreparedLexicon`` passed in stays the caller's to ``release()``."""
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -62,12 +65,71 @@ def stream_mentions(
             linked, _ = link_mentions(mentions, prepared)
             linked.write.mode("append").parquet(output_dir)
 
-    return (
+    return _start(
+        spark,
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        lexicon,
+        prepared,
     )
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Releases a stream's own ``PreparedLexicon`` when its query
+    terminates, then removes itself. Added before the query starts and told
+    the query's id after (``watch``), so a query that ends before
+    ``start()`` returns is not missed."""
+
+    def __init__(self, spark: SparkSession, prepared) -> None:
+        self._spark, self._prepared = spark, prepared
+        self._lock = threading.Lock()
+        self._id = None
+        self._ended: set[str] = set()  # queries that ended before watch()
+
+    def watch(self, query_id) -> None:
+        with self._lock:
+            self._id = str(query_id)
+            ended = self._id in self._ended
+        if ended:
+            self._finish()
+
+    def onQueryTerminated(self, event) -> None:
+        with self._lock:
+            if self._id is None:
+                self._ended.add(str(event.id))
+                return
+            if str(event.id) != self._id:
+                return
+        self._finish()
+
+    def _finish(self) -> None:
+        self._prepared.release()
+        self._spark.streams.removeListener(self)
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+
+def _start(spark: SparkSession, writer, lexicon, prepared):
+    """``writer.start()``; when ``prepared`` was prepared from the raw
+    ``lexicon`` for this stream, it is released once the query terminates
+    (or here, if it fails to start)."""
+    if prepared is lexicon:
+        return writer.start()
+    listener = _ReleaseOnTermination(spark, prepared)
+    spark.streams.addListener(listener)
+    try:
+        query = writer.start()
+    except BaseException:
+        spark.streams.removeListener(listener)
+        prepared.release()
+        raise
+    listener.watch(query.id)
+    return query
 
 
 def stream_kg_ingest(
@@ -107,7 +169,9 @@ def stream_kg_ingest(
     ``compact_every``: fold committed batches into the base every N
     epochs (bounds read_live's batch-union cost on long streams; compact
     is stop-the-world but foreachBatch is serial, so mid-stream is a safe
-    point). Returns the StreamingQuery (caller awaits/stops it)."""
+    point). Returns the StreamingQuery (caller awaits/stops it). A raw
+    lexicon is prepared once and released when the query terminates; a
+    ``PreparedLexicon`` passed in stays the caller's."""
     import os
 
     from tera_spark.pipeline.incremental import (
@@ -135,11 +199,13 @@ def stream_kg_ingest(
         if compact_every and len(committed_batches(out_dir)) >= compact_every:
             compact(spark, out_dir)
 
-    return (
+    return _start(
+        spark,
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
+        lexicon,
+        prepared,
     )
 
 

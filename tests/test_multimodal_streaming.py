@@ -181,7 +181,11 @@ def test_streaming_extraction_parity(spark, tmp_path, persistent_rdd_ids):
     """foreachBatch reuses the batch operators — stream output over a
     static directory equals the batch run on the same data. Each
     micro-batch releases its own checkpoints: after a run of several
-    micro-batches the only RDDs left pinned are the caller's lexicon's."""
+    micro-batches the only RDDs left pinned are the caller's lexicon's,
+    and a stream given a raw lexicon releases the one it prepared once
+    its query has terminated."""
+    import time
+
     from tera_spark.fixtures.transcripts import lexicon_spark_df, transcripts_spark_df
     from tera_spark.pipeline.extract import extract_mentions
     from tera_spark.pipeline.link import link_mentions, prepare_lexicon
@@ -204,11 +208,21 @@ def test_streaming_extraction_parity(spark, tmp_path, persistent_rdd_ids):
     assert not persistent_rdd_ids() - pinned
     prepared.release()
 
-    got = spark.read.parquet(out_dir)
+    raw_out = str(tmp_path / "raw_out")
+    pinned = persistent_rdd_ids()
+    q = stream_mentions(spark, in_dir, raw_out, str(tmp_path / "raw_ck"), lexicon)
+    q.awaitTermination(120)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
+    # the release runs in a listener, which Spark calls asynchronously
+    deadline = time.time() + 30
+    while persistent_rdd_ids() - pinned and time.time() < deadline:
+        time.sleep(0.2)
+    assert not persistent_rdd_ids() - pinned
+
     batch_linked, _ = link_mentions(extract_mentions(spark.read.parquet(in_dir)), lexicon)
-    a = {tuple(r) for r in got.collect()}
     b = {tuple(r) for r in batch_linked.collect()}
-    assert a == b
+    for d in (out_dir, raw_out):
+        assert {tuple(r) for r in spark.read.parquet(d).collect()} == b
 
 
 def test_streaming_stateful_progress(spark, tmp_path):

@@ -274,8 +274,11 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     belongs to the caller's job group, and every checkpoint the call takes,
     the PreparedLexicon it builds included, is released before it returns
     — the persistent-RDD set is back to its pre-call value — without
-    changing any stored table."""
+    changing any stored table. Every stage row carries the Spark breakdown
+    of its own call's jobs, in the result and in ``metrics/``."""
     import tera_spark.pipeline.run as runmod
+    from tera_spark.obs import FIELDS
+    from tera_spark.pipeline.run import STAGES
 
     transcripts.count()  # materialize the cached fixtures outside the window
     lexicon.count()
@@ -290,7 +293,7 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     pinned = persistent_rdd_ids()
     sc.setJobGroup("caller-group", "the caller's own group")
     try:
-        run_pipeline(spark, transcripts, lexicon, out)
+        res = run_pipeline(spark, transcripts, lexicon, out)
     finally:
         sc._jsc.clearJobGroup()
     # RDD ids only grow: a new id still pinned is a checkpoint the call
@@ -312,13 +315,55 @@ def test_run_pipeline_labels_jobs_and_releases_lexicon(
     assert len(prepared) == 1
     assert not lexicon_rdd_ids(prepared[0]) & persistent_rdd_ids()
 
-    # the same tables as a run that releases none of its checkpoints
+    tracker = sc.statusTracker()
+
+    def check_breakdown(res, descriptions):
+        """Every stage row carries FIELDS; its jobs are the call's jobs
+        with the row's description(s) (``linked`` spans the ``link`` node
+        too) and its tasks the status tracker's count over their completed
+        stages, each stage once."""
+        assert [m["stage"] for m in res.metrics] == list(STAGES)
+        for m in res.metrics:
+            assert None not in [m[f] for f in FIELDS], m
+            names = {f"run_pipeline:{m['stage']}"}
+            if m["stage"] == "linked":
+                names.add("run_pipeline:link")
+            jobs = [j for j, d in descriptions.items() if d in names]
+            assert m["jobs"] == len(jobs) >= 1, m
+            infos = [
+                tracker.getStageInfo(s) for s in {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+            ]
+            # None: a skipped stage the store has since evicted
+            assert m["tasks"] == sum(
+                i.numTasks for i in infos if i and i.numTasks and i.numCompletedTasks >= i.numTasks
+            ), m
+            assert m["exec_s"] > 0 and m["task_max_s"] >= m["task_median_s"] >= 0, m
+
+    check_breakdown(res, descriptions)
+    # metrics/ holds the same rows, breakdown columns included
+    stored = {r.stage: r.asDict() for r in spark.read.parquet(f"{out}/metrics").collect()}
+    assert stored == {m["stage"]: m for m in res.metrics}
+
+    # the same tables as a run that releases none of its checkpoints; this
+    # second call's rows count only its own jobs
     import tera_spark.checkpoints as checkpoints
 
     monkeypatch.setattr(checkpoints, "release", lambda *dfs: None)
     ref = str(tmp_path / "kept")
-    run_pipeline(spark, transcripts, lexicon, ref)
+    before = _job_ids(spark)
+    res = run_pipeline(spark, transcripts, lexicon, ref)
+    check_breakdown(res, {j: store.job(j).description().get() for j in _job_ids(spark) - before})
     assert _stored_tables(spark, out) == _stored_tables(spark, ref)
+
+
+def test_tools_hold_no_event_log_reader():
+    """Run attribution comes from the library (tera_spark/obs.py), not from
+    probe scripts that parse Spark's event log."""
+    import pathlib
+
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    readers = [p.name for p in sorted(tools.rglob("*.py")) if "eventlog" in p.read_text().lower()]
+    assert not readers, readers
 
 
 def test_stage_writes_one_task_per_core(spark, transcripts, lexicon, tmp_path):
@@ -785,11 +830,14 @@ def test_maintenance_jobs_are_labeled_and_recorded_in_order(
     (every checkpoint the batch took is released), also from an apply
     whose part raised. With one queued part delayed so it finishes last,
     ``stages_run``, the part rows of ``metrics`` and the commit marker's
-    ``stages`` still come out in declaration order."""
+    ``stages`` still come out in declaration order. Every part and section
+    row carries the Spark breakdown of its own ``<op>:<part or section>``
+    jobs, in the result and in ``metrics/``."""
     import json
     import time
 
     import tera_spark.pipeline.incremental as inc
+    from tera_spark.obs import FIELDS
     from tera_spark.pipeline.forget import run_pipeline_forget
 
     transcripts.count()
@@ -829,12 +877,24 @@ def test_maintenance_jobs_are_labeled_and_recorded_in_order(
                 (d or "").startswith(f"{op}:") for d in descriptions
             ), descriptions
 
-    def check_order(res, parts):
+    def check_order(res, parts, op):
         bid = res.stages_run[0].split("@")[1]
         assert res.stages_run == [f"{t}@{bid}" for t in parts]
         assert [m["stage"] for m in res.metrics if m["rows_out"] >= 0] == res.stages_run
         with open(f"{inc.committed_batches(out)[-1]}/_COMMITTED") as fh:
             assert json.load(fh)["stages"] == res.stages_run
+        # a part row covers its part's jobs (apply writes adds, forget
+        # tombstones), a section row the jobs started in that section
+        descriptions = _group_descriptions(spark, f"maint-{op}-None")
+        suffix = {"apply": "_adds", "forget": "_dels"}[op]
+        for m in res.metrics:
+            assert None not in [m[f] for f in FIELDS], m
+            name = m["stage"].split("@")[0]
+            name = name[1:] if name.startswith("_") else name + suffix
+            assert m["jobs"] == descriptions.count(f"{op}:{name}"), m
+            assert m["rows_out"] < 0 or m["jobs"] >= 1 and m["tasks"] >= 1, m
+        stored = {r.stage: r.asDict() for r in spark.read.parquet(f"{out}/metrics").collect()}
+        assert all(stored[m["stage"]] == m for m in res.metrics if m["rows_out"] >= 0)
         return bid
 
     with pytest.raises(RuntimeError, match="injected part failure"):
@@ -842,12 +902,13 @@ def test_maintenance_jobs_are_labeled_and_recorded_in_order(
              fail="mentions_adds")
     res = call("apply", lambda: inc.run_pipeline_incremental(spark, new, lexicon, out),
                slow="alias_edges_adds")
-    check_order(res, ("mentions", "linked", "alias_edges", "triples", "nodes", "edges"))
+    check_order(res, ("mentions", "linked", "alias_edges", "triples", "nodes", "edges"), "apply")
 
     res = call("forget", lambda: run_pipeline_forget(spark, convs[:3], lexicon, out),
                slow="triples_dels")
     bid = check_order(res, ("triples", "ent_index", "edges", "nodes", "mentions", "linked",
-                            "refcounts", "alias_edges", "canonical_map", "convs_applied"))
+                            "refcounts", "alias_edges", "canonical_map", "convs_applied"),
+                      "forget")
     assert [m["stage"].split("@")[0] for m in res.metrics] == [
         "_open", "_collect_deleted", "_edges_removed", "_recanonicalize",
         "_slice_replace", "_survival_probe", "triples", "ent_index", "edges",

@@ -760,11 +760,7 @@ def write_report() -> None:
         "explicit numbered repartition and asNondeterministic() (link.py,\n"
         "similarity.py); python workers now fork from a pandas-preloaded\n"
         "daemon (warm_daemon.py); per-stage lineage/metrics ride the stage\n"
-        "write via observe() instead of extra jobs (run.py); the serial\n"
-        "driver component was profiled per-job with the Spark event log\n"
-        "(tools/eventlog_probe.py): warm local[8] = 64.0s with 59.7s inside\n"
-        "jobs and 6.8s of scheduler gaps across 78 jobs — i.e. driver gaps\n"
-        "are ~10% of wall, vs 38% in round 1.\n\n"
+        "write via observe() instead of extra jobs (run.py).\n\n"
         "Reading the attribution lines above: an 'independent-jobs' probe\n"
         "runs K copies of the SAME job with ZERO engine coordination\n"
         "(separate processes, sessions, shuffles) — any slowdown vs one job\n"
