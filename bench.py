@@ -118,21 +118,17 @@ def main() -> None:
     # 100 TB, where per-plan one-time cost is noise; and on this shared
     # microVM the warm number is far more window-stable (measured: first
     # q14_star run 16.9s, second 9.3s, third 6.2s in the same window).
-    # Set TERA_BENCH_SECOND_PASS=0 to restore single-shot timing.
-    second_pass = os.environ.get("TERA_BENCH_SECOND_PASS", "1") == "1"
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     # per leaf, the Spark breakdown of the run its headline number is from
     breakdowns: dict[str, dict | None] = {}
 
     def run(name: str, leaf) -> None:
-        cold[name], breakdowns[name] = _timed(spark, name, leaf)
+        cold[name], _ = _timed(spark, name, leaf)
         # the warm (second) run IS the headline, even if the cold run
         # happened to be faster — keeps the metric definition identical
         # to its documentation and to BASELINE.md's "fastest WARM run"
-        timings[name] = cold[name]
-        if second_pass:
-            timings[name], breakdowns[name] = _timed(spark, name, leaf)
+        timings[name], breakdowns[name] = _timed(spark, name, leaf)
 
     for name in headline:
         run(name, partial(QUERIES[name], spark, sf_dir))

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from tera_spark.checkpoints import checkpoint
+from tera_spark.checkpoints import checkpoint, release
 from tera_spark.operators.triples import dedup as _dedup_triples
 from tera_spark.sources.readers import arrow_frame
 
@@ -149,13 +149,18 @@ def _union_find(edge_pairs) -> dict:
 
 def _star_labels(e: DataFrame, prev: tuple[int, int], max_iter: int) -> DataFrame:
     """The large-star/small-star loop from a checkpointed canonical edge set
-    ``e`` and its fingerprint ``prev`` (see ``connected_components``)."""
+    ``e`` and its fingerprint ``prev`` (see ``connected_components``). Each
+    round releases the previous round's edge set (``e`` itself first) once
+    its own checkpoint and fingerprint are taken."""
     for _ in range(max_iter):
-        e, fp = _checkpoint_fingerprint(_small_star(_large_star(e)))
+        nxt, fp = _checkpoint_fingerprint(_small_star(_large_star(e)))
+        release(e)
+        e = nxt
         if fp == prev:
             break
         prev = fp
     else:
+        release(e)
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} rounds"
         )

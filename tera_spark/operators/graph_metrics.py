@@ -15,8 +15,8 @@ Scale design (the part that must survive 100 TB):
 - Per iteration: one shuffle of the (node-sized) rank table onto the edge
   table's source-hash partitioning (the edge checkpoint is pre-partitioned
   by src, so the fact-sized side never re-shuffles), then the contribution
-  ``groupBy(dst)`` shuffle. The degree column rides the rank table, so no
-  third table joins into the loop.
+  ``groupBy(dst)`` shuffle. Each edge's share of its source's rank
+  (``frac``) rides the edge table, so no third table joins into the loop.
 - Dangling-node mass (nodes with no out-edges) is redistributed uniformly
   each iteration — the textbook correction, without which rank leaks and
   the distribution no longer sums to 1. The dangling SET is static, so it
@@ -25,15 +25,96 @@ Scale design (the part that must survive 100 TB):
   exactly ONE Spark job per iteration, same fused-fingerprint trick as
   ``canonical._checkpoint_fingerprint``.
 - ``localCheckpoint`` per iteration keeps the plan constant-size (lineage
-  would otherwise grow linearly and re-run every prior round).
+  would otherwise grow linearly and re-run every prior round), and the
+  previous iteration's checkpoint is released once the new one is
+  materialized, so the pinned blocks do not grow with the iteration count.
+  The three PageRanks share one power iteration (``_power_iteration``);
+  the frontier operators (BFS) run on ``checkpoints.closure``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from tera_spark.checkpoints import checkpoint
+from tera_spark.checkpoints import checkpoint, closure, release
+
+
+def _power_iteration(
+    edges: DataFrame, teleport, iterations: int, damping: float
+) -> DataFrame:
+    """The power iteration behind every PageRank here.
+
+    ``edges(u, v, w)``: distinct directed edges, no self-loops, w > 0; a
+    node's rank flows to its out-neighbours in proportion to ``w``
+    (``frac`` = w / Σ out-weights). ``teleport`` is a Column over ``node``:
+    each node's teleport weight before normalization. With ``t`` that
+    weight over its total, ``dm`` the rank mass on dangling nodes (no
+    out-edge) and ``contrib(v) = Σ rank(u)·frac(u, v)``: rank₀ = t and
+    rank' = (1−d)·t + d·(contrib + dm·t).
+
+    Jobs: one checkpoints the edge table with its ``frac`` (partitioned by
+    ``u`` once; the window needs no exchange of its own), one the node
+    table, its two teleport sums riding it as ``observe()`` metrics; each
+    iteration is one more, its rank checkpoint carrying the next ``dm``.
+    Iteration i−1's ranks are released once iteration i's are
+    checkpointed, and the edge and node tables once the last are. Returns
+    (node, rank); every rank is 0.0 when the total teleport weight is 0.
+    """
+    e = checkpoint(
+        edges.repartition("u").select(
+            "u", "v", (F.col("w") / F.sum("w").over(Window.partitionBy("u"))).alias("frac")
+        )
+    )
+    obs0 = Observation()
+    nodes = checkpoint(
+        e.select(F.col("u").alias("node"), F.lit(False).alias("dangling"))
+        .unionByName(e.select(F.col("v").alias("node"), F.lit(True).alias("dangling")))
+        .groupBy("node")
+        .agg(F.bool_and("dangling").alias("dangling"))
+        .select("node", "dangling", teleport.cast("double").alias("t"))
+        .observe(
+            obs0,
+            F.sum("t").alias("tw"),
+            F.sum(F.when(F.col("dangling"), F.col("t")).otherwise(0.0)).alias("dw"),
+        )
+    )
+    tw = float(obs0.get["tw"] or 0.0)
+    if tw == 0.0:
+        release(e)
+        return nodes.select("node", F.lit(0.0).alias("rank"))
+    base = nodes.select("node", "dangling", (F.col("t") / F.lit(tw)).alias("t"))
+    ranks = base.withColumn("rank", F.col("t"))
+    dangling_mass = float(obs0.get["dw"]) / tw
+    for i in range(iterations):
+        contribs = (
+            e.join(
+                ranks.filter(~F.col("dangling") & (F.col("rank") != 0)).select(
+                    F.col("node").alias("u"), "rank"
+                ),
+                "u",
+            )
+            .groupBy("v")
+            .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
+        )
+        new_rank = F.lit(1.0 - damping) * F.col("t") + F.lit(damping) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_mass) * F.col("t")
+        )
+        obs = Observation()
+        nxt = checkpoint(
+            base.join(contribs, base["node"] == contribs["v"], "left")
+            .select("node", "dangling", "t", new_rank.alias("rank"))
+            .observe(
+                obs,
+                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
+            )
+        )
+        if i:
+            release(ranks)
+        ranks = nxt
+        dangling_mass = float(obs.get["dm"] or 0.0)
+    release(e, *([nodes] if iterations else []))
+    return ranks.select("node", "rank")
 
 
 def pagerank(
@@ -49,68 +130,15 @@ def pagerank(
     are deduplicated and self-loops dropped (simple-graph semantics, the
     convention that makes the result independent of upstream emission
     multiplicity). ``iterations`` power-iteration rounds with uniform
-    dangling-mass redistribution — deterministic, no RNG, no threshold.
+    teleport and dangling-mass redistribution (``_power_iteration``, every
+    edge of weight 1) — deterministic, no RNG, no threshold.
     """
-    e = checkpoint(
+    e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
-        # pre-partition by src ONCE: checkpoint preserves the hash
-        # partitioning, so each iteration's edge⋈rank join re-shuffles only
-        # the (node-sized) rank table, never the edge table
-        .repartition("u")
     )
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    # node count AND initial dangling count ride the checkpoint action as
-    # observe() metrics — setup is ONE job, same discipline as the
-    # per-iteration dangling-mass fuse below (round-3 verdict item 8)
-    obs0 = Observation()
-    nodes = checkpoint(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .join(deg.select(F.col("u").alias("node"), "d"), "node", "left")
-        .select("node", F.col("d").isNull().alias("dangling"), "d")
-        .observe(
-            obs0,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("dangling"), True)).alias("nd"),
-        )
-    )
-    vals = obs0.get
-    n = int(vals["n"])
-    if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-
-    ranks = nodes.select("node", "dangling", "d", F.lit(1.0 / n).alias("rank"))
-    # mass currently sitting on dangling nodes (uniform start)
-    dangling_mass = int(vals["nd"]) / n
-    for _ in range(iterations):
-        contribs = (
-            e.join(
-                ranks.filter(~F.col("dangling")).select(
-                    F.col("node").alias("u"), (F.col("rank") / F.col("d")).alias("share")
-                ),
-                "u",
-            )
-            .groupBy("v")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        new_rank = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_mass / n))
-        )
-        obs = Observation()
-        ranks = checkpoint(
-            nodes.join(contribs, nodes["node"] == contribs["v"], "left")
-            .select("node", "dangling", "d", new_rank.alias("rank"))
-            .observe(
-                obs,
-                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
-            )
-        )
-        dangling_mass = float(obs.get["dm"] or 0.0)
-    return ranks.select("node", "rank")
+    return _power_iteration(e.withColumn("w", F.lit(1.0)), F.lit(1.0), iterations, damping)
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:
@@ -315,15 +343,15 @@ def bfs_distances(
     within 2 hops of this chemical") and the linker's context windows
     need.
 
-    Level-synchronous frontier expansion: hop h joins the (frontier-sized)
-    distance table against the edge table and anti-joins the visited set —
-    the fact-sized edge table never re-shuffles (pre-partitioned + single
-    checkpoint), each round moves only frontier-sized data, and
-    ``localCheckpoint`` per hop keeps the plan constant-size. Exactly the
-    iteration discipline of ``pagerank`` above. BFS layers are monotone
-    (a node's first discovery hop IS its shortest distance), so a fixed
-    ``max_hops`` run is exact for every node it emits — and a bounded
-    recursive-CTE oracle replays it exactly.
+    Level-synchronous frontier expansion on ``checkpoints.closure``: hop
+    h joins the (frontier-sized) distance table against the checkpointed
+    edge table and anti-joins the visited set, and one checkpoint per hop
+    keeps the plan constant-size. A frontier at ``max_hops`` expands to nothing, so the
+    closure ends there (one empty round after the last hop) and its round
+    cap is only a safety net. BFS layers are monotone (a node's first
+    discovery hop IS its shortest distance), so a ``max_hops``-bounded run
+    is exact for every node it emits — and a bounded recursive-CTE oracle
+    replays it exactly.
 
     Returns (node, dist int) for reached nodes, seeds at dist 0.
     """
@@ -335,24 +363,19 @@ def bfs_distances(
         e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = checkpoint(e.dropDuplicates(["src", "dst"]).repartition("src"))
     s0 = seeds.columns[0]
-    visited = checkpoint(
-        seeds.select(F.col(s0).alias("node")).distinct().withColumn("dist", F.lit(0))
+    # every frontier row carries the same dist, so (node, dist) rows
+    # distinct as a whole are distinct on node
+    out = closure(
+        seeds.select(F.col(s0).alias("node")).distinct().withColumn("dist", F.lit(0)),
+        lambda frontier: frontier.filter(F.col("dist") < max_hops)
+        .join(e, frontier["node"] == e["src"])
+        .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+        .distinct(),
+        ["node"],
+        max_hops + 1,
     )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = checkpoint(
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(hop)),
-            eager=False,
-        )
-        if nxt.isEmpty():
-            break
-        visited = checkpoint(visited.unionByName(nxt), eager=False)
-        frontier = nxt
-    return visited
+    release(e)
+    return out
 
 
 def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
@@ -425,17 +448,26 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     table.
 
     Scale shape: each round is one degree aggregate + one double
-    semi-join, all on the (only-shrinking) edge set; ``localCheckpoint``
-    per round keeps the plan constant-size, and the convergence check is
-    the edge count already forced by the checkpoint — one job per round.
-    At 100 TB the edge table is fact-sized but each round's survivors
-    shrink geometrically for realistic degree distributions; the loop
-    never touches a corpus-sized window.
+    semi-join, all on the (only-shrinking) edge set; a checkpoint per round
+    keeps the plan constant-size and releases the previous round's, and
+    the convergence check is the edge count, which rides that checkpoint
+    as an ``observe()`` metric — one job per round. At 100 TB the edge
+    table is fact-sized but each round's survivors shrink geometrically
+    for realistic degree distributions; the loop never touches a
+    corpus-sized window. Raises ``RuntimeError`` when ``max_iter`` rounds
+    end with the edge count still changing: the graph would be only partly
+    peeled, i.e. not the k-core.
 
     Returns (node, core_degree).
     """
     u0, v0 = edges.columns[0], edges.columns[1]
-    e = checkpoint(
+
+    def counted(df: DataFrame) -> tuple[DataFrame, int]:
+        obs = Observation()
+        out = checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+        return out, int(obs.get["n"])
+
+    e, prev = counted(
         edges.select(
             F.least(F.col(u0), F.col(v0)).alias("a"),
             F.greatest(F.col(u0), F.col(v0)).alias("b"),
@@ -443,7 +475,6 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
     )
-    prev = -1
     for _ in range(max_iter):
         deg = (
             e.select(F.col("a").alias("node"))
@@ -452,15 +483,18 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             .agg(F.count("*").alias("c"))
         )
         keep = deg.filter(F.col("c") >= k).select("node")
-        e = checkpoint(
+        nxt, n = counted(
             e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi"),
-            eager=False,
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
         )
-        n = e.count()  # the count IS the checkpoint materialization — one job/round
+        release(e)
+        e = nxt
         if n == prev:
             break
         prev = n
+    else:
+        release(e)
+        raise RuntimeError(f"k_core did not converge within max_iter={max_iter} rounds")
     return (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -523,82 +557,21 @@ def personalized_pagerank(
     """Personalized PageRank: teleport (and dangling-mass) restricted to
     the ``seeds`` node set — relevance of every graph entity RELATIVE TO
     a query set, the related-entity ranking primitive (recommendations,
-    KG neighborhood expansion, entity-resolution tie-breaks). Same
-    fixed-iteration discipline as ``pagerank``: deterministic, no RNG,
+    KG neighborhood expansion, entity-resolution tie-breaks). The power
+    iteration of :func:`pagerank` (``_power_iteration``) with teleport
+    weight 1/|seeds| on the seeds and 0 elsewhere: deterministic, no RNG,
     no convergence threshold; ranks sum to 1.0 over the seed-reachable
-    component.
-
-    Scale shape mirrors ``pagerank`` exactly (its plan audit carries
-    over): the edge table is pre-partitioned + checkpointed ONCE, each
-    iteration reshuffles only the node-sized rank table, dangling mass
-    rides the checkpoint action as an observe() metric — one job per
-    iteration. Seeds are a driver-side list (a query, not data).
+    component, and are all 0.0 when no seed is in the graph. Seeds are a
+    driver-side list (a query, not data).
     """
-    e = checkpoint(
+    e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
-        .repartition("u")
     )
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    obs0 = Observation()
-    is_seed = F.col("node").isin(list(seeds))
-    nodes = checkpoint(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .join(deg.select(F.col("u").alias("node"), "d"), "node", "left")
-        .select(
-            "node",
-            F.col("d").isNull().alias("dangling"),
-            "d",
-            is_seed.alias("seed"),
-        )
-        .observe(
-            obs0,
-            F.count(F.when(F.col("seed"), True)).alias("ns"),
-            F.count(F.when(F.col("seed") & F.col("dangling"), True)).alias(
-                "nds"
-            ),
-        )
+    return _power_iteration(
+        e.withColumn("w", F.lit(1.0)), F.col("node").isin(list(seeds)), iterations, damping
     )
-    vals = obs0.get
-    ns = int(vals["ns"])
-    if ns == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-
-    seed_share = F.when(F.col("seed"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
-    ranks = nodes.select("node", "dangling", "d", "seed", seed_share.alias("rank"))
-    dangling_mass = int(vals["nds"]) / ns
-    for _ in range(iterations):
-        contribs = (
-            e.join(
-                ranks.filter(~F.col("dangling") & (F.col("rank") != 0)).select(
-                    F.col("node").alias("u"),
-                    (F.col("rank") / F.col("d")).alias("share"),
-                ),
-                "u",
-            )
-            .groupBy("v")
-            .agg(F.sum("share").alias("contrib"))
-        )
-        new_rank = F.lit(1.0 - damping) * seed_share + F.lit(damping) * (
-            F.coalesce(F.col("contrib"), F.lit(0.0))
-            + F.lit(dangling_mass) * seed_share
-        )
-        obs = Observation()
-        ranks = checkpoint(
-            nodes.join(contribs, nodes["node"] == contribs["v"], "left")
-            .select("node", "dangling", "d", "seed", new_rank.alias("rank"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            )
-        )
-        dangling_mass = float(obs.get["dm"] or 0.0)
-    return ranks.select("node", "rank")
 
 
 def size_histogram(df: DataFrame, group_col: str) -> DataFrame:
@@ -721,14 +694,11 @@ def pagerank_weighted(
     the well-connected ones). Non-positive-weight edges are dropped
     (they would siphon or invert mass).
 
-    Same scale discipline as ``pagerank``: edge table (with its share
-    precomputed from the out-weight sum) pre-partitioned + checkpointed
-    ONCE; per iteration only the node-sized rank table reshuffles;
-    dangling mass rides the checkpoint action via observe() — one job
-    per iteration. Parallel edges are summed into one weighted edge
-    first (multigraph semantics collapse deterministically).
+    The power iteration of :func:`pagerank` (``_power_iteration``) on the
+    edge weights. Parallel edges are summed into one
+    weighted edge first (multigraph semantics collapse deterministically).
     """
-    e0 = (
+    e = (
         edges.select(
             F.col(src_col).alias("u"),
             F.col(dst_col).alias("v"),
@@ -738,59 +708,7 @@ def pagerank_weighted(
         .groupBy("u", "v")
         .agg(F.sum("w").alias("w"))
     )
-    wsum = e0.groupBy("u").agg(F.sum("w").alias("_ws"))
-    e = checkpoint(
-        e0.join(wsum, "u")
-        .select("u", "v", (F.col("w") / F.col("_ws")).alias("share_frac"))
-        .repartition("u")
-    )
-    obs0 = Observation()
-    nodes = checkpoint(
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .join(wsum.select(F.col("u").alias("node"), "_ws"), "node", "left")
-        .select("node", F.col("_ws").isNull().alias("dangling"))
-        .observe(
-            obs0,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("dangling"), True)).alias("nd"),
-        )
-    )
-    vals = obs0.get
-    n = int(vals["n"])
-    if n == 0:
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    ranks = nodes.select("node", "dangling", F.lit(1.0 / n).alias("rank"))
-    dangling_mass = int(vals["nd"]) / n
-    for _ in range(iterations):
-        contribs = (
-            e.join(
-                ranks.filter(~F.col("dangling")).select(
-                    F.col("node").alias("u"), F.col("rank")
-                ),
-                "u",
-            )
-            .groupBy("v")
-            .agg(F.sum(F.col("rank") * F.col("share_frac")).alias("contrib"))
-        )
-        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-            F.coalesce(F.col("contrib"), F.lit(0.0))
-            + F.lit(dangling_mass / n)
-        )
-        obs = Observation()
-        ranks = checkpoint(
-            nodes.join(contribs, nodes["node"] == contribs["v"], "left")
-            .select("node", "dangling", new_rank.alias("rank"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            )
-        )
-        dangling_mass = float(obs.get["dm"] or 0.0)
-    return ranks.select("node", "rank")
+    return _power_iteration(e, F.lit(1.0), iterations, damping)
 
 
 def hits(
@@ -813,7 +731,9 @@ def hits(
 
     - Edge table deduplicated, self-loops dropped, pre-partitioned by src
       and ``localCheckpoint``-ed ONCE; each half-iteration joins only the
-      node-sized score table into that fixed partitioning.
+      node-sized score table into that fixed partitioning. An iteration's
+      two score checkpoints are released once the next iteration's first
+      is materialized, and the edge table once the last is.
     - Fixed iteration count (no convergence test) → bit-stable and
       CTE-replayable by the DuckDB oracle.
     - The L2 norm of each new score vector rides the half-iteration's
@@ -839,16 +759,19 @@ def hits(
     )
     # init: every node hub=1, authority derived first — matches the oracle
     hubs = nodes.select("node", F.lit(1.0).alias("hub"))
-    auths = None
+    a_un = h_un = None
     for _ in range(iterations):
         # authority(v) = Σ hub(u) over in-edges, then L2-normalize
         obs_a = Observation()
-        a_un = checkpoint(
+        nxt = checkpoint(
             e.join(hubs.select(F.col("node").alias("u"), "hub"), "u")
             .groupBy("v")
             .agg(F.sum("hub").alias("s"))
             .observe(obs_a, F.sum(F.col("s") * F.col("s")).alias("n2"))
         )
+        if a_un is not None:
+            release(a_un, h_un)
+        a_un = nxt
         norm_a = float(obs_a.get["n2"] or 0.0) ** 0.5 or 1.0
         auths = a_un.select(
             F.col("v").alias("node"), (F.col("s") / F.lit(norm_a)).alias("authority")
@@ -865,6 +788,7 @@ def hits(
         hubs = h_un.select(
             F.col("u").alias("node"), (F.col("s") / F.lit(norm_h)).alias("hub")
         )
+    release(e)
     return (
         nodes.join(hubs, "node", "left")
         .join(auths, "node", "left")
@@ -897,7 +821,7 @@ def shortest_paths(
     well-defined even with negative edges — there is no negative-cycle
     divergence because the hop count is capped).
 
-    Scale design — the same fixed-point discipline as :func:`pagerank`:
+    Scale design — the same fixed-round discipline as :func:`pagerank`:
 
     - Edge table deduplicated to min-weight per (u, v) (parallel edges
       can never beat their cheapest member), pre-partitioned by src and
@@ -908,7 +832,9 @@ def shortest_paths(
       (partition, node), not one per relaxed edge.
     - Fixed ``rounds`` (no convergence test) → bit-stable, one job per
       round, and a chained-CTE oracle replays it exactly.
-    - ``localCheckpoint`` per round keeps the plan constant-size.
+    - ``localCheckpoint`` per round keeps the plan constant-size; each
+      round releases the previous round's distances once its own are
+      materialized, and the edge table is released after the last round.
     """
     e = checkpoint(
         edges.select(
@@ -932,11 +858,14 @@ def shortest_paths(
             dist.join(e, dist["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = checkpoint(
+        nxt = checkpoint(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
+        release(dist)
+        dist = nxt
+    release(e)
     return dist
 
 
@@ -962,7 +891,7 @@ def random_walks(
     (its remaining steps append nothing). ``walk_id = node || '#' || i``
     for i in [0, walks_per_node).
 
-    Scale design — the :func:`pagerank` iteration shape:
+    Scale design — the :func:`pagerank` fixed-round shape:
 
     - Edge table deduplicated and self-loops dropped (a walk stepping to
       itself generates no skip-gram signal); parallel edges collapse —
@@ -971,7 +900,9 @@ def random_walks(
       the walk-sized frontier into that fixed layout, then the argmin is
       a map-side-combinable ``min(struct(hash, dst))`` groupBy — never a
       per-walk Python loop, never neighbor lists collected to the driver.
-    - Fixed ``length`` → constant plan size via per-step checkpoint.
+    - Fixed ``length`` → constant plan size via per-step checkpoint; each
+      step releases the previous step's walks once its own are
+      materialized, and the edge table is released after the last step.
     """
     e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -1011,7 +942,7 @@ def random_walks(
                 )["dst"].alias("_next")
             )
         )
-        walks = checkpoint(
+        nxt = checkpoint(
             walks.join(pick, "walk_id", "left")
             .select(
                 "walk_id",
@@ -1028,6 +959,9 @@ def random_walks(
                 .alias("steps"),
             )
         )
+        release(walks)
+        walks = nxt
+    release(e)
     return walks.select("walk_id", "start", "path", "steps")
 
 

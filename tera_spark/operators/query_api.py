@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tera_spark.checkpoints import checkpoint
+from tera_spark.checkpoints import checkpoint, closure
 from tera_spark.constants import (
     NS_UNIT,
     OWL_SUBPROPERTYOF,
@@ -101,18 +101,16 @@ def subclass_step(g: DataFrame, frontier: DataFrame, up: bool = True) -> DataFra
 def subclass_closure(
     g: DataFrame, seeds: DataFrame, up: bool = True, max_iter: int = 25
 ) -> DataFrame:
-    """Transitive ``rdfs:subClassOf`` closure (depth=-1 of Q5). Iterative
-    frontier expansion with ``localCheckpoint`` per round to truncate plan
-    lineage (SURVEY.md §4.2); converges in O(hierarchy depth) rounds."""
-    visited = checkpoint(seeds.select("s").distinct())
-    frontier = visited
-    for _ in range(max_iter):
-        nxt = subclass_step(g, frontier, up=up)
-        frontier = checkpoint(nxt.join(visited, "s", "left_anti"))
-        if frontier.isEmpty():
-            break
-        visited = checkpoint(visited.unionByName(frontier).distinct())
-    return visited
+    """Transitive ``rdfs:subClassOf`` closure (depth=-1 of Q5), seeds
+    included: ``checkpoints.closure`` over ``subclass_step``. Converges in
+    O(hierarchy depth) rounds; raises ``RuntimeError`` if ``max_iter``
+    rounds do not reach the fixpoint."""
+    return closure(
+        seeds.select("s").distinct(),
+        lambda frontier: subclass_step(g, frontier, up=up),
+        ["s"],
+        max_iter,
+    )
 
 
 def query_siblings(g: DataFrame, t: str, depth: int = 1, max_iter: int = 25) -> DataFrame:
@@ -137,27 +135,22 @@ def query_siblings(g: DataFrame, t: str, depth: int = 1, max_iter: int = 25) -> 
 
 def construct_subgraph(g: DataFrame, seeds: DataFrame, max_iter: int = 25) -> DataFrame:
     """Q7/J10 (DataAccess.py:232-260): BFS over outgoing edges from seed
-    entities; returns the visited triples. Frontier/visited pattern with
-    checkpointed iterations; literals are terminal nodes."""
-    visited_nodes = checkpoint(seeds.select("s").distinct())
-    frontier = visited_nodes
-    out = None
-    for _ in range(max_iter):
-        step = g.join(frontier, g["subject"] == frontier["s"], "left_semi")
-        out = step if out is None else out.unionByName(step)
-        nxt = checkpoint(
-            step.filter(~F.col("obj_is_literal"))
-            .select(F.col("object").alias("s"))
-            .distinct()
-            .join(visited_nodes, "s", "left_anti")
-        )
-        if nxt.isEmpty():
-            break
-        visited_nodes = checkpoint(visited_nodes.unionByName(nxt).distinct())
-        frontier = nxt
-    if out is None:
-        return g.limit(0)
-    return out.dropDuplicates(["subject", "predicate", "object"])
+    entities; returns the triples whose subject it reaches. The reached
+    node set is a ``checkpoints.closure`` (literals are terminal nodes),
+    then one semi-join of the graph on ``subject``; raises
+    ``RuntimeError`` if ``max_iter`` rounds do not reach the fixpoint."""
+    nodes = closure(
+        seeds.select("s").distinct(),
+        lambda frontier: g.join(frontier, g["subject"] == frontier["s"], "left_semi")
+        .filter(~F.col("obj_is_literal"))
+        .select(F.col("object").alias("s"))
+        .distinct(),
+        ["s"],
+        max_iter,
+    )
+    return g.join(nodes, g["subject"] == nodes["s"], "left_semi").dropDuplicates(
+        ["subject", "predicate", "object"]
+    )
 
 
 def compounds(g: DataFrame, prefix: str) -> DataFrame:
@@ -272,48 +265,28 @@ def get_endpoint(
     return out.distinct()
 
 
-def lowest_common_ancestor(
-    g: DataFrame, pairs: DataFrame, max_depth: int = 25
-) -> DataFrame:
-    """Batched lowest-common-ancestor + taxonomy distance over the
-    ``rdfs:subClassOf`` hierarchy — the primitive behind taxonomy-based
-    species similarity (the reference walks one ancestor chain at a time
-    in Python, utils.py ``do_recursively_in_class``-style; this answers
-    a whole DataFrame of pairs with joins).
-
-    ``pairs`` is (a, b) of class URIs. Returns one row per input pair
-    that HAS a common ancestor: (a, b, lca, depth_a, depth_b, dist)
-    where depth_x is the hop count from x up to the lca and
-    dist = depth_a + depth_b (the standard taxonomy path distance
-    through the LCA). Pairs with no shared ancestor (forest roots in
-    different trees) are absent. The LCA is selected per pair as the
-    common ancestor minimizing ``dist`` (unique in a tree — every
-    shallower common ancestor is ABOVE the true LCA on both chains, so
-    it costs strictly more hops; ties, possible only in a subClassOf
-    DAG with multiple parents, break on the lexicographically smallest
-    ancestor URI for determinism).
-
-    Scale shape: ancestor chains are built ONLY for the node set the
-    pairs mention (frontier-sized, never hierarchy-sized) by
-    ``max_depth`` bounded join rounds against the checkpointed parent
-    table — the :func:`subclass_closure` discipline plus a depth
-    column; the per-pair argmin is one map-side-combinable
-    ``min(struct(dist, lca))`` groupBy. A node's chain stops at its
-    root; multi-parent DAGs keep the MIN depth per (node, ancestor).
-    """
-    parents = checkpoint(
+def _parents(g: DataFrame) -> DataFrame:
+    """The ``rdfs:subClassOf`` edges as (child, parent), checkpointed and
+    partitioned by child for the ancestor climb."""
+    return checkpoint(
         _s(g, RDFS_SUBCLASSOF)
         .select(F.col("subject").alias("child"), F.col("object").alias("parent"))
         .filter(F.col("child") != F.col("parent"))
         .dropDuplicates(["child", "parent"])
         .repartition("child")
     )
-    nodes = (
-        pairs.select(F.col("a").alias("node"))
-        .unionByName(pairs.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    # (node, ancestor, depth) — every node is its own depth-0 ancestor
+
+
+def _climb(parents: DataFrame, nodes: DataFrame, max_depth: int) -> DataFrame:
+    """(node, anc, depth) for every route of ``depth`` ≤ ``max_depth`` hops
+    from each node of ``nodes`` up ``parents`` to an ancestor ``anc``,
+    every node its own depth-0 ancestor; a multi-parent DAG keeps every
+    route, so each caller picks its own aggregate. Bounded join rounds of
+    the (frontier-sized) chain table against the parent table, one lazy
+    checkpoint per round. Not a ``checkpoints.closure``: the climb keeps
+    every route rather than a visited set, so an anti-join per round would
+    buy nothing, and a climb on ``closure`` made the LCA and Wu–Palmer
+    leaves 1.1–1.5× slower on an interleaved A/B."""
     anc = nodes.select("node", F.col("node").alias("anc"), F.lit(0).alias("depth"))
     frontier = anc
     for d in range(1, max_depth + 1):
@@ -325,8 +298,22 @@ def lowest_common_ancestor(
         if frontier.isEmpty():
             break
         anc = anc.unionByName(frontier)
+    return anc
+
+
+def _lca(parents: DataFrame, pairs: DataFrame, max_depth: int) -> DataFrame:
+    """``lowest_common_ancestor`` over a ``_parents`` table."""
+    nodes = (
+        pairs.select(F.col("a").alias("node"))
+        .unionByName(pairs.select(F.col("b").alias("node")))
+        .distinct()
+    )
     # DAG safety: keep the cheapest route to each ancestor
-    anc = anc.groupBy("node", "anc").agg(F.min("depth").alias("depth"))
+    anc = (
+        _climb(parents, nodes, max_depth)
+        .groupBy("node", "anc")
+        .agg(F.min("depth").alias("depth"))
+    )
     aa = anc.select(F.col("node").alias("a"), "anc", F.col("depth").alias("da"))
     ab = anc.select(F.col("node").alias("b"), "anc", F.col("depth").alias("db"))
     cand = (
@@ -354,6 +341,37 @@ def lowest_common_ancestor(
     )
 
 
+def lowest_common_ancestor(
+    g: DataFrame, pairs: DataFrame, max_depth: int = 25
+) -> DataFrame:
+    """Batched lowest-common-ancestor + taxonomy distance over the
+    ``rdfs:subClassOf`` hierarchy — the primitive behind taxonomy-based
+    species similarity (the reference walks one ancestor chain at a time
+    in Python, utils.py ``do_recursively_in_class``-style; this answers
+    a whole DataFrame of pairs with joins).
+
+    ``pairs`` is (a, b) of class URIs. Returns one row per input pair
+    that HAS a common ancestor: (a, b, lca, depth_a, depth_b, dist)
+    where depth_x is the hop count from x up to the lca and
+    dist = depth_a + depth_b (the standard taxonomy path distance
+    through the LCA). Pairs with no shared ancestor (forest roots in
+    different trees) are absent. The LCA is selected per pair as the
+    common ancestor minimizing ``dist`` (unique in a tree — every
+    shallower common ancestor is ABOVE the true LCA on both chains, so
+    it costs strictly more hops; ties, possible only in a subClassOf
+    DAG with multiple parents, break on the lexicographically smallest
+    ancestor URI for determinism).
+
+    Scale shape: ancestor chains are built ONLY for the node set the
+    pairs mention (frontier-sized, never hierarchy-sized) by a
+    ``max_depth``-bounded climb (``_climb``) against the checkpointed
+    parent table; the per-pair argmin is one map-side-combinable
+    ``min(struct(dist, lca))`` groupBy. A node's chain stops at its root;
+    multi-parent DAGs keep the MIN depth per (node, ancestor).
+    """
+    return _lca(_parents(g), pairs, max_depth)
+
+
 def taxonomy_similarity(
     g: DataFrame, pairs: DataFrame, max_depth: int = 25
 ) -> DataFrame:
@@ -377,33 +395,20 @@ def taxonomy_similarity(
     and are emitted with wup 1.0 (identical nodes are maximally
     similar by definition).
     """
-    lca = lowest_common_ancestor(g, pairs, max_depth=max_depth)
-    parents = checkpoint(
-        _s(g, RDFS_SUBCLASSOF)
-        .select(F.col("subject").alias("child"), F.col("object").alias("parent"))
-        .filter(F.col("child") != F.col("parent"))
-        .dropDuplicates(["child", "parent"])
-        .repartition("child")
-    )
+    parents = _parents(g)
+    lca = _lca(parents, pairs, max_depth)
     nodes = (
         pairs.select(F.col("a").alias("node"))
         .unionByName(pairs.select(F.col("b").alias("node")))
         .unionByName(lca.select(F.col("lca").alias("node")))
         .distinct()
     )
-    # root depth per node: length of the (bounded) parent chain
-    chain = nodes.select("node", F.col("node").alias("anc"), F.lit(0).alias("depth"))
-    frontier = chain
-    for d in range(1, max_depth + 1):
-        frontier = checkpoint(
-            frontier.join(parents, frontier["anc"] == parents["child"])
-            .select("node", F.col("parent").alias("anc"), F.lit(d).alias("depth")),
-            eager=False,
-        )
-        if frontier.isEmpty():
-            break
-        chain = chain.unionByName(frontier)
-    rootd = chain.groupBy("node").agg(F.max("depth").alias("rd"))
+    # root depth per node: length of its longest (bounded) parent chain
+    rootd = (
+        _climb(parents, nodes, max_depth)
+        .groupBy("node")
+        .agg(F.max("depth").alias("rd"))
+    )
     ra = rootd.select(F.col("node").alias("a"), F.col("rd").alias("rd_a"))
     rb = rootd.select(F.col("node").alias("b"), F.col("rd").alias("rd_b"))
     rl = rootd.select(F.col("node").alias("lca"), F.col("rd").alias("rd_lca"))

@@ -29,7 +29,7 @@ triples frame (subject, predicate, object, obj_is_literal):
   backward atomic slices composed by joins on RDF *term identity*
   (value + IRI-vs-literal kind — a path may legally pass through a
   literal via an inverse step). Closures (``*``/``+``) are iterative
-  frontier BFS (the same checkpointed loop as
+  frontier BFS (``checkpoints.closure``, the loop behind
   operators/query_api.subclass_closure): with one end constant the
   whole path folds as a *seeded node set* — each step is the image of
   the frontier under the element's relation, so the corpus-sized pair
@@ -115,12 +115,13 @@ loudly rather than mis-answering.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tera_spark.checkpoints import checkpoint
+from tera_spark.checkpoints import closure
 
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -1314,8 +1315,8 @@ def _pattern_vars(pat) -> set:
 #   fact-sized ones;
 # * one end constant → NODE SETS (_n, _n_isuri): the path folds left to
 #   right as images of the frontier under each element's relation, so a
-#   closure is the same checkpointed seeded BFS as
-#   query_api.subclass_closure and the corpus-sized pair closure never
+#   closure is a seeded BFS on checkpoints.closure, as
+#   query_api.subclass_closure is, and the corpus-sized pair closure never
 #   materializes. A constant OBJECT is normalized to a constant subject
 #   by inverting the whole path AST first.
 #
@@ -1358,23 +1359,24 @@ def _path_has_var(n) -> bool:
 _REL_COLS = ["_src", "_src_isuri", "_dst", "_dst_isuri"]
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` with constraint propagation disabled for the
-    materializing plan. Spark 4.1's ``LogicalRDD.rewriteStatsAndConstraints``
+@contextmanager
+def _no_constraint_propagation(spark):
+    """Constraint propagation off for the checkpoints taken inside (the
+    path closures'). Spark 4.1's ``LogicalRDD.rewriteStatsAndConstraints``
     throws ``NoSuchElementException: key not found: _src_isuri#N`` when a
     checkpointed plan's inferred constraints reference an attribute that
     constant-folding erased from the attribute-rewrite map — which path
     relations hit constantly, because the term-kind flags are often
     ``lit(True)``-derived (every RDF subject is an IRI). The constraint
-    loss only affects this subplan's own optimization, and the frames
-    being checkpointed here are frontier/pair tables where constraints
-    buy nothing."""
-    conf = df.sparkSession.conf
+    loss only affects the checkpointed subplans' own optimization, and
+    they are frontier/pair tables where constraints buy nothing.
+    Re-entrant: each exit restores the value its entry found."""
+    conf = spark.conf
     key = "spark.sql.constraintPropagation.enabled"
     prev = conf.get(key)
     conf.set(key, "false")
     try:
-        return checkpoint(df)
+        yield
     finally:
         conf.set(key, prev)
 
@@ -1460,21 +1462,15 @@ def _rel_compose(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def _rel_plus(rel: DataFrame, max_iter: int) -> DataFrame:
-    """Transitive pairs (length ≥ 1) of a pair relation. Quadratic in the
-    relation's reach — correct for schema-sized relations; a fact-sized
-    predicate here would be a design error (the seeded node-set path
-    below is the scale-safe form)."""
-    pairs = _checkpoint(rel)
-    frontier = pairs
-    for _ in range(max_iter):
-        nxt = _checkpoint(
-            _rel_compose(frontier, rel).join(pairs, _REL_COLS, "left_anti")
+    """Transitive pairs (length ≥ 1) of a pair relation (distinct, as every
+    ``_path_rel`` is): ``checkpoints.closure`` composing the newest pairs
+    with ``rel``. Quadratic in the relation's reach — correct for
+    schema-sized relations; a fact-sized predicate here would be a design
+    error (the seeded node-set path below is the scale-safe form)."""
+    with _no_constraint_propagation(rel.sparkSession):
+        return closure(
+            rel, lambda frontier: _rel_compose(frontier, rel), _REL_COLS, max_iter
         )
-        if nxt.isEmpty():
-            break
-        pairs = _checkpoint(pairs.unionByName(nxt))
-        frontier = nxt
-    return pairs
 
 
 def _path_rel(graph: DataFrame, node, max_iter: int) -> DataFrame:
@@ -1534,19 +1530,16 @@ def _node_image(rel: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 def _node_reachable(rel: DataFrame, seeds: DataFrame, max_iter: int) -> DataFrame:
-    """Checkpointed frontier BFS over a pair relation: every node reachable
-    from ``seeds`` in ≥ 0 steps (seeds included)."""
-    visited = _checkpoint(seeds.select("_n", "_n_isuri").distinct())
-    frontier = visited
-    for _ in range(max_iter):
-        nxt = _checkpoint(
-            _node_image(rel, frontier).join(visited, ["_n", "_n_isuri"], "left_anti")
+    """Every node reachable from ``seeds`` in ≥ 0 steps over a pair
+    relation (seeds included): ``checkpoints.closure`` over
+    ``_node_image``, i.e. a checkpointed frontier BFS."""
+    with _no_constraint_propagation(rel.sparkSession):
+        return closure(
+            seeds.select("_n", "_n_isuri").distinct(),
+            lambda frontier: _node_image(rel, frontier),
+            ["_n", "_n_isuri"],
+            max_iter,
         )
-        if nxt.isEmpty():
-            break
-        visited = _checkpoint(visited.unionByName(nxt).distinct())
-        frontier = nxt
-    return visited
 
 
 def _apply_path_nodes(graph: DataFrame, node, nodes: DataFrame, max_iter: int) -> DataFrame:

@@ -234,6 +234,32 @@ def test_pagerank_job_budget(spark):
     assert after - before == 2 + 4, f"pagerank ran {after - before} jobs, want 6"
 
 
+def test_closure_job_budget(spark):
+    """``checkpoints.closure``: the seed checkpoint is ONE job and every
+    round ONE more (its new-row count rides the checkpoint via observe).
+    A 4-link chain from its head takes 4 rounds that add a row and a 5th
+    that adds none: 6 jobs."""
+    from pyspark.sql import functions as F
+
+    from tera_spark.checkpoints import closure
+
+    links = spark.createDataFrame(
+        [(f"c{i}", f"c{i + 1}") for i in range(4)], "src string, dst string"
+    )
+    seed = spark.createDataFrame([("c0",)], "node string")
+
+    def step(frontier):
+        return (
+            frontier.join(links, frontier["node"] == links["src"])
+            .select(F.col("dst").alias("node"))
+            .distinct()
+        )
+
+    out, jobs = _jobs_run(spark, lambda: closure(seed, step, ["node"], 10))
+    assert jobs == 1 + 5, f"closure ran {jobs} jobs, want 6"
+    assert {r.node for r in out.collect()} == {f"c{i}" for i in range(5)}
+
+
 def test_pagerank_empty_and_trivial(spark):
     from tera_spark.operators.graph_metrics import pagerank
 
@@ -294,6 +320,18 @@ def test_k_core_peels_to_fixpoint(spark):
     assert got == {"a": 3, "b": 3, "c": 3, "d": 3}
     # k above the max degree: empty core
     assert k_core(df, k=4).count() == 0
+
+
+def test_k_core_raises_when_unconverged(spark):
+    from tera_spark.operators.graph_metrics import k_core
+
+    # an 8-node path peels two end nodes per round at k=2: two rounds
+    # leave 3 of its 7 edges, so the edge count is still changing
+    df = spark.createDataFrame(
+        [(f"p{i}", f"p{i + 1}") for i in range(7)], "u string, v string"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        k_core(df, k=2, max_iter=2)
 
 
 def test_k_core_extra_rounds_are_identity(spark):

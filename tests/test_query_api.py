@@ -2,6 +2,7 @@
 pandas-side oracle built from the same fixtures."""
 
 import pandas as pd
+import pytest
 
 from tera_spark.constants import NS_ECOTOX, NS_UNIT
 from tera_spark.operators import query_api as Q
@@ -68,6 +69,14 @@ def test_siblings_and_closure(spark):
     assert sib == {"child2"}
     closure = {r.s for r in Q.query_siblings(gr, "gchild", depth=-1).collect()}
     assert closure == {"child1", "child2", "parent", "root"}
+
+
+def test_siblings_closure_raises_at_max_iter(spark):
+    # a 3-level chain needs two rounds to reach the root; one round would
+    # return a truncated closure
+    gr = g(spark, [("c0", SUB, "c1", False), ("c1", SUB, "c2", False)])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        Q.query_siblings(gr, "c0", depth=-1, max_iter=1).collect()
 
 
 def test_construct_subgraph_bfs(spark):
